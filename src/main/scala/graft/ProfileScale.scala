@@ -15,7 +15,9 @@ import graft.operators.{Dedup, DistinctSketch, Similarity}
   *
   * `ProfileScale <sfDir> <tag>` → one JSON line `{"op":sec,...}` on stdout
   * and PROFILE_scale_<tag>.json in the working dir. Two timed reps per op
-  * (min reported): rep 1 absorbs listing/codegen cold cost.
+  * (min reported): rep 1 absorbs listing/codegen cold cost. The one-time
+  * open of a persisted IVF index is its own row (`ivf_probe_topk_open`),
+  * so the repeat-probe row does not hide it.
   */
 object ProfileScale {
 
@@ -44,6 +46,15 @@ object ProfileScale {
     val fs = new org.apache.hadoop.fs.Path(scratch)
       .getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
+
+    var openDir = ""
+    // work an op needs before each rep, run outside its timing window
+    val untimedSetup: Map[String, () => Unit] = Map(
+      "ivf_probe_topk_open" -> { () =>
+        openDir = s"$scratch/ivf_open_${System.nanoTime()}"
+        Similarity.ensureIvfIndex(spark, openDir, emb, "vec_id", "embedding",
+          numCentroids = Similarity.autoCentroids(emb.count()))
+      })
 
     // each entry is (name, thunk); thunks re-run from cold plans each rep
     val ops: Seq[(String, () => Unit)] = Seq(
@@ -75,6 +86,13 @@ object ProfileScale {
         Similarity.ensureIvfIndex(spark, d, emb, "vec_id", "embedding",
           numCentroids = Similarity.autoCentroids(emb.count()))
       },
+      // the first probe after ensureIvfIndex, which opens the index
+      // version (centroid collect, `assigned` listing and schema read); the
+      // index is built untimed in `untimedSetup`, fresh each rep, so every
+      // rep is an open. ivf_probe_topk below times the repeat probes.
+      "ivf_probe_topk_open" -> (() =>
+        noop(Similarity.ivfTopKPersisted(spark, openDir, q, "vec_id", "embedding",
+          k = 10, nprobe = 8))),
       "ivf_probe_topk" -> { () =>
         val d = s"$scratch/ivf_probe"
         Similarity.ensureIvfIndex(spark, d, emb, "vec_id", "embedding",
@@ -169,6 +187,7 @@ object ProfileScale {
       // window — the emitted row says which statistic it is via "reps=".
       val nReps = sys.env.get("SPARK_GRAFT_PSCALE_REPS").map(_.toInt).getOrElse(2)
       val reps = (1 to nReps).map { _ =>
+        untimedSetup.get(name).foreach(_())
         val t0 = System.nanoTime()
         fn()
         val sec = (System.nanoTime() - t0) / 1e9

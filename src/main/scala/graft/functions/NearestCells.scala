@@ -118,8 +118,11 @@ case class NearestCells(vec: Expression, mat: CentroidMatrix, nprobe: Int)
 
 object NearestCells {
 
-  /** Tier ceiling for the in-row form: past this many centroids the callers
-    * keep their broadcast-join formulation. 2^17 centroids x 64 dims x 8 B
+  /** Tier ceiling for the in-row form: past this many centroids
+    * `Similarity.assignCells` (over a centroid frame) and `ivfSelfTopK` keep
+    * their broadcast-join formulation. The persisted-index append assigns
+    * in-row at any k, with the matrix its open index version already holds;
+    * the probes pick cells on the driver. 2^17 centroids x 64 dims x 8 B
     * = 64 MiB of matrix riding the stage's task binary (one broadcast per
     * stage) — comfortably inside executor memory, and under autoCentroids
     * (k = n/128) it covers corpora to ~16M vectors. Above it the join path

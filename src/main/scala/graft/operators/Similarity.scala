@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
 /** Vector similarity search over an embedding column (`array<float>`).
   *
@@ -368,14 +369,9 @@ object Similarity {
                   maxLocalCentroids: Int =
                     graft.functions.NearestCells.defaultMaxLocalCentroids): DataFrame = {
     graft.functions.GraftFunctions.register(vectors.sparkSession)
-    if (centroids.count() <= maxLocalCentroids) {
-      val mat = graft.functions.CentroidMatrix.collect(centroids)
-      vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"),
-        element_at(org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.NearestCells(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col(vecCol)), mat, 1)),
-          1).as("cell"))
-    } else {
+    if (centroids.count() <= maxLocalCentroids)
+      assignCells(vectors, idCol, vecCol, graft.functions.CentroidMatrix.collect(centroids))
+    else {
       vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"),
           norm(col(vecCol)).as("nn"))
         .crossJoin(broadcast(centroids.withColumn("cn", norm(col("cv")))))
@@ -385,6 +381,18 @@ object Similarity {
         .select(col("nid"), col("best.nv").as("nv"), col("best.cid").as("cell"))
     }
   }
+
+  /** The in-row tier of [[assignCells]] against an already-collected
+    * centroid matrix — the form an append uses with the matrix of the
+    * index version it holds open, so no tick re-reads the centroids.
+    */
+  def assignCells(vectors: DataFrame, idCol: String, vecCol: String,
+                  mat: graft.functions.CentroidMatrix): DataFrame =
+    vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"),
+      element_at(org.apache.spark.sql.graft.ColumnBridge.column(
+        graft.functions.NearestCells(
+          org.apache.spark.sql.graft.ColumnBridge.expression(col(vecCol)), mat, 1)),
+        1).as("cell"))
 
   /** IVF index artifacts: broadcastable centroids `(cid, cv)` and the
     * corpus with its assigned cell `(nid, nv, cell)`. Built once at write
@@ -477,7 +485,10 @@ object Similarity {
   /** Incrementally add vectors to a PERSISTED index — the per-ingest-tick
     * maintenance path (the IVF sibling of the MinHash store's
     * `appendToMinHashStore`): new vectors are assigned to the EXISTING
-    * centroids (one scan against the broadcast centroid set) and appended
+    * centroids (one in-row scan of the batch against the centroid matrix of
+    * the index version the append holds open — see [[ivfTopKPersisted]] —
+    * so a tick collects the centroids only when that version is not yet
+    * open in the session) and appended
     * into the cell-partitioned `assigned` store, so a corpus that grows by
     * batches never re-runs k-means or rewrites the index. The classical
     * IVF trade rides along: cells stay anchored to the original centroid
@@ -542,9 +553,12 @@ object Similarity {
     // aggregate) would wedge every later appender at the gate until a
     // quiesced recoverIvfIndex, misreporting an IO/parse error as a
     // concurrency conflict.
-    val staged: Option[(Long, String)] =
+    val staged: Option[(Long, String, IvfVersion)] =
       try {
-        val fields = readSmallText(fs, fpPath).split('|').toSeq
+        // the version this append composes over, held open: its centroid
+        // matrix assigns the batch without re-reading the centroids
+        val version = openIvfIndex(spark, dir)
+        val fields = version.fingerprint.split('|').toSeq
         val kv = fields.collect { case f if f.contains("=") =>
           val Array(k, v) = f.split("=", 2); k -> v
         }.toMap
@@ -592,20 +606,24 @@ object Similarity {
           // crash from here on is resolvable by comparing the store's
           // ACTUAL ids to the two (recoverIvfIndex)
           writeSmallText(fs, pendingPath, s"${fields.mkString("|")}\n$newFp")
-          Some((nBatch, newFp))
+          Some((nBatch, newFp, version))
         }
       } catch { case t: Throwable => fs.delete(pendingPath, false); throw t }
     if (staged.isEmpty) {
       fs.delete(pendingPath, false) // clean no-op: release the mutex
       return 0L
     }
-    val (nBatch, newFp) = staged.get
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val (nBatch, newFp, version) = staged.get
     new graft.sources.ParquetDatabase(spark, s"$dir/assigned")
-      .create(assignCells(spread(newVectors), idCol, vecCol, centroids)
+      .create(assignCells(spread(newVectors), idCol, vecCol, version.matrix)
           .repartition(col("cell")),
         partitionBy = Seq("cell"))
     writeSmallText(fs, fpPath, newFp)
+    // still under the mutex, so the fingerprint just written is the newest
+    // version: it keeps the matrix (appends never touch `centroids`) and
+    // lists `assigned` afresh on its first probe
+    openVersions.put(versionKey(spark, fs, dir), new IvfVersion(newFp,
+      fs.getFileStatus(fpPath).getModificationTime, version.matrix, spark, dir))
     fs.delete(pendingPath, false)
     nBatch
   }
@@ -913,7 +931,11 @@ object Similarity {
                              p: org.apache.hadoop.fs.Path, text: String): Unit =
     graft.sources.HadoopText.write(fs, p, text)
 
-  /** Reopen a persisted index (for [[ivfSelfTopK]] or ad-hoc probing).
+  /** Reopen a persisted index as plain relations (for [[ivfSelfTopK]] or
+    * ad-hoc probing). Every call reads `centroids` and lists `assigned`
+    * afresh, so the returned [[IvfIndex]] is a snapshot of the version on
+    * disk at call time; it does not share the per-version handle the
+    * probe and append paths hold open (see [[ivfTopKPersisted]]).
     * `assigned` keeps its cell-partitioned layout, so any filter on `cell`
     * prunes directories.
     */
@@ -937,53 +959,147 @@ object Similarity {
       .map(_.stripPrefix("cell=").toLong).toSet
   }
 
-  /** Probe a PERSISTED index with storage-level cell pruning: the probed
-    * cell set (≤ numCentroids values — broadcast-sized by construction) is
-    * computed first, then the assigned corpus is read WITH a static
-    * partition filter on those cells — the scan lists only the probed
-    * `cell=` directories; un-probed cells cost nothing, not even a footer
-    * read. This is the deployment shape `ivfTopK`'s inline form amortizes
-    * toward: build+persist once at write time, probe many times.
+  /** One version of a persisted index, held open across the probes and
+    * appends of a session: the collected centroid matrix, and the
+    * `assigned` relation, listed on first use (an append needs only the
+    * matrix). `fingerprint` and `mtime` are the `_fingerprint` text and
+    * modification time the version was opened at.
+    */
+  private final class IvfVersion(val fingerprint: String, val mtime: Long,
+                                 val matrix: graft.functions.CentroidMatrix,
+                                 spark: org.apache.spark.sql.SparkSession, dir: String) {
+    lazy val assigned: DataFrame = spark.read.parquet(s"$dir/assigned")
+  }
+
+  /** Open versions, one per (session, qualified index dir). */
+  private val openVersions = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.SparkSession, String), IvfVersion]()
+
+  private def versionKey(spark: org.apache.spark.sql.SparkSession,
+                         fs: org.apache.hadoop.fs.FileSystem,
+                         dir: String): (org.apache.spark.sql.SparkSession, String) =
+    (spark, fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString)
+
+  /** The open version of the index at `dir`, reused while its
+    * `_fingerprint` text and modification time are both unchanged: one
+    * stat and one small read per call. Every writer writes `_fingerprint`
+    * last — ensureIvfIndex's rebuild, appendToIvfIndex, rebalanceIvfIndex
+    * (whose same-k rebuild keeps the text but not the mtime) and
+    * recoverIvfIndex — so a caller never reuses a version a writer has
+    * replaced. A dir without `_fingerprint` (persistIvfIndex alone) is
+    * opened afresh on every call and never cached.
+    */
+  private def openIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfVersion = {
+    val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
+    val fs = fpPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val key = versionKey(spark, fs, dir)
+    def open(fp: String, mtime: Long) = new IvfVersion(fp, mtime,
+      graft.functions.CentroidMatrix.collect(spark.read.parquet(s"$dir/centroids")), spark, dir)
+    val stat =
+      try Some(fs.getFileStatus(fpPath))
+      catch { case _: java.io.FileNotFoundException => None }
+    stat match {
+      case None =>
+        openVersions.remove(key)
+        open("", 0L)
+      case Some(st) =>
+        val fp = readSmallText(fs, fpPath)
+        val held = openVersions.get(key)
+        if (held != null && held.fingerprint == fp && held.mtime == st.getModificationTime) held
+        else {
+          val v = open(fp, st.getModificationTime)
+          openVersions.put(key, v)
+          v
+        }
+    }
+  }
+
+  /** Probe a PERSISTED index with storage-level cell pruning.
+    *
+    * The index version is opened once and reused across calls (see
+    * `openIvfIndex`): the handle is keyed by (SparkSession, qualified
+    * `indexDir`) and checked on every call against the `_fingerprint`
+    * text and modification time, so a probe at an unchanged version reads
+    * neither the centroids nor the `assigned` listing again, and the first
+    * probe after any writer's commit opens the new version. A dir without
+    * `_fingerprint` is opened afresh on every call.
+    *
+    * The query rows `(qid, qv, qn)` are collected — `queries` must be small
+    * enough to broadcast — and each query's `nprobe` nearest cells are
+    * picked on the driver by [[graft.functions.NearestCells.kernel]]
+    * against the version's centroid matrix, ranked (pcos DESC, cid ASC)
+    * with NaN greatest and -0.0 = 0.0. The probes join the listed
+    * `assigned` relation as a broadcast local relation, after a static
+    * `cell` partition filter on exactly the probed cells, so the scan reads
+    * only the probed `cell=` directories. Candidates rank by
+    * (cos DESC, nid ASC). Probes must pause while [[rebalanceIvfIndex]]
+    * swaps the tree (its quiesce contract); appends may run concurrently,
+    * and a probe then answers at the version before or after the append.
     */
   def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int, nprobe: Int): DataFrame =
     ivfTopKPersistedWithCells(spark, indexDir, queries, idCol, vecCol, k, nprobe)._1
 
-  /** [[ivfTopKPersisted]] plus the distinct probed cell ids — callers assert
-    * storage-level pruning by comparing the scan's selected partition count
-    * against exactly this set (the probe union of several queries can
-    * legitimately cover every cell, so "fewer than total" is not a stable
-    * invariant; "exactly the probed cells" is).
+  /** [[ivfTopKPersisted]] plus the distinct probed cell ids, known before
+    * the returned frame runs — callers assert storage-level pruning by
+    * comparing the scan's selected partition count against exactly this
+    * set (the probe union of several queries can legitimately cover every
+    * cell, so "fewer than total" is not a stable invariant; "exactly the
+    * probed cells" is).
     */
   def ivfTopKPersistedWithCells(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int, nprobe: Int): (DataFrame, Array[Long]) = {
     graft.functions.GraftFunctions.register(spark)
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
+    val index = openIvfIndex(spark, indexDir)
+    val (probes, cells) = probeCells(queries, idCol, vecCol, index.matrix, nprobe)
+    (rankProbed(index.assigned.filter(col("cell").isin(cells: _*)), probes, k), cells)
+  }
+
+  /** Each query's top-`nprobe` cells, picked on the driver: the query rows
+    * `(qid, qv, qn)` are collected and scored by
+    * [[graft.functions.NearestCells.kernel]], the comparator
+    * [[assignCells]] and [[ivfSelfTopK]] rank cells with. A null vector
+    * scores null against every centroid and so probes the lowest cids.
+    * Returns the probes `(qid, qv, qn, cell)` as a local relation and the
+    * distinct probed cells.
+    */
+  private def probeCells(queries: DataFrame, idCol: String, vecCol: String,
+                         mat: graft.functions.CentroidMatrix,
+                         nprobe: Int): (DataFrame, Array[Long]) = {
+    require(nprobe >= 1, s"IVF probe: nprobe must be >= 1, got $nprobe")
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
       norm(col(vecCol)).as("qn"))
-    val probeW = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
-    // localCheckpoint: probes feed both the cell-set collect and the probe
-    // join — without it the subtree is computed twice (no subplan dedup)
-    val probes = q.crossJoin(broadcast(centroids.withColumn("cn", norm(col("cv")))))
-      .withColumn("pcos", cosinePre(col("qv"), col("cv"), col("qn"), col("cn")))
-      .withColumn("prn", row_number().over(probeW))
-      .filter(col("prn") <= nprobe)
-      .select(col("qid"), col("qv"), col("qn"), col("cid").as("cell"))
-      .localCheckpoint()
-    val cells = probes.select("cell").distinct().collect().map(_.getLong(0))
-    val assigned = spark.read.parquet(s"$indexDir/assigned")
-      .filter(col("cell").isin(cells: _*))
-      .withColumn("nn", norm(col("nv")))
-    val scored = assigned.join(broadcast(probes), Seq("cell"))
+    val isFloat = q.schema("qv").dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val rows = q.collect().flatMap { r =>
+      val cells =
+        if (r.isNullAt(1)) mat.cids.take(nprobe)
+        else graft.functions.NearestCells.kernel(
+          new org.apache.spark.sql.catalyst.util.GenericArrayData(r.getSeq[Any](1).toArray),
+          isFloat, mat, nprobe).toLongArray()
+      cells.map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), c))
+    }
+    val probes = q.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      q.schema.add("cell", LongType, nullable = false))
+    (probes, rows.map(_.getLong(3)).distinct)
+  }
+
+  /** Exact scoring of the probed cells' vectors against their probing
+    * queries, top-`k` per query by (cos DESC, nid ASC).
+    */
+  private def rankProbed(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame = {
+    val scored = assigned.withColumn("nn", norm(col("nv")))
+      .join(broadcast(probes), Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("cos", cosinePre(col("qv"), col("nv"), col("qn"), col("nn")))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    val out = scored.withColumn("rn", row_number().over(w))
+    scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("qid"), col("nid"), col("rn"), col("cos"))
-    (out, cells)
   }
 
   def buildIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
@@ -994,31 +1110,18 @@ object Similarity {
 
   /** IVF-style ANN over a prebuilt index: probe the `nprobe` cells nearest
     * each query, score only those cells. Candidates per query ≈
-    * n·nprobe/numCentroids, the scale lever at 100 TB: centroids are
-    * broadcast, the corpus was scanned once for assignment (a write-time,
-    * amortizable step) and the query join touches only probed cells.
+    * n·nprobe/numCentroids, the scale lever at 100 TB: the centroids are
+    * collected once per call and the probe cells picked on the driver (as
+    * in [[ivfTopKPersisted]]), the corpus was scanned once for assignment
+    * (a write-time, amortizable step) and the query join touches only
+    * probed cells. `queries` must be small enough to broadcast.
     */
   def ivfTopK(index: IvfIndex, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nprobe: Int): DataFrame = {
     graft.functions.GraftFunctions.register(queries.sparkSession)
-    // nprobe nearest centroids per query
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val probeW = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
-    val probes = q.crossJoin(broadcast(index.centroids.withColumn("cn", norm(col("cv")))))
-      .withColumn("pcos", cosinePre(col("qv"), col("cv"), col("qn"), col("cn")))
-      .withColumn("prn", row_number().over(probeW))
-      .filter(col("prn") <= nprobe)
-      .select(col("qid"), col("qv"), col("qn"), col("cid").as("cell"))
-    // exact scoring within probed cells only
-    val scored = index.assigned.withColumn("nn", norm(col("nv")))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", cosinePre(col("qv"), col("nv"), col("qn"), col("nn")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("nid"), col("rn"), col("cos"))
+    val (probes, _) = probeCells(queries, idCol, vecCol,
+      graft.functions.CentroidMatrix.collect(index.centroids), nprobe)
+    rankProbed(index.assigned, probes, k)
   }
 
   /** Convenience form: build the k-means index inline, then query it. */

@@ -129,6 +129,49 @@ class ConcurrentSketchWriterSpec extends SparkSpec {
       "ensureIvfIndex rebuilt an index whose concurrent appends composed correctly")
   }
 
+  test("IVF index: probes racing appends each answer at the pre- or post-append version") {
+    val dir = fresh("ivfprobe")
+    val base = (0 until 64)
+      .map(i => (i.toLong, (0 until 8).map(j => math.sin(i * 31 + j).toFloat)))
+    val v0 = base.head._2
+    // batch b: 5 near-copies of vector 0, nearer than every earlier batch's,
+    // so each append changes the probe's answer; near-copies share one cell,
+    // so each append commits one file and no listing can see half a batch
+    val batches = (0 until 3).map(b => (0 until 5).map(j =>
+      (1000L + 10L * b + j, v0.map(x => x + 1e-2f / (b + 2) * (j + 1)))))
+    Similarity.ensureIvfIndex(spark, dir, base.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", numCentroids = 4)
+    val q = base.take(1).toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Double)] =
+      df.select("nid", "rn", "cos").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq.sortBy(_._2)
+    // every cell probed: the answer at each version is the exact top-5
+    val expected = (0 to batches.size).map(v => rows(Similarity.cosineTopK(
+      (base ++ batches.take(v).flatten).toDF("vec_id", "embedding"), q,
+      "vec_id", "embedding", k = 5)))
+    assert(expected.distinct.size === expected.size, "fixture: versions share an answer")
+    val appending = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    def probe(): Unit = {
+      val got = rows(Similarity.ivfTopKPersisted(spark, dir, q, "vec_id", "embedding",
+        k = 5, nprobe = 4))
+      val v = expected.indexOf(got)
+      assert(v >= 0, s"probe answered at no version: $got")
+      seen.add(v)
+    }
+    inThreads(Seq(
+      () => try batches.foreach(b =>
+        Similarity.appendToIvfIndex(spark, dir, b.toDF("vec_id", "embedding"),
+          "vec_id", "embedding"))
+      finally appending.set(false),
+      () => while (appending.get()) probe()))
+    probe()
+    import scala.jdk.CollectionConverters._
+    val versions = seen.asScala.toSeq
+    assert(versions.size >= 2 && versions.last === batches.size, versions.mkString(","))
+    assert(versions === versions.sorted, s"a probe went back a version: ${versions.mkString(",")}")
+  }
+
   test("bucketed HLL store: concurrent mergers converge to the sequential fold; conflicts are loud; crash states repair") {
     val dir = fresh("hll2w")
     def events(lo: Int, hi: Int) = (lo until hi)

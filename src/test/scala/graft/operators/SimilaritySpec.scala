@@ -477,6 +477,215 @@ class SimilaritySpec extends SparkSpec {
     assert(reopened.assigned.count() === 100L && reopened.centroids.count() === 4L)
   }
 
+  /** The retired probe-selection form, kept as the reference both probe
+    * paths are pinned against: every (query, centroid) pair scored by a
+    * crossJoin, the top-`nprobe` cells picked by a row_number window over
+    * (pcos DESC, cid ASC), then the unchanged scoring join and
+    * (cos DESC, nid ASC) rank. `cos` is compared as raw bits (NaN-safe).
+    */
+  private def retiredIvfTopK(centroids: org.apache.spark.sql.DataFrame,
+                             assigned: org.apache.spark.sql.DataFrame,
+                             queries: org.apache.spark.sql.DataFrame,
+                             k: Int, nprobe: Int): Seq[(Long, Long, Int, Option[Long])] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"),
+      Similarity.norm(col("embedding")).as("qn"))
+    val probeW = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
+    val probes = q.crossJoin(broadcast(centroids.withColumn("cn", Similarity.norm(col("cv")))))
+      .withColumn("pcos", Similarity.cosinePre(col("qv"), col("cv"), col("qn"), col("cn")))
+      .withColumn("prn", row_number().over(probeW))
+      .filter(col("prn") <= nprobe)
+      .select(col("qid"), col("qv"), col("qn"), col("cid").as("cell"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
+    ivfRows(assigned.withColumn("nn", Similarity.norm(col("nv")))
+      .join(broadcast(probes), Seq("cell"))
+      .filter(col("qid") =!= col("nid"))
+      .withColumn("cos", Similarity.cosinePre(col("qv"), col("nv"), col("qn"), col("nn")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("nid"), col("rn"), col("cos")))
+  }
+
+  private def ivfRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Option[Long])] =
+    df.collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid"), r.getAs[Int]("rn"),
+      Option(r.getAs[java.lang.Double]("cos")).map(c => java.lang.Double.doubleToLongBits(c))))
+      .toSeq.sorted
+
+  private def withAnsiOff[A](body: => A): A = {
+    val prevAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try body
+    finally prevAnsi match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
+  test("ivfTopK and ivfTopKPersisted equal the retired crossJoin + row_number probe, ties and NaN included") {
+    // centroid 3 duplicates centroid 1 EXACTLY (every probe ranks them
+    // tied -> the cid tiebreak is load-bearing); the corpus carries groups
+    // of exact duplicates (cos ties at the top-k boundary -> nid tiebreak),
+    // a zero vector and a NaN vector; the queries include the exact
+    // cid 1/3 tie, a zero vector (null cosines) and a NaN vector (NaN
+    // cosines). ansi=false: the zero vectors' divisions by zero yield null
+    // instead of raising DIVIDE_BY_ZERO.
+    val cent = Seq(
+      (1L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 1.0, 0.0, 0.0)),
+      (3L, Seq(1.0, 0.0, 0.0, 0.0)),
+      (4L, Seq(0.0, 0.0, 1.0, 1.0)),
+      (5L, Seq(-1.0, 0.0, 0.0, 0.0)),
+      (6L, Seq(0.5, 0.5, -0.5, 0.0))).toDF("cid", "cv")
+    val rng = new java.util.SplittableRandom(29L)
+    val dups = (0 until 6).flatMap { g =>
+      val v = Seq.fill(4)((rng.nextDouble() * 2 - 1).toFloat)
+      (0 until 4).map(i => ((g * 4 + i).toLong, v))
+    }
+    val filler = (24 until 60).map(i => (i.toLong, Seq.fill(4)((rng.nextDouble() * 2 - 1).toFloat)))
+    val edge = Seq((60L, Seq.fill(4)(0.0f)), (61L, Seq(Float.NaN, 1.0f, 0.0f, 0.0f)))
+    val df = (dups ++ filler ++ edge).toDF("vec_id", "embedding")
+    val q = (Seq((0L, dups.head._2), (30L, filler(6)._2)) ++ Seq(
+      (1000L, Seq(1.0f, 0.0f, 0.0f, 0.0f)),
+      (1001L, Seq.fill(4)(0.0f)),
+      (1002L, Seq(0.0f, Float.NaN, 0.0f, 0.0f)))).toDF("vec_id", "embedding")
+    withAnsiOff {
+      val index = Similarity.IvfIndex(cent, Similarity.assignCells(df, "vec_id", "embedding", cent))
+      val dir = s"target/tmp/ivf_spec_retired/${java.util.UUID.randomUUID}"
+      Similarity.persistIvfIndex(index, dir)
+      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+      graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(dir, "_fingerprint"),
+        "ivf-v1|n=62|xor=0|k=6|iters=0")
+      val stored = spark.read.parquet(s"$dir/assigned")
+      for ((k, nprobe) <- Seq((3, 1), (5, 2), (4, 3), (70, 6), (2, 9))) {
+        val want = retiredIvfTopK(cent, index.assigned, q, k, nprobe)
+        assert(want.exists(_._4.exists(c => java.lang.Double.isNaN(java.lang.Double.longBitsToDouble(c)))),
+          "fixture lost its NaN corner")
+        assert(want.exists(_._4.isEmpty), "fixture lost its null-cosine corner")
+        assert(ivfRows(Similarity.ivfTopK(index, q, "vec_id", "embedding", k, nprobe)) === want,
+          s"ivfTopK diverged at k=$k nprobe=$nprobe")
+        val wantStored = retiredIvfTopK(cent, stored, q, k, nprobe)
+        // twice: the opening probe and the probe on the held version
+        for (pass <- 1 to 2)
+          assert(ivfRows(Similarity.ivfTopKPersisted(spark, dir, q, "vec_id", "embedding", k, nprobe))
+            === wantStored, s"ivfTopKPersisted diverged at k=$k nprobe=$nprobe pass=$pass")
+      }
+    }
+  }
+
+  test("persisted IVF handle: a warm probe opens nothing; every writer's commit renews it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = s"target/tmp/ivf_spec_handle/${java.util.UUID.randomUUID}"
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    def P(name: String) = new org.apache.hadoop.fs.Path(dir, name)
+    val base = clustered(120, 16, 4, jitter = 0.05).toDF("vec_id", "embedding")
+    Similarity.ensureIvfIndex(spark, dir, base, "vec_id", "embedding", numCentroids = 4)
+    val q = base.filter($"vec_id" < 3L)
+    // every cell probed and k past the corpus: a probe returns each query's
+    // whole corpus, so it shows exactly which rows the version it used holds
+    def probeDir(d: String) = ivfRows(Similarity.ivfTopKPersisted(spark, d, q,
+      "vec_id", "embedding", k = 1000, nprobe = 64))
+    def nids(rows: Seq[(Long, Long, Int, Option[Long])]): Set[Long] = rows.map(_._2).toSet
+    // what a block runs: its jobs outside any SQL execution (the schema
+    // inference, and any parallel listing, of `spark.read.parquet` — how a
+    // probe opens `assigned` or `centroids`) and the file relations its SQL
+    // executions read (the centroid matrix collect reads `centroids`)
+    val nonSqlJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          nonSqlJobs.incrementAndGet()
+    }
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = qe.analyzed.foreach {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.rootPaths.foreach(p => reads.add(p.getName))
+          case _ =>
+        }
+        case _ =>
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    final case class Ran(nonSqlJobs: Int, reads: Seq[String])
+    def jobsOf[A](body: => A): (A, Ran) = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      nonSqlJobs.set(0)
+      reads.clear()
+      val a = body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (a, Ran(nonSqlJobs.get(), reads.asScala.toSeq))
+    }
+    def opens(r: Ran): Boolean = r.nonSqlJobs > 0
+    def collectsMatrix(r: Ran): Boolean = r.reads.contains("centroids")
+    // the first probe after a writer opens the new version; the next one
+    // reuses it and returns the same rows
+    def probeTwice(carriesMatrix: Boolean = false): Seq[(Long, Long, Int, Option[Long])] = {
+      val (first, j1) = jobsOf(probeDir(dir))
+      assert(opens(j1) && collectsMatrix(j1) == !carriesMatrix,
+        s"the first probe at a new version did not open it: $j1")
+      val (second, j2) = jobsOf(probeDir(dir))
+      assert(!opens(j2) && !collectsMatrix(j2), s"a probe at an unchanged version opened it: $j2")
+      assert(second === first)
+      first
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    try {
+      assert(nids(probeTwice()) === (0L until 120L).toSet)
+
+      // append: the held version's matrix assigns the batch (no centroid
+      // collect), the new version keeps it and lists `assigned` afresh
+      val batch = clustered(10, 16, 4, jitter = 0.05)
+        .map { case (i, v) => (i + 500L, v) }.toDF("vec_id", "embedding")
+      val (_, ja) = jobsOf(Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding"))
+      assert(!opens(ja) && !collectsMatrix(ja), s"the append re-read the centroids: $ja")
+      val afterAppend = probeTwice(carriesMatrix = true)
+      assert(nids(afterAppend) === (0L until 120L).toSet ++ (500L until 510L))
+
+      // forced same-k rebalance: the fingerprint text is unchanged, its
+      // mtime is not, and the old tree is gone (no FileNotFound from it)
+      val fpBefore = graft.sources.HadoopText.read(fs, P("_fingerprint"))
+      assert(Similarity.rebalanceIvfIndex(spark, dir, _ => 4, force = true) === Some(4))
+      assert(graft.sources.HadoopText.read(fs, P("_fingerprint")) === fpBefore)
+      assert(nids(probeTwice()) === nids(afterAppend))
+
+      // ensureIvfIndex rebuild over a changed corpus
+      val shrunk = base.filter($"vec_id" =!= 7L)
+      Similarity.ensureIvfIndex(spark, dir, shrunk, "vec_id", "embedding", numCentroids = 4)
+      assert(nids(probeTwice()) === (0L until 120L).toSet - 7L)
+
+      // the recover drills' hand-written fingerprints: an append's crash
+      // after its files landed (marker names both identities) rolls forward
+      val fp0 = graft.sources.HadoopText.read(fs, P("_fingerprint"))
+      Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding")
+      val fp1 = graft.sources.HadoopText.read(fs, P("_fingerprint"))
+      val grown = (0L until 120L).toSet - 7L ++ (500L until 510L)
+      assert(nids(probeTwice(carriesMatrix = true)) === grown)
+      graft.sources.HadoopText.write(fs, P("_fingerprint"), fp0)
+      assert(nids(probeTwice()) === grown)
+      graft.sources.HadoopText.write(fs, P("_append_pending"), s"$fp0\n$fp1")
+      assert(Similarity.recoverIvfIndex(spark, dir) === Some("rolled-forward"))
+      assert(nids(probeTwice()) === grown)
+
+      // no `_fingerprint` (persistIvfIndex alone): every probe opens afresh
+      val bare = s"target/tmp/ivf_spec_handle/${java.util.UUID.randomUUID}"
+      Similarity.persistIvfIndex(
+        Similarity.buildIvfIndex(base, "vec_id", "embedding", numCentroids = 4), bare)
+      val (b1, jb1) = jobsOf(probeDir(bare))
+      val (b2, jb2) = jobsOf(probeDir(bare))
+      assert(opens(jb1) && opens(jb2) && collectsMatrix(jb2), s"$jb1 / $jb2")
+      assert(b2 === b1 && nids(b1) === (0L until 120L).toSet)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
+  }
+
   test("ensureIvfIndex builds once, reuses on identical corpus, rebuilds on change") {
     val df = blockClustered(clusters = 4, per = 25, dim = 16, jitter = 0.05)
       .toDF("vec_id", "embedding")
