@@ -11,8 +11,6 @@ object Bench {
   private def esc(s: String): String =
     s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => " "; case c => c.toString }
 
-  private val B36 = "0123456789abcdefghijklmnopqrstuvwxyz"
-
   /** Host 1/5/15-min load averages, or (-1,-1,-1) off-Linux. Captured at
     * bench start AND end into the emitted artifacts: the r14 consolidated
     * record was silently inflated 1.4× by self-inflicted box load, and a
@@ -58,72 +56,6 @@ object Bench {
       (math.rint(steal * 100) / 100, math.rint(busy * 100) / 100)
     }
 
-  /** Entries per restart point: every Nth entry carries its FULL name
-    * (L forced to 0) so a head-truncated capture re-synchronizes at the
-    * next restart instead of losing every remaining entry (front-coding
-    * is a prefix chain — one lost link would otherwise break the rest).
-    * 16 costs ~70 chars at the 172-query inventory and bounds truncation
-    * loss to one block.
-    *
-    * RETIRED from the emitted line in round 16 (the driver's per-query
-    * parser consumes a plain `"queries"` map, not this encoding — see
-    * [[compactLine]]); kept because every BENCH artifact from rounds 6-15
-    * carries a `qs` field that tools/decode_bench.py and the specs still
-    * decode through these two functions.
-    */
-  private val RestartEvery = 16
-
-  /** Front-code sorted (name, value) entries into one comma-joined string.
-    *
-    * Each entry is `B36(L) + suffix + ":" + value` where L (one base-36
-    * char, capped at 35) is the number of leading characters the name shares
-    * with the PREVIOUS entry's name — `name = prev_name[:L] + suffix`.
-    * Query names sort into dense prefix families (q_agg…, q_ext_stream…),
-    * so the shared-prefix char replaces most of each name; values are
-    * integers in the caller's unit (negative = failed run marker). Every
-    * [[RestartEvery]]th entry is a restart point (L = 0, full name). The
-    * encoding is self-describing modulo this one rule, which the emitted
-    * line carries in its "enc" field.
-    */
-  def encodeEntries(entries: Seq[(String, Long)]): String = {
-    val sb = new StringBuilder
-    var prev = ""
-    entries.zipWithIndex.foreach { case ((name, v), i) =>
-      var l = 0
-      if (i % RestartEvery != 0) {
-        val max = math.min(math.min(prev.length, name.length), 35)
-        while (l < max && prev(l) == name(l)) l += 1
-      }
-      if (sb.nonEmpty) sb += ','
-      sb += B36(l) ++= name.substring(l) += ':' ++= v.toString
-      prev = name
-    }
-    sb.result()
-  }
-
-  /** Inverse of [[encodeEntries]]; used by the spec and offline decoders.
-    * Tolerates a head-truncated input: malformed fragments and entries
-    * whose prefix context was lost are skipped until the next restart
-    * point (L = 0) re-synchronizes the name chain.
-    */
-  def decodeEntries(s: String): Seq[(String, Long)] = {
-    var prev: String = null // null = out of sync, wait for a restart point
-    s.split(',').toSeq.flatMap { e =>
-      val cut = e.lastIndexOf(':')
-      val l = if (e.isEmpty) -1 else B36.indexOf(e.charAt(0))
-      if (cut < 1 || l < 0 || (prev == null && l > 0) || (prev != null && l > prev.length) ||
-          !e.substring(cut + 1).matches("-?\\d+")) None
-      else {
-        val name = (if (l == 0) "" else prev.substring(0, l)) + e.substring(1, cut)
-        if (name.isEmpty) None // a truncated fragment can masquerade as "0:<v>"
-        else {
-          prev = name
-          Some(name -> e.substring(cut + 1).toLong)
-        }
-      }
-    }
-  }
-
   /** Seconds at regression-relevant width: 2 decimals under 10 s, 1 decimal
     * under 100 s, whole seconds above — a 10% delta stays visible at every
     * magnitude while the common sub-second entry costs 4 chars.
@@ -149,10 +81,12 @@ object Bench {
     * Per-query timings ride a PLAIN `"queries":{name:sec}` map — the only
     * form the driver's per-query/scaling comparison consumes (the r6-r15
     * front-coded "qs" field kept full coverage inside the window but left
-    * PERF.per_query dark for two rounds). A COMPLETE plain map cannot exist
-    * inside the 2000-char window at the current inventory: the 193 names
-    * alone are 1727 chars and JSON quoting/punctuation adds 4 per entry —
-    * 2.5k chars before the first value is written. So the map carries the
+    * PERF.per_query dark for two rounds; its codec is deleted, and
+    * tools/decode_bench.py alone reads those records). A COMPLETE plain
+    * map cannot exist inside the 2000-char window at the current
+    * inventory: the 193 names alone are 1727 chars and JSON
+    * quoting/punctuation adds 4 per entry — 2.5k chars before the first
+    * value is written. So the map carries the
     * SLOWEST K queries — every failed query first (negative seconds,
     * `v<0=failed`, so a failure can never be silently dropped off the
     * line), then descending median — with K maximized against the budget;

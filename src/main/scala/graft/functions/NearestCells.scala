@@ -30,10 +30,10 @@ final class CentroidMatrix(val cids: Array[Long], val cents: Array[Array[Double]
 }
 
 object CentroidMatrix {
-  /** Collect a `(cid, cv)` centroid frame (k rows, broadcast-sized by the
-    * caller's tier check) into cid-ascending arrays. cid ascending is
-    * load-bearing: [[NearestCells.kernel]] derives its tie-break (lowest
-    * cid wins on equal cosine) from the iteration order.
+  /** Collect a `(cid, cv)` centroid frame (k rows) into cid-ascending
+    * arrays. cid ascending is load-bearing: [[NearestCells.kernel]] derives
+    * its tie-break (lowest cid wins on equal cosine) from the iteration
+    * order.
     */
   def collect(centroids: DataFrame): CentroidMatrix = {
     val rows = centroids.select("cid", "cv").collect()
@@ -61,6 +61,10 @@ object CentroidMatrix {
   * measured as the dominant term of the IVF build (sf10: 9.4e8 rows per
   * assignment pass). In-row, the same n x k cosine kernels run as one
   * projection over n rows — zero join, zero aggregate, whole-stage codegen.
+  * It is the only centroid-scoring path: IVF assignment, append and every
+  * probe-cell selection go through it at any k (the persisted-index probes
+  * call [[NearestCells.kernel]] on the driver). The matrix rides each
+  * stage's task binary (k x d x 8 B — 64 MiB at 2^17 centroids of 64 dims).
   *
   * Output identity with the retired forms (pinned in NearestCellsSpec /
   * SimilaritySpec): cosine is `vector_dot(v, cv) / (nn * cn)` with both
@@ -77,10 +81,11 @@ object CentroidMatrix {
   *
   * Zero-norm corner: a zero vector yields 0/0 = NaN cosines — the
   * non-ANSI `Divide` value (NaN-greatest keeps all cells in cid order).
-  * Under ANSI (Spark 4's default) the join tier's `cosinePre` raises
-  * DIVIDE_BY_ZERO on that input instead; no production corpus carries
-  * zero-norm embeddings (the contract every IVF fixture upholds), and the
-  * specs compare tiers under ansi=false where the corner is exercised.
+  * Under ANSI (Spark 4's default) the retired join form's `cosinePre`
+  * raises DIVIDE_BY_ZERO on that input instead; no production corpus
+  * carries zero-norm embeddings (the contract every IVF fixture upholds),
+  * and the specs compare against that form under ansi=false where the
+  * corner is exercised.
   */
 case class NearestCells(vec: Expression, mat: CentroidMatrix, nprobe: Int)
     extends UnaryExpression {
@@ -117,19 +122,6 @@ case class NearestCells(vec: Expression, mat: CentroidMatrix, nprobe: Int)
 }
 
 object NearestCells {
-
-  /** Tier ceiling for the in-row form: past this many centroids
-    * `Similarity.assignCells` (over a centroid frame) and `ivfSelfTopK` keep
-    * their broadcast-join formulation. The persisted-index append assigns
-    * in-row at any k, with the matrix its open index version already holds;
-    * the probes pick cells on the driver. 2^17 centroids x 64 dims x 8 B
-    * = 64 MiB of matrix riding the stage's task binary (one broadcast per
-    * stage) — comfortably inside executor memory, and under autoCentroids
-    * (k = n/128) it covers corpora to ~16M vectors. Above it the join path
-    * faces the same broadcast ceiling it always had; the tier just keeps
-    * this expression from moving that wall lower.
-    */
-  val defaultMaxLocalCentroids: Int = 131072
 
   /** Shared eval/codegen kernel. Iterates centroids in cid-ascending order
     * with strict-improvement insertion, so equal cosines keep the earlier

@@ -918,12 +918,6 @@ object Dedup {
       .select(col("x.id").as("d1"), col("sid").as("d2"))
       .distinct()
       .localCheckpoint() // tiny by construction; feeds two joins below
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_PROBE"))
-      // the candidate join executes EAGERLY inside the checkpoint above, so
-      // the declared query's final plan cannot show its strategy — this dev
-      // hook is the only place the tier's plan is observable (plans/r16)
-      Console.err.println("[probe-plan] candidate join:\n" + joined.queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     val batchSets = batchToks.groupBy("id").agg(collect_set(col("th")).as("ths"))
     // Everything downstream of a localCheckpoint is stats-blind (LogicalRDD
     // reports unknown size), so left to itself the planner sort-merges the

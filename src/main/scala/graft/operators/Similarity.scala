@@ -340,51 +340,28 @@ object Similarity {
     centers.toArray
   }
 
-  /** Nearest-centroid cell per corpus vector (ties broken by lowest cid).
-    *
-    * Two output-identical tiers on the exact centroid count (round 16,
-    * guide §1.2 "the distributed algorithm" / §4 codegen):
-    *
-    *  - k ≤ maxLocalCentroids (every measured scale; 2^17 × 64 dims × 8 B
-    *    = 64 MiB, covers ~16M vectors under autoCentroids): the cosine
-    *    argmax runs IN-ROW via the codegen'd [[graft.functions.NearestCells]]
-    *    against the collected centroid matrix — one projection over n rows,
-    *    zero join, zero aggregate. The retired form below is structurally
-    *    shuffle-free too, but it MATERIALIZES n × k joined rows through the
-    *    BroadcastNestedLoopJoin → project → partial-agg pipeline, each
-    *    carrying the full vector — measured as the dominant term of the IVF
-    *    build at sf10 (9.4e8 rows per assignment pass, 3 passes, ~66 s warm
-    *    build) and the build's n²/128 scaling term under the autoCentroids
-    *    rule.
-    *  - above the tier: the broadcast join + bounded `max_by` (unchanged
-    *    r15 form) — at that k the matrix should ride Spark's broadcast
-    *    machinery, not the task binary.
-    *
-    * Identity across tiers (SimilaritySpec pins both on a tie/NaN fixture):
-    * same `vector_dot / (nn·cn)` doubles, same (ccos DESC, cid ASC,
-    * NaN-greatest, -0.0 = 0.0) comparator as `max_by(struct(ccos, -cid))`.
+  /** Nearest-centroid cell per corpus vector (ties broken by lowest cid):
+    * collects the centroid frame into a [[graft.functions.CentroidMatrix]]
+    * and assigns in-row against it (the overload below).
     */
   def assignCells(vectors: DataFrame, idCol: String, vecCol: String,
-                  centroids: DataFrame,
-                  maxLocalCentroids: Int =
-                    graft.functions.NearestCells.defaultMaxLocalCentroids): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
-    if (centroids.count() <= maxLocalCentroids)
-      assignCells(vectors, idCol, vecCol, graft.functions.CentroidMatrix.collect(centroids))
-    else {
-      vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"),
-          norm(col(vecCol)).as("nn"))
-        .crossJoin(broadcast(centroids.withColumn("cn", norm(col("cv")))))
-        .withColumn("ccos", cosinePre(col("nv"), col("cv"), col("nn"), col("cn")))
-        .groupBy("nid")
-        .agg(max_by(struct(col("nv"), col("cid")), struct(col("ccos"), -col("cid"))).as("best"))
-        .select(col("nid"), col("best.nv").as("nv"), col("best.cid").as("cell"))
-    }
-  }
+                  centroids: DataFrame): DataFrame =
+    assignCells(vectors, idCol, vecCol, graft.functions.CentroidMatrix.collect(centroids))
 
-  /** The in-row tier of [[assignCells]] against an already-collected
-    * centroid matrix — the form an append uses with the matrix of the
-    * index version it holds open, so no tick re-reads the centroids.
+  /** Nearest-centroid cell per corpus vector against an already-collected
+    * centroid matrix — the form an append uses with the matrix of the index
+    * version it holds open, so no tick re-reads the centroids.
+    *
+    * The cosine argmax runs IN-ROW via the codegen'd
+    * [[graft.functions.NearestCells]]: one projection over n rows, zero
+    * join, zero aggregate. The retired broadcast join + `max_by` form
+    * MATERIALIZED n × k joined rows, each carrying the full vector —
+    * measured as the dominant term of the IVF build at sf10 (9.4e8 rows per
+    * assignment pass, 3 passes, ~66 s warm build) and the build's n²/128
+    * scaling term under the autoCentroids rule. The expression keeps that
+    * form's `vector_dot / (nn·cn)` doubles and its (ccos DESC, cid ASC,
+    * NaN-greatest, -0.0 = 0.0) comparator; SimilaritySpec pins it against
+    * a copy of the retired form on a tie/NaN fixture.
     */
   def assignCells(vectors: DataFrame, idCol: String, vecCol: String,
                   mat: graft.functions.CentroidMatrix): DataFrame =
@@ -1151,9 +1128,9 @@ object Similarity {
     *  quality degrades gracefully rather than the job blowing up.
     */
   def ivfSelfTopK(index: IvfIndex, k: Int, nprobe: Int,
-                  maxCellFraction: Double = 0.25,
-                  maxLocalCentroids: Int =
-                    graft.functions.NearestCells.defaultMaxLocalCentroids): DataFrame = {
+                  maxCellFraction: Double = 0.25): DataFrame = {
+    require(k >= 1, s"ivfSelfTopK: k must be >= 1, got $k")
+    require(nprobe >= 1, s"ivfSelfTopK: nprobe must be >= 1, got $nprobe")
     graft.functions.GraftFunctions.register(index.assigned.sparkSession)
     // cell sizes: ≤ numCentroids rows — broadcast-sized by construction
     val n = index.assigned.count()
@@ -1171,44 +1148,24 @@ object Similarity {
     //    simHash scaladoc), measured 110-142 s at sf10 — slower than the
     //    window it replaced — and the packed row grew linearly with the
     //    corpus under autoCentroids (~41 MB at 10 M vectors);
-    //  - r16 form: the codegen'd [[graft.functions.NearestCells]] — the
-    //    top-nprobe cells computed IN-ROW against the collected centroid
-    //    matrix: one projection over n rows, zero join, zero aggregate, and
-    //    the kernels JIT-compile (no HOF dispatch). Above maxLocalCentroids
-    //    the broadcast join of centroid ROWS + the nprobe-bounded
-    //    [[graft.functions.Aggregators.TopKAggD]] remains (its exchange is
-    //    n buffer rows, never n × k) — the interim r16 form this round
-    //    measured at 39 s / sf10 before the expression landed.
+    //  - r16 form, the one kept: the codegen'd
+    //    [[graft.functions.NearestCells]] — the top-nprobe cells computed
+    //    IN-ROW against the collected centroid matrix: one projection over
+    //    n rows, zero join, zero aggregate, and the kernels JIT-compile (no
+    //    HOF dispatch).
     // Ordering corners that must MATCH the retired window's sort for output
-    // identity: both tiers rank (pcos DESC, cid ASC) with NaN greatest and
-    // -0.0 == 0.0 — exactly Spark's SQLOrderingUtil ordering (AggregatorsSpec
-    // pins TopKAggD against a live window; NearestCellsSpec pins the
-    // expression against the join+aggregate tier); SimilaritySpec pins this
-    // whole path against the retired window form on a tie-heavy fixture.
-    val corpusQ = index.assigned.select(col("nid").as("qid"), col("nv").as("qv"),
-      norm(col("nv")).as("qn"))
-    val topCells =
-      if (index.centroids.count() <= maxLocalCentroids) {
-        val mat = graft.functions.CentroidMatrix.collect(index.centroids)
-        corpusQ.select(col("qid"), col("qv"), col("qn"),
-          explode(org.apache.spark.sql.graft.ColumnBridge.column(
-            graft.functions.NearestCells(
-              org.apache.spark.sql.graft.ColumnBridge.expression(col("qv")), mat, nprobe)))
-            .as("cell"))
-      } else {
-        // qv/qn are functionally dependent on qid, so first() is
-        // deterministic here
-        val probeAgg = udaf(new graft.functions.Aggregators.TopKAggD(nprobe))
-        corpusQ
-          .crossJoin(broadcast(index.centroids.withColumn("cn", norm(col("cv")))))
-          .withColumn("pcos", cosinePre(col("qv"), col("cv"), col("qn"), col("cn")))
-          .groupBy(col("qid"))
-          .agg(first(col("qv")).as("qv"), first(col("qn")).as("qn"),
-            probeAgg(col("pcos"), col("cid")).as("topc"))
-          .select(col("qid"), col("qv"), col("qn"), explode(col("topc")).as("t"))
-          .select(col("qid"), col("qv"), col("qn"), col("t._2").as("cell"))
-      }
-    val probes = topCells
+    // identity: the expression ranks (pcos DESC, cid ASC) with NaN greatest
+    // and -0.0 == 0.0 — exactly Spark's SQLOrderingUtil ordering
+    // (NearestCellsSpec pins it against a join + window reference);
+    // SimilaritySpec pins this whole path against the retired window form
+    // on a tie-heavy fixture.
+    val mat = graft.functions.CentroidMatrix.collect(index.centroids)
+    val probes = index.assigned
+      .select(col("nid").as("qid"), col("nv").as("qv"), norm(col("nv")).as("qn"),
+        explode(org.apache.spark.sql.graft.ColumnBridge.column(
+          graft.functions.NearestCells(
+            org.apache.spark.sql.graft.ColumnBridge.expression(col("nv")), mat, nprobe)))
+          .as("cell"))
       .join(broadcast(subCounts), Seq("cell"))
       .withColumn("sub", pmod(xxhash64(col("qid")), col("nsub")))
     val corpus = index.assigned

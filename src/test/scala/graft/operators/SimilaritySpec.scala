@@ -826,22 +826,26 @@ class SimilaritySpec extends SparkSpec {
         .sortBy(t => (t._1, t._3))
       assert(got.toSeq === reference.toSeq,
         s"(k=$k nprobe=$nprobe frac=$frac) diverged from the window formulation")
-      // the over-tier probe (centroid count past maxLocalCentroids ->
-      // broadcast join of centroid rows + nprobe-bounded TopKAggD instead of
-      // the in-row NearestCells expression) must keep the SAME cells and
-      // thus the same output — tier forced to 0 so the 6-centroid index
-      // takes that path
-      val overTier = Similarity.ivfSelfTopK(index, k = k, nprobe = nprobe,
-          maxCellFraction = frac, maxLocalCentroids = 0)
-        .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid"),
-          r.getAs[Int]("rn"), r.getAs[Double]("cos")))
-        .sortBy(t => (t._1, t._3))
-      assert(overTier.toSeq === reference.toSeq,
-        s"(k=$k nprobe=$nprobe frac=$frac) over-tier probe diverged")
     }
   }
 
-  test("assignCells tiers (in-row expression vs broadcast join) are output-identical") {
+  test("ivfSelfTopK rejects k < 1 and nprobe < 1, naming the parameter") {
+    val df = blockClustered(clusters = 2, per = 5, dim = 4, jitter = 0.05)
+      .toDF("vec_id", "embedding")
+    val index = Similarity.buildIvfIndex(df, "vec_id", "embedding", numCentroids = 2)
+    // k = 0 used to reach TopKAggD.reduce, whose buf.last on the empty
+    // buffer threw NoSuchElementException inside a task
+    val badK = intercept[IllegalArgumentException] {
+      Similarity.ivfSelfTopK(index, k = 0, nprobe = 1).collect()
+    }
+    assert(badK.getMessage.contains("k must be >= 1"), badK.getMessage)
+    val badProbe = intercept[IllegalArgumentException] {
+      Similarity.ivfSelfTopK(index, k = 1, nprobe = 0).collect()
+    }
+    assert(badProbe.getMessage.contains("nprobe must be >= 1"), badProbe.getMessage)
+  }
+
+  test("assignCells matches the retired broadcast-join max_by form, ties/NaN") {
     import org.apache.spark.sql.functions._
     // exact-duplicate vectors (identical cosines -> lowest-cid tiebreak is
     // load-bearing) + a zero vector (NaN cosine against every centroid ->
@@ -853,7 +857,7 @@ class SimilaritySpec extends SparkSpec {
       (6 until 40).map(i => (i.toLong, Seq.fill(8)((rng.nextDouble() * 2 - 1).toFloat)))
     val df = vecs.toDF("vec_id", "embedding")
     // ansi=false for the comparison: the zero vector's 0/0 cosine is NaN in
-    // the kernel and the non-ANSI join tier alike, where ANSI Divide would
+    // the kernel and the non-ANSI join form alike, where ANSI Divide would
     // raise DIVIDE_BY_ZERO (production embedding corpora carry no zero-norm
     // vectors — see the NearestCells scaladoc)
     val prevAnsi = spark.conf.getOption("spark.sql.ansi.enabled")
@@ -863,8 +867,16 @@ class SimilaritySpec extends SparkSpec {
       val inRow = Similarity.assignCells(df, "vec_id", "embedding", cent)
         .collect().map(r => (r.getAs[Long]("nid"), r.getSeq[Float](1), r.getAs[Long]("cell")))
         .sortBy(_._1)
-      val joined = Similarity.assignCells(df, "vec_id", "embedding", cent,
-          maxLocalCentroids = 0)
+      // the retired formulation, verbatim: every (vector, centroid) pair
+      // scored through a broadcast cross join, argmax by max_by over
+      // struct(ccos, -cid)
+      val joined = df.select(col("vec_id").as("nid"), col("embedding").as("nv"),
+          Similarity.norm(col("embedding")).as("nn"))
+        .crossJoin(broadcast(cent.withColumn("cn", Similarity.norm(col("cv")))))
+        .withColumn("ccos", Similarity.cosinePre(col("nv"), col("cv"), col("nn"), col("cn")))
+        .groupBy("nid")
+        .agg(max_by(struct(col("nv"), col("cid")), struct(col("ccos"), -col("cid"))).as("best"))
+        .select(col("nid"), col("best.nv").as("nv"), col("best.cid").as("cell"))
         .collect().map(r => (r.getAs[Long]("nid"), r.getSeq[Float](1), r.getAs[Long]("cell")))
         .sortBy(_._1)
       assert(inRow.toSeq === joined.toSeq)

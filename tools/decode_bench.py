@@ -1,9 +1,17 @@
 #!/usr/bin/env python3
-"""Decode the compact bench line's front-coded "qs" field.
+"""Decode the front-coded "qs" field of the r6-r15 bench records.
 
-Usage: decode_bench.py BENCH_r07.json   (or any file whose last line is the
-compact JSON; tolerates a tail-truncated front — entries before the first
-fully-contained one are dropped, matching the driver's stdout capture).
+Usage: decode_bench.py BENCH_r07.json
+
+Reads the compact line from either form of record:
+  - a run record (BENCH_rNN.json): one JSON object whose "parsed" field
+    holds the compact line;
+  - a compact line on its own (BENCH_local_rNN.json), or as the last line
+    of a log, after any prefix.
+Exits non-zero, naming the file, when no "qs" field is found (the r16+
+line carries a plain "queries" map instead, which needs no decoding).
+Tolerates a tail-truncated front — entries before the first fully-contained
+one are dropped, matching the driver's stdout capture.
 
 Entry format: B36(L) + suffix + ":" + value, where L is the number of
 leading chars shared with the PREVIOUS entry's name (name = prev[:L] +
@@ -35,9 +43,26 @@ def decode(qs: str, unit: str) -> dict:
     return out
 
 
+def compact_line(text: str) -> dict:
+    """The compact-line object of a run record, a bare line, or a log tail."""
+    try:
+        d = json.loads(text)
+    except ValueError:
+        line = (text.strip().splitlines() or [""])[-1]
+        try:  # index() and a malformed line both raise ValueError
+            d = json.loads(line[line.index("{"):])
+        except ValueError:
+            d = {}
+    if isinstance(d, dict) and "qs" not in d and isinstance(d.get("parsed"), dict):
+        d = d["parsed"]
+    return d if isinstance(d, dict) else {}
+
+
 if __name__ == "__main__":
-    line = open(sys.argv[1]).read().strip().splitlines()[-1]
-    d = json.loads(line[line.index("{"):]) if "{" in line else {}
-    q = decode(d.get("qs", ""), d.get("q_unit", "cs"))
+    path = sys.argv[1]
+    d = compact_line(open(path).read())
+    if not isinstance(d.get("qs"), str):
+        sys.exit(f"decode_bench: no \"qs\" field in {path}")
+    q = decode(d["qs"], d.get("q_unit", "cs"))
     print(json.dumps({**{k: v for k, v in d.items() if k != "qs"}, "queries": q},
                      indent=None, sort_keys=True))
