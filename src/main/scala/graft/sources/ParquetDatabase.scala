@@ -2,8 +2,10 @@ package graft.sources
 
 import graft.schema.SchemaOps
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -26,6 +28,11 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   private def fs = new Path(dir).getFileSystem(hconf)
 
   def exists: Boolean = fs.exists(new Path(dir))
+
+  private def qualifiedDir: String = fs.makeQualified(new Path(dir)).toString
+
+  /** Drop this table's open read versions: a commit just replaced them. */
+  private def forgetReads(): Unit = ParquetDatabase.forgetReads(qualifiedDir)
 
   // ------------------------------------------------ optimistic concurrency
 
@@ -64,23 +71,23 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     */
   private def fingerprintOfTree(root: String): String = {
     val sb = new StringBuilder
-    def walk(p: Path): Unit =
-      // a concurrent writer's swap can delete entries between the parent
-      // listing and this stat — skip them rather than crash the mutation
-      // entry. The resulting print describes a state that no longer
-      // exists, so any CAS against it simply conflicts (safe), and the
-      // walk stays usable while peers mutate.
-      try {
-        val st = fs.getFileStatus(p)
-        if (st.isDirectory)
-          fs.listStatus(p).sortBy(_.getPath.getName).foreach(s => walk(s.getPath))
-        else sb.append(relativize(root, p)).append('|').append(st.getLen)
-          .append('|').append(st.getModificationTime).append('\n')
-      } catch { case _: java.io.FileNotFoundException => () }
-    if (fs.exists(new Path(root))) walk(new Path(root))
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sb.result().getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
+    // one stat for the root, then one listing per directory: every entry's
+    // length and mtime come from its parent's listing (each stat or listing
+    // is one request on an object store)
+    def walk(st: FileStatus): Unit =
+      if (st.isDirectory)
+        // a concurrent writer's swap can delete a directory between its
+        // parent's listing and its own — skip it rather than crash the
+        // mutation entry. The resulting print describes a state that no
+        // longer exists, so any CAS against it simply conflicts (safe), and
+        // the walk stays usable while peers mutate.
+        try fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(walk)
+        catch { case _: java.io.FileNotFoundException => () }
+      else sb.append(relativize(root, st.getPath)).append('|').append(st.getLen)
+        .append('|').append(st.getModificationTime).append('\n')
+    try walk(fs.getFileStatus(new Path(root)))
+    catch { case _: java.io.FileNotFoundException => () }
+    ParquetDatabase.md5Hex(sb.result())
   }
 
   /** A `__patch_old` manifest names originals that are NOT in the live
@@ -248,11 +255,23 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
       else conformed
     val writer = withId.write.mode("append")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(dir)
+    forgetReads()
   }
 
   /** Projected / filtered read (ParquetDB `read`, base.py:188-193).
     * `mergeSchema` reproduces the permissive union across appended batches
     * with evolved schemas; nested structs need no rebuild (parquet native).
+    *
+    * Each table version is opened once: the first read of a version infers
+    * the merged schema (Spark's footer-merge job over every file), and every
+    * later read of it passes that schema to the reader, so a warm read runs
+    * its scan and nothing else. The handle is keyed by (SparkSession,
+    * qualified dir, effective options, the session's SQL conf) and checked
+    * on every read against a digest of the (path, length, mtime) of each
+    * leaf file the read's own file index listed. That set costs no extra
+    * listing and is exactly what the scan reads, so a commit by any
+    * writer, in this process or not, makes the next read infer again; this
+    * facade's own commits also drop the dir's handles.
     *
     * @param options per-read tuning (the reference's per-call `LoadConfig`,
     *                base.py:224,239 — batch sizing etc.): Spark parquet
@@ -266,13 +285,15 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     */
   def read(columns: Seq[String] = Nil, filter: Option[Column] = None,
            options: Map[String, String] = Map.empty): DataFrame = {
-    val base = spark.read
-      .options(Map("mergeSchema" -> "true") ++ options)
-      .parquet(dir)
+    val base = ParquetDatabase.openRead(spark, dir, qualifiedDir,
+      Map("mergeSchema" -> "true") ++ options)
     val filtered = filter.map(base.filter).getOrElse(base)
     if (columns.isEmpty) filtered else filtered.select(columns.map(c => col(s"`$c`")): _*)
   }
 
+  /** The merged schema of the live table version; a version [[read]] has
+    * already opened answers without a Spark job.
+    */
   def schema: StructType = read().schema
   def nRows: Long = read().count()
   def nColumns: Int = schema.fields.length
@@ -491,6 +512,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     archiveReferenced(new Path(old), p => relativize(old, p))
     fs.delete(new Path(old), true)
     fs.delete(new Path(swapperMarker), false)
+    forgetReads()
   }
 
   /** Sibling marker naming the staging dir of the swap currently (or last)
@@ -573,11 +595,14 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     * rewritten, copy-on-write. The scan cost is unavoidable (matches must
     * be found); the rewrite — the expensive half at 100 TB — is scoped.
     * Falls back to the full crash-safe rewrite on partitioned layouts
-    * (where file replacement would drop directory-encoded columns).
+    * (where file replacement would drop directory-encoded columns). The
+    * hit scan goes through [[read]], so a version already open skips the
+    * schema-merge job; the files it rewrites are read with their own merged
+    * schema, which keeps the rewritten bytes what they were.
     */
   def deleteWhere(condition: Column): Unit = {
     val expect = Some(entryFingerprint())
-    val base = spark.read.option("mergeSchema", "true").parquet(dir)
+    val base = read()
     // the hit-scan is an EAGER table read outside the staging write, so a
     // peer's swap landing mid-scan surfaces here, not in stageOrAbort —
     // same retryable-conflict mapping (round-14 stress-drill finding)
@@ -679,6 +704,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     archiveReferenced(old, p => relPrefix + p.getName)
     fs.delete(old, true)
     fs.delete(tmp, true)
+    forgetReads()
   }
 
   private def writeTextFile(p: Path, text: String): Unit =
@@ -812,6 +838,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     }
     rollbackPatchOld(actions)
     for (t <- pTmps if fs.exists(t)) { fs.delete(t, true); actions += s"dropped $t" }
+    forgetReads()
     actions.toList
   }
 
@@ -1234,6 +1261,67 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
 object ParquetDatabase {
 
   val ManifestName = "_graft_manifest"
+
+  private def md5Hex(text: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** One table version as a read opened it: the digest of its leaf files
+    * (see [[leafDigest]]) and the schema inferred from exactly those files.
+    */
+  private final case class ReadVersion(files: String, schema: StructType)
+
+  private type ReadKey = (SparkSession, String, Map[String, String], Map[String, String])
+
+  /** Open read versions, one per (session, qualified dir, effective read
+    * options, the session's SQL conf). The conf is part of the key because
+    * parquet settings such as `binaryAsString` change what inference yields.
+    */
+  private val readVersions = new java.util.concurrent.ConcurrentHashMap[ReadKey, ReadVersion]()
+
+  /** `spark.read.options(options).parquet(dir)`, with the schema of the
+    * version it lists taken from the open handle when there is one. The
+    * relation is built with the held schema and kept only if its file
+    * index listed the files that schema was inferred from; otherwise (no
+    * handle, or a version it does not describe) the schema is inferred as
+    * before and the handle renewed.
+    */
+  private def openRead(spark: SparkSession, dir: String, qualifiedDir: String,
+                       options: Map[String, String]): DataFrame = {
+    val key = (spark, qualifiedDir, options, spark.sessionState.conf.getAllConfs)
+    val held = Option(readVersions.get(key))
+    held.map(v => spark.read.options(options).schema(v.schema).parquet(dir))
+      .filter(df => leafDigest(df) == held.map(_.files))
+      .getOrElse {
+        val df = spark.read.options(options).parquet(dir)
+        leafDigest(df) match {
+          case Some(files) => readVersions.put(key, ReadVersion(files, df.schema))
+          case None => readVersions.remove(key)
+        }
+        df
+      }
+  }
+
+  /** Digest of the (path, length, mtime) of every leaf file the file index
+    * under `df` listed; None when `df` is not a scan of a listed index.
+    */
+  private def leafDigest(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case idx: PartitioningAwareFileIndex => Some(md5Hex(idx.allFiles()
+            .map(s => s"${s.getPath}|${s.getLen}|${s.getModificationTime}\n").sorted.mkString))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Drop every open read version of `qualifiedDir`, in every session. */
+  private def forgetReads(qualifiedDir: String): Unit =
+    readVersions.keySet.removeIf(_._2 == qualifiedDir)
 
   /** Named failure for a replica whose bytes don't match its manifest. */
   final class ReplicaIntegrityException(msg: String)

@@ -1,7 +1,35 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
+
+/** Local disk under the `graftcount` scheme, counting the metadata calls
+  * callers make (a stat or a listing is one HEAD / LIST request on an
+  * object store). Calls the filesystem makes on itself, such as the stat
+  * per child inside a local `listStatus`, are not counted.
+  */
+class CountingLocalFs extends RawLocalFileSystem {
+  override def getScheme: String = "graftcount"
+  override def getUri: java.net.URI = java.net.URI.create("graftcount:///")
+  override def getFileStatus(f: Path): FileStatus =
+    CountingLocalFs.outer("getFileStatus")(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] =
+    CountingLocalFs.outer("listStatus")(super.listStatus(f))
+  override def exists(f: Path): Boolean =
+    CountingLocalFs.outer("exists")(super.exists(f))
+}
+
+object CountingLocalFs {
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  private val depth = ThreadLocal.withInitial[Int](() => 0)
+  def outer[T](name: String)(f: => T): T = {
+    if (depth.get == 0) calls.merge(name, 1, (a: Int, b: Int) => a + b)
+    depth.set(depth.get + 1)
+    try f finally depth.set(depth.get - 1)
+  }
+  def total: Int = { import scala.jdk.CollectionConverters._; calls.values.asScala.sum }
+}
 
 class ParquetDatabaseSpec extends SparkSpec {
   import spark.implicits._
@@ -347,6 +375,169 @@ class ParquetDatabaseSpec extends SparkSpec {
     for (suffix <- Seq("__snapshots", "__archive", "__patch_old", "__patch_tmp", "__old", "__normalize_tmp"))
       fs.delete(new org.apache.hadoop.fs.Path(db.dir + suffix), true)
     db
+  }
+
+  /** Reference fingerprint walk that stats every entry its parent listed;
+    * [[ParquetDatabase.fingerprint]] must print the same from its listings.
+    */
+  private def statEveryEntryFingerprint(dir: String): String = {
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val rootPath = fs.makeQualified(new Path(dir)).toUri.getPath
+    val sb = new StringBuilder
+    def walk(p: Path): Unit =
+      try {
+        val st = fs.getFileStatus(p)
+        if (st.isDirectory)
+          fs.listStatus(p).sortBy(_.getPath.getName).foreach(s => walk(s.getPath))
+        else sb.append(fs.makeQualified(p).toUri.getPath.stripPrefix(rootPath + "/"))
+          .append('|').append(st.getLen).append('|').append(st.getModificationTime).append('\n')
+      } catch { case _: java.io.FileNotFoundException => () }
+    if (fs.exists(new Path(dir))) walk(new Path(dir))
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(sb.result().getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("fingerprint equals the stat-every-entry walk with one stat plus one listing per dir") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingLocalFs].getName)
+    val flat = freshDb("fp_flat")
+    (0 until 3).foreach(i => flat.create(spark.range(i * 100, i * 100 + 50)
+      .select(col("id"), (col("id") % 3).as("v")).repartition(2)))
+    val part = freshDb("fp_part")
+    part.create(spark.range(60).select(col("id"), (col("id") % 3).as("p")),
+      partitionBy = Seq("p"))
+    part.create(spark.range(60, 80).select(col("id"), lit(7L).as("p")), partitionBy = Seq("p"))
+    for ((db, dirs) <- Seq(flat -> 1, part -> 5)) { // part: the root + p=0,1,2,7
+      assert(db.fingerprint() === statEveryEntryFingerprint(db.dir), db.dir)
+      // the same tree seen through the counting scheme (which shows .crc
+      // files the checksummed local scheme hides): same print, and the
+      // metadata calls no longer grow with the file count
+      val counted = s"graftcount://${new java.io.File(db.dir).getAbsolutePath}"
+      CountingLocalFs.calls.clear()
+      val fp = new ParquetDatabase(spark, counted).fingerprint()
+      val calls = CountingLocalFs.total
+      assert(CountingLocalFs.calls.get("listStatus") === dirs &&
+        CountingLocalFs.calls.get("getFileStatus") === 1 && calls === dirs + 1,
+        s"${db.dir}: ${CountingLocalFs.calls}")
+      CountingLocalFs.calls.clear()
+      assert(fp === statEveryEntryFingerprint(counted), counted)
+      assert(CountingLocalFs.total > calls + 10, s"reference walk: ${CountingLocalFs.calls}")
+    }
+    assert(new ParquetDatabase(spark, "target/tmp/pqdb/fp_absent").fingerprint() ===
+      statEveryEntryFingerprint("target/tmp/pqdb/fp_absent"))
+  }
+
+  /** The jobs a block runs: all of them, and those outside any SQL
+    * execution — the footer-merge job of a read's schema inference.
+    */
+  private final case class Jobs(all: Int, inference: Int)
+
+  private def jobsOf[A](body: => A): (A, Jobs) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val all = new java.util.concurrent.atomic.AtomicInteger(0)
+    val inference = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        all.incrementAndGet()
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          inference.incrementAndGet()
+      }
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      (a, Jobs(all.get, inference.get))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The first read of a new version infers its schema; the next read
+    * reuses it and runs one job. Both equal a raw merged-schema read.
+    */
+  private def openThenWarm(db: ParquetDatabase,
+                           options: Map[String, String] = Map.empty): Seq[String] = {
+    val (first, j1) = jobsOf(sortedRows(db.read(options = options)))
+    assert(j1.inference >= 1, s"the first read of a new version did not infer: $j1")
+    val (warm, j2) = jobsOf(sortedRows(db.read(options = options)))
+    assert(j2 === Jobs(1, 0), s"a read of an open version ran more than its scan: $j2")
+    assert(warm === first)
+    val raw = spark.read.options(Map("mergeSchema" -> "true") ++ options).parquet(db.dir)
+    assert(db.read(options = options).schema === raw.schema)
+    assert(warm === sortedRows(raw))
+    warm
+  }
+
+  test("read handle: a warm read runs one job; every commit makes the next read infer") {
+    val db = freshDbClean("handle")
+    db.create(spark.range(40).select(col("id"), concat(lit("x"), col("id")).as("x"))
+      .repartition(3))
+    assert(openThenWarm(db).size === 40)
+    val (_, js) = jobsOf(db.schema)
+    assert(js === Jobs(0, 0), s"schema of an open version ran a job: $js")
+
+    // a create that adds a column: the old rows read null
+    db.create(spark.range(40, 50).select(col("id"), (col("id") * 0.5).as("y")))
+    openThenWarm(db)
+    assert(db.read().columns.toSet === Set("id", "x", "y"))
+    assert(db.read().filter(col("id") < 40 && col("y").isNotNull).count() === 0L)
+
+    db.upsert(Seq((5L, "X5", 1.5), (100L, "new", 2.5)).toDF("id", "x", "y"), "id")
+    assert(openThenWarm(db).size === 51)
+    assert(db.read(Seq("x"), Some(col("id") === 5L)).head().getString(0) === "X5")
+
+    db.deleteWhere(col("id") === 100L || col("id") === 6L)
+    assert(openThenWarm(db).size === 49)
+
+    db.normalize(maxRowsPerFile = 10, sortBy = Seq("id"))
+    assert(db.fileStats.size > 2)
+    openThenWarm(db)
+
+    assert(db.compactSmallFiles(targetBytesPerFile = 1L << 20) > 1)
+    assert(db.fileStats.size === 1)
+    openThenWarm(db)
+
+    // a writer outside the facade drops no handle: the digest sees its files
+    spark.range(200, 203).select(col("id"), lit(9.5).as("y"), lit(true).as("z"))
+      .write.mode("append").parquet(db.dir)
+    assert(openThenWarm(db).size === 52)
+    assert(db.read().columns.toSet === Set("id", "x", "y", "z"))
+  }
+
+  test("read handle on a hive-partitioned table keeps the directory-encoded columns") {
+    val db = freshDbClean("handle_part")
+    db.create(spark.range(60).select(col("id"), (col("id") % 3).as("p"),
+      concat(lit("v"), col("id")).as("v")), partitionBy = Seq("p"))
+    openThenWarm(db)
+    assert(db.read().columns.toSet === Set("id", "v", "p"))
+    val (pruned, j) = jobsOf(db.read(Seq("id", "p"), Some(col("p") === 2L)).collect())
+    assert(j === Jobs(1, 0), s"$j")
+    assert(pruned.length === 20 && pruned.forall(_.getInt(1) === 2)) // partition values infer as int
+    db.create(spark.range(60, 70).select(col("id"), lit(7L).as("p"),
+      concat(lit("v"), col("id")).as("v")), partitionBy = Seq("p"))
+    assert(openThenWarm(db).size === 70)
+    assert(db.read().filter(col("p") === 7L).count() === 10L)
+  }
+
+  test("read handle: a read with per-read options is held under its own key") {
+    val db = freshDbClean("handle_opts")
+    db.create(Seq((1L, "a")).toDF("id", "x"))
+    db.create(Seq((2L, 3.5)).toDF("id", "y"))
+    openThenWarm(db)
+    val unmerged = Map("mergeSchema" -> "false")
+    openThenWarm(db, unmerged)
+    assert(db.read(options = unmerged).columns.length < 3)
+    // both versions stay open side by side
+    val (_, j) = jobsOf {
+      db.read().collect()
+      db.read(options = unmerged).collect()
+    }
+    assert(j === Jobs(2, 0), s"$j")
+    assert(db.read().columns.toSet === Set("id", "x", "y"))
   }
 
   test("snapshot + upsert: time travel reads the pre-patch table exactly") {
