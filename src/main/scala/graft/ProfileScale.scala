@@ -20,7 +20,9 @@ import graft.sources.ParquetDatabase
   * open of a persisted IVF index is its own row (`ivf_probe_topk_open`),
   * so the repeat-probe row does not hide it; likewise the first
   * `ParquetDatabase.read` of a table version (`pdb_read_open`) against the
-  * repeat reads (`pdb_read`).
+  * repeat reads (`pdb_read`). `minhash_store_probe` times one MinHash store
+  * probe alone (perfbench's `--trace 1` `minhash.probe.*` spans split a
+  * probe into its jobs).
   */
 object ProfileScale {
 
@@ -62,6 +64,8 @@ object ProfileScale {
       }
     def pdbRead(): Unit =
       noop(pdb.read(Seq("l_orderkey", "l_linenumber", "l_quantity"), Some(col("l_orderkey") === 7L)))
+    // its own store: minhash_store_tick appends to mh_store every rep
+    val mhProbeDir = s"$scratch/mh_probe_store"
     // work an op needs before each rep, run outside its timing window
     val untimedSetup: Map[String, () => Unit] = Map(
       "ivf_probe_topk_open" -> { () =>
@@ -72,7 +76,12 @@ object ProfileScale {
       // a one-row append makes a new table version, so the timed read opens it
       "pdb_read_open" -> { () => ensurePdb(); pdb.create(lineitem.limit(1)) },
       // an untimed read opens the version, so every timed rep is a repeat
-      "pdb_read" -> { () => ensurePdb(); pdbRead() })
+      "pdb_read" -> { () => ensurePdb(); pdbRead() },
+      "minhash_store_probe" -> { () =>
+        if (!fs.exists(new org.apache.hadoop.fs.Path(mhProbeDir)))
+          Dedup.buildMinHashStore(docs.filter(col("doc_id") % 10 =!= 0),
+            "doc_id", "text", mhProbeDir)
+      })
 
     // each entry is (name, thunk); thunks re-run from cold plans each rep
     val ops: Seq[(String, () => Unit)] = Seq(
@@ -149,6 +158,11 @@ object ProfileScale {
         Dedup.appendToMinHashStore(docs.filter(col("doc_id") % 10 === 0),
           "doc_id", "text", d)
       },
+      // one probe of the 10% batch against a standing 90% store (built
+      // once, untimed): the per-tick read of q_ext_dedup8/q_ext_stream15
+      "minhash_store_probe" -> (() =>
+        noop(Dedup.minHashPairsAgainstStore(docs.filter(col("doc_id") % 10 === 0),
+          "doc_id", "text", mhProbeDir, threshold = 0.8))),
       "ivf_append_tick" -> { () =>
         // ONE embedding ingest tick against a standing auto-sized index
         // (the q_ext_stream16 maintenance shape): assign-scan of the batch

@@ -39,14 +39,6 @@ object Dedup {
     tokenArrays(docs, idCol, textCol, shingleN)
       .select(col("id"), explode(col("toks")).as("tok"))
 
-  /** Exact Jaccard verification of candidate (d1, d2) pairs: re-shingle
-    * ONLY the documents that appear in a candidate pair (semi-join first,
-    * so the shingle pipeline never runs over the rest of the corpus), then
-    * intersect per pair. Candidates are few by construction (LSH banding
-    * bounds them ∝ true near-dups), so this touches a vanishing fraction of
-    * the corpus. Used by `minHashPairs`; `jaccardPairs` reaches the same
-    * exact values through its hot-shingle correction term instead.
-    */
   /** Public form of the candidate confirm pass: exact word-`shingleN`-gram
     * Jaccard over the given (d1, d2) candidate pairs, keeping pairs at or
     * above `threshold`. Candidate-bounded — the cost driver is the pair
@@ -59,6 +51,14 @@ object Dedup {
                            threshold: Double): DataFrame =
     verifyPairsExact(candidates, docs, idCol, textCol, shingleN, threshold)
 
+  /** Exact Jaccard verification of candidate (d1, d2) pairs: re-shingle
+    * ONLY the documents that appear in a candidate pair (semi-join first,
+    * so the shingle pipeline never runs over the rest of the corpus), then
+    * intersect per pair. Candidates are few by construction (LSH banding
+    * bounds them ∝ true near-dups), so this touches a vanishing fraction of
+    * the corpus. Used by `minHashPairs`; `jaccardPairs` reaches the same
+    * exact values through its hot-shingle correction term instead.
+    */
   private def verifyPairsExact(candidates: DataFrame, docs: DataFrame,
                                idCol: String, textCol: String, shingleN: Int,
                                threshold: Double): DataFrame = {
@@ -241,6 +241,21 @@ object Dedup {
         col("c") + cHot)
     }
   }
+
+  /** (id, ths): each doc's distinct 64-bit shingle hashes, the row a
+    * MinHash store segment's `toks/` holds. Docs with no shingle get no row.
+    */
+  private def shingleHashSets(docs: DataFrame, idCol: String, textCol: String,
+                              shingleN: Int): DataFrame =
+    tokenSets(docs, idCol, textCol, shingleN)
+      .select(col("id"), xxhash64(col("tok")).as("th"))
+      .groupBy("id").agg(collect_set(col("th")).as("ths"))
+
+  /** (id, band, bh) band rows of (id, ths) shingle-hash sets — how a store
+    * segment's `bands/` derives from its `toks/`.
+    */
+  private def setBandRows(sets: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
+    bandRows(sets.select(col("id"), explode(col("ths")).as("th")), numBands, rowsPerBand)
 
   /** MinHash-banded candidate (d1, d2) pairs from exploded (id, th) token
     * hashes — the fallback candidate route for hot-heavy docs. 8 bands × 2
@@ -577,14 +592,10 @@ object Dedup {
     if (alreadyCommitted) return
     val segId = java.util.UUID.randomUUID.toString
     val staging = new org.apache.hadoop.fs.Path(s"$dir/_staging/$segId")
-    val toks = tokenSets(batch, idCol, textCol, shingleN)
-      .select(col("id"), xxhash64(col("tok")).as("th"))
-    toks.groupBy("id").agg(collect_set(col("th")).as("ths"))
+    shingleHashSets(batch, idCol, textCol, shingleN)
       .write.mode("overwrite").parquet(s"$staging/toks")
     // band rows derive from the STAGED arrays — one shingle pass total
-    val stagedBatch = spark.read.parquet(s"$staging/toks")
-    bandRows(stagedBatch.select(col("id"), explode(col("ths")).as("th")),
-        numBands, rowsPerBand)
+    setBandRows(spark.read.parquet(s"$staging/toks"), numBands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$staging/bands")
     batchMarker.foreach { m =>
       val out = fs.create(new org.apache.hadoop.fs.Path(staging, s"_batch-$m"), true)
@@ -802,16 +813,6 @@ object Dedup {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg-"))
       .map(_.getPath).sortBy(_.getName)
 
-  /** All committed segments' `sub` (toks/bands) as one DataFrame. */
-  private def readStore(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        sub: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = segmentDirs(fs, root).map(p => s"$p/$sub")
-    require(parts.nonEmpty, s"MinHash store at $dir has no committed segments")
-    spark.read.parquet(parts: _*)
-  }
-
   private def paramsPath(dir: String) = new org.apache.hadoop.fs.Path(dir, "_params")
 
   private def readParams(dir: String,
@@ -820,9 +821,13 @@ object Dedup {
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
     else {
-      val Array(b, r, n) = graft.sources.HadoopText.read(fs, p)
-        .trim.split('|').map(_.toInt)
-      Some((b, r, n))
+      val text = graft.sources.HadoopText.read(fs, p)
+      scala.util.Try(text.trim.split('|').map(_.toInt)).toOption match {
+        case Some(Array(b, r, n)) => Some((b, r, n))
+        case _ => throw new IllegalStateException(
+          s"MinHash store params file $p is malformed: '$text' " +
+            "(expected bands|rowsPerBand|shingleN)")
+      }
     }
   }
 
@@ -833,11 +838,25 @@ object Dedup {
       s"${params._1}|${params._2}|${params._3}")
   }
 
+  /** Broadcast bound on the probe's batch band rows: at or under it the
+    * candidate join broadcasts the BATCH side, so the corpus-sized store
+    * bands stream through their scan with no exchange. ~1M rows ≈ 24 MB of
+    * key data, reached at a ~65k-doc batch with the default 16 bands.
+    */
+  private val ProbeBroadcastMaxBandRows: Long = 1L << 20
+
+  /** Broadcast bound on the probe's candidate id set: at or under it the
+    * exact-verify semi-join against the store toks broadcasts the ids
+    * (4M longs ≈ 32 MB). Candidates are near-dup-density-bound; only mass
+    * duplication crosses it.
+    */
+  private val ProbeBroadcastMaxCandidates: Long = 4L * 1000 * 1000
+
   /** Near-dup pairs (batch doc, stored doc) with exact Jaccard >= threshold,
     * candidates from the store's LSH bands — the per-batch incremental step.
-    * Only the BATCH is tokenized (once, checkpointed — its rows feed both
-    * the band join and the verify join, and the checkpoint is ∝ batch
-    * size); the corpus side comes entirely from the store. Emitted jac is
+    * Only the BATCH is tokenized, once, into the (id, ths) sets a store
+    * segment holds (checkpointed — they feed the band join and the verify
+    * join); the corpus side comes entirely from the store. Emitted jac is
     * exact over the hashed shingle sets; misses are the banding family's
     * (1-s^r)^b — < 1e-7 at s≥0.8 with the default 16×2.
     *
@@ -845,95 +864,53 @@ object Dedup {
     * the caller's [[minHashPairs]] step; appending survivors is
     * [[appendToMinHashStore]].
     */
-  /** Broadcast ceiling for the probe's batch band rows (r16): under it the
-    * candidate join broadcasts the BATCH side, so the corpus-sized store
-    * bands stream through their scan with ZERO exchange — the
-    * touched-keys-bound tick shape. ~1M rows ≈ 24 MB of key data, far under
-    * the broadcast relation cap; reached at a ~65k-doc tick with the
-    * default 16 bands.
-    */
-  val ProbeBroadcastMaxBandRows: Long = 1L << 20
-
-  /** Bloom ceiling for the probe's batch band keys (r16): between the
-    * broadcast ceiling and this, the store side is bloom-prefiltered on the
-    * band key before the shuffle join (BloomJoin, guide §3.2) — only
-    * touched-band rows reach the exchange. 6M items at 1% fpp is a 6.9 MiB
-    * sketch, inside BloomJoin.MaxNumBits; past it the batch is no longer
-    * "small" relative to anything and the plain shuffle join is the honest
-    * plan (the pre-r16 behavior).
-    */
-  val ProbeBloomMaxBandKeys: Long = 6L * 1000 * 1000
-
-  /** Broadcast ceiling for the probe's verified-candidate id set (r16): the
-    * exact-verification semi-join against the corpus toks broadcasts the
-    * candidate ids under it (4M longs ≈ 32 MB relation). Candidates are
-    * near-dup-density-bound in healthy corpora; the ceiling exists for the
-    * degenerate mass-duplication case, which falls back to the shuffle semi.
-    */
-  val ProbeBroadcastMaxCandidates: Long = 4L * 1000 * 1000
-
   def minHashPairsAgainstStore(batch: DataFrame, idCol: String, textCol: String,
-                               dir: String, threshold: Double,
-                               broadcastMaxBandRows: Long = ProbeBroadcastMaxBandRows,
-                               bloomMaxBandKeys: Long = ProbeBloomMaxBandKeys,
-                               broadcastMaxCandidates: Long = ProbeBroadcastMaxCandidates): DataFrame = {
+                               dir: String, threshold: Double): DataFrame =
+    minHashPairsAgainstStoreImpl(batch, idCol, textCol, dir, threshold,
+      ProbeBroadcastMaxBandRows, ProbeBroadcastMaxCandidates)
+
+  /** Test seam: the probe with its two broadcast bounds as arguments, so a
+    * test can force either join hinted (Long.MaxValue) or un-hinted (-1).
+    */
+  private[graft] def minHashPairsAgainstStoreImpl(
+      batch: DataFrame, idCol: String, textCol: String, dir: String,
+      threshold: Double, broadcastMaxBandRows: Long,
+      broadcastMaxCandidates: Long): DataFrame = {
     val spark = batch.sparkSession
-    val (numBands, rowsPerBand, shingleN) = readParams(dir,
-      spark.sessionState.newHadoopConf()).getOrElse(
+    val conf = spark.sessionState.newHadoopConf()
+    val (numBands, rowsPerBand, shingleN) = readParams(dir, conf).getOrElse(
       throw new IllegalStateException(s"no MinHash store at $dir (missing _params)"))
-    val batchToks = tokenSets(batch, idCol, textCol, shingleN)
-      .select(col("id"), xxhash64(col("tok")).as("th"))
-      .localCheckpoint()
-    val batchBands = bandRows(batchToks, numBands, rowsPerBand)
+    // one listing per probe: both sub-tables read the same segment set
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val segs = segmentDirs(root.getFileSystem(conf), root)
+    require(segs.nonEmpty, s"MinHash store at $dir has no committed segments")
+    def readStore(sub: String) = spark.read.parquet(segs.map(p => s"$p/$sub"): _*)
+    def hinted(df: DataFrame, bcast: Boolean) = if (bcast) broadcast(df) else df
+    val batchSets = shingleHashSets(batch, idCol, textCol, shingleN).localCheckpoint()
     // The candidate join's batch side is bounded by the TICK, the store side
     // by the CORPUS. Left to its estimates the planner sort-merges once the
-    // batch's derived band rows cross the 10 MB auto-broadcast threshold —
-    // exchanging the WHOLE corpus band table per probe tick (r16, measured
-    // at sf10). The tier below keys the plan on the exact batch size (one
-    // count over the checkpointed batch tokens): broadcast the batch when
-    // tick-sized, bloom-prefilter the store side for bigger batches, and
-    // fall back to the plain shuffle join only when the batch stops being
-    // small. All three tiers produce IDENTICAL output — the equality join
-    // plus the exact-jac verify below never see a row the plain join would
-    // not (bloom false positives are dropped by the same equality
-    // predicates; false negatives cannot happen) — DedupSpec pins it.
-    val nBandRows = batchToks.select("id").distinct().count() * numBands
-    val storeBands = readStore(spark, dir, "bands").withColumnRenamed("id", "sid")
-    val joinCond = col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-      col("x.id") =!= col("sid")
-    val joined =
-      if (nBandRows <= broadcastMaxBandRows)
-        storeBands.as("y").join(broadcast(batchBands.as("x")), joinCond)
-      else if (nBandRows <= bloomMaxBandKeys) {
-        val bandKey = (d: DataFrame, b: String, h: String) =>
-          d.withColumn("bk", xxhash64(col(b), col(h)))
-        val bloom = BloomJoin.buildBloom(bandKey(batchBands, "band", "bh"),
-          col("bk"), expectedItems = nBandRows)
-        BloomJoin.prefilter(bandKey(storeBands, "band", "bh"), col("bk"), bloom)
-          .drop("bk").as("y")
-          .join(batchBands.as("x"), joinCond)
-      } else
-        batchBands.as("x").join(storeBands.as("y"), joinCond)
-    val candidates = joined
+    // batch's band rows cross the auto-broadcast threshold — exchanging the
+    // WHOLE corpus band table per probe (r16, measured at sf10). So the hint
+    // is keyed on the exact batch size (one count over the checkpoint); the
+    // un-hinted join is the plan for a batch too large to broadcast.
+    val bcastBands = batchSets.count() * numBands <= broadcastMaxBandRows
+    val candidates = readStore("bands").withColumnRenamed("id", "sid").as("y")
+      .join(hinted(setBandRows(batchSets, numBands, rowsPerBand).as("x"), bcastBands),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col("x.id") =!= col("sid"))
       .select(col("x.id").as("d1"), col("sid").as("d2"))
       .distinct()
       .localCheckpoint() // tiny by construction; feeds two joins below
-    val batchSets = batchToks.groupBy("id").agg(collect_set(col("th")).as("ths"))
-    // Everything downstream of a localCheckpoint is stats-blind (LogicalRDD
-    // reports unknown size), so left to itself the planner sort-merges the
-    // corpus toks against the candidate ids — exchanging the WIDEST store
-    // column (the per-doc shingle-hash arrays) to keep a candidate-bound
-    // sliver (r16, plan-verified at sf10: SortMergeJoin LeftSemi over the
-    // full toks read). The candidate count is one cheap job over the
-    // checkpoint; under the broadcast bound the semi streams the corpus
-    // side with zero exchange. Degenerate corpora (mass duplication blowing
-    // the candidate set past the bound) keep the shuffle semi — correct at
-    // any size, just slower.
-    val nCand = candidates.count()
+    // A checkpoint carries the planner's estimate of its rows, not their
+    // count; left to it the planner sort-merged the corpus toks against the
+    // candidate ids — exchanging the WIDEST store column (the per-doc
+    // shingle-hash arrays) to keep a candidate-bound sliver (r16,
+    // plan-verified at sf10). Under the bound the semi streams the corpus
+    // side with no exchange; mass-duplication corpora keep the shuffle
+    // semi — correct at any size, just slower.
     val candIds = candidates.select(col("d2").as("id")).distinct()
-    val storedSets = readStore(spark, dir, "toks")
-      .join(if (nCand <= broadcastMaxCandidates) broadcast(candIds) else candIds,
-        Seq("id"), "left_semi")
+    val storedSets = readStore("toks").join(
+      hinted(candIds, candidates.count() <= broadcastMaxCandidates), Seq("id"), "left_semi")
     candidates
       .join(batchSets.select(col("id").as("d1"), col("ths").as("t1")), "d1")
       .join(storedSets.select(col("id").as("d2"), col("ths").as("t2")), "d2")

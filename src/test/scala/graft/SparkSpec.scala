@@ -24,4 +24,15 @@ trait SparkSpec extends AnyFunSuite {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` with the given SQL confs set, restoring their old values. */
+  protected def withSQLConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

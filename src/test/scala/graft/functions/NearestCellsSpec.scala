@@ -118,14 +118,4 @@ class NearestCellsSpec extends SparkSpec {
     val want = referenceTop(df, 2)
     codegen.foreach { case (nid, cells) => assert(cells === want(nid), s"nid=$nid") }
   }
-
-  private def withSQLConf[A](kvs: (String, String)*)(body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

@@ -146,13 +146,12 @@ class DedupSpec extends SparkSpec {
     assert(exact === 1.0)
   }
 
-  test("MinHash store probe: all three candidate-join tiers emit identical pairs") {
-    // the r16 probe plans the candidate join by batch size — broadcast
-    // (tick-sized), bloom-prefiltered shuffle (large batch), plain shuffle
-    // (the pre-r16 behavior, batch no longer small). The tiers are forced
-    // via the threshold params; output must be identical because the exact
-    // equality join + exact-jac verify run unchanged in every tier.
-    val dir = "target/tmp/minhash_store/spec_tiers"
+  test("MinHash store probe: all four hint combinations emit identical rows") {
+    // the probe broadcasts the batch bands and the candidate ids when they
+    // are under their bounds, and runs the same joins un-hinted otherwise;
+    // the seam forces each of the four combinations. Auto-broadcast is off
+    // so an un-hinted join really shuffles.
+    val dir = "target/tmp/minhash_store/spec_hints"
     val corpus = (0L until 40L).map(i =>
       (i, s"corpus document number $i with shared words plus token${i % 7} filler end"))
       .toDF("doc_id", "text")
@@ -160,21 +159,94 @@ class DedupSpec extends SparkSpec {
       (i, s"corpus document number ${i - 100} with shared words plus token${i % 7} filler end"))
       .toDF("doc_id", "text")
     Dedup.buildMinHashStore(corpus, "doc_id", "text", dir)
-    def probe(bcMax: Long, bloomMax: Long, candMax: Long = Long.MaxValue) =
-      Dedup.minHashPairsAgainstStore(batch, "doc_id", "text", dir, threshold = 0.5,
-          broadcastMaxBandRows = bcMax, bloomMaxBandKeys = bloomMax,
-          broadcastMaxCandidates = candMax)
+    def probe(bandRowsMax: Long, candMax: Long) =
+      Dedup.minHashPairsAgainstStoreImpl(batch, "doc_id", "text", dir, threshold = 0.5,
+          broadcastMaxBandRows = bandRowsMax, broadcastMaxCandidates = candMax)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaBroadcast = probe(Long.MaxValue, Long.MaxValue)
-    val viaBloom = probe(0L, Long.MaxValue)
-    val viaPlain = probe(0L, 0L)
-    // the verify semi-join's degenerate fallback (candidate set over the
-    // broadcast bound -> shuffle semi) must also be output-identical
-    val viaShuffleSemi = probe(Long.MaxValue, Long.MaxValue, candMax = 0L)
-    assert(viaBroadcast.nonEmpty, "fixture found no pairs — tiers untested")
-    assert(viaBloom === viaBroadcast, "bloom tier diverged from broadcast tier")
-    assert(viaPlain === viaBroadcast, "plain tier diverged from broadcast tier")
-    assert(viaShuffleSemi === viaBroadcast, "shuffle-semi fallback diverged")
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val both = probe(Long.MaxValue, Long.MaxValue)
+      assert(both.nonEmpty, "fixture found no pairs — hints untested")
+      for ((bands, cands) <- Seq((-1L, Long.MaxValue), (Long.MaxValue, -1L), (-1L, -1L)))
+        assert(probe(bands, cands) === both, s"bounds ($bands, $cands) diverged")
+    }
+  }
+
+  test("MinHash store probe: a tick streams store bands and toks into broadcast joins") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    val dir = "target/tmp/minhash_store/spec_plan"
+    def text(n: Long) = s"stored document $n about topic${n % 11} with some filler words w${n % 5}"
+    val corpus = (0L until 200L).map(i => (i, text(i))).toDF("doc_id", "text")
+    // five exact copies of stored docs: one pair each
+    val tick = (0L until 5L).map(i => (1000L + i, text(i))).toDF("doc_id", "text")
+    Dedup.buildMinHashStore(corpus, "doc_id", "text", dir)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add((f, qe.executedPlan))
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    object H extends AdaptiveSparkPlanHelper
+    def scans(sub: String)(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == sub)
+      case _ => false
+    }
+    // some broadcast hash join (semi or not) streams `sub`: the scan is on
+    // its streamed side with no exchange between it and the join
+    def streams(plan: SparkPlan, sub: String, semi: Boolean): Boolean =
+      H.collect(plan) { case j: BroadcastHashJoinExec => j }.exists { j =>
+        val streamed = if (j.buildSide == BuildRight) j.left else j.right
+        (j.joinType == LeftSemi) == semi && H.find(streamed)(scans(sub)).isDefined &&
+          H.collect(streamed) { case e: ShuffleExchangeExec => e }
+            .forall(e => H.find(e)(scans(sub)).isEmpty)
+      }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    // auto-broadcast off: at this fixture's size the planner would
+    // broadcast on its own estimates, so only the probe's hints may
+    val rows = try withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val out = Dedup.minHashPairsAgainstStore(tick, "doc_id", "text", dir, threshold = 0.6)
+        .collect()
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = plans.asScala.toSeq
+    assert(rows.length === 5, s"fixture drifted: ${rows.toSeq}")
+    val candidateJoin = seen.filter { case (f, p) =>
+      f == "localCheckpoint" && H.find(p)(scans("bands")).isDefined }
+    assert(candidateJoin.size === 1, s"actions seen: ${seen.map(_._1)}")
+    assert(streams(candidateJoin.head._2, "bands", semi = false),
+      s"candidate join shuffles the store bands:\n${candidateJoin.head._2}")
+    val verify = seen.filter { case (f, _) => f == "collect" }
+    assert(verify.size === 1, s"actions seen: ${seen.map(_._1)}")
+    assert(streams(verify.head._2, "toks", semi = true),
+      s"verify semi-join shuffles the store toks:\n${verify.head._2}")
+  }
+
+  test("MinHash store: a malformed _params file fails naming its path and text") {
+    val dir = "target/tmp/minhash_store/spec_bad_params"
+    val d = Seq((1L, "a b c d e f g")).toDF("doc_id", "text")
+    Dedup.buildMinHashStore(d, "doc_id", "text", dir)
+    val p = new org.apache.hadoop.fs.Path(dir, "_params")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    for (text <- Seq("16|2", "")) {
+      graft.sources.HadoopText.write(fs, p, text)
+      val probe = intercept[IllegalStateException] {
+        Dedup.minHashPairsAgainstStore(d, "doc_id", "text", dir, threshold = 0.5)
+      }
+      assert(probe.getMessage.contains(s"$dir/_params") &&
+        probe.getMessage.contains(s"'$text'"), probe.getMessage)
+      val append = intercept[IllegalStateException] {
+        Dedup.appendToMinHashStore(d, "doc_id", "text", dir)
+      }
+      assert(append.getMessage.contains(s"$dir/_params"), append.getMessage)
+    }
   }
 
   test("MinHash store rejects mismatched banding params and missing stores") {
