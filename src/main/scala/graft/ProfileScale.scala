@@ -22,7 +22,8 @@ import graft.sources.ParquetDatabase
   * `ParquetDatabase.read` of a table version (`pdb_read_open`) against the
   * repeat reads (`pdb_read`). `minhash_store_probe` times one MinHash store
   * probe alone (perfbench's `--trace 1` `minhash.probe.*` spans split a
-  * probe into its jobs).
+  * probe into its jobs). `ivf_rebalance` times a forced rebalance of an
+  * index built untimed before each rep.
   */
 object ProfileScale {
 
@@ -53,6 +54,7 @@ object ProfileScale {
     fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
 
     var openDir = ""
+    var rebalanceDir = ""
     // lineitem appended through the facade in batches, so the table has
     // many files whose footers a schema merge must read; built once, untimed
     val pdb = new ParquetDatabase(spark, s"$scratch/pdb_read")
@@ -77,6 +79,13 @@ object ProfileScale {
       "pdb_read_open" -> { () => ensurePdb(); pdb.create(lineitem.limit(1)) },
       // an untimed read opens the version, so every timed rep is a repeat
       "pdb_read" -> { () => ensurePdb(); pdbRead() },
+      // a fresh auto-sized index each rep, so every timed rebalance
+      // rebuilds the same corpus
+      "ivf_rebalance" -> { () =>
+        rebalanceDir = s"$scratch/ivf_rebalance_${System.nanoTime()}"
+        Similarity.ensureIvfIndex(spark, rebalanceDir, emb, "vec_id", "embedding",
+          numCentroids = Similarity.autoCentroids(emb.count()))
+      },
       "minhash_store_probe" -> { () =>
         if (!fs.exists(new org.apache.hadoop.fs.Path(mhProbeDir)))
           Dedup.buildMinHashStore(docs.filter(col("doc_id") % 10 =!= 0),
@@ -163,6 +172,11 @@ object ProfileScale {
       "minhash_store_probe" -> (() =>
         noop(Dedup.minHashPairsAgainstStore(docs.filter(col("doc_id") % 10 === 0),
           "doc_id", "text", mhProbeDir, threshold = 0.8))),
+      // a forced same-k rebalance: the whole-index rebuild from the
+      // `assigned` store and the staged swap (the maintenance step of the
+      // llm_corpus benchmark workload), over an index built untimed
+      "ivf_rebalance" -> (() =>
+        Similarity.rebalanceIvfIndex(spark, rebalanceDir, force = true)),
       "ivf_append_tick" -> { () =>
         // ONE embedding ingest tick against a standing auto-sized index
         // (the q_ext_stream16 maintenance shape): assign-scan of the batch

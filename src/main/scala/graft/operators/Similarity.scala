@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
 
 /** Vector similarity search over an embedding column (`array<float>`).
   *
@@ -189,50 +189,90 @@ object Similarity {
   /** Deterministic k-means centroids for the IVF index, computed at
     * index-build time — the k-means‖ shape:
     *
-    *  1. deterministic oversample: the `8·k` corpus vectors with the
-    *     smallest `xxhash64(id)` — a uniform pseudo-random sample, no RNG
-    *     state, stable across runs and cluster layouts;
+    *  1. deterministic oversample: the `8·k` non-null corpus vectors with
+    *     the smallest `xxhash64(id)` — a uniform pseudo-random sample, no
+    *     RNG state, stable across runs and cluster layouts;
     *  2. k-means++ seeding + Lloyd on that bounded sample, locally (driver
     *     model fitting over ≤ 8·k rows — the same finishing step MLlib's
     *     k-means‖ uses; a plain k-of-k init collapses when two seeds land
     *     in one true cluster);
-    *  3. distributed Lloyd refinement over the full corpus: cosine
-    *     assignment against broadcast centroids, per-cell per-dimension
-    *     mean (posexplode + avg — one shuffle keyed on (cell, dim), never a
-    *     driver-side matrix), empty cells keep their previous centroid so k
-    *     never shrinks. Each round's centroids are k tiny rows,
-    *     localCheckpoint'd to truncate the iteration lineage; k·dim values
-    *     stay broadcast-sized by construction. Means stay double
-    *     (vector_dot accepts mixed float/double sides).
+    *  3. distributed Lloyd refinement over the full corpus, one Spark job
+    *     per iteration ([[refineCentroids]]): each vector is assigned
+    *     in-row by [[graft.functions.NearestCells.kernel]] against the
+    *     centroid matrix held on the driver, each partition sums its cells
+    *     per position exactly ([[graft.functions.CellSums]], at most k
+    *     cells per task), and the driver merges the partitions and divides.
+    *     The mean per (cell, position) is over the non-null elements and
+    *     rounded once from the exact sum, so the centroids are bit-identical
+    *     for any partitioning and core count; empty cells keep their
+    *     previous centroid so k never shrinks; null vectors contribute
+    *     nothing. Means stay double (vector_dot accepts mixed float/double
+    *     sides).
+    *
+    * The result is a local relation over the driver's matrix.
     */
   def kmeansCentroids(vectors: DataFrame, idCol: String, vecCol: String,
-                      numCentroids: Int, iterations: Int = 2): DataFrame = {
-    val spark = vectors.sparkSession
-    val v = spread(vectors).select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val initOrder = Seq(xxhash64(col("nid")), col("nid"))
-    val sample = v.orderBy(initOrder: _*).limit(8 * numCentroids)
-      .select(col("nv")).collect()
+                      numCentroids: Int, iterations: Int = 2): DataFrame =
+    centroidFrame(vectors.sparkSession,
+      kmeansMatrix(vectors, idCol, vecCol, numCentroids, iterations))
+
+  private def kmeansMatrix(vectors: DataFrame, idCol: String, vecCol: String,
+                           numCentroids: Int, iterations: Int): graft.functions.CentroidMatrix = {
+    val sample = vectors.filter(col(vecCol).isNotNull)
+      .orderBy(xxhash64(col(idCol)), col(idCol)).limit(8 * numCentroids)
+      .select(col(vecCol)).collect()
       .map(_.getSeq[Any](0).map(_.asInstanceOf[Number].doubleValue).toArray)
     val seeds = localKMeans(sample, numCentroids)
-    import spark.implicits._
-    var cent = seeds.zipWithIndex
-      .map { case (c, i) => ((i + 1).toLong, c.toSeq) }.toSeq
-      .toDF("cid", "cv")
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val assigned = assignCells(v.toDF("nid", "nv"), "nid", "nv", cent)
-      val means = assigned
-        .select(col("cell").as("cid"), posexplode(col("nv")))
-        .groupBy("cid", "pos").agg(avg(col("col")).as("m"))
-        .groupBy("cid").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cid"), transform(col("pm"), p => p.getField("m")).as("cv"))
-      cent = means
-        .unionByName(cent.join(means.select("cid"), Seq("cid"), "left_anti")
-          .select(col("cid"), transform(col("cv"), x => x.cast("double")).as("cv")))
-        .localCheckpoint()
-    }
-    cent
+    refineCentroids(vectors, vecCol,
+      new graft.functions.CentroidMatrix(Array.tabulate(seeds.length)(i => (i + 1).toLong), seeds),
+      iterations)
   }
+
+  /** `iterations` Lloyd steps from `start` over the vectors in `vecCol`
+    * (see [[kmeansCentroids]] step 3). The spread corpus is planned once,
+    * so its shuffle runs in the first iteration's job and the later
+    * iterations read its output.
+    */
+  private[graft] def refineCentroids(vectors: DataFrame, vecCol: String,
+                                     start: graft.functions.CentroidMatrix,
+                                     iterations: Int): graft.functions.CentroidMatrix =
+    if (iterations <= 0) start
+    else {
+      val v = spread(vectors).select(col(vecCol))
+      val isFloat = v.schema(0).dataType match {
+        case ArrayType(FloatType, _) => true
+        case ArrayType(DoubleType, _) => false
+        case other => throw new IllegalArgumentException(
+          s"kmeansCentroids: $vecCol must be array<float|double>, got ${other.simpleString}")
+      }
+      val rows = v.queryExecution.toRdd
+      (1 to iterations).foldLeft(start) { (mat, _) =>
+        val k = mat.cids.length
+        rows.mapPartitions { it =>
+          val acc = new graft.functions.CellSums(k)
+          it.foreach { r =>
+            if (!r.isNullAt(0)) {
+              val vec = r.getArray(0)
+              val cid = graft.functions.NearestCells.kernel(vec, isFloat, mat, 1).getLong(0)
+              acc.add(java.util.Arrays.binarySearch(mat.cids, cid), vec, isFloat)
+            }
+          }
+          Iterator.single(acc)
+        }.reduce(_ merge _).means(mat)
+      }
+    }
+
+  /** A centroid matrix as the `(cid, cv)` local relation the index stores,
+    * in one partition so the `centroids` write leaves one file.
+    */
+  private def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+                            mat: graft.functions.CentroidMatrix): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(mat.cids.indices.map(c =>
+        org.apache.spark.sql.Row(mat.cids(c), mat.cents(c).toSeq)): _*),
+      new org.apache.spark.sql.types.StructType()
+        .add("cid", LongType).add("cv", ArrayType(DoubleType)))
+      .coalesce(1)
 
   /** k-means++ seeding + Lloyd over a bounded in-memory sample (cosine
     * distance), fixed seed — deterministic. Empty clusters keep their seed.
@@ -249,8 +289,8 @@ object Similarity {
     * sample = 8k and k = ⌈n/128⌉ both growing with the corpus, the fitting
     * flops are O(iters·8k²·d) — n²-shaped — and this loop ran on ONE driver
     * thread while the 31 other cores idled (10.1 s of the sf10 build,
-    * ~9× that at sf30 by the flop count; ProbeIvfBuild measures the A/B —
-    * guide §5 "the driver is a bottleneck").
+    * ~9× that at sf30 by the flop count — guide §5 "the driver is a
+    * bottleneck").
     * Only the per-point kernels run on the fork-join pool: each point's
     * argmax / min-distance slot is an independent pure function of
     * (point, centers) with its sequential inner loop unchanged, so every
@@ -258,7 +298,8 @@ object Similarity {
     * order-sensitive reductions — the k-means++ cumulative draw, and the
     * per-cell sums (float addition does not commute) — stay sequential in
     * point order: O(sample·d) adds per iteration, noise next to the
-    * O(sample·k·d) kernels. `visible-for-ProbeIvfBuild` (phase timing).
+    * O(sample·k·d) kernels. `private[graft]` so SimilaritySpec can pin
+    * it against the serial reference.
     */
   private[graft] def localKMeans(points: Array[Array[Double]], k: Int,
                           iters: Int = 10): Array[Array[Double]] = {
@@ -389,13 +430,27 @@ object Similarity {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     new graft.sources.ParquetDatabase(spark, s"$dir/centroids").create(index.centroids)
-    // repartition on the partition column BEFORE the hive write: without
-    // it every input task writes one file into every cell dir it sees —
-    // tasks × k files (a ~50k-small-file creation storm at the sf10
-    // rehearsal's k = 1563, caught grinding there). Clustered, each task
-    // owns whole cells and the file count is O(k).
-    new graft.sources.ParquetDatabase(spark, s"$dir/assigned")
-      .create(index.assigned.repartition(col("cell")), partitionBy = Seq("cell"))
+    writeAssigned(s"$dir/assigned", index.assigned)
+  }
+
+  /** Append `(nid, nv, cell)` rows to the cell-partitioned store at `path`,
+    * each cell's rows written by exactly one task.
+    *
+    * The rows are hash-partitioned on `cell` BEFORE the hive write: without
+    * it every input task writes one file into every cell dir it sees —
+    * tasks × k files (a ~50k-small-file creation storm at the sf10
+    * rehearsal's k = 1563, caught grinding there). Clustered, each task
+    * owns whole cells and each write leaves one file per cell dir. The
+    * partition count is explicit (the session's cores) because AQE
+    * coalesces the small partitions of a `repartition(col("cell"))` and
+    * then one task wrote every cell file (all 63 of an `llm_corpus` index);
+    * AQE never coalesces a repartition with a stated count.
+    */
+  private def writeAssigned(path: String, rows: DataFrame): Unit = {
+    val spark = rows.sparkSession
+    new graft.sources.ParquetDatabase(spark, path).create(
+      rows.repartition(spark.sparkContext.defaultParallelism, col("cell")),
+      partitionBy = Seq("cell"))
   }
 
   /** Build-and-persist the IVF index only if the persisted one is missing
@@ -591,10 +646,7 @@ object Similarity {
       return 0L
     }
     val (nBatch, newFp, version) = staged.get
-    new graft.sources.ParquetDatabase(spark, s"$dir/assigned")
-      .create(assignCells(spread(newVectors), idCol, vecCol, version.matrix)
-          .repartition(col("cell")),
-        partitionBy = Seq("cell"))
+    writeAssigned(s"$dir/assigned", assignCells(spread(newVectors), idCol, vecCol, version.matrix))
     writeSmallText(fs, fpPath, newFp)
     // still under the mutex, so the fingerprint just written is the newest
     // version: it keeps the matrix (appends never touch `centroids`) and
@@ -800,11 +852,9 @@ object Similarity {
       val token = java.util.UUID.randomUUID().toString.take(8)
       val tmp = s"${dir}__rebalance_tmp_$token"
       val vectors = spark.read.parquet(s"$dir/assigned").select(col("nid"), col("nv"))
-      val cent = kmeansCentroids(vectors, "nid", "nv", newK, kmeansIterations)
-      new graft.sources.ParquetDatabase(spark, s"$tmp/centroids").create(cent)
-      new graft.sources.ParquetDatabase(spark, s"$tmp/assigned")
-        .create(assignCells(spread(vectors), "nid", "nv", cent).repartition(col("cell")),
-          partitionBy = Seq("cell"))
+      val mat = kmeansMatrix(vectors, "nid", "nv", newK, kmeansIterations)
+      new graft.sources.ParquetDatabase(spark, s"$tmp/centroids").create(centroidFrame(spark, mat))
+      writeAssigned(s"$tmp/assigned", assignCells(spread(vectors), "nid", "nv", mat))
       val newFp = fpText.split('|').map {
         case f if f.startsWith("k=") => s"k=$newK"
         case f if f.startsWith("iters=") => s"iters=$kmeansIterations"
@@ -820,6 +870,10 @@ object Similarity {
       if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dir)))
         throw new java.io.IOException(
           s"rebalanceIvfIndex: failed to promote $tmp — run recoverIvfRebalance")
+      // the promoted tree is the newest version and its matrix is the one
+      // just written: hold it open, so the next probe reads no centroids
+      openVersions.put(versionKey(spark, fs, dir), new IvfVersion(newFp,
+        fs.getFileStatus(fpPath).getModificationTime, mat, spark, dir))
       fs.delete(new org.apache.hadoop.fs.Path(old), true)
       Some(newK)
     } finally {
@@ -963,8 +1017,11 @@ object Similarity {
     * last — ensureIvfIndex's rebuild, appendToIvfIndex, rebalanceIvfIndex
     * (whose same-k rebuild keeps the text but not the mtime) and
     * recoverIvfIndex — so a caller never reuses a version a writer has
-    * replaced. A dir without `_fingerprint` (persistIvfIndex alone) is
-    * opened afresh on every call and never cached.
+    * replaced. appendToIvfIndex and rebalanceIvfIndex also install the
+    * version they commit, with the matrix they hold, so the first probe
+    * after them reads no centroids. A dir without `_fingerprint`
+    * (persistIvfIndex alone) is opened afresh on every call and never
+    * cached.
     */
   private def openIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfVersion = {
     val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
@@ -1081,8 +1138,8 @@ object Similarity {
 
   def buildIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
                     numCentroids: Int, kmeansIterations: Int = 2): IvfIndex = {
-    val cent = kmeansCentroids(vectors, idCol, vecCol, numCentroids, kmeansIterations)
-    IvfIndex(cent, assignCells(spread(vectors), idCol, vecCol, cent))
+    val mat = kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations)
+    IvfIndex(centroidFrame(vectors.sparkSession, mat), assignCells(spread(vectors), idCol, vecCol, mat))
   }
 
   /** IVF-style ANN over a prebuilt index: probe the `nprobe` cells nearest

@@ -648,11 +648,16 @@ class SimilaritySpec extends SparkSpec {
       assert(nids(afterAppend) === (0L until 120L).toSet ++ (500L until 510L))
 
       // forced same-k rebalance: the fingerprint text is unchanged, its
-      // mtime is not, and the old tree is gone (no FileNotFound from it)
+      // mtime is not, and the old tree is gone (no FileNotFound from it).
+      // The rebalance installs the version it promoted, matrix included,
+      // and the held version answers as a fresh open of the tree does.
       val fpBefore = graft.sources.HadoopText.read(fs, P("_fingerprint"))
       assert(Similarity.rebalanceIvfIndex(spark, dir, _ => 4, force = true) === Some(4))
       assert(graft.sources.HadoopText.read(fs, P("_fingerprint")) === fpBefore)
-      assert(nids(probeTwice()) === nids(afterAppend))
+      val afterRebalance = probeTwice(carriesMatrix = true)
+      assert(nids(afterRebalance) === nids(afterAppend))
+      assert(afterRebalance === ivfRows(Similarity.ivfTopK(Similarity.loadIvfIndex(spark, dir),
+        q, "vec_id", "embedding", k = 1000, nprobe = 64)))
 
       // ensureIvfIndex rebuild over a changed corpus
       val shrunk = base.filter($"vec_id" =!= 7L)
@@ -972,6 +977,184 @@ class SimilaritySpec extends SparkSpec {
           s"centroid $ci diverged at raw-bits resolution (k=$k)")
       }
     }
+  }
+
+  private def rawBits(cent: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Long])] =
+    cent.collect().map(r => (r.getLong(0),
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits))).toSeq.sortBy(_._1)
+
+  test("kmeansCentroids is bit-identical across input partitions and shuffle widths; each mean is the exact mean rounded once") {
+    // double vectors with noise down to 1e-12 in every element, so the
+    // low bits of a plain double sum of a cell depend on the order its
+    // partitions arrive in
+    val rng = new java.util.SplittableRandom(91L)
+    val bases = Seq.fill(5)(Seq.fill(6)(rng.nextDouble() * 2 - 1))
+    val vecs = (0 until 400).map { i =>
+      (i.toLong, bases(i % 5).map(x => x + (rng.nextDouble() * 2 - 1) * 0.05 +
+        (rng.nextDouble() - 0.5) * math.pow(10, -rng.nextInt(13))))
+    }
+    val df = vecs.toDF("vec_id", "embedding")
+    // checkpointed, so the optimizer cannot fold the split into the
+    // operator's own repartition
+    def centroids(parts: Int, shuffle: Int, iterations: Int) =
+      withSQLConf("spark.sql.shuffle.partitions" -> shuffle.toString) {
+        Similarity.kmeansCentroids(df.repartition(parts).localCheckpoint(), "vec_id", "embedding",
+          numCentroids = 5, iterations = iterations)
+      }
+    val want = rawBits(centroids(1, 1, 2))
+    for (parts <- Seq(1, 3, 8); shuffle <- Seq(1, 4, 7))
+      assert(rawBits(centroids(parts, shuffle, 2)) === want,
+        s"centroids moved at $parts input partitions, shuffle width $shuffle")
+
+    // one iteration from the seeds: each non-empty cell is the exact mean of
+    // the vectors the seeds assign to it, rounded once; an empty cell keeps
+    // its seed
+    val seeds = centroids(1, 4, 0)
+    val one = rawBits(centroids(8, 7, 1)).toMap
+    val members = Similarity.assignCells(df, "vec_id", "embedding", seeds)
+      .collect().groupBy(_.getAs[Long]("cell"))
+      .map { case (c, rs) => c -> rs.map(_.getSeq[Double](1)) }
+    var orderSensitive = false
+    for ((cid, seedBits) <- rawBits(seeds)) members.get(cid) match {
+      case None => assert(one(cid) === seedBits, s"empty cell $cid moved")
+      case Some(vs) =>
+        for (pos <- seedBits.indices) {
+          val xs = vs.map(_(pos))
+          val got = java.lang.Double.longBitsToDouble(one(cid)(pos))
+          assert(graft.functions.CellMeansSpec.roundedOnce(got,
+              graft.functions.CellMeansSpec.exactSum(xs), xs.length),
+            s"cell $cid pos $pos: $got is not the exact mean of ${xs.length} values rounded once")
+          orderSensitive ||= xs.sum != xs.reverse.sum
+        }
+    }
+    assert(members.size > 1 && orderSensitive,
+      "fixture lost its order-sensitive sums: a plain double sum would pass")
+  }
+
+  test("the Lloyd step equals the retired posexplode/avg/collect_list refinement") {
+    import org.apache.spark.sql.functions._
+    // The retired refinement, verbatim: assign, explode every (cell, pos)
+    // element, average per (cell, pos), reassemble per cell, and keep the
+    // previous centroid of every cell that received nothing.
+    def retired(vectors: org.apache.spark.sql.DataFrame,
+                cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val means = Similarity.assignCells(vectors, "vec_id", "embedding", cent)
+        .select(col("cell").as("cid"), posexplode(col("nv")))
+        .groupBy("cid", "pos").agg(avg(col("col")).as("m"))
+        .groupBy("cid").agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+        .select(col("cid"), transform(col("pm"), p => p.getField("m")).as("cv"))
+      means.unionByName(cent.join(means.select("cid"), Seq("cid"), "left_anti")
+        .select(col("cid"), transform(col("cv"), x => x.cast("double")).as("cv")))
+    }
+    def matrix(cent: org.apache.spark.sql.DataFrame) = graft.functions.CentroidMatrix.collect(cent)
+    // 8 cells over 7 distinct non-null points: cid 4 duplicates cid 3 (the
+    // lower cid wins every tie, so 4 starts empty) and cid 8 is far from
+    // every point. The null element's vector shares its cell with vectors
+    // that hold that position, as the retired form needs (it leaves a null
+    // in a centroid whose cell has no value at a position).
+    val start = Seq(
+      (1L, Seq(1.0, 0.1, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.1, 0.0)),
+      (3L, Seq(0.0, 0.0, 1.0, 0.1)), (4L, Seq(0.0, 0.0, 1.0, 0.1)),
+      (5L, Seq(0.1, 0.0, 0.0, 1.0)), (6L, Seq(-1.0, -0.2, 0.0, 0.0)),
+      (7L, Seq(0.3, 0.3, 0.3, -0.9)), (8L, Seq(-0.5, -0.5, -0.5, -0.5)))
+      .toDF("cid", "cv")
+    val a = Seq(0.9f, 0.2f, 0.05f, 0.0f)
+    val b = Seq(0.1f, 0.8f, 0.3f, 0.02f)
+    val c = Seq(0.05f, 0.1f, 0.7f, 0.33f)
+    val floats: Seq[(Long, Seq[java.lang.Float])] = Seq(
+      (0L, a), (1L, a), (2L, a), (3L, b), (4L, b), (5L, c), // duplicates
+      (6L, Seq(0.0f, 0.0f, 0.0f, 0.0f)),                   // zero: lowest cid
+      (7L, Seq(0.2f, 0.1f, 0.9f, 0.4f)),
+      (8L, Seq(-0.7f, -0.1f, 0.05f, 0.0f)))
+      .map { case (i, v) => (i, v.map(java.lang.Float.valueOf)) } ++
+      Seq((9L, Seq[java.lang.Float](0.8f, null, 0.1f, 0.05f)),  // a null element
+        (10L, null))                                            // a null vector
+    val fdf = floats.toDF("vec_id", "embedding")
+    for (df <- Seq(fdf, fdf.withColumn("embedding", col("embedding").cast("array<double>")))) {
+      withAnsiOff {
+        def cells(m: graft.functions.CentroidMatrix) =
+          Similarity.assignCells(df, "vec_id", "embedding", m)
+            .collect().map(r => (r.getAs[Long]("nid"), Option(r.getAs[java.lang.Long]("cell")))).toSeq.sortBy(_._1)
+        val used = cells(matrix(start)).flatMap(_._2).toSet
+        assert(!used.contains(4L) && !used.contains(8L) && used.size > 3,
+          s"fixture lost its empty or its occupied cells: $used")
+        var old = start
+        var mat = matrix(start)
+        for (iteration <- 1 to 2) {
+          old = retired(df, old)
+          mat = Similarity.refineCentroids(df, "embedding", mat, 1)
+          val want = matrix(old)
+          assert(mat.cids.toSeq === want.cids.toSeq)
+          for (i <- want.cids.indices) {
+            assert(mat.cents(i).length === want.cents(i).length)
+            mat.cents(i).zip(want.cents(i)).foreach { case (g, w) =>
+              assert(math.abs(g - w) <= 1e-12 * math.max(math.abs(w), 1e-300),
+                s"cid ${want.cids(i)} iteration $iteration: $g vs $w")
+            }
+          }
+          assert(cells(mat) === cells(want), s"cell assignments diverged at iteration $iteration")
+        }
+      }
+    }
+  }
+
+  test("IVF build: each extra Lloyd iteration adds at most 2 jobs; every cell write runs in parallel with one file per cell dir") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // tasks that wrote output rows, per stage
+    val writers = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writers.merge(e.stageId, 1, _ + _)
+    }
+    def run[A](body: => A): (Int, Int) = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      writers.clear()
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (jobs.get(), writers.values.asScala.foldLeft(0)(math.max))
+    }
+    val dir = s"target/tmp/ivf_spec_jobs/${java.util.UUID.randomUUID}"
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    def parquetFiles(p: org.apache.hadoop.fs.Path): Int =
+      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
+    def filesPerCell: Map[String, Int] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/assigned")).iterator
+        .filter(_.getPath.getName.startsWith("cell="))
+        .map(d => d.getPath.getName -> parquetFiles(d.getPath))
+        .toMap
+    def centroidFiles = parquetFiles(new org.apache.hadoop.fs.Path(s"$dir/centroids"))
+    val df = clustered(400, 16, 8, jitter = 0.05).toDF("vec_id", "embedding")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (j1, _) = run(Similarity.kmeansCentroids(df, "vec_id", "embedding", 8, iterations = 1))
+      val (j3, _) = run(Similarity.kmeansCentroids(df, "vec_id", "embedding", 8, iterations = 3))
+      assert(j3 - j1 <= 4, s"2 more iterations ran ${j3 - j1} more jobs ($j1 -> $j3)")
+
+      val (_, buildWriters) = run(Similarity.ensureIvfIndex(spark, dir, df, "vec_id", "embedding", 8))
+      assert(filesPerCell.size >= 8, s"fixture has fewer than 8 cells: $filesPerCell")
+      assert(buildWriters > 1, "the cell write ran in one task")
+      assert(filesPerCell.values.forall(_ == 1), s"a build left several files in a cell: $filesPerCell")
+      assert(centroidFiles === 1)
+
+      val (_, rebalanceWriters) = run(Similarity.rebalanceIvfIndex(spark, dir, _ => 8, force = true))
+      assert(rebalanceWriters > 1, "the rebalance's cell write ran in one task")
+      assert(filesPerCell.values.forall(_ == 1), s"a rebalance left several files in a cell: $filesPerCell")
+      assert(centroidFiles === 1)
+
+      val before = filesPerCell
+      val batch = clustered(80, 16, 8, jitter = 0.05)
+        .map { case (i, v) => (i + 5000L, v) }.toDF("vec_id", "embedding")
+      val (_, appendWriters) = run(Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding"))
+      val after = filesPerCell
+      assert(appendWriters > 1, "the append's cell write ran in one task")
+      assert(after.forall { case (cell, n) => n - before.getOrElse(cell, 0) <= 1 },
+        s"an append wrote several files into a cell: $before -> $after")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("ivfSelfTopK bounds candidates under a planted mega-cell") {
