@@ -22,8 +22,10 @@ import graft.sources.ParquetDatabase
   * `ParquetDatabase.read` of a table version (`pdb_read_open`) against the
   * repeat reads (`pdb_read`). `minhash_store_probe` times one MinHash store
   * probe alone (perfbench's `--trace 1` `minhash.probe.*` spans split a
-  * probe into its jobs). `ivf_rebalance` times a forced rebalance of an
-  * index built untimed before each rep.
+  * probe into its jobs); `minhash_store_build` builds a fresh store of the
+  * same 90% each rep. `ivf_rebalance` times a forced rebalance of an
+  * index built untimed before each rep. Each row also carries the shuffle
+  * bytes written and read by its fastest rep.
   */
 object ProfileScale {
 
@@ -122,8 +124,9 @@ object ProfileScale {
         Similarity.ensureIvfIndex(spark, d, emb, "vec_id", "embedding",
           numCentroids = Similarity.autoCentroids(emb.count()))
       },
-      // the first probe after ensureIvfIndex, which opens the index
-      // version (centroid collect, `assigned` listing and schema read); the
+      // the first probe after ensureIvfIndex, which lists the index
+      // version's `assigned` and reads its schema (the build installs the
+      // centroid matrix, so no centroid collect); the
       // index is built untimed in `untimedSetup`, fresh each rep, so every
       // rep is an open. ivf_probe_topk below times the repeat probes.
       "ivf_probe_topk_open" -> (() =>
@@ -153,6 +156,11 @@ object ProfileScale {
         val batch = events.filter(col("event_id") % 10 === 0)
         DistinctSketch.mergeBatchIntoBucketedStore(spark, batch, Seq("event_type"), "user_id", d)
       },
+      // the write-time signature pass over 90% of the corpus: toks, then
+      // bands from the staged toks, into a fresh dir each rep
+      "minhash_store_build" -> (() =>
+        Dedup.buildMinHashStore(docs.filter(col("doc_id") % 10 =!= 0),
+          "doc_id", "text", s"$scratch/mh_build_${System.nanoTime()}")),
       "minhash_store_tick" -> { () =>
         // ONE ingest tick against a standing signature store (the
         // q_ext_stream15 maintenance shape): the store builds once from
@@ -225,7 +233,17 @@ object ProfileScale {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
         .map(_.getCollectionTime).sum / 1e3
     }
-    case class OpRow(sec: Double, vmhwmGb: Double, gcSec: Double)
+    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0L)
+    val shuffleRead = new java.util.concurrent.atomic.AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) {
+          shuffleWrite.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+          shuffleRead.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead)
+        }
+    })
+    case class OpRow(sec: Double, vmhwmGb: Double, gcSec: Double,
+                     shuffleWriteBytes: Long, shuffleReadBytes: Long)
     val out = scala.collection.mutable.LinkedHashMap[String, OpRow]()
     // warmup: session/codegen startup lands here, not on the first op
     noop(docs.limit(100))
@@ -238,27 +256,33 @@ object ProfileScale {
       val nReps = sys.env.get("SPARK_GRAFT_PSCALE_REPS").map(_.toInt).getOrElse(2)
       val reps = (1 to nReps).map { _ =>
         untimedSetup.get(name).foreach(_())
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        val (w0, r0) = (shuffleWrite.get, shuffleRead.get)
         val t0 = System.nanoTime()
         fn()
         val sec = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        val shuffled = (shuffleWrite.get - w0, shuffleRead.get - r0)
         // drop the rep's dead localCheckpoint/cache blocks OUTSIDE the
         // timing window — same lesson as Bench (e654d4f): accumulated
         // checkpoint debris from earlier reps/ops shows up as a
         // within-session slowdown that reads as regression
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
         spark.sharedState.cacheManager.clearCache()
-        sec
+        (sec, shuffled)
       }
-      out(name) = OpRow(math.rint(reps.min * 1000) / 1000, vmHwmGb,
-        math.rint((gcSec - gc0) * 100) / 100)
+      val (fastest, (sw, sr)) = reps.minBy(_._1)
+      out(name) = OpRow(math.rint(fastest * 1000) / 1000, vmHwmGb,
+        math.rint((gcSec - gc0) * 100) / 100, sw, sr)
       println(s"[profile-scale] $name: min=${out(name).sec} " +
-        s"reps=${reps.map(r => f"$r%.2f").mkString(",")} " +
-        s"vmhwm=${out(name).vmhwmGb}g gc=${out(name).gcSec}s")
+        s"reps=${reps.map(r => f"${r._1}%.2f").mkString(",")} " +
+        s"vmhwm=${out(name).vmhwmGb}g gc=${out(name).gcSec}s shuffle_w=$sw shuffle_r=$sr")
     }
     fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
 
     val json = out.map { case (k, v) =>
-      s""""$k":{"sec":${v.sec},"vmhwm_gb":${v.vmhwmGb},"gc_sec":${v.gcSec}}"""
+      s""""$k":{"sec":${v.sec},"vmhwm_gb":${v.vmhwmGb},"gc_sec":${v.gcSec},""" +
+        s""""shuffle_write_bytes":${v.shuffleWriteBytes},"shuffle_read_bytes":${v.shuffleReadBytes}}"""
     }.mkString(s"""{"sf":"$sfDir","tag":"$tag",""", ",", "}")
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"PROFILE_scale_$tag.json"),

@@ -107,6 +107,24 @@ object TextFunctions {
         transform(sequence(lit(1), size(toks) - (n - 1)),
           i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*)))))
 
+  /** The ascending distinct `xxhash64` values of the word `n`-gram
+    * shingles of [[shingles]] (`n = 1`: of [[distinctTokens]]), hashed in
+    * place by the native [[ShingleHashes]] kernel — no shingle string is
+    * built. Needs no session registration.
+    */
+  def shingleHashes(text: Column, n: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      ShingleHashes(org.apache.spark.sql.graft.ColumnBridge.expression(text), n))
+
+  /** The `numBands` MinHash LSH band hashes of a shingle-hash set
+    * (`numBands × rowsPerBand` permutations), by the native
+    * [[MinHashBands]] kernel; `posexplode` gives `(band, bh)` rows. Needs
+    * no session registration.
+    */
+  def minHashBands(ths: Column, numBands: Int, rowsPerBand: Int): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(
+      MinHashBands(org.apache.spark.sql.graft.ColumnBridge.expression(ths), numBands, rowsPerBand))
+
   /** Overlapping fixed-size token chunks — the pretraining/RAG chunker:
     * windows of `chunkSize` tokens advancing by `chunkSize - overlap`, so
     * consecutive chunks share `overlap` tokens; every token is covered and

@@ -242,20 +242,25 @@ object Dedup {
     }
   }
 
-  /** (id, ths): each doc's distinct 64-bit shingle hashes, the row a
-    * MinHash store segment's `toks/` holds. Docs with no shingle get no row.
+  /** (id, ths): each doc's distinct 64-bit shingle hashes in ascending
+    * order, the row a MinHash store segment's `toks/` holds. Docs with no
+    * shingle get no row. One projection over the input
+    * ([[graft.functions.ShingleHashes]]): no spread, no groupBy, so the
+    * input's own splits are the parallelism.
     */
-  private def shingleHashSets(docs: DataFrame, idCol: String, textCol: String,
+  private[graft] def shingleHashSets(docs: DataFrame, idCol: String, textCol: String,
                               shingleN: Int): DataFrame =
-    tokenSets(docs, idCol, textCol, shingleN)
-      .select(col("id"), xxhash64(col("tok")).as("th"))
-      .groupBy("id").agg(collect_set(col("th")).as("ths"))
+    docs.select(col(idCol).as("id"),
+        TextFunctions.shingleHashes(col(textCol), math.max(1, shingleN)).as("ths"))
+      .filter(size(col("ths")) > 0)
 
   /** (id, band, bh) band rows of (id, ths) shingle-hash sets — how a store
-    * segment's `bands/` derives from its `toks/`.
+    * segment's `bands/` derives from its `toks/`. One projection
+    * ([[graft.functions.MinHashBands]]) and a `posexplode`; no shuffle.
     */
-  private def setBandRows(sets: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
-    bandRows(sets.select(col("id"), explode(col("ths")).as("th")), numBands, rowsPerBand)
+  private[graft] def setBandRows(sets: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame =
+    sets.select(col("id"),
+      posexplode(TextFunctions.minHashBands(col("ths"), numBands, rowsPerBand)).as(Seq("band", "bh")))
 
   /** MinHash-banded candidate (d1, d2) pairs from exploded (id, th) token
     * hashes — the fallback candidate route for hot-heavy docs. 8 bands × 2
@@ -529,8 +534,9 @@ object Dedup {
     *
     * Layout at `dir`:
     *  - `toks/`  (id, ths array<long>) — distinct shingle hashes per doc,
-    *    the exact-verification side (jac on 64-bit shingle hashes, same
-    *    negligible-collision contract as [[jaccardPairs]]'s hashed join);
+    *    in ascending order, the exact-verification side (jac on 64-bit
+    *    shingle hashes, same negligible-collision contract as
+    *    [[jaccardPairs]]'s hashed join); docs without a shingle have no row;
     *  - `bands/` (id, band, bh) — LSH band rows, the candidate-join side;
     *  - `_params` — banding/shingle params; probes validate against it so
     *    a store built with different banding fails loudly instead of
@@ -538,6 +544,11 @@ object Dedup {
     *
     * Build runs the shingle pipeline once: `toks` is written first, and
     * `bands` derives from the STORED arrays (no second tokenization pass).
+    * Neither step shuffles: `toks` is one in-row projection over the input
+    * ([[graft.functions.ShingleHashes]]) and `bands` one over the staged
+    * `toks` ([[graft.functions.MinHashBands]]), so each writes one file per
+    * input split, the input's own splits are the parallelism, and the same
+    * input writes the same bytes.
     */
   def buildMinHashStore(docs: DataFrame, idCol: String, textCol: String, dir: String,
                         numBands: Int = 16, rowsPerBand: Int = 2,
@@ -856,7 +867,9 @@ object Dedup {
     * candidates from the store's LSH bands — the per-batch incremental step.
     * Only the BATCH is tokenized, once, into the (id, ths) sets a store
     * segment holds (checkpointed — they feed the band join and the verify
-    * join); the corpus side comes entirely from the store. Emitted jac is
+    * join), by the same in-row kernels a store build runs, so the batch
+    * side shuffles nothing before the joins; the corpus side comes
+    * entirely from the store. Emitted jac is
     * exact over the hashed shingle sets; misses are the banding family's
     * (1-s^r)^b — < 1e-7 at s≥0.8 with the default 16×2.
     *

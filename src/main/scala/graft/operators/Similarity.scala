@@ -507,9 +507,12 @@ object Similarity {
       else Some(graft.sources.HadoopText.read(fs, fpPath)
         .split('|').filterNot(_.startsWith("lastBatch=")).mkString("|"))
     if (!current.contains(fp)) {
-      persistIvfIndex(
-        buildIvfIndex(vectors, idCol, vecCol, numCentroids, kmeansIterations), dir)
+      val mat = kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations)
+      persistIvfIndex(indexOf(vectors, idCol, vecCol, mat), dir)
       graft.sources.HadoopText.write(fs, fpPath, fp)
+      // the written tree is the newest version and its matrix is `mat`:
+      // hold it open, so the first probe reads no centroids
+      installVersion(spark, fs, dir, fp, mat)
     }
     (n, numCentroids)
   }
@@ -651,8 +654,7 @@ object Similarity {
     // still under the mutex, so the fingerprint just written is the newest
     // version: it keeps the matrix (appends never touch `centroids`) and
     // lists `assigned` afresh on its first probe
-    openVersions.put(versionKey(spark, fs, dir), new IvfVersion(newFp,
-      fs.getFileStatus(fpPath).getModificationTime, version.matrix, spark, dir))
+    installVersion(spark, fs, dir, newFp, version.matrix)
     fs.delete(pendingPath, false)
     nBatch
   }
@@ -779,8 +781,9 @@ object Similarity {
     * [[auditIvfIndex]] points at, closing the frozen-centroid drift of
     * [[appendToIvfIndex]]. The corpus is re-read from the index's own
     * `assigned` store (no source-table dependency: maintenance runs where
-    * the index lives), k-means re-runs at sizeRule(n), and the new
-    * fingerprint keeps (n, xor, lastBatch) verbatim with only k/iters
+    * the index lives; through the session's held version, with no new
+    * listing, when that version is the one on disk), k-means re-runs at
+    * sizeRule(n), and the new fingerprint keeps (n, xor, lastBatch) verbatim with only k/iters
     * updated — so a foreachBatch stream paired with this index resumes
     * exactly-once semantics across the rebuild.
     *
@@ -851,7 +854,14 @@ object Similarity {
       if (!force && newK == kv("k").toInt) return None
       val token = java.util.UUID.randomUUID().toString.take(8)
       val tmp = s"${dir}__rebalance_tmp_$token"
-      val vectors = spark.read.parquet(s"$dir/assigned").select(col("nid"), col("nv"))
+      // the held version, when it is the one on disk, has `assigned`
+      // listed already: reusing it skips the listing and footer jobs
+      val held = openVersions.get(versionKey(spark, fs, dir))
+      val assigned =
+        if (held != null && held.fingerprint == fpText &&
+            held.mtime == fs.getFileStatus(fpPath).getModificationTime) held.assigned
+        else spark.read.parquet(s"$dir/assigned")
+      val vectors = assigned.select(col("nid"), col("nv"))
       val mat = kmeansMatrix(vectors, "nid", "nv", newK, kmeansIterations)
       new graft.sources.ParquetDatabase(spark, s"$tmp/centroids").create(centroidFrame(spark, mat))
       writeAssigned(s"$tmp/assigned", assignCells(spread(vectors), "nid", "nv", mat))
@@ -872,8 +882,7 @@ object Similarity {
           s"rebalanceIvfIndex: failed to promote $tmp — run recoverIvfRebalance")
       // the promoted tree is the newest version and its matrix is the one
       // just written: hold it open, so the next probe reads no centroids
-      openVersions.put(versionKey(spark, fs, dir), new IvfVersion(newFp,
-        fs.getFileStatus(fpPath).getModificationTime, mat, spark, dir))
+      installVersion(spark, fs, dir, newFp, mat)
       fs.delete(new org.apache.hadoop.fs.Path(old), true)
       Some(newK)
     } finally {
@@ -1006,6 +1015,18 @@ object Similarity {
   private val openVersions = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), IvfVersion]()
 
+  /** Hold open the version a writer just committed: `fingerprint` is the
+    * text it wrote to `_fingerprint` (its mtime is read here) and `matrix`
+    * the centroids it holds.
+    */
+  private def installVersion(spark: org.apache.spark.sql.SparkSession,
+                             fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                             fingerprint: String,
+                             matrix: graft.functions.CentroidMatrix): Unit =
+    openVersions.put(versionKey(spark, fs, dir), new IvfVersion(fingerprint,
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, "_fingerprint")).getModificationTime,
+      matrix, spark, dir))
+
   private def versionKey(spark: org.apache.spark.sql.SparkSession,
                          fs: org.apache.hadoop.fs.FileSystem,
                          dir: String): (org.apache.spark.sql.SparkSession, String) =
@@ -1017,9 +1038,11 @@ object Similarity {
     * last — ensureIvfIndex's rebuild, appendToIvfIndex, rebalanceIvfIndex
     * (whose same-k rebuild keeps the text but not the mtime) and
     * recoverIvfIndex — so a caller never reuses a version a writer has
-    * replaced. appendToIvfIndex and rebalanceIvfIndex also install the
-    * version they commit, with the matrix they hold, so the first probe
-    * after them reads no centroids. A dir without `_fingerprint`
+    * replaced. ensureIvfIndex's rebuild, appendToIvfIndex and
+    * rebalanceIvfIndex also install the version they commit, with the
+    * matrix they hold, so the first probe after them reads no centroids;
+    * rebalanceIvfIndex reads `assigned` through the held version when it
+    * is the one on disk. A dir without `_fingerprint`
     * (persistIvfIndex alone) is opened afresh on every call and never
     * cached.
     */
@@ -1138,9 +1161,13 @@ object Similarity {
 
   def buildIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
                     numCentroids: Int, kmeansIterations: Int = 2): IvfIndex = {
-    val mat = kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations)
-    IvfIndex(centroidFrame(vectors.sparkSession, mat), assignCells(spread(vectors), idCol, vecCol, mat))
+    indexOf(vectors, idCol, vecCol,
+      kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations))
   }
+
+  private def indexOf(vectors: DataFrame, idCol: String, vecCol: String,
+                      mat: graft.functions.CentroidMatrix): IvfIndex =
+    IvfIndex(centroidFrame(vectors.sparkSession, mat), assignCells(spread(vectors), idCol, vecCol, mat))
 
   /** IVF-style ANN over a prebuilt index: probe the `nprobe` cells nearest
     * each query, score only those cells. Candidates per query ≈

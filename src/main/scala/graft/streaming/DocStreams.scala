@@ -40,10 +40,12 @@ object DocStreams {
     * stream state being the band-bucket membership map.
     *
     * Pipeline shape (and why it scales to an unbounded 100 TB ingest):
-    *  - The MinHash signature is computed PER ROW with higher-order-function
-    *    folds (`aggregate` over the shingle array) — no aggregation, no
-    *    shuffle, no state; the signature work rides inside whole-stage
-    *    codegen on the map side.
+    *  - The MinHash signature is computed PER ROW by the native
+    *    `shingle_hashes` / `minhash_bands` kernels (the hash family of the
+    *    batch store: th = xxhash64(shingle), p_i = xxhash64(i, th)) — no
+    *    aggregation, no shuffle, no state, and no interpreted
+    *    higher-order-function fallback; the signature work rides inside
+    *    whole-stage codegen on the map side.
     *  - Each doc explodes to `numBands` (band, bandHash) rows; the ONE
     *    stateful operator is `flatMapGroupsWithState` keyed by band-bucket.
     *    State per bucket is the member id list — two docs land in the same
@@ -86,29 +88,15 @@ object DocStreams {
                              shingleN: Int = 3, maxBucket: Int = 200,
                              maxFilesPerTrigger: Int = 1): Long = {
     import spark.implicits._
-    val numHashes = numBands * rowsPerBand
     val src = spark.readStream.schema(docsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
-    // shingle-hash once per token set, then permute — same hash family as
-    // the batch minHashSignature (th = xxhash64(tok); p_i = xxhash64(i, th))
-    val toks = src
-      .select(col("doc_id"),
-        transform(array_distinct(TextFunctions.shingles(col("text"), shingleN)),
-          t => xxhash64(t)).as("ths"))
-      .filter(size(col("ths")) > 0)
-    val sigCols = (0 until numHashes).map { i =>
-      aggregate(transform(col("ths"), th => xxhash64(lit(i), th)),
-        lit(Long.MaxValue), (acc, x) => least(acc, x)).as(s"h$i")
-    }
-    val sig = toks.select(col("doc_id") +: sigCols: _*)
-    val bandCols = (0 until numBands).map { b =>
-      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), xxhash64(lit(b) +: hs: _*).as("bh"))
-    }
-    val bandRows = sig
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bh").as("bh"), col("doc_id"))
+    // a doc without shingles has no band hashes and so no rows
+    val bandRows = src
+      .select(col("doc_id"), posexplode(TextFunctions.minHashBands(
+        TextFunctions.shingleHashes(col("text"), shingleN), numBands, rowsPerBand))
+        .as(Seq("band", "bh")))
+      .select(col("band"), col("bh"), col("doc_id"))
       .as[DocBandRow]
     val pairs = bandRows
       .groupByKey(r => (r.band, r.bh))

@@ -636,7 +636,8 @@ class SimilaritySpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     spark.listenerManager.register(qeListener)
     try {
-      assert(nids(probeTwice()) === (0L until 120L).toSet)
+      // the build installs the version it wrote, matrix included
+      assert(nids(probeTwice(carriesMatrix = true)) === (0L until 120L).toSet)
 
       // append: the held version's matrix assigns the batch (no centroid
       // collect), the new version keeps it and lists `assigned` afresh
@@ -662,7 +663,7 @@ class SimilaritySpec extends SparkSpec {
       // ensureIvfIndex rebuild over a changed corpus
       val shrunk = base.filter($"vec_id" =!= 7L)
       Similarity.ensureIvfIndex(spark, dir, shrunk, "vec_id", "embedding", numCentroids = 4)
-      assert(nids(probeTwice()) === (0L until 120L).toSet - 7L)
+      assert(nids(probeTwice(carriesMatrix = true)) === (0L until 120L).toSet - 7L)
 
       // the recover drills' hand-written fingerprints: an append's crash
       // after its files landed (marker names both identities) rolls forward
@@ -688,6 +689,49 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.listenerManager.unregister(qeListener)
+    }
+  }
+
+  test("a forced rebalance right after a probe reads `assigned` through the held version: no listing job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val id = java.util.UUID.randomUUID.toString
+    val dir = s"target/tmp/ivf_spec_rebalance_listing/$id"
+    val base = clustered(120, 16, 4, jitter = 0.05).toDF("vec_id", "embedding")
+    val q = base.filter($"vec_id" < 3L)
+    // parallel listing jobs over this index's own `assigned` cell dirs (the
+    // rebalance's staged tree is a sibling and does not match)
+    val listings = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .exists(d => d.startsWith("Listing leaf files") && d.contains(s"$id/assigned/")))
+          listings.incrementAndGet()
+    }
+    def listingJobs(body: => Any): Int = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      listings.set(0)
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      listings.get()
+    }
+    // more cell dirs than the threshold are listed by a Spark job, as the
+    // 63 cells of an llm_corpus index are at the default of 32
+    withSQLConf("spark.sql.sources.parallelPartitionDiscovery.threshold" -> "2") {
+      Similarity.ensureIvfIndex(spark, dir, base, "vec_id", "embedding", numCentroids = 4)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        def probe() = ivfRows(Similarity.ivfTopKPersisted(spark, dir, q, "vec_id", "embedding",
+          k = 1000, nprobe = 64))
+        val before = probe()
+        assert(listingJobs(probe()) === 0)
+        assert(listingJobs(Similarity.rebalanceIvfIndex(spark, dir, _ => 4, force = true)) === 0,
+          "the rebalance listed `assigned` again")
+        // the promoted version's `assigned` is not listed until first use,
+        // so a second rebalance with no probe between lists it once: the
+        // fixture does reach the listing job
+        assert(listingJobs(Similarity.rebalanceIvfIndex(spark, dir, _ => 4, force = true)) >= 1)
+        assert(probe().map(_._2).toSet === before.map(_._2).toSet)
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
   }
 
