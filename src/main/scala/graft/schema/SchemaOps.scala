@@ -1,7 +1,11 @@
 package graft.schema
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 import scala.collection.immutable.ListMap
@@ -24,37 +28,60 @@ object SchemaOps {
 
   /** Cast/null-fill `e` (of type `src`) into shape `tgt`, recursing through
     * structs and arrays. Null structs stay null (not structs-of-nulls).
+    *
+    * A subtree already in target shape passes through untouched, and one
+    * that differs only by allowing fewer nulls is relabelled with
+    * [[AsNullable]]; only a subtree whose names, order or leaf types differ
+    * is rebuilt. So conforming an already-canonical frame adds no per-row
+    * work — no struct rebuild and no interpreted `transform` lambda.
     */
   private def conformExpr(e: Column, src: DataType, tgt: DataType): Column = (src, tgt) match {
-    case (s: StructType, t: StructType) =>
-      val fields = t.fields.map { tf =>
-        s.fields.find(_.name == tf.name) match {
-          case Some(sf) => conformExpr(e.getField(tf.name), sf.dataType, tf.dataType).as(tf.name)
-          case None     => lit(null).cast(tf.dataType).as(tf.name)
-        }
-      }
-      when(e.isNull, lit(null).cast(t)).otherwise(struct(fields.toIndexedSeq: _*))
-    case (ArrayType(se, _), ArrayType(te, _)) =>
-      transform(e, x => conformExpr(x, se, te))
     case (s, t) if s == t => e
-    case (_, t)           => e.cast(t)
+    case (s, t) if ColumnBridge.widensNullability(s, t) => asNullable(e, Some(t))
+    case (s: StructType, t: StructType) =>
+      when(e.isNull, lit(null).cast(t)).otherwise(struct(conformFields(s, t, e.getField): _*))
+    case (ArrayType(se, sn), ArrayType(te, tn)) =>
+      transform(e, x => conformNullable(x, se, sn, te, tn))
+    case (_, t) => e.cast(t)
   }
+
+  /** [[conformExpr]] plus the target's nullability: a value the source
+    * declares non-null (a `lit`, a `struct(...)`) would stay non-null
+    * through the optimizer, which then writes it as a `required` parquet
+    * field and reports a schema that is not the target's.
+    */
+  private def conformNullable(e: Column, src: DataType, srcNullable: Boolean,
+                              tgt: DataType, tgtNullable: Boolean): Column = {
+    val c = conformExpr(e, src, tgt)
+    if (tgtNullable && !srcNullable) asNullable(c, None) else c
+  }
+
+  private def asNullable(c: Column, relabel: Option[DataType]): Column =
+    ColumnBridge.column(AsNullable(ColumnBridge.expression(c), relabel))
+
+  /** `tgt`'s fields, in its order, conformed from `src`'s (`field` reads one
+    * by name) or null-filled where `src` lacks them.
+    */
+  private def conformFields(src: StructType, tgt: StructType, field: String => Column): Seq[Column] =
+    tgt.fields.toIndexedSeq.map { tf =>
+      src.fields.find(_.name == tf.name) match {
+        case Some(sf) =>
+          conformNullable(field(tf.name), sf.dataType, sf.nullable, tf.dataType, tf.nullable).as(tf.name)
+        case None => lit(null).cast(tf.dataType).as(tf.name)
+      }
+    }
 
   /** Conform `df` to `target`: union-of-schemas semantics with the target
     * winning — every target field present (null-filled if missing), every
     * field cast to the target type, in target field order. Extra source
     * columns are dropped (the reference casts to the canonical schema).
+    * Wherever the target allows nulls the result does too, so for an
+    * all-nullable target such as `CrystalSchema.schema` the result's schema
+    * is exactly the target; a frame already in it comes back as a plain
+    * column selection.
     */
-  def conformToSchema(df: DataFrame, target: StructType): DataFrame = {
-    val src = df.schema
-    val cols = target.fields.map { tf =>
-      src.fields.find(_.name == tf.name) match {
-        case Some(sf) => conformExpr(df(s"`${tf.name}`"), sf.dataType, tf.dataType).as(tf.name)
-        case None     => lit(null).cast(tf.dataType).as(tf.name)
-      }
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
+  def conformToSchema(df: DataFrame, target: StructType): DataFrame =
+    df.select(conformFields(df.schema, target, name => df(s"`$name`")): _*)
 
   /** Flatten nested struct columns into dotted top-level columns
     * (`a: struct<b,c>` → columns `a.b`, `a.c`). Arrays are left intact —
@@ -96,4 +123,22 @@ object SchemaOps {
     }
     df.select(build(leaves).map { case (n, c) => c.as(n) }: _*)
   }
+}
+
+/** `child`'s values, nullable, under `relabel` — a type that only allows
+  * more nulls than the child's (same names, order and leaf types) — or
+  * else under the child's own type. The rows are not touched: codegen
+  * passes the child's value through. Unlike a `Cast`, a `CaseWhen` or
+  * Spark's `KnownNullable`, it is never folded or simplified away, so the
+  * relaxed nullability reaches the writer — over a literal too, where the
+  * optimizer would otherwise restore `nullable = false`.
+  */
+private[schema] case class AsNullable(child: Expression, relabel: Option[DataType])
+    extends UnaryExpression {
+  override def dataType: DataType = relabel.getOrElse(child.dataType)
+  override def nullable: Boolean = true
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = child.eval(input)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = child.genCode(ctx)
+  override protected def withNewChildInternal(newChild: Expression): AsNullable = copy(child = newChild)
 }

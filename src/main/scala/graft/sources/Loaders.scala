@@ -16,18 +16,18 @@ final case class LoaderConfig(
     numWorkers: Int = 8,
     timeoutSeconds: Int = 60,
     downloadFromScratch: Boolean = false,
-    ingestFromScratch: Boolean = false,
-    transformFromScratch: Boolean = false)
+    ingestFromScratch: Boolean = false)
 
 /** Template-method pipeline (`crystpqdb/loaders/base.py:224-243`):
-  * download → ingest (raw → staged parquet) → transform (source shape →
-  * canonical schema) — each stage a parquet checkpoint dir with
-  * skip-if-exists caching.
+  * download → ingest (raw → staged parquet at `pqdbDir`, skip-if-exists)
+  * → transform (source shape → canonical schema). As in the reference,
+  * only the raw and ingested stages live on disk: the transformed stage is
+  * the returned lazy DataFrame (the reference rmtree's `transformed_dir`
+  * but never writes it, base.py:241-243), so the caller's
+  * `ParquetDatabase.create` writes each batch's canonical rows once.
   *
   * Differences from the reference, deliberate:
   *  - zero-egress: `download()` is a no-op hook; loaders read local files
-  *  - the transformed stage is actually written (the reference rmtree's
-  *    `transformed_dir` but never writes it, base.py:241-243)
   *  - all stages are lazy DataFrames — nothing is collected to the driver
   */
 trait Loader {
@@ -38,7 +38,6 @@ trait Loader {
 
   def rawDir: String = s"${config.dataDir}/raw/$sourceDatabase/$sourceDataset"
   def pqdbDir: String = s"${config.dataDir}/interim/pqdb/$sourceDatabase/$sourceDataset"
-  def transformedDir: String = s"${config.dataDir}/interim/transformed_pqdb/$sourceDatabase/$sourceDataset"
 
   /** (url → destination) pairs to stage into `rawDir`. Loaders with remote
     * sources declare their file list here (for index-driven sources, via
@@ -70,8 +69,9 @@ trait Loader {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
 
-  /** Staged pipeline with per-stage caching; returns the canonical-schema
-    * DataFrame (also persisted at `transformedDir`).
+  /** Staged pipeline with a cached ingest stage; returns the lazy
+    * canonical-schema DataFrame (exactly `CrystalSchema.schema`), computed
+    * from the staged parquet by whichever action consumes it.
     */
   def run(): DataFrame = {
     if (config.downloadFromScratch) rm(rawDir) // base.py:225-226 parity
@@ -81,13 +81,7 @@ trait Loader {
     Fetcher.unzipAll(rawDir)
     if (config.ingestFromScratch) rm(pqdbDir)
     if (!exists(pqdbDir)) load().write.mode("overwrite").parquet(pqdbDir)
-    val staged = spark.read.parquet(pqdbDir)
-    if (config.transformFromScratch) rm(transformedDir)
-    if (!exists(transformedDir)) {
-      SchemaOps.conformToSchema(transform(staged), CrystalSchema.schema)
-        .write.mode("overwrite").parquet(transformedDir)
-    }
-    spark.read.parquet(transformedDir)
+    SchemaOps.conformToSchema(transform(spark.read.parquet(pqdbDir)), CrystalSchema.schema)
   }
 }
 

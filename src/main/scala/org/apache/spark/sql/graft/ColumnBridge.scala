@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.DataType
 
 /** Column <-> catalyst Expression bridge for expressions that carry
   * non-Expression constructor state (a collected centroid matrix) and so
@@ -14,4 +15,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `to` is `from` allowing more nulls: same names, order and leaf types. */
+  def widensNullability(from: DataType, to: DataType): Boolean =
+    DataType.equalsIgnoreCompatibleNullability(from, to)
 }

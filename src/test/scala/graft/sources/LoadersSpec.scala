@@ -3,13 +3,47 @@ package graft.sources
 import graft.SparkSpec
 import graft.schema.CrystalSchema
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{GroupType, Type}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end Loader.run() pipeline tests: fixture raw files → staged
-  * parquet → canonical-schema parquet, mirroring the reference's
+  * parquet → lazy canonical-schema DataFrame, mirroring the reference's
   * download→ingest→transform template (base.py:224-243) on local files.
   */
 class LoadersSpec extends SparkSpec {
+
+  /** A second `run()` reads the cached ingest stage and yields the same
+    * rows, again in exactly the canonical schema.
+    */
+  private def assertRerunSame(loader: Loader, first: DataFrame): Unit = {
+    val again = loader.run()
+    assert(again.schema === CrystalSchema.schema)
+    assert(first.exceptAll(again).isEmpty && again.exceptAll(first).isEmpty)
+  }
+
+  /** Every field path in the parquet footers under `dir` that is `required`. */
+  private def requiredFields(dir: String): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val files = root.getFileSystem(conf).listStatus(root).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    def walk(t: Type, at: String): Seq[String] = {
+      val here = if (t.getRepetition == Type.Repetition.REQUIRED) Seq(at) else Nil
+      here ++ (if (t.isPrimitive) Nil
+        else t.asInstanceOf[GroupType].getFields.asScala.toSeq.flatMap(f => walk(f, s"$at.${f.getName}")))
+    }
+    files.toSeq.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq.flatMap(t => walk(t, t.getName))
+      finally reader.close()
+    }.distinct
+  }
 
   private def freshDataDir(name: String): String = {
     val dir = s"target/tmp/loaders/$name"
@@ -55,9 +89,26 @@ class LoadersSpec extends SparkSpec {
     assert(out.select(col("data.energy_uncorrected")).head().getDouble(0) === -3.5)
     // alexandria emits no symmetry/has_props -> permissive conform null-fills
     assert(out.select(col("symmetry")).head().isNullAt(0))
-    // staged dirs written (incl. the transformed stage the reference drops)
+    // only the ingest stage is written; the transformed stage stays in
+    // memory, as in the reference
     assert(Files.exists(Paths.get(loader.pqdbDir)))
-    assert(Files.exists(Paths.get(loader.transformedDir)))
+    assert(!Files.exists(Paths.get(s"$dataDir/interim/transformed_pqdb")))
+    assertRerunSame(loader, out)
+  }
+
+  test("a table created from run() has only optional parquet fields") {
+    val dataDir = freshDataDir("alex_create")
+    val loader = AlexandriaLoader(spark, LoaderConfig(dataDir))
+    Files.createDirectories(Paths.get(loader.rawDir))
+    Files.writeString(Paths.get(s"${loader.rawDir}/alexandria_000.json"), alexEntry)
+    val dbDir = s"$dataDir/db"
+    new ParquetDatabase(spark, dbDir).create(loader.run(), target = Some(CrystalSchema.schema), assignId = true)
+    // source_database/source_dataset are literals: without the conform's
+    // nullability they would be written `required`. Only the assigned id,
+    // a hash that is never null, is.
+    assert(requiredFields(dbDir) === Seq("id"))
+    assert(spark.read.parquet(dbDir).select(col("source_database"), col("source_id")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("alexandria", "agm-1")))
   }
 
   test("AlexandriaLoader reads .json.bz2 natively (no decompress stage)") {
@@ -113,6 +164,7 @@ class LoadersSpec extends SparkSpec {
     assert(out.select(col("data.g_vrh")).head().isNullAt(0))
     assert(out.select(col("symmetry.number")).head().getInt(0) === 229)
     assert(out.select(col("has_props.thermo")).head().getBoolean(0) === true)
+    assertRerunSame(loader, out)
   }
 
   test("MpLoader null-fills even when the whole structure field is absent") {
@@ -169,6 +221,7 @@ class LoadersSpec extends SparkSpec {
     // cart = frac · matrix under the pymatgen lattice convention
     val xyz = out.select(col("structure.sites")(1).getField("xyz")).head().getSeq[Double](0)
     assert(xyz.zip(Seq(1.0, 1.0, 1.0)).forall { case (a, b) => math.abs(a - b) < 1e-9 })
+    assertRerunSame(loader, out)
   }
 
   test("Mc3dLoader.run(): zipped CIF raw stage extracts in place and parses (R4)") {
