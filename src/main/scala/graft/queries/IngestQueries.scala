@@ -547,49 +547,55 @@ object IngestQueries {
           "(SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) FROM customer WHERE c_custkey % 100 < 4) AS DOUBLE), 4) AS total, " +
           "2 AS n_buckets, true AS healthy_untouched, true AS tail_packed")),
 
-    // crash-recovery drill on the driver gate: simulate both interrupted
-    // rewrite-swap states the crash-safety contract names — an INCOMPLETE
-    // rewrite with the live dir moved aside (must roll back to the
-    // original) and a COMPLETE rewrite caught between the two renames
-    // (must roll forward) — then prove the surviving data is exactly the
-    // source. recover() must also be idempotent (second call = no-op).
+    // crash-recovery drill on the oracle gate: the two crash states of the
+    // commit kernel — a MID-MOVE crash (manifest written, an original moved
+    // aside, a replacement moved in) must roll back to the original, and a
+    // complete stage that holds the gate but renamed nothing must be
+    // dropped with the table untouched — then prove the surviving data is
+    // exactly the source. recover() must also be idempotent (second call =
+    // no-op).
     DeclaredQuery(
       "q_norm6",
       (s, d) => {
         val db = freshDb(s, "q_norm6")
         val src = Tables.load(s, d, "nation").select(col("n_nationkey"), col("n_name"))
         db.create(src)
-        val fs = new org.apache.hadoop.fs.Path(db.dir)
-          .getFileSystem(s.sessionState.newHadoopConf())
+        val conf = s.sessionState.newHadoopConf()
+        val fs = new org.apache.hadoop.fs.Path(db.dir).getFileSystem(conf)
         def P(p: String) = new org.apache.hadoop.fs.Path(p)
-        // drill 1: incomplete rewrite (no _SUCCESS), live dir moved aside
-        fs.mkdirs(P(db.dir + "__normalize_tmp"))
-        require(fs.rename(P(db.dir), P(db.dir + "__old")), "q_norm6: fixture rename 1")
-        require(db.recover().exists(_.contains("rolled back")),
-          "q_norm6: incomplete rewrite was not rolled back")
-        // drill 2: complete rewrite (_SUCCESS present), crash between the
-        // post-lock re-check and the promote rename. Roll-forward is
-        // token-gated (round-11 __swapper protocol) AND check-gated
-        // (round 12): the marker must name the stage and carry the
-        // second-line "checked" token the swap appends only after its
-        // fingerprint re-check passes — both are part of the simulated
-        // crash state (a single-line marker must roll BACK instead;
-        // drilled in ConcurrentWriterSpec).
-        src.repartition(2).write.parquet(db.dir + "__normalize_tmp")
-        graft.sources.HadoopText.write(fs, P(db.dir + "__swapper"),
-          db.dir + "__normalize_tmp\nchecked")
-        require(fs.rename(P(db.dir), P(db.dir + "__old")), "q_norm6: fixture rename 2")
-        require(db.recover().exists(_.contains("completed")),
-          "q_norm6: complete rewrite was not rolled forward")
+        val originals = graft.sources.ParquetStats.listParquetFiles(db.dir, conf)
+        // a complete stage holding the gate: every original touched, the
+        // stage's files as replacements
+        def holdGate(stage: String): Seq[org.apache.hadoop.fs.Path] = {
+          src.limit(3).write.mode("overwrite").parquet(stage)
+          val staged = graft.sources.ParquetStats.listParquetFiles(stage, conf)
+          fs.mkdirs(P(db.dir + "__patch_old"))
+          graft.sources.HadoopText.write(fs, P(db.dir + "__patch_old/_manifest"),
+            (originals.map(p => s"touched\t$p") ++
+              staged.map(f => s"new\t${db.dir}/${f.getName}")).mkString("\n"))
+          staged
+        }
+        // drill 1: mid-move crash
+        val staged = holdGate(db.dir + "__patch_tmp_q6a")
+        require(fs.rename(originals.head, P(db.dir + "__patch_old/" + originals.head.getName)) &&
+          fs.rename(staged.head, P(db.dir + "/" + staged.head.getName)), "q_norm6: fixture renames")
+        require(db.recover().exists(_.startsWith("restored")),
+          "q_norm6: mid-move crash was not rolled back")
+        // drill 2: the gate held, nothing renamed
+        holdGate(db.dir + "__patch_tmp_q6b")
+        val acts = db.recover()
+        require(acts.exists(_.contains("__patch_tmp_q6b")) &&
+          !acts.exists(a => a.startsWith("restored") || a.startsWith("removed")),
+          s"q_norm6: the gate-holding stage was not dropped cleanly: ${acts.mkString("; ")}")
         require(db.recover().isEmpty, "q_norm6: recover() not idempotent")
         db.read()
           .agg(count(lit(1)).as("n_rows"), sum(col("n_nationkey")).as("key_sum"))
           .withColumn("rolled_back", lit(true))
-          .withColumn("rolled_forward", lit(true))
+          .withColumn("stage_dropped", lit(true))
       },
       Some(
         "SELECT count(*) AS n_rows, CAST(sum(n_nationkey) AS BIGINT) AS key_sum, " +
-          "true AS rolled_back, true AS rolled_forward FROM nation")),
+          "true AS rolled_back, true AS stage_dropped FROM nation")),
 
     // snapshot / TIME TRAVEL on the store: tag the table, mutate it twice
     // (scoped upsert + predicate delete — both would normally delete the

@@ -18,6 +18,19 @@ import org.apache.spark.sql.types.StructType
   * the parquet footers), `normalize` is a repartition rewrite — never a
   * driver-side materialization (the reference needs ~64 GB RAM to build its
   * combined DB, README.md:120; this needs an executor's worth).
+  *
+  * Every mutation (`upsert`, `deleteWhere`, the `normalize` family,
+  * `compactSmallFiles`) commits through one kernel, [[replaceFiles]]: stage
+  * the new files in an invocation-unique `<dir>__patch_tmp_<token>`, win the
+  * `<dir>__patch_old/_manifest` gate, re-check the table's [[fingerprint]],
+  * move the replaced files aside into `__patch_old` (by table-relative
+  * path) and the new files in, then release the gate. A full rewrite is the
+  * case where every data file is replaced. The table directory itself is
+  * never renamed, so a raw reader racing a commit (`spark.read.parquet(dir)`,
+  * DuckDB) can see a partial file set; [[readSnapshot]] is the isolated read.
+  * A mutator that finds a manifest aborts without touching anything: a live
+  * peer and a crashed commit look alike, and only a quiesced [[recover]] may
+  * roll the latter back.
   */
 class ParquetDatabase(val spark: SparkSession, val dir: String) {
 
@@ -34,125 +47,90 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   /** Drop this table's open read versions: a commit just replaced them. */
   private def forgetReads(): Unit = ParquetDatabase.forgetReads(qualifiedDir)
 
+  /** The commit gate's directory: while a commit holds the gate it holds the
+    * manifest and the files that commit moved aside.
+    */
+  private def patchOld = new Path(s"${dir}__patch_old")
+  private def manifestPath = new Path(patchOld, "_manifest")
+
   // ------------------------------------------------ optimistic concurrency
 
   /** Fingerprint of the live table state: every file's table-relative path,
     * length, and mtime under the table root, hashed. Mutation paths capture
-    * it at entry and the swap kernels ([[rewriteWith]] / [[replaceFiles]])
-    * re-check it AFTER the replacement data is fully staged and immediately
-    * BEFORE the first rename — the optimistic-concurrency CAS: a concurrent
-    * writer's commit between this mutation's read and its swap fails the
-    * mutation loudly (`ConcurrentModificationException`, staged temp output
-    * dropped, live table untouched) instead of silently overwriting the
-    * other writer's rows (lost update). Cost is one metadata-only recursive
-    * listing per mutation — the same order as the footer-stats pass the
-    * scoped mutations already do.
+    * it at entry and [[replaceFiles]] re-checks it AFTER the replacement
+    * data is fully staged and the commit gate is won, immediately BEFORE the
+    * first rename — the optimistic-concurrency CAS: a concurrent writer's
+    * commit between this mutation's read and its own fails the mutation
+    * loudly (`ConcurrentModificationException`, staged temp output dropped,
+    * live table untouched) instead of silently overwriting the other
+    * writer's rows (lost update). Cost is one metadata-only recursive
+    * listing per check — the same order as the footer-stats pass the scoped
+    * mutations already do.
     *
-    * Residual window: the check and the first rename are not one atomic
-    * step, so two writers whose swaps land inside the same rename-latency
-    * window can still both pass. Every interleaving from there aborts
-    * without silent loss on a filesystem with atomic rename: a second
-    * writer renaming while the first is mid-swap fails outright (dir
-    * already moved), a second REWRITER renaming after the first fully
-    * committed is caught by [[rewriteWith]]'s post-lock re-check (the
-    * moved-aside tree no longer fingerprints as the expected state — it is
-    * restored and the writer aborts), and a second PATCHER is serialized
-    * by the create-no-overwrite manifest gate in [[replaceFiles]]. A
-    * multi-writer fleet on an object store without atomic rename needs a
-    * conditional-put commit log; these aborts' failure mode (nothing
-    * renamed, or renamed-then-restored) is what such a log slots under.
+    * No residual window between the check and the first rename: the check
+    * runs while this writer holds the create-no-overwrite manifest gate, and
+    * every other mutator either aborts at entry on that manifest or loses
+    * the gate. Appends (`create`) take no gate; one that lands after the
+    * check is left in place, since a commit replaces only the files it
+    * listed. A multi-writer fleet on an object store without atomic rename
+    * or create-if-absent needs a conditional-put commit log; the gate is
+    * what such a log slots under.
     */
-  def fingerprint(): String = fingerprintOfTree(dir)
+  def fingerprint(): String = listTable().print
 
-  /** [[fingerprint]] of an arbitrary tree with table-relative names —
-    * a directory rename preserves every file's length and mtime, so the
-    * moved-aside `__old` tree fingerprints identically to the live table
-    * it was seconds ago (the post-swap-rename re-check relies on this).
+  /** The live table as one walk sees it: its [[fingerprint]] and the path
+    * of every data file under the root, partition directories included.
     */
-  private def fingerprintOfTree(root: String): String = {
+  private def listTable(): ParquetDatabase.Listing = {
     val sb = new StringBuilder
+    val files = Seq.newBuilder[String]
     // one stat for the root, then one listing per directory: every entry's
     // length and mtime come from its parent's listing (each stat or listing
     // is one request on an object store)
     def walk(st: FileStatus): Unit =
       if (st.isDirectory)
-        // a concurrent writer's swap can delete a directory between its
+        // a concurrent writer's commit can delete a directory between its
         // parent's listing and its own — skip it rather than crash the
         // mutation entry. The resulting print describes a state that no
         // longer exists, so any CAS against it simply conflicts (safe), and
         // the walk stays usable while peers mutate.
         try fs.listStatus(st.getPath).sortBy(_.getPath.getName).foreach(walk)
         catch { case _: java.io.FileNotFoundException => () }
-      else sb.append(relativize(root, st.getPath)).append('|').append(st.getLen)
-        .append('|').append(st.getModificationTime).append('\n')
-    try walk(fs.getFileStatus(new Path(root)))
+      else {
+        sb.append(relativize(dir, st.getPath)).append('|').append(st.getLen)
+          .append('|').append(st.getModificationTime).append('\n')
+        if (st.getPath.getName.endsWith(".parquet")) files += st.getPath.toString
+      }
+    try walk(fs.getFileStatus(new Path(dir)))
     catch { case _: java.io.FileNotFoundException => () }
-    ParquetDatabase.md5Hex(sb.result())
+    ParquetDatabase.Listing(ParquetDatabase.md5Hex(sb.result()), files.result())
   }
 
-  /** A `__patch_old` manifest names originals that are NOT in the live
-    * tree: the table is mid-patch (crashed, or a writer is live) and cannot
-    * be read consistently without [[recover]]. A manifest whose touched
-    * originals are all present is a not-yet-started patch (crash before any
-    * rename, or a concurrent writer still staging) — the live tree is
-    * complete and must be left alone.
+  /** The conflict a writer reports when another commit holds the gate. */
+  private def gateHeld(): java.util.ConcurrentModificationException =
+    new java.util.ConcurrentModificationException(
+      s"optimistic-concurrency conflict on $dir: a commit manifest is present at " +
+        s"$manifestPath. Either another writer is mid-commit (re-read and retry once it " +
+        "finishes) or a commit crashed (run recover() while no writer is live). Nothing " +
+        "was touched.")
+
+  /** Mutator entry: the table's [[listTable]], once no commit holds the
+    * gate. A manifest is either a live peer between its first and last
+    * rename or a crashed commit, and this writer cannot tell which, so it
+    * aborts with nothing touched; a crashed commit is rolled back only by a
+    * quiesced [[recover]].
     */
-  private def patchRepairNeeded(): Boolean = {
-    val pOld = new Path(s"${dir}__patch_old")
-    val manifest = new Path(pOld, "_manifest")
-    // TOCTOU: a concurrent patcher finishing its commit deletes
-    // __patch_old/_manifest between the exists() and the read — that
-    // interleaving means the live tree is complete, i.e. no repair needed
-    try {
-      fs.exists(manifest) && readTextFile(manifest).linesIterator
-        .filter(_.startsWith("touched\t"))
-        .exists(l => !fs.exists(new Path(l.stripPrefix("touched\t"))))
-    } catch { case _: java.io.FileNotFoundException => false }
+  private def entryListing(): ParquetDatabase.Listing = {
+    if (fs.exists(manifestPath)) throw gateHeld()
+    listTable()
   }
 
-  /** Mutator-entry capture: recover ONLY when the live tree itself is
-    * unreadable — the table dir is missing (interrupted swap) or a patch
-    * manifest shows moved-aside originals. Healthy-table staging siblings
-    * (`__normalize_tmp_<token>`, a manifest with all originals present, …)
-    * are NOT reclaimed here: with optimistic concurrency they may belong
-    * to a LIVE writer mid-stage, and deleting them would strand its swap
-    * (round-10 review finding). Crashed-stage debris is invisible to
-    * readers and swept ONLY by an explicit, quiesced [[recover]] — it
-    * accumulates disk (each staged rewrite is table-sized) until one runs,
-    * so a fleet deployment schedules recover() in its maintenance window.
-    */
-  private def entryFingerprint(): String = {
-    if (!fs.exists(new Path(dir)) || patchRepairNeeded()) recover()
-    fingerprint()
-  }
-
-  /** Test seam: runs after a swap's temp write completes and before the
-    * conflict check + renames — the deterministic interleaving point the
-    * two-writer spec drives a concurrent commit through.
+  /** Test seam: runs after a commit's staging write completes and before
+    * it takes the gate — the deterministic interleaving point the two-writer
+    * spec drives a concurrent commit through.
     */
   private[sources] var preSwapHook: () => Unit = () => ()
 
-  /** Test seam: runs after the conflict check passes and immediately before
-    * the swap's dir -> __old rename — the check-to-rename gap the post-lock
-    * re-check spec drives a full concurrent commit through.
-    */
-  private[sources] var preRenameHook: () => Unit = () => ()
-
-  /** Test seam: runs after the swap's dir -> __old retire rename succeeds
-    * and before the post-lock fingerprint re-check — the crash window where
-    * __old may hold a competitor's committed table and roll-forward of this
-    * writer's stage would be a lost update.
-    */
-  private[sources] var postRetireHook: () => Unit = () => ()
-
-  /** Run a staging write with conflict-aware failure handling: any failure
-    * drops the half-written temp (otherwise every aborted attempt leaves a
-    * table-sized debris dir for recover()), and a failure caused by table
-    * files vanishing mid-scan — the read-side signature of a peer's swap
-    * landing underneath the staging read — is rethrown as the documented
-    * retryable `ConcurrentModificationException` instead of a raw Spark
-    * task failure.
-    */
   /** Re-map a failure whose cause chain says "table files vanished
     * underneath a read" to the documented retryable
     * `ConcurrentModificationException`. Both vanish signatures are matched:
@@ -170,67 +148,31 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
           .exists(c => c.isInstanceOf[java.io.FileNotFoundException] ||
             c.isInstanceOf[java.nio.file.NoSuchFileException] ||
             String.valueOf(c.getMessage).contains("FILE_NOT_EXIST"))
-        // a conflict is only plausible when the TABLE DIRECTORY still
-        // exists and member files vanished out of it (a peer's swap). A
-        // missing/mistyped table dir is a permanent error — remapping it
-        // would make retry-looping callers spin on something no retry can
-        // fix — so it rethrows raw. BUT a single absent probe cannot prove
-        // permanence: a peer's swap retires dir to __old for the instant
-        // between its two renames (rewriteWith), so an absent dir gets a
-        // bounded re-probe budget before being declared gone — the
-        // two-writer stress drill caught the single-probe form rethrowing
-        // raw exactly in that window. A visible __old EXTENDS the budget
-        // (positive evidence a swap is in flight) but never bypasses it:
-        // __old that lingers past the budget with the dir still absent is
-        // a crashed writer's debris, and classifying it as live forever
-        // would turn every retry-looping caller into a spin on a table no
-        // retry can restore (r16 ADVICE) — only a promote that actually
-        // lands inside the budget counts as liveness. (A probe itself
-        // failing, e.g. a flaky FS, counts as "can't prove permanence" →
-        // conflict.)
-        def plausiblyLive(): Boolean = {
-          var probes = 0
-          while (true) {
-            val dirVisible =
-              try Some(fs.exists(new Path(dir)))
-              catch { case _: Throwable => None }
-            dirVisible match {
-              case None | Some(true) => return true
-              case Some(false) =>
-                val oldVisible =
-                  try fs.exists(new Path(dir + "__old"))
-                  catch { case _: Throwable => true }
-                val budget = if (oldVisible) 10 else 5
-                if (probes >= budget) return false
-                Thread.sleep(40L); probes += 1
-            }
-          }
-          false
-        }
-        if (vanishedUnderneath && plausiblyLive())
+        // a conflict only when the TABLE DIRECTORY still exists and member
+        // files vanished out of it (a peer's commit). No commit renames the
+        // table directory, so a missing one is a permanent error — remapping
+        // it would make retry-looping callers spin on something no retry can
+        // fix. (A probe that itself fails, e.g. a flaky FS, cannot prove
+        // permanence, so it counts as a conflict.)
+        def dirPresent = try fs.exists(new Path(dir)) catch { case _: Throwable => true }
+        if (vanishedUnderneath && dirPresent)
           throw new java.util.ConcurrentModificationException(
             s"optimistic-concurrency conflict on $dir: table files vanished underneath " +
-              s"this mutation's $phase (another writer swapped the table mid-scan). " +
+              s"this mutation's $phase (another writer committed mid-scan). " +
               "Table untouched — re-read and retry.", t)
         else throw t
     }
 
+  /** Run a staging write with conflict-aware failure handling: any failure
+    * drops the half-written temp (otherwise every aborted attempt leaves a
+    * table-sized debris dir for recover()), and a failure caused by table
+    * files vanishing mid-scan is rethrown as the retryable conflict.
+    */
   private def stageOrAbort(tmp: Path)(write: => Unit): Unit =
     try conflictIfVanished("staging read")(write) catch {
       case t: Throwable =>
         try fs.delete(tmp, true) catch { case _: Throwable => () }
         throw t
-    }
-
-  private def conflictCheck(expected: Option[String], tmps: Seq[Path]): Unit =
-    expected.foreach { e =>
-      if (fingerprint() != e) {
-        tmps.foreach(t => fs.delete(t, true))
-        throw new java.util.ConcurrentModificationException(
-          s"optimistic-concurrency conflict on $dir: the live table changed between " +
-            "this mutation's read and its swap (another writer committed). Aborted " +
-            "before any rename — staged output dropped, table untouched; re-read and retry.")
-      }
     }
 
   /** Append a batch (ParquetDB `create`, base.py:180-182).
@@ -307,21 +249,6 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     if (fromFooters > 0) fromFooters else nRows
   }
 
-  /** Rewrite the table into evenly-sized files (ParquetDB `normalize`,
-    * base.py:184-186; the notebook's "6 GB file → ≤2 GB" goal).
-    *
-    * Swap order matters for crash safety: the live dir is renamed aside
-    * before the rewritten dir takes its place, so there is no window where
-    * the data exists only in a temp dir — a crash at any point leaves the
-    * table recoverable by a single rename (of either `__old` or the
-    * invocation-unique `__normalize_tmp_<token>`), never deleted.
-    */
-  /** @param sortBy optional layout key: range-partition + sort the rewrite
-    *  by these columns, so parquet row-group min/max stats become tight,
-    *  disjoint ranges — filters on the sort key then skip whole files/row
-    *  groups at scan time (data skipping, the complement to hive
-    *  partitioning for high-cardinality keys).
-    */
   /** Partition count for a row-capped rewrite: target maxRows − maxRows/32
     * rows per partition, NOT maxRows exactly. Zero-headroom packing makes
     * the cap a cliff: `repartition(n)` is round-robin-even only to
@@ -342,19 +269,26 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     math.max(1, math.ceil(footerRowCount.toDouble / effective).toInt)
   }
 
-  def normalize(maxRowsPerFile: Long, sortBy: Seq[String] = Nil): Unit = {
-    val expect = Some(entryFingerprint())
-    val df = read()
-    // row count from the footers (metadata-only) — a count() job here would
-    // be a full extra pass over the table being rewritten
-    val n = packPartitions(maxRowsPerFile)
-    val laidOut =
+  /** Rewrite the table into evenly-sized files (ParquetDB `normalize`,
+    * base.py:184-186; the notebook's "6 GB file → ≤2 GB" goal). The commit
+    * replaces every data file through [[replaceFiles]]: a crash at any point
+    * leaves every original in the table, in `__patch_old` or in the archive,
+    * and a quiesced [[recover]] rolls it back. A hive-partitioned table is
+    * rewritten flat, its partition columns kept as data columns.
+    *
+    * @param sortBy optional layout key: range-partition + sort the rewrite
+    *  by these columns, so parquet row-group min/max stats become tight,
+    *  disjoint ranges — filters on the sort key then skip whole files/row
+    *  groups at scan time (data skipping, the complement to hive
+    *  partitioning for high-cardinality keys).
+    */
+  def normalize(maxRowsPerFile: Long, sortBy: Seq[String] = Nil): Unit =
+    rewriteAll(maxRowsPerFile) { (df, n) =>
       if (sortBy.nonEmpty)
         df.repartitionByRange(n, sortBy.map(c => col(s"`$c`")): _*)
           .sortWithinPartitions(sortBy.map(c => col(s"`$c`")): _*)
       else df.repartition(n)
-    rewriteWith(laidOut, Map("maxRecordsPerFile" -> maxRowsPerFile.toString), expect)
-  }
+    }
 
   /** Rewrite the table clustered along a Z-order (Morton) curve over
     * `zCols` — multi-dimensional data skipping where `normalize(sortBy)` is
@@ -363,162 +297,26 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     * files for predicates on ANY subset of the z-columns, not just a
     * leading sort key. See [[ZOrder]] for the curve construction.
     */
-  def normalizeZOrder(maxRowsPerFile: Long, zCols: Seq[String], bits: Int = 8): Unit = {
-    val expect = Some(entryFingerprint())
-    val df = read()
-    val n = packPartitions(maxRowsPerFile)
-    val z = "__zorder"
-    val laidOut = df.withColumn(z, ZOrder.zValue(df, zCols, bits))
-      .repartitionByRange(n, col(z))
-      .sortWithinPartitions(col(z))
-      .drop(z)
-    rewriteWith(laidOut, Map("maxRecordsPerFile" -> maxRowsPerFile.toString), expect)
-  }
+  def normalizeZOrder(maxRowsPerFile: Long, zCols: Seq[String], bits: Int = 8): Unit =
+    rewriteAll(maxRowsPerFile) { (df, n) =>
+      val z = "__zorder"
+      df.withColumn(z, ZOrder.zValue(df, zCols, bits))
+        .repartitionByRange(n, col(z))
+        .sortWithinPartitions(col(z))
+        .drop(z)
+    }
 
-  /** Full-rewrite-and-swap: write `newData` to a temp sibling, then swap it
-    * into place. Crash-safe (see `normalize` doc): the live dir is renamed
-    * aside before the rewrite takes its place, so a crash at any point
-    * leaves the table recoverable by a single rename — never deleted.
+  /** The norm family's commit: lay every row out into `n` partitions of at
+    * most `maxRowsPerFile` rows (the row count comes from the footers, not a
+    * count() pass over the table being rewritten) and replace every data
+    * file with the result.
     */
-  private def rewriteWith(newData: DataFrame, options: Map[String, String] = Map.empty,
-                          expected: Option[String] = None): Unit = {
-    // staging is INVOCATION-UNIQUE: with a shared tmp name, writer B's
-    // overwrite-mode stage silently replaces writer A's staged bytes while
-    // A is pre-swap, and A then commits B's content as its own (a lost
-    // update the conflict check cannot see — the live table never changed).
-    // The stage takes minutes at scale, so that window is the COMMON
-    // concurrent case, not the narrow check-to-rename race. Crashed-stage
-    // debris (tmp_<token> with no live writer) is invisible to readers and
-    // swept by the quiesced recover(), which globs the prefix.
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = s"${dir}__normalize_tmp_$token"
-    val old = s"${dir}__old"
-    stageOrAbort(new Path(tmp)) {
-      newData.write.mode("overwrite").options(options).parquet(tmp)
-    }
-    preSwapHook()
-    conflictCheck(expected, Seq(new Path(tmp)))
-    // stale `old` (a crash AFTER its swap committed but before cleanup) is
-    // reclaimed only now, AFTER the conflict check passed: a live writer's
-    // `old` exists only once it has committed, and a commit since our read
-    // fails the check — so an `old` surviving to this point is crash
-    // debris, archived-then-dropped exactly like recover() would
-    if (fs.exists(new Path(old))) {
-      archiveReferenced(new Path(old), p => relativize(old, p))
-      fs.delete(new Path(old), true)
-    }
-    // SWAPPER TOKEN, phase 1 of 2: record which stage THIS swap intends to
-    // promote, BEFORE anything is renamed. recover()'s roll-forward only
-    // ever promotes the stage this marker names — without it, a stale
-    // complete stage left by an earlier crashed writer (invocation-unique
-    // staging deliberately leaves debris in place) could be promoted over a
-    // competitor's committed table when a later writer crashes mid-abort
-    // with __old holding the CURRENT table. Overwrites any stale marker.
-    // Phase 2 (the "checked" line) is appended only after the post-lock
-    // fingerprint re-check passes — see below.
-    writeTextFile(new Path(swapperMarker), tmp)
-    preRenameHook()
-    // a competitor's __old reappearing here means a commit is IN FLIGHT
-    // (it exists only between a competitor's swap and its cleanup) — on
-    // HDFS, renaming dir onto an existing directory would NEST the table
-    // inside it instead of failing. Abort before renaming anything.
-    if (fs.exists(new Path(old))) {
-      fs.delete(new Path(tmp), true)
-      fs.delete(new Path(swapperMarker), false)
-      throw new java.util.ConcurrentModificationException(
-        s"optimistic-concurrency conflict on $dir: another writer's swap is in flight " +
-          s"($old reappeared after the conflict check). Aborted with nothing renamed — " +
-          "re-read and retry.")
-    }
-    // Hadoop rename signals failure by returning false — a failed swap must
-    // abort loudly BEFORE any delete, or the "crash leaves the table
-    // recoverable by a single rename" contract above is broken.
-    if (!fs.rename(new Path(dir), new Path(old)))
-      throw new java.io.IOException(s"rewrite: failed to move $dir aside to $old; table untouched")
-    postRetireHook()
-    // safety net for the instruction-thin gap between the exists check and
-    // the rename: if a competitor created __old in that gap, HDFS rename
-    // semantics nested our table inside it — un-nest and abort before the
-    // polluted tree can be promoted.
-    val nested = new Path(old, new Path(dir).getName)
-    if (fs.exists(nested)) {
-      if (!fs.rename(nested, new Path(dir)))
-        throw new java.io.IOException(
-          s"rewrite: swap rename nested the table at $nested and un-nesting failed — " +
-            s"rename it back to $dir manually")
-      fs.delete(new Path(tmp), true)
-      fs.delete(new Path(swapperMarker), false)
-      throw new java.util.ConcurrentModificationException(
-        s"optimistic-concurrency conflict on $dir: the swap rename landed inside a " +
-          "competitor's in-flight cleanup tree and was un-nested. Table restored — " +
-          "re-read and retry.")
-    }
-    // POST-LOCK re-check: dir -> __old succeeding makes this writer the
-    // exclusive swapper (any competing rename of dir now fails — dir is
-    // gone). But a competitor that FULLY committed inside our
-    // check-to-rename gap left a changed table that our rename just moved
-    // aside; committing tmp over it would silently drop that writer's
-    // committed rows with both writers reporting success. The moved-aside
-    // tree fingerprints identically to the live table it was (rename
-    // preserves lengths and mtimes), so compare it against our entry
-    // capture — on mismatch, put it back and abort with nothing lost.
-    // ORDER MATTERS on the abort path: tmp is deleted BEFORE the restore
-    // rename, so a crash mid-abort leaves (dir missing, __old = the
-    // competitor's committed table, swapper marker naming a now-deleted
-    // stage) — a state recover() repairs by rolling __old BACK, which is
-    // correct here. The swapper token makes this robust even when an
-    // EARLIER crashed writer's complete stage sits beside the table:
-    // recover() never promotes a stage the marker doesn't name.
-    // COST NOTE: this walk runs while dir is absent, so the reader-visible
-    // outage of a rewrite commit is one metadata listing of the table, not
-    // just two renames. At fleet scale, readers of actively-mutating
-    // tables should use snapshot reads; an object-store deployment slots a
-    // conditional-put commit log here and drops the walk entirely.
-    expected.foreach { e =>
-      if (fingerprintOfTree(old) != e) {
-        fs.delete(new Path(tmp), true)
-        fs.delete(new Path(swapperMarker), false)
-        if (!fs.rename(new Path(old), new Path(dir)))
-          throw new java.io.IOException(
-            s"rewrite: conflict detected after the swap rename but restoring $old -> $dir " +
-              "failed — run recover()")
-        throw new java.util.ConcurrentModificationException(
-          s"optimistic-concurrency conflict on $dir: another writer committed between " +
-            "this mutation's conflict check and its swap rename. The live table was " +
-            "restored untouched; staged output dropped — re-read and retry.")
-      }
-    }
-    // ROLL-FORWARD AUTHORIZATION (round 12): the marker gains its second
-    // line only once the post-lock re-check above has PASSED. recover()
-    // promotes a stage only when the marker carries this token — a crash
-    // between the retire rename and this point leaves a single-line marker,
-    // and recover() rolls __old BACK instead. Without the token, a writer
-    // that lost the optimistic-concurrency race (its __old holds a
-    // competitor's already-committed table) and crashed mid-window would
-    // get its stale complete stage rolled FORWARD, deleting a committed
-    // write that reported success.
-    writeTextFile(new Path(swapperMarker), s"$tmp\nchecked")
-    if (!fs.rename(new Path(tmp), new Path(dir)))
-      throw new java.io.IOException(
-        s"rewrite: failed to move rewrite into place; original preserved at $old, rewrite at $tmp")
-    // nest-guard before dropping our cleanup tree: a racer that renamed
-    // the (committed) table while our __old still existed nested it INSIDE
-    // __old — restore it rather than deleting a live table with the debris
-    val nestedInOld = new Path(old, new Path(dir).getName)
-    if (fs.exists(nestedInOld) && !fs.exists(new Path(dir)))
-      fs.rename(nestedInOld, new Path(dir))
-    // the moved-aside tree IS the previous table version: park whatever a
-    // snapshot still references in the archive before dropping the rest
-    archiveReferenced(new Path(old), p => relativize(old, p))
-    fs.delete(new Path(old), true)
-    fs.delete(new Path(swapperMarker), false)
-    forgetReads()
+  private def rewriteAll(maxRowsPerFile: Long)(layout: (DataFrame, Int) => DataFrame): Unit = {
+    val table = entryListing()
+    val laidOut = conflictIfVanished("read")(layout(read(), packPartitions(maxRowsPerFile)))
+    replaceFiles(table.files, laidOut, table.print,
+      options = Map("maxRecordsPerFile" -> maxRowsPerFile.toString))
   }
-
-  /** Sibling marker naming the staging dir of the swap currently (or last)
-    * in flight — the roll-forward authorization recover() requires.
-    */
-  private def swapperMarker: String = s"${dir}__swapper"
 
   /** Upsert by key (the underlying ParquetDB API's `update` surface —
     * unexercised by the reference's loaders but part of the store's
@@ -533,58 +331,60 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     * row to replace, so leaving it physically untouched is exact, not a
     * heuristic. Files without usable integral stats are conservatively
     * rewritten; a layout where no per-file ranges are visible (hive
-    * partition subdirs, empty dir) falls back to the full crash-safe
-    * rewrite, which is always correct.
+    * partition subdirs, empty dir) replaces every data file, written flat
+    * with the partition columns as data columns.
     */
   def upsert(patch: DataFrame, keyCol: String): Unit = {
-    val expect = Some(entryFingerprint())
-    val perFile = ParquetStats.fileKeyRanges(dir, keyCol, hconf)
-    if (perFile.isEmpty) {
-      // partitioned layout (files in subdirs) or empty table — full rewrite
-      val base = read()
-      val kept = base.join(patch.select(col(s"`$keyCol`")), Seq(keyCol), "left_anti")
-      rewriteWith(kept.unionByName(patch, allowMissingColumns = true), expected = expect)
-    } else {
-      val (statless, ranged) = perFile.partition(_._2.isEmpty)
-      // conform the patch's OVERLAPPING columns to the table's types before
-      // any file is staged (round 13, caught by the cross-process drill): the
-      // file-scoped path appends the patch's rows as new files beside
-      // untouched ones, so a patch whose column types differ — e.g. a BIGINT
-      // key patched onto a table whose column landed as INT via partition-dir
-      // inference — would leave the table with per-file schemas parquet
-      // cannot merge: every later read() fails, long after this write
-      // reported success. The full-rewrite branch widens via unionByName and
-      // rewrites every row, so it cannot strand a mixed layout.
-      val tableTypes = read().schema.map(f => f.name -> f.dataType).toMap
-      val conformed = patch.select(patch.columns.map(c =>
-        tableTypes.get(c) match {
-          case Some(t) => col(s"`$c`").cast(t).as(c)
-          case None => col(s"`$c`")
-        }): _*)
-      // touched-by-range: stream the (large) patch key set against the tiny
-      // broadcast range table — a BroadcastNestedLoopJoin whose output is
-      // map-side-distinct file paths, so nothing big ever reaches the driver
-      val rangeDf = spark.createDataFrame(
-        ranged.map { case (p, Some((lo, hi))) => (p, lo, hi); case (p, None) => (p, 0L, 0L) })
-        .toDF("path", "lo", "hi")
-      val keys = conformed.select(col(s"`$keyCol`").cast("long").as("__k")).distinct()
-      val hit =
-        if (ranged.isEmpty) Array.empty[String]
-        else keys.join(broadcast(rangeDf), col("__k").between(col("lo"), col("hi")))
-          .select("path").distinct().collect().map(_.getString(0))
-      val touched = (statless.map(_._1) ++ hit).distinct
-      val touchedDf =
-        if (touched.isEmpty) conformed.limit(0)
-        else spark.read.option("mergeSchema", "true").parquet(touched: _*)
-          .join(conformed.select(col(s"`$keyCol`")), Seq(keyCol), "left_anti")
-      // re-range the replacement on the key so the rewritten files keep
-      // tight disjoint footer ranges — future patches prune just as well
-      val n = math.max(1, touched.size)
-      val shaped = touchedDf.unionByName(conformed, allowMissingColumns = true)
-        .repartitionByRange(n, col(s"`$keyCol`"))
-        .sortWithinPartitions(col(s"`$keyCol`"))
-      replaceFiles(touched, shaped, expected = expect)
+    val table = entryListing()
+    val (touched, shaped) = conflictIfVanished("read") {
+      val perFile = ParquetStats.fileKeyRanges(dir, keyCol, hconf)
+      if (perFile.isEmpty) {
+        // partitioned layout (files in subdirs) or empty table — full rewrite
+        val kept = read().join(patch.select(col(s"`$keyCol`")), Seq(keyCol), "left_anti")
+        (table.files, kept.unionByName(patch, allowMissingColumns = true))
+      } else {
+        val (statless, ranged) = perFile.partition(_._2.isEmpty)
+        // conform the patch's OVERLAPPING columns to the table's types before
+        // any file is staged (round 13, caught by the cross-process drill):
+        // the file-scoped path appends the patch's rows as new files beside
+        // untouched ones, so a patch whose column types differ — e.g. a
+        // BIGINT key patched onto a table whose column landed as INT via
+        // partition-dir inference — would leave the table with per-file
+        // schemas parquet cannot merge: every later read() fails, long after
+        // this write reported success. The full-rewrite branch widens via
+        // unionByName and rewrites every row, so it cannot strand a mixed
+        // layout.
+        val tableTypes = read().schema.map(f => f.name -> f.dataType).toMap
+        val conformed = patch.select(patch.columns.map(c =>
+          tableTypes.get(c) match {
+            case Some(t) => col(s"`$c`").cast(t).as(c)
+            case None => col(s"`$c`")
+          }): _*)
+        // touched-by-range: stream the (large) patch key set against the
+        // tiny broadcast range table — a BroadcastNestedLoopJoin whose output
+        // is map-side-distinct file paths, so only paths are collected
+        val rangeDf = spark.createDataFrame(
+          ranged.map { case (p, Some((lo, hi))) => (p, lo, hi); case (p, None) => (p, 0L, 0L) })
+          .toDF("path", "lo", "hi")
+        val keys = conformed.select(col(s"`$keyCol`").cast("long").as("__k")).distinct()
+        val hit =
+          if (ranged.isEmpty) Array.empty[String]
+          else keys.join(broadcast(rangeDf), col("__k").between(col("lo"), col("hi")))
+            .select("path").distinct().collect().map(_.getString(0))
+        val touched = (statless.map(_._1) ++ hit).distinct
+        val touchedDf =
+          if (touched.isEmpty) conformed.limit(0)
+          else spark.read.option("mergeSchema", "true").parquet(touched: _*)
+            .join(conformed.select(col(s"`$keyCol`")), Seq(keyCol), "left_anti")
+        // re-range the replacement on the key so the rewritten files keep
+        // tight disjoint footer ranges — future patches prune just as well
+        val n = math.max(1, touched.size)
+        (touched, touchedDf.unionByName(conformed, allowMissingColumns = true)
+          .repartitionByRange(n, col(s"`$keyCol`"))
+          .sortWithinPartitions(col(s"`$keyCol`")))
+      }
     }
+    replaceFiles(touched, shaped, table.print)
   }
 
   /** Delete rows matching the predicate (ParquetDB `delete` surface).
@@ -594,117 +394,132 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     * stats needed, works for arbitrary predicates); only those files are
     * rewritten, copy-on-write. The scan cost is unavoidable (matches must
     * be found); the rewrite — the expensive half at 100 TB — is scoped.
-    * Falls back to the full crash-safe rewrite on partitioned layouts
-    * (where file replacement would drop directory-encoded columns). The
+    * On partitioned layouts, where a rewritten file would lose its
+    * directory-encoded columns, every data file is replaced and the kept
+    * rows are written flat with the partition columns as data columns. The
     * hit scan goes through [[read]], so a version already open skips the
     * schema-merge job; the files it rewrites are read with their own merged
     * schema, which keeps the rewritten bytes what they were.
     */
   def deleteWhere(condition: Column): Unit = {
-    val expect = Some(entryFingerprint())
-    val base = read()
-    // the hit-scan is an EAGER table read outside the staging write, so a
-    // peer's swap landing mid-scan surfaces here, not in stageOrAbort —
-    // same retryable-conflict mapping (round-14 stress-drill finding)
-    val hitNames = conflictIfVanished("hit scan")(base.filter(condition)
-      .select(col("_metadata.file_path")).distinct()
-      .collect().map(r => new Path(r.getString(0)).getName).toSet)
-    val flat = ParquetStats.listParquetFiles(dir, hconf)
-    val touched = flat.map(_.toString).filter(p => hitNames.contains(new Path(p).getName))
-    if (hitNames.isEmpty) () // nothing matches — leave every file untouched
-    else if (touched.size != hitNames.size) // partitioned subdir layout
-      rewriteWith(read().filter(!condition), expected = expect)
-    else {
-      val kept = spark.read.option("mergeSchema", "true").parquet(touched: _*)
-        .filter(!condition)
-      replaceFiles(touched, kept, expected = expect)
+    val table = entryListing()
+    // the reads are EAGER (schema inference, the hit scan), so a peer's
+    // commit landing mid-scan surfaces here as the retryable conflict
+    val plan = conflictIfVanished("read") {
+      val base = read()
+      val hitNames = base.filter(condition)
+        .select(col("_metadata.file_path")).distinct()
+        .collect().map(r => new Path(r.getString(0)).getName).toSet
+      val touched = table.files.filter(p => hitNames.contains(new Path(p).getName) &&
+        !relativize(dir, new Path(p)).contains('/'))
+      if (hitNames.isEmpty) None // nothing matches — leave every file untouched
+      else if (touched.size != hitNames.size) // partitioned subdir layout
+        Some(table.files -> base.filter(!condition))
+      else Some(touched -> spark.read.option("mergeSchema", "true").parquet(touched: _*)
+        .filter(!condition))
     }
+    plan.foreach { case (touched, kept) => replaceFiles(touched, kept, table.print) }
   }
 
-  /** Copy-on-write commit: replace exactly `touched` files with the files
-    * of `newData`, leaving every other file physically untouched (same
-    * path, same bytes, same mtime). Ordering never deletes before the new
-    * data is fully in place: (1) write new files to a temp sibling — live
-    * table unaffected; (2) rename touched files aside into `__patch_old` —
-    * each rename atomic, a crash mid-way is recovered by renaming back;
-    * (3) rename new files in (part-file names carry a fresh UUID, so no
-    * collision with live names); (4) only then drop `__patch_old`.
+  /** THE commit kernel: replace exactly `touched` files with the files of
+    * `newData`, leaving every other file physically untouched (same path,
+    * same bytes, same mtime). Ordering never deletes before the new data is
+    * fully in place:
+    *  1. write the new files to an invocation-unique temp sibling — live
+    *     table unaffected;
+    *  2. win the gate: create `__patch_old/_manifest` (create-no-overwrite)
+    *     naming every original and every replacement;
+    *  3. re-check the entry [[fingerprint]] while holding the gate — on a
+    *     mismatch drop the manifest and the stage and abort;
+    *  4. rename each original aside to `__patch_old/<table-relative path>`
+    *     (a `partitionBy` write names the files in every `col=value` dir
+    *     alike, so basenames would collide), then rename each new file into
+    *     `targetDir` (part-file names carry a fresh UUID, so no collision),
+    *     then delete the partition dirs this left empty;
+    *  5. archive the originals a snapshot pins and release the gate.
+    * A crash anywhere from 2 to 5 leaves the manifest, and a quiesced
+    * [[recover]] rolls the table back byte-exactly.
     */
-  private def replaceFiles(touched: Seq[String], newData: DataFrame,
+  private def replaceFiles(touched: Seq[String], newData: DataFrame, expected: String,
                            targetDir: String = dir,
-                           expected: Option[String] = None): Unit = {
+                           options: Map[String, String] = Map.empty): Unit = {
     // temp siblings always hang off the TABLE root, never inside it: a
     // `<partition>=x__patch_tmp` child of the root would parse as a bogus
     // partition value for any concurrent reader of the table. The tmp is
-    // INVOCATION-UNIQUE for the same reason as rewriteWith's: a shared
-    // name lets a concurrent patcher's overwrite stage clobber this one's
-    // staged files mid-flight.
+    // INVOCATION-UNIQUE: with a shared name a concurrent writer's
+    // overwrite-mode stage would replace this one's staged bytes, and this
+    // writer would then commit the other's content as its own (a lost
+    // update the conflict check cannot see — the live table never changed).
     val token = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(s"${dir}__patch_tmp_$token")
-    val old = new Path(s"${dir}__patch_old")
-    // repair ONLY when a prior patch left the live tree incomplete (moved-
-    // aside originals) — that state is unreadable and recover() restores it
-    // snapshot-aware. Stale __patch_tmp_* and a not-yet-started manifest
-    // are a crashed writer's debris OR a live writer's staging; neither is
-    // reclaimed here (round-10 review finding).
-    if (patchRepairNeeded()) recover()
-    stageOrAbort(tmp) { newData.write.mode("overwrite").parquet(tmp.toString) }
+    stageOrAbort(tmp) { newData.write.mode("overwrite").options(options).parquet(tmp.toString) }
     val newFiles = ParquetStats.listParquetFiles(tmp.toString, hconf)
     preSwapHook()
-    conflictCheck(expected, Seq(tmp))
-    // a manifest surviving to this point is EITHER crash-before-any-rename
-    // debris OR a live patcher that won the gate after our conflict check
-    // and is mid-rename right now. Reclaiming it here (the round-10 first
-    // attempt ran the manifest rollback) loses that distinction: rolling
-    // back a LIVE patcher restores originals it is concurrently moving
-    // aside and then recursively deletes its __patch_old — an original
-    // renamed in between is gone from table, aside dir, AND archive.
-    // Abort loudly instead; genuine debris is cleared by the quiesced
-    // recover(), after which a retry proceeds.
-    if (fs.exists(new Path(old, "_manifest"))) {
+    // the manifest is written BEFORE any rename: [[recover]] needs to know
+    // which live-name files are replacements (delete on rollback) and where
+    // each moved-aside original belongs. create-no-overwrite makes it the
+    // COMMIT GATE: of two writers, one wins and the other aborts untouched.
+    val won =
+      try {
+        fs.mkdirs(patchOld)
+        HadoopText.writeIfAbsent(fs, manifestPath, (touched.map(p => s"touched\t$p") ++
+          newFiles.map(f => s"new\t$targetDir/${f.getName}")).mkString("\n"))
+      } catch { case t: Throwable => fs.delete(tmp, true); throw t }
+    if (!won) {
       fs.delete(tmp, true)
-      throw new java.util.ConcurrentModificationException(
-        s"optimistic-concurrency conflict on $dir: another patch's manifest is present " +
-          s"at $old — a concurrent patcher is mid-commit, or a crashed patch left " +
-          "debris (clear with a quiesced recover()). Aborted with nothing renamed — " +
-          "re-read and retry.")
+      throw gateHeld()
     }
-    fs.mkdirs(old)
-    // manifest BEFORE any rename: [[recover]] needs to know which live-name
-    // files are replacements (delete on rollback) and where each moved-aside
-    // original belongs — without it, a crash between steps 2 and 3 would be
-    // ambiguous (rolling back originals while leaving new files in place
-    // would duplicate rows). create-no-overwrite is the COMMIT GATE: two
-    // patchers inside the same residual check-to-rename window serialize
-    // here, and the loser aborts loudly with the live table untouched.
-    val manifestWritten = HadoopText.writeIfAbsent(fs, new Path(old, "_manifest"),
-      (touched.map(p => s"touched\t$p") ++
-        newFiles.map(f => s"new\t$targetDir/${f.getName}")).mkString("\n"))
-    if (!manifestWritten) {
-      fs.delete(tmp, true)
+    // the CAS runs while this writer holds the gate, so no peer can commit
+    // between it and the first rename
+    if (listTable().print != expected) {
+      release(tmp)
       throw new java.util.ConcurrentModificationException(
-        s"optimistic-concurrency conflict on $dir: another writer's patch manifest " +
-          "appeared between this mutation's conflict check and its commit. Aborted " +
+        s"optimistic-concurrency conflict on $dir: the live table changed between " +
+          "this mutation's read and its commit (another writer committed). Aborted " +
           "before any rename — staged output dropped, table untouched; re-read and retry.")
     }
-    touched.foreach { f =>
-      val p = new Path(f)
-      if (!fs.rename(p, new Path(old, p.getName)))
-        throw new java.io.IOException(s"patch: failed to move $p aside; run recover() " +
-          s"(or rename $old/* back into $targetDir)")
+    val aside = touched.map(f => new Path(f) -> new Path(patchOld, relativize(dir, new Path(f))))
+    aside.map(_._2.getParent).distinct.foreach(fs.mkdirs)
+    aside.foreach { case (p, a) =>
+      if (!fs.rename(p, a))
+        throw new java.io.IOException(s"patch: failed to move $p aside to $a; run recover()")
     }
     newFiles.foreach { f =>
       if (!fs.rename(f, new Path(targetDir, f.getName)))
         throw new java.io.IOException(s"patch: failed to move $f into $targetDir; originals " +
-          s"preserved in $old, rewrite in $tmp — run recover()")
+          s"preserved in $patchOld, rewrite in $tmp — run recover()")
     }
-    // moved-aside originals a snapshot still pins go to the archive (they
-    // sat at old/<basename>; their table-relative home is under targetDir)
-    val relPrefix = if (targetDir == dir) "" else relativize(dir, new Path(targetDir)) + "/"
-    archiveReferenced(old, p => relPrefix + p.getName)
-    fs.delete(old, true)
-    fs.delete(tmp, true)
+    dropEmptyDirs(aside.map(_._1.getParent))
+    archiveReferenced(patchOld, p => relativize(patchOld.toString, p))
+    release(tmp)
     forgetReads()
+  }
+
+  /** Give up the gate: `__patch_old` (the manifest and whatever sits aside)
+    * moves into this commit's own stage dir in ONE rename, and the stage is
+    * dropped. A recursive delete of `__patch_old` would not be atomic, and
+    * a peer winning the gate midway could lose its fresh manifest or aside
+    * files to it; after the rename the next winner always starts from a
+    * fresh `__patch_old`.
+    */
+  private def release(tmp: Path): Unit = {
+    if (!fs.rename(patchOld, new Path(tmp, "_released")))
+      throw new java.io.IOException(s"patch: failed to release the gate $patchOld; run recover()")
+    fs.delete(tmp, true)
+  }
+
+  /** Delete the directories under the table root that `dirs` (and then
+    * their parents) leave empty: the `col=value` dirs a partitioned full
+    * rewrite has moved every file out of. The root itself always stays.
+    */
+  private def dropEmptyDirs(dirs: Seq[Path]): Unit = {
+    val root = fs.makeQualified(new Path(dir)).toUri.getPath
+    def drop(d: Path): Unit =
+      if (fs.makeQualified(d).toUri.getPath.startsWith(root + "/") &&
+          (try fs.listStatus(d).isEmpty catch { case _: java.io.FileNotFoundException => false }) &&
+          (try fs.delete(d, false) catch { case _: java.io.IOException => false }))
+        drop(d.getParent)
+    dirs.distinct.sortBy(-_.depth).foreach(drop)
   }
 
   private def writeTextFile(p: Path, text: String): Unit =
@@ -713,131 +528,62 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   private def readTextFile(p: Path): String =
     HadoopText.read(fs, p)
 
-  /** Recover from an interrupted `normalize`/`upsert`/`deleteWhere`/
-    * `compactSmallFiles` swap — the one-rename (or manifest-driven) repair
-    * the crash-safety contracts of [[rewriteWith]] and [[replaceFiles]]
-    * promise. Idempotent; a no-op on a healthy table. Returns a summary of
-    * the actions taken (empty = nothing to repair).
+  /** Roll back an interrupted commit of [[replaceFiles]] — the repair its
+    * crash-safety contract promises. Idempotent; a no-op on a healthy
+    * table. Returns a summary of the actions taken (empty = nothing to
+    * repair).
     *
-    * Rewrite swaps: if the live dir is missing, roll-forward is
-    * TOKEN-GATED — only the stage the `__swapper` marker names (written by
-    * the swap before its first rename) is ever promoted, only if it is
-    * COMPLETE (`_SUCCESS` present), and only if the marker carries the
-    * second-line `checked` token the swap appends after its post-lock
-    * fingerprint re-check passed (a single-line marker = the crash hit
-    * inside the check window, where `__old` may hold a competitor's
-    * committed table — rollback is the only safe resolution there).
-    * Otherwise `__old` is rolled back
-    * whenever it exists: always safe, because a crashed writer never
-    * reported success. An unattributed complete stage is promoted only in
-    * the no-`__old`, no-marker state (nothing else holds table content).
-    * This ordering is what makes crashed-stage debris harmless: a stale
-    * complete stage from an earlier writer can sit beside the table
-    * forever without a later writer's crash mid-abort promoting it over
-    * the committed table. Leftover temp dirs beside a healthy live dir
-    * are simply dropped.
-    *
-    * Patch swaps: the `__patch_old/_manifest` written before any rename
-    * lists every replacement file path and every moved-aside original, so
-    * rollback is exact — replacements that made it into the table are
-    * deleted (their fresh-UUID names cannot collide with originals),
-    * originals are renamed back where they came from, and the temp dirs
-    * dropped. Never loses data: every byte is in the table, `__patch_old`,
-    * or a `__patch_tmp*` sibling at all times.
+    * The `__patch_old/_manifest` written before any rename lists every
+    * replacement file path and every moved-aside original, so rollback is
+    * exact — replacements that made it into the table are deleted (their
+    * fresh-UUID names cannot collide with originals), originals are renamed
+    * back where they came from (from `__patch_old/<table-relative path>`,
+    * or from the archive when the crash hit mid-archive), emptied partition
+    * dirs are recreated, and `__patch_old` and every `__patch_tmp_*` stage
+    * are dropped. A crash after the last move-in is rolled back too. Never
+    * loses data: every byte is in the table, `__patch_old`, the archive, or
+    * a `__patch_tmp_*` sibling at all times.
     *
     * QUIESCE CONTRACT: run recover() only when no writer is live on this
     * table. A rename-based staging protocol cannot distinguish a crashed
-    * writer's debris from a live writer's in-flight staging, so recovery
-    * while a writer runs can roll back its commit or reclaim its staging
-    * mid-swap. Mutators therefore auto-recover only the states that make
-    * the live tree unreadable (missing table dir, moved-aside patch
-    * originals); everything else waits for this explicit, quiesced call.
+    * writer's manifest and stage from a live writer's, so recovery while a
+    * writer runs can roll back its commit mid-rename or reclaim its stage.
+    * Mutators therefore never recover: one that finds a manifest aborts,
+    * and stale stages are invisible to readers and wait for this call (each
+    * is table-sized for a full rewrite, so a fleet deployment schedules
+    * recover() in its maintenance window).
     */
   def recover(): Seq[String] = {
     val actions = scala.collection.mutable.ListBuffer[String]()
-    val nOld = new Path(s"${dir}__old")
-    // staging dirs carry an invocation-unique suffix; the bare legacy names
-    // are just the empty-suffix case of the same prefix
-    val nTmps = stagingSiblings("__normalize_tmp")
-    val pTmps = stagingSiblings("__patch_tmp")
-    val marker = new Path(swapperMarker)
-    if (!fs.exists(new Path(dir))) {
-      val complete = nTmps.filter(t => fs.exists(new Path(t, "_SUCCESS")))
-      // roll-forward is TOKEN-GATED: only the stage the crashed swap's own
-      // __swapper marker names may be promoted — an unattributed complete
-      // stage is some EARLIER writer's debris, and promoting it when __old
-      // holds the committed table (a crash mid-abort after the post-lock
-      // conflict check) would silently replace the live table with a
-      // stale rewrite
-      // ... and only a stage whose marker carries the second-line "checked"
-      // token (appended after the post-lock fingerprint re-check passed).
-      // A single-line marker means the crash hit INSIDE the check window:
-      // __old may hold a competitor's committed table, so the only safe
-      // resolution is rollback — roll-forward there is a lost update of a
-      // write that reported success.
-      val markerLines = (if (fs.exists(marker)) readTextFile(marker) else "")
-        .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-      val own = markerLines.headOption
-        .filter(_ => markerLines.lift(1).contains("checked"))
-        .map(new Path(_))
-        .filter(t => complete.exists(_.getName == t.getName))
-      if (own.isDefined) {
-        // the in-flight swap finished writing; crash hit between the two
-        // renames — roll FORWARD (the rewrite is the intended state)
-        val nTmp = complete.find(_.getName == own.get.getName).get
-        if (!fs.rename(nTmp, new Path(dir)))
-          throw new java.io.IOException(s"recover: failed to move $nTmp into place")
-        actions += s"completed interrupted rewrite: $nTmp -> $dir"
-        if (fs.exists(nOld)) {
-          val a = archiveReferenced(nOld, p => relativize(nOld.toString, p))
-          if (a > 0) actions += s"archived $a snapshot-pinned file(s) from $nOld"
-          fs.delete(nOld, true); actions += s"dropped $nOld"
-        }
-        for (t <- nTmps if t != nTmp && fs.exists(t)) {
-          fs.delete(t, true); actions += s"dropped incomplete $t"
-        }
-        fs.delete(marker, false)
-      } else if (fs.exists(nOld)) {
-        // no token-authorized stage — roll back the original: always safe,
-        // the crashed writer never reported success
-        if (!fs.rename(nOld, new Path(dir)))
-          throw new java.io.IOException(s"recover: failed to restore $nOld")
-        actions += s"rolled back interrupted rewrite: $nOld -> $dir"
-        for (t <- nTmps if fs.exists(t)) {
-          fs.delete(t, true); actions += s"dropped incomplete $t"
-        }
-        if (fs.exists(marker)) fs.delete(marker, false)
-      } else if (complete.size == 1) {
-        // no __old and no marker (pre-token debris, or manual surgery):
-        // the single complete stage is the only table content anywhere —
-        // promote it
-        val nTmp = complete.head
-        if (!fs.rename(nTmp, new Path(dir)))
-          throw new java.io.IOException(s"recover: failed to move $nTmp into place")
-        actions += s"completed interrupted rewrite: $nTmp -> $dir"
-        for (t <- nTmps if t != nTmp && fs.exists(t)) {
-          fs.delete(t, true); actions += s"dropped incomplete $t"
-        }
-        if (fs.exists(marker)) fs.delete(marker, false)
-      } else if (complete.size > 1) {
-        throw new java.io.IOException(
-          s"recover: $dir is missing with ${complete.size} complete staged rewrites " +
-            s"(${complete.mkString(", ")}), none authorized by a __swapper marker, " +
-            "and no __old to roll back to — pick one and rename it into place manually")
+    if (fs.exists(patchOld)) {
+      if (fs.exists(manifestPath)) {
+        val lines = readTextFile(manifestPath).linesIterator.filter(_.nonEmpty).toSeq
+        lines.collect { case l if l.startsWith("new\t") => new Path(l.stripPrefix("new\t")) }
+          .foreach { p => if (fs.exists(p)) { fs.delete(p, false); actions += s"removed replacement $p" } }
+        lines.collect { case l if l.startsWith("touched\t") => new Path(l.stripPrefix("touched\t")) }
+          .filterNot(fs.exists).foreach { orig =>
+            // a crash mid-archive may have parked the original already —
+            // restore from wherever it sits (table / aside / archive is an
+            // exactly-one-of invariant for every byte)
+            val rel = relativize(dir, orig)
+            val from = Seq(new Path(patchOld, rel) -> "", new Path(archiveRoot, rel) -> " from archive")
+              .find(c => fs.exists(c._1))
+            from.foreach { case (src, where) =>
+              fs.mkdirs(orig.getParent)
+              if (!fs.rename(src, orig))
+                throw new java.io.IOException(s"recover: failed to restore $src -> $orig")
+              actions += s"restored $orig$where"
+            }
+          }
+        // anything still aside that a snapshot pins is archived, not dropped
+        val a = archiveReferenced(patchOld, p => relativize(patchOld.toString, p))
+        if (a > 0) actions += s"archived $a snapshot-pinned file(s) from $patchOld"
       }
-    } else {
-      // live dir healthy: any rewrite leftovers are droppable debris —
-      // except files a snapshot pins (nOld held the previous table version)
-      if (fs.exists(nOld)) {
-        val a = archiveReferenced(nOld, p => relativize(nOld.toString, p))
-        if (a > 0) actions += s"archived $a snapshot-pinned file(s) from $nOld"
-      }
-      for (p <- nTmps :+ nOld :+ marker if fs.exists(p)) {
-        fs.delete(p, true); actions += s"dropped leftover $p"
-      }
+      fs.delete(patchOld, true); actions += s"dropped $patchOld"
     }
-    rollbackPatchOld(actions)
-    for (t <- pTmps if fs.exists(t)) { fs.delete(t, true); actions += s"dropped $t" }
+    for (t <- stagingSiblings("__patch_tmp") if fs.exists(t)) {
+      fs.delete(t, true); actions += s"dropped $t"
+    }
     forgetReads()
     actions.toList
   }
@@ -855,50 +601,6 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
       .filter(_.getName.startsWith(namePrefix)).toSeq.sortBy(_.toString)
   }
 
-  /** The manifest-driven exact rollback of `__patch_old` (the [[recover]]
-    * patch-swap arm). No-op when `__patch_old` is absent. Quiesced-only,
-    * like all of recover(): running it against a LIVE patcher's manifest
-    * restores originals mid-rename and deletes its aside dir.
-    */
-  private def rollbackPatchOld(actions: scala.collection.mutable.ListBuffer[String]): Unit = {
-    val pOld = new Path(s"${dir}__patch_old")
-    if (fs.exists(pOld)) {
-      val manifest = new Path(pOld, "_manifest")
-      if (fs.exists(manifest)) {
-        val lines = readTextFile(manifest).linesIterator.filter(_.nonEmpty).toSeq
-        lines.collect { case l if l.startsWith("new\t") => new Path(l.stripPrefix("new\t")) }
-          .foreach { p => if (fs.exists(p)) { fs.delete(p, false); actions += s"removed replacement $p" } }
-        val touched = lines.collect {
-          case l if l.startsWith("touched\t") => new Path(l.stripPrefix("touched\t"))
-        }
-        touched.foreach { orig =>
-          val aside = new Path(pOld, orig.getName)
-          // a crash mid-archive may have parked the original already —
-          // restore from wherever it sits (table / aside / archive is an
-          // exactly-one-of invariant for every byte)
-          val archived = new Path(archiveRoot, relativize(dir, orig))
-          if (!fs.exists(orig)) {
-            if (fs.exists(aside)) {
-              if (!fs.rename(aside, orig))
-                throw new java.io.IOException(s"recover: failed to restore $aside -> $orig")
-              actions += s"restored $orig"
-            } else if (fs.exists(archived)) {
-              if (!fs.rename(archived, orig))
-                throw new java.io.IOException(s"recover: failed to restore $archived -> $orig")
-              actions += s"restored $orig from archive"
-            }
-          }
-        }
-        // anything still aside that a snapshot pins is archived, not dropped
-        val origByName = touched.map(p => p.getName -> p).toMap
-        val a = archiveReferenced(pOld, p =>
-          relativize(dir, origByName.getOrElse(p.getName, new Path(s"$dir/${p.getName}"))))
-        if (a > 0) actions += s"archived $a snapshot-pinned file(s) from $pOld"
-      }
-      fs.delete(pOld, true); actions += s"dropped $pOld"
-    }
-  }
-
   /** Compact the small-file tail: bin-pack ONLY the files smaller than
     * `smallFraction · targetBytesPerFile` into ~target-sized replacements,
     * leaving every healthy-sized file physically untouched (same path, same
@@ -906,8 +608,8 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     * accrete a tail of tiny files; `normalize()` fixes that by rewriting
     * the WHOLE table — a 100 TB rewrite to repair a few GB of tail. This
     * scopes the rewrite so cost tracks the problem (bytes in small files),
-    * not table size, and the commit is the same crash-safe file swap the
-    * scoped upsert uses ([[replaceFiles]]).
+    * not table size; the commit is the kernel every mutation uses
+    * ([[replaceFiles]]), its touched set the small files of one directory.
     *
     * @param sortBy keep a range layout: pack small files range-partitioned
     *               and sorted so the replacements carry tight footer ranges
@@ -915,9 +617,10 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     * @return number of small files packed away (0 = nothing worth doing).
     *         Hive-partitioned layouts are packed PER PARTITION DIRECTORY:
     *         partition columns live in the directory names, not the files,
-    *         so swapping files inside each partition dir preserves them —
-    *         and streaming merge sinks + `create(partitionBy)` are exactly
-    *         where small-file tails accrete.
+    *         so replacing files inside each partition dir (one commit per
+    *         dir) preserves them — and streaming merge sinks +
+    *         `create(partitionBy)` are exactly where small-file tails
+    *         accrete.
     */
   def compactSmallFiles(targetBytesPerFile: Long, smallFraction: Double = 0.5,
                         sortBy: Seq[String] = Nil): Int = {
@@ -927,7 +630,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     else if (ParquetStats.listParquetFiles(dir, hconf).nonEmpty)
       compactDir(dir, targetBytesPerFile, smallFraction, sortBy)
     else
-      // one sequential pass over partition leaves: each swap is scoped to
+      // one sequential pass over partition leaves: each commit is scoped to
       // its own directory, so a crash mid-table leaves every other
       // partition fully intact (and the touched one recoverable, per
       // replaceFiles' contract)
@@ -954,25 +657,27 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     */
   private def compactDir(d: String, targetBytesPerFile: Long, smallFraction: Double,
                          sortBy: Seq[String]): Int = {
-    val expect = Some(entryFingerprint())
-    val small = ParquetStats.fileStats(d, hconf)
-      .filter(_.fileBytes < (targetBytesPerFile * smallFraction).toLong)
-    val bytes = small.map(_.fileBytes).sum
-    // conservative 0.9 like normalizeToBytes: re-compression drift must not
-    // overshoot the target
-    val n = math.max(1, math.ceil(bytes.toDouble / (targetBytesPerFile * 0.9)).toInt)
-    if (small.size <= n) 0 // packing would not reduce the file count
-    else {
-      val paths = small.map(_.path)
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      val shaped =
-        if (sortBy.nonEmpty)
-          df.repartitionByRange(n, sortBy.map(c => col(s"`$c`")): _*)
-            .sortWithinPartitions(sortBy.map(c => col(s"`$c`")): _*)
-        else df.repartition(n)
-      replaceFiles(paths, shaped, d, expect)
-      small.size
+    val expect = entryListing().print
+    val plan = conflictIfVanished("read") {
+      val small = ParquetStats.fileStats(d, hconf)
+        .filter(_.fileBytes < (targetBytesPerFile * smallFraction).toLong)
+      val bytes = small.map(_.fileBytes).sum
+      // conservative 0.9 like normalizeToBytes: re-compression drift must
+      // not overshoot the target
+      val n = math.max(1, math.ceil(bytes.toDouble / (targetBytesPerFile * 0.9)).toInt)
+      if (small.size <= n) None // packing would not reduce the file count
+      else {
+        val paths = small.map(_.path)
+        val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+        Some(paths -> (
+          if (sortBy.nonEmpty)
+            df.repartitionByRange(n, sortBy.map(c => col(s"`$c`")): _*)
+              .sortWithinPartitions(sortBy.map(c => col(s"`$c`")): _*)
+          else df.repartition(n)))
+      }
     }
+    plan.foreach { case (paths, shaped) => replaceFiles(paths, shaped, expect, targetDir = d) }
+    plan.fold(0)(_._1.size)
   }
 
   /** Normalize to a target FILE SIZE (the reference's actual goal — the
@@ -1261,6 +966,9 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
 object ParquetDatabase {
 
   val ManifestName = "_graft_manifest"
+
+  /** A table's fingerprint and its data files' paths, from one walk. */
+  private final case class Listing(print: String, files: Seq[String])
 
   private def md5Hex(text: String): String =
     java.security.MessageDigest.getInstance("MD5")

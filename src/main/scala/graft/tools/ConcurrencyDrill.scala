@@ -240,8 +240,8 @@ object ConcurrencyDrill {
     require(got == expected,
       s"pqdb: surviving ids diverged (got ${got.size}, expected ${expected.size})")
     val acts = db.recover()
-    require(!acts.exists(s => s.contains("rolled back") || s.contains("restored")
-      || s.contains("completed")), s"pqdb: recover found a stranded swap: ${acts.mkString("; ")}")
+    require(!acts.exists(s => s.contains("restored") || s.contains("removed")),
+      s"pqdb: recover found a stranded commit: ${acts.mkString("; ")}")
     results += s"pqdb: ${got.size} survivors == slice complement + upsert"
 
     // IVF invariant: every append that reported success is present after

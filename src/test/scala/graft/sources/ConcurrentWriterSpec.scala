@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Optimistic-concurrency drills: two interleaved writers on one table.
   * The `preSwapHook` seam fires after writer A has staged its replacement
-  * data and immediately before its conflict check + renames — exactly the
-  * point a concurrent writer B's commit must be detected at.
+  * data and immediately before it takes the commit gate and re-checks the
+  * table — exactly the point a concurrent writer B's commit must be
+  * detected at.
   */
 class ConcurrentWriterSpec extends SparkSpec {
   import spark.implicits._
@@ -15,8 +16,8 @@ class ConcurrentWriterSpec extends SparkSpec {
     val dir = s"target/tmp/pqdb_ccw/$name"
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    // sweep the table AND every state sibling (`__snapshots`, `__old`,
-    // invocation-unique `__normalize_tmp_<token>` debris, …) by prefix —
+    // sweep the table AND every state sibling (`__snapshots`, `__patch_old`,
+    // invocation-unique `__patch_tmp_<token>` debris, …) by prefix —
     // fixed-name deletion leaks the unique-suffixed staging across reruns
     if (fs.exists(p.getParent))
       fs.listStatus(p.getParent).map(_.getPath)
@@ -25,12 +26,40 @@ class ConcurrentWriterSpec extends SparkSpec {
     new ParquetDatabase(spark, dir)
   }
 
+  private def P(s: String) = new org.apache.hadoop.fs.Path(s)
+  private def fsOf(db: ParquetDatabase) =
+    P(db.dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
+
+  /** Names of the table's state siblings (`<name>__…`) on disk. */
+  private def siblings(db: ParquetDatabase): Seq[String] = {
+    val p = P(db.dir)
+    fsOf(db).listStatus(p.getParent).map(_.getPath.getName)
+      .filter(_.startsWith(p.getName + "__")).toSeq.sorted
+  }
+
+  /** Every file under the table and its siblings: path -> md5 of its bytes. */
+  private def tree(db: ParquetDatabase): Map[String, String] = {
+    val fs = fsOf(db)
+    val parent = P(db.dir).getParent
+    val name = P(db.dir).getName
+    fs.listStatus(parent).map(_.getPath)
+      .filter(q => q.getName == name || q.getName.startsWith(name + "__"))
+      .flatMap { root =>
+        val it = fs.listFiles(root, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).map { f =>
+          val in = fs.open(f)
+          val bytes = try in.readAllBytes() finally in.close()
+          f.toString -> java.security.MessageDigest.getInstance("MD5").digest(bytes)
+            .map("%02x".format(_)).mkString
+        }
+      }.toMap
+  }
+
   test("stress: two genuinely concurrent writers converge with every committed mutation applied") {
     // real threads, real races: each writer deletes its own disjoint id
-    // slices through the whole-dir rewrite path, retrying on the protocol's
-    // loud aborts (ConcurrentModificationException from the CAS / gates,
-    // IOException from a lost rename race or a peer's entry-recover rolling
-    // a complete stage forward). The protocol's promise is NOT that
+    // slices through the partitioned full-rewrite arm (every data file
+    // replaced), retrying on the protocol's loud aborts. The protocol's
+    // promise is NOT that
     // interleavings never collide — it is that every collision is loud,
     // the table stays readable, and a retry converges with no committed
     // row silently lost or resurrected.
@@ -51,10 +80,10 @@ class ConcurrentWriterSpec extends SparkSpec {
             try { db.deleteWhere(col("id") >= lo && col("id") < hi); done = true }
             catch {
               // the protocol's retryable aborts: CAS/gate conflicts (CME,
-              // incl. files-vanished-mid-scan mapped by stageOrAbort), a
-              // lost rename race (IOException), and the table dir briefly
-              // absent at the eager read while a peer is mid-swap
-              // (AnalysisException PATH_NOT_FOUND)
+              // incl. files vanishing mid-scan and a peer's manifest at
+              // entry), a gate released under a claim (IOException), and a
+              // listing that lands while a peer has every original aside
+              // (AnalysisException: no file to infer a schema from)
               case e @ (_: java.util.ConcurrentModificationException | _: java.io.IOException
                         | _: org.apache.spark.sql.AnalysisException) =>
                 attempt += 1
@@ -78,10 +107,10 @@ class ConcurrentWriterSpec extends SparkSpec {
     val got = a.read().select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
     assert(got === expectedSurvivors, "surviving id set diverged from the slice complement")
     // the table is healthy; anything recover() finds is droppable staging
-    // debris from aborted attempts, never a rollback/restore
+    // debris from aborted attempts, never a rollback
     val acts = a.recover()
-    assert(!acts.exists(s => s.contains("rolled back") || s.contains("restored")
-      || s.contains("completed")), acts.mkString("; "))
+    assert(!acts.exists(s => s.contains("restored") || s.contains("removed")),
+      acts.mkString("; "))
   }
 
   test("HadoopText.writeIfAbsent never overwrites: the loser sees false, content survives") {
@@ -127,11 +156,8 @@ class ConcurrentWriterSpec extends SparkSpec {
     assert(rows.size === 100)
     assert(rows(7L) === "from-b")
     assert(rows(3L) === "base")
-    // no swap debris: the abort happened before any rename
-    val fs = new org.apache.hadoop.fs.Path(a.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    Seq("__patch_tmp", "__patch_old", "__normalize_tmp", "__old").foreach(sfx =>
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(a.dir + sfx)), s"debris at $sfx"))
+    // no debris: the abort dropped the manifest and the stage
+    assert(siblings(a).isEmpty, siblings(a))
     // the aborted writer retries against the fresh state and succeeds
     a.upsert(Seq((3L, "from-a")).toDF("id", "v"), "id")
     val after = a.read().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -155,47 +181,46 @@ class ConcurrentWriterSpec extends SparkSpec {
 
   test("a benign concurrent entry does not reclaim a live writer's staging") {
     // round-10 review finding: entry-point auto-recover treated a LIVE
-    // writer's __normalize_tmp as crash debris — writer B entering any
-    // mutator while A was staged (but pre-swap) deleted A's tmp; A's
-    // conflict check then passed (B committed nothing), rename(dir -> __old)
-    // succeeded, rename(tmp -> dir) failed, and the table was GONE until a
-    // manual recover(). Auto-recover now fires only when the live tree is
-    // unreadable, so A must complete.
+    // writer's stage as crash debris — writer B entering any mutator while
+    // A was staged (but pre-commit) deleted A's stage and stranded A's
+    // commit. Mutators never recover, so a peer that commits nothing leaves
+    // A's stage alone and A must complete.
     val a = freshDb("benignentry")
     a.create(spark.range(500).toDF("id"))
     val b = new ParquetDatabase(spark, a.dir)
-    a.preSwapHook = () => b.deleteWhere(col("id") > 10000) // matches nothing, commits nothing
+    a.preSwapHook = () => {
+      assert(siblings(a).exists(_.startsWith("benignentry__patch_tmp_")), siblings(a))
+      b.deleteWhere(col("id") > 10000) // matches nothing, commits nothing
+      assert(siblings(a).exists(_.startsWith("benignentry__patch_tmp_")), "A's stage reclaimed")
+    }
     a.normalize(maxRowsPerFile = 100)
     a.preSwapHook = () => ()
-    assert(a.nRows === 500L) // table present and intact — no stranded swap
-    val fs = new org.apache.hadoop.fs.Path(a.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    Seq("__normalize_tmp", "__old").foreach(sfx =>
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(a.dir + sfx)), s"debris at $sfx"))
+    assert(a.nRows === 500L) // table present and intact — no stranded commit
+    assert(siblings(a).isEmpty, siblings(a))
   }
 
   test("a crashed rewrite's stale staging never blocks the next writer; recover() sweeps it") {
-    // the narrowed entry-recover must not break single-writer crash flow:
-    // stale __old (a crash after its swap committed) is reclaimed by the
-    // next rewrite once its conflict check passed; stale staging is simply
-    // IGNORED (each invocation stages under its own unique name) and waits
-    // for the quiesced recover() — a writer cannot tell dead staging from
-    // a live peer's, so it must not reclaim it inline
+    // a crashed writer's complete stage and a gate dir it left without a
+    // manifest (a crash between mkdirs and the claim) must not stop the
+    // next writer. The manifest-less __patch_old is the next winner's to
+    // claim and release; the stage is IGNORED (each invocation stages
+    // under its own unique name), never promoted, and waits for the
+    // quiesced recover() — a writer cannot tell dead staging from a live
+    // peer's, so it must not reclaim it inline
     val a = freshDb("staledebris")
     a.create(spark.range(100).toDF("id"))
-    val fs = new org.apache.hadoop.fs.Path(a.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    // fake crash debris: a half-written tmp and a committed-but-uncleaned old
-    fs.mkdirs(new org.apache.hadoop.fs.Path(a.dir + "__normalize_tmp_dead1"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(a.dir + "__old"))
+    val fs = fsOf(a)
+    spark.range(1000, 1999).toDF("id").write.parquet(a.dir + "__patch_tmp_dead1")
+    fs.mkdirs(P(a.dir + "__patch_old"))
     a.normalize(maxRowsPerFile = 50)
     assert(a.nRows === 100L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(a.dir + "__old")), "stale __old not reclaimed")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(a.dir + "__normalize_tmp_dead1")),
+    assert(!fs.exists(P(a.dir + "__patch_old")), "stale gate dir not reclaimed")
+    assert(fs.exists(P(a.dir + "__patch_tmp_dead1/_SUCCESS")),
       "stale staging must be left for the quiesced recover(), not reclaimed inline")
     val acts = a.recover()
-    assert(acts.exists(_.contains("__normalize_tmp_dead1")), acts.mkString("; "))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(a.dir + "__normalize_tmp_dead1")))
+    assert(acts.exists(_.contains("__patch_tmp_dead1")), acts.mkString("; "))
+    assert(!acts.exists(_.contains("restored")), acts.mkString("; "))
+    assert(siblings(a).isEmpty, siblings(a))
     assert(a.nRows === 100L)
   }
 
@@ -216,67 +241,71 @@ class ConcurrentWriterSpec extends SparkSpec {
       intercept[RuntimeException] { b.deleteWhere(col("id") >= 400) }
       ()
     }
-    a.deleteWhere(col("id") >= 450) // partitioned layout -> whole-dir rewrite path
+    a.deleteWhere(col("id") >= 450) // partitioned layout -> every file replaced
     a.preSwapHook = () => ()
     assert(a.nRows === 450L) // a's bytes, not b's 400-row stage
     // b's orphaned stage is debris for the quiesced recover()
     val acts = a.recover()
-    assert(acts.exists(_.contains("__normalize_tmp")), acts.mkString("; "))
+    assert(acts.exists(_.contains("__patch_tmp")), acts.mkString("; "))
     assert(a.nRows === 450L)
   }
 
-  test("a commit landing inside the check-to-rename gap is detected post-rename, not dropped") {
-    // the narrowest race: writer B fully commits AFTER writer A's conflict
-    // check passes and BEFORE A's dir -> __old rename. A's rename then
-    // succeeds — against B's COMMITTED table — and without the post-lock
-    // re-check A would commit its stage over it, silently dropping B's
-    // rows with both writers reporting success. The re-check fingerprints
-    // the moved-aside tree (rename preserves lengths/mtimes), restores it,
-    // and aborts A.
+  test("a commit landing before the gate is caught by the post-gate check, not dropped") {
+    // writer B fully commits AFTER writer A staged and BEFORE A takes the
+    // gate. A's check runs while A holds the gate, so it sees B's commit,
+    // drops A's manifest and stage, and aborts — B's rows survive. (Once A
+    // holds the gate, B cannot commit at all: see the live-peer drill.)
     val a = freshDb("gapcommit")
     a.create(spark.range(500).select(col("id"), (col("id") % 5).as("g")),
       partitionBy = Seq("g"))
     val b = new ParquetDatabase(spark, a.dir)
-    a.preRenameHook = () => b.deleteWhere(col("id") >= 400) // full commit inside the gap
+    a.preSwapHook = () => b.deleteWhere(col("id") >= 400) // full commit before A's gate
     val ex = intercept[java.util.ConcurrentModificationException] {
       a.deleteWhere(col("id") >= 450)
     }
-    a.preRenameHook = () => ()
-    assert(ex.getMessage.contains("swap rename"))
+    a.preSwapHook = () => ()
+    assert(ex.getMessage.contains("changed between"), ex.getMessage)
     assert(a.nRows === 400L) // B's committed table survived; A's stage dropped
-    val fs = new org.apache.hadoop.fs.Path(a.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(a.dir + "__old")), "swap debris left behind")
+    assert(siblings(a).isEmpty, siblings(a))
   }
 
-  test("a crash between the retire rename and the post-lock re-check rolls BACK, never promotes the stale stage") {
-    // writer A passes its conflict check; writer B fully commits inside the
-    // check-to-rename gap; A's dir -> __old rename succeeds — moving B's
-    // COMMITTED table aside — and A dies BEFORE the post-lock re-check that
-    // would have caught the conflict. A's staged rewrite is COMPLETE
-    // (_SUCCESS present) and the __swapper marker names it, but the marker
-    // lacks the second-line "checked" token (appended only after the
-    // re-check passes) — so recover() must roll B's table BACK, not promote
-    // A's stale stage (which would delete a committed write that reported
-    // success: the round-11 advice finding).
-    val a = freshDb("retirecrash")
+  test("a crash holding the gate rolls back; recover() never promotes the crashed writer's stage") {
+    // writer A stages a complete rewrite and dies right after winning the
+    // gate (manifest written, nothing renamed); B had committed in
+    // between, so A's stage is stale. Every mutator then aborts on A's
+    // manifest, and the quiesced recover() drops the manifest and A's
+    // stage, keeping B's committed table: a stale stage is never promoted.
+    val a = freshDb("gatecrash")
     a.create(spark.range(500).select(col("id"), (col("id") % 5).as("g")),
       partitionBy = Seq("g"))
     val b = new ParquetDatabase(spark, a.dir)
-    a.preRenameHook = () => b.deleteWhere(col("id") >= 400) // full commit inside the gap
-    a.postRetireHook = () => throw new RuntimeException("simulated crash post-retire")
+    a.preSwapHook = () => {
+      b.deleteWhere(col("id") >= 400)
+      throw new RuntimeException("simulated crash before the gate")
+    }
     intercept[RuntimeException] { a.deleteWhere(col("id") >= 450) }
-    a.preRenameHook = () => ()
-    a.postRetireHook = () => ()
-    val fs = new org.apache.hadoop.fs.Path(a.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    // crash state: dir missing, __old = B's committed 400-row table, A's
-    // complete stage on disk with a single-line swapper marker naming it
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(a.dir)), "crash state: dir should be missing")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(a.dir + "__old")))
+    a.preSwapHook = () => ()
+    val fs = fsOf(a)
+    val stage = siblings(a).filter(_.startsWith("gatecrash__patch_tmp_"))
+    assert(stage.size === 1, siblings(a))
+    val stageDir = P(a.dir).getParent.toString + "/" + stage.head
+    assert(fs.exists(P(stageDir + "/_SUCCESS")), "A's stage should be complete")
+    // the gate A won before dying: B's current files as originals, A's
+    // staged files as replacements
+    val live = { val it = fs.listFiles(P(a.dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .filter(_.endsWith(".parquet")).toSeq }
+    val staged = ParquetStats.listParquetFiles(stageDir, spark.sessionState.newHadoopConf())
+    fs.mkdirs(P(a.dir + "__patch_old"))
+    HadoopText.write(fs, P(a.dir + "__patch_old/_manifest"),
+      (live.map(p => s"touched\t$p") ++ staged.map(f => s"new\t${a.dir}/${f.getName}"))
+        .mkString("\n"))
+    intercept[java.util.ConcurrentModificationException](a.normalize(maxRowsPerFile = 100))
     val acts = a.recover()
-    assert(acts.exists(_.contains("rolled back")), acts.mkString("; "))
-    assert(a.nRows === 400L, "B's committed table must survive; A's 450-row stage must not be promoted")
+    assert(!acts.exists(s => s.contains("restored") || s.contains("removed")), acts.mkString("; "))
+    assert(acts.exists(_.contains(stage.head)), acts.mkString("; "))
+    assert(siblings(a).isEmpty, siblings(a))
+    assert(a.nRows === 400L, "B's committed table must survive; A's 450-row stage must not land")
   }
 
   test("a foreign patch manifest aborts the patcher loudly; recover() clears it for retry") {
@@ -317,51 +346,19 @@ class ConcurrentWriterSpec extends SparkSpec {
     assert(a.read().filter(col("g") === 2L).count() === 0L)
   }
 
-  test("vanished-file remap: mid-swap dir-absent window is a conflict, a truly missing dir is raw") {
+  test("vanished-file remap: files vanishing from a live table are a conflict, a missing table dir is raw") {
     // the classification gate behind every staged mutation: a read failing
     // because files vanished is a retryable conflict ONLY while the table
-    // plausibly still lives. Three cases, driven directly through the seam:
+    // directory exists (no commit ever renames it). Driven through the seam:
     val a = freshDb("vanishcls")
     a.create(spark.range(10).toDF("id"))
     val vanish = new java.io.FileNotFoundException("part-00000 gone")
-    // 1. table dir present -> conflict (the common peer-swap signature)
+    // 1. table dir present -> conflict (the common peer-commit signature)
     intercept[java.util.ConcurrentModificationException] {
       a.conflictIfVanished("test read")(throw vanish)
     }
-    // 2. dir retired to __old mid-swap (dir absent, __old present) and the
-    // peer's promote lands while the classifier re-probes -> a conflict:
-    // the stress drill caught the single-probe form rethrowing raw exactly
-    // in this window. The promote is simulated ~120 ms in — inside the
-    // __old-extended budget (10 x 40 ms), outside the first few probes.
-    val fs = new org.apache.hadoop.fs.Path(a.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    assert(fs.rename(new org.apache.hadoop.fs.Path(a.dir),
-      new org.apache.hadoop.fs.Path(a.dir + "__old")))
-    val promoter = new Thread(() => {
-      Thread.sleep(120L)
-      fs.rename(new org.apache.hadoop.fs.Path(a.dir + "__old"),
-        new org.apache.hadoop.fs.Path(a.dir))
-    })
-    promoter.start()
-    intercept[java.util.ConcurrentModificationException] {
-      a.conflictIfVanished("test read")(throw vanish)
-    }
-    promoter.join()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(a.dir)))
-    // 2b. __old LINGERS (a crashed writer's debris — no promote ever
-    // comes): the classification must not treat it as live forever, or
-    // retry-looping callers spin on a table no retry restores (r16
-    // ADVICE). After the bounded budget the raw error survives.
-    assert(fs.rename(new org.apache.hadoop.fs.Path(a.dir),
-      new org.apache.hadoop.fs.Path(a.dir + "__old")))
-    val raw2b = intercept[java.io.FileNotFoundException] {
-      a.conflictIfVanished("test read")(throw vanish)
-    }
-    assert(raw2b eq vanish)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(a.dir + "__old"),
-      new org.apache.hadoop.fs.Path(a.dir)))
-    // 3. table dir (and __old) genuinely absent -> the raw error survives,
-    // so retry-looping callers can't spin on a mistyped path
+    // 2. table dir genuinely absent -> the raw error survives, so
+    // retry-looping callers can't spin on a mistyped path
     val gone = new ParquetDatabase(spark, a.dir + "_nonexistent")
     val raw = intercept[java.io.FileNotFoundException] {
       gone.conflictIfVanished("test read")(throw vanish)
@@ -371,5 +368,46 @@ class ConcurrentWriterSpec extends SparkSpec {
     intercept[IllegalStateException] {
       a.conflictIfVanished("test read")(throw new IllegalStateException("boom"))
     }
+  }
+
+  test("a live peer's mid-move commit makes deleteWhere, upsert and normalize abort, touching nothing") {
+    // the state of a peer between its first aside-rename and its last
+    // move-in, built by hand: the manifest, one original aside, one
+    // replacement in, and the peer's __patch_tmp_<token> stage. Mutators
+    // used to run recover() here, restoring the peer's originals and
+    // deleting its manifest and stage under it (the source of duplicated
+    // rows in the stress drill); now each aborts and every byte stays put.
+    val a = freshDb("livepeer")
+    a.create(spark.range(50).toDF("id").repartition(1))
+    a.create(spark.range(50, 60).toDF("id").repartition(1))
+    val fs = fsOf(a)
+    val files = ParquetStats.listParquetFiles(a.dir, spark.sessionState.newHadoopConf())
+      .map(_.toString).sorted
+    val stage = a.dir + "__patch_tmp_peer0001"
+    spark.range(1000, 1010).toDF("id").repartition(2).write.parquet(stage)
+    val newFiles = ParquetStats.listParquetFiles(stage, spark.sessionState.newHadoopConf())
+    fs.mkdirs(P(a.dir + "__patch_old"))
+    HadoopText.write(fs, P(a.dir + "__patch_old/_manifest"),
+      (files.map(p => s"touched\t$p") ++ newFiles.map(f => s"new\t${a.dir}/${f.getName}"))
+        .mkString("\n"))
+    assert(fs.rename(P(files.head), P(a.dir + "__patch_old/" + P(files.head).getName)))
+    assert(fs.rename(newFiles.head, P(a.dir + "/" + newFiles.head.getName)))
+    val before = tree(a)
+    assert(before.keys.exists(_.contains("__patch_tmp_peer0001/")) &&
+      before.keys.exists(_.endsWith("__patch_old/_manifest")))
+    val mutations: Seq[(String, () => Unit)] = Seq(
+      "deleteWhere" -> (() => a.deleteWhere(col("id") < 5)),
+      "upsert" -> (() => a.upsert(Seq(3L, 70L).toDF("id"), "id")),
+      "normalize" -> (() => a.normalize(maxRowsPerFile = 10)))
+    mutations.foreach { case (name, m) =>
+      val e = intercept[java.util.ConcurrentModificationException](m())
+      assert(e.getMessage.contains("recover()"), s"$name: ${e.getMessage}")
+      assert(tree(a) === before, s"$name touched the peer's commit")
+    }
+    // once the peer is known dead, the quiesced recover() restores the
+    // original table exactly
+    assert(a.recover().exists(_.contains("restored")))
+    assert(a.read().agg(sum("id")).head().getLong(0) === (0L until 60L).sum)
+    assert(siblings(a).isEmpty, siblings(a))
   }
 }

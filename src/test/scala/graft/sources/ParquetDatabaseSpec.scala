@@ -18,10 +18,21 @@ class CountingLocalFs extends RawLocalFileSystem {
     CountingLocalFs.outer("listStatus")(super.listStatus(f))
   override def exists(f: Path): Boolean =
     CountingLocalFs.outer("exists")(super.exists(f))
+  override def rename(src: Path, dst: Path): Boolean = CountingLocalFs.outer("rename") {
+    CountingLocalFs.renames.add(makeQualified(src).toUri.getPath -> makeQualified(dst).toUri.getPath)
+    super.rename(src, dst)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    CountingLocalFs.outer("delete")(super.delete(f, recursive))
+  override def mkdirs(f: Path): Boolean = CountingLocalFs.outer("mkdirs")(super.mkdirs(f))
+  override def mkdirs(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission): Boolean =
+    CountingLocalFs.outer("mkdirs")(super.mkdirs(f, permission))
 }
 
 object CountingLocalFs {
   val calls = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  /** (source, destination) of every counted rename, as local paths. */
+  val renames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
   private val depth = ThreadLocal.withInitial[Int](() => 0)
   def outer[T](name: String)(f: => T): T = {
     if (depth.get == 0) calls.merge(name, 1, (a: Int, b: Int) => a + b)
@@ -34,10 +45,18 @@ object CountingLocalFs {
 class ParquetDatabaseSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A fresh table: the dir and its snapshot/archive/commit siblings are
+    * deleted — snapshot manifests persist OUTSIDE the table dir and would
+    * collide across reruns.
+    */
   private def freshDb(name: String): ParquetDatabase = {
     val dir = s"target/tmp/pqdb/$name"
     val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
+    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    if (fs.exists(p.getParent))
+      fs.listStatus(p.getParent).map(_.getPath)
+        .filter(q => q.getName == name || q.getName.startsWith(name + "__"))
+        .foreach(fs.delete(_, true))
     new ParquetDatabase(spark, dir)
   }
 
@@ -59,10 +78,7 @@ class ParquetDatabaseSpec extends SparkSpec {
     assert(stats.map(_.numRows).sum === 10000L)
     assert(stats.forall(_.numRows <= 1000L))
     assert(stats.size >= 10)
-    val fs = new org.apache.hadoop.fs.Path(db.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(db.dir + "__old")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(db.dir + "__normalize_tmp")))
+    assert(stateSiblings(db).isEmpty, stateSiblings(db))
   }
 
   test("normalize(sortBy) lays out disjoint key ranges per file (data skipping)") {
@@ -95,10 +111,7 @@ class ParquetDatabaseSpec extends SparkSpec {
     db.deleteWhere(col("v") === 40.0)
     assert(db.read().orderBy("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
     // crash-safe temp dirs cleaned up after both rewrites
-    val fs = new org.apache.hadoop.fs.Path(db.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    for (suffix <- Seq("__old", "__normalize_tmp", "__patch_old", "__patch_tmp"))
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(db.dir + suffix)), suffix)
+    assert(stateSiblings(db).isEmpty, stateSiblings(db))
   }
 
   test("a type-divergent patch conforms to the table's schema instead of stranding mixed files") {
@@ -259,52 +272,9 @@ class ParquetDatabaseSpec extends SparkSpec {
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
     def P(s: String) = new org.apache.hadoop.fs.Path(s)
 
-    // rewrite ROLLBACK: crash after the live dir moved aside, rewrite
-    // incomplete (no _SUCCESS in the tmp dir) -> original comes back
-    val db = freshDbClean("recover_rw")
-    db.create(spark.range(100).toDF("id"))
-    fs.mkdirs(P(db.dir + "__normalize_tmp")) // partial rewrite, no _SUCCESS
-    assert(fs.rename(P(db.dir), P(db.dir + "__old")))
-    val acts = db.recover()
-    assert(acts.exists(_.contains("rolled back")), acts.mkString("; "))
-    assert(db.read().count() === 100L)
-    assert(!fs.exists(P(db.dir + "__old")) && !fs.exists(P(db.dir + "__normalize_tmp")))
-
-    // rewrite ROLL-FORWARD: rewrite complete (_SUCCESS present), the
-    // swap's own __swapper marker names it WITH the second-line "checked"
-    // token (the post-lock fingerprint re-check passed), crash between the
-    // re-check and the promote rename -> the rewrite lands. Roll-forward
-    // requires both lines: a single-line marker means the crash hit inside
-    // the check window and must roll back instead (drilled in
-    // ConcurrentWriterSpec).
-    spark.range(200).toDF("id").write.parquet(db.dir + "__normalize_tmp")
-    val sw = fs.create(P(db.dir + "__swapper"), true)
-    try sw.write((db.dir + "__normalize_tmp\nchecked").getBytes("UTF-8")) finally sw.close()
-    assert(fs.rename(P(db.dir), P(db.dir + "__old")))
-    val acts2 = db.recover()
-    assert(acts2.exists(_.contains("completed")), acts2.mkString("; "))
-    assert(db.read().count() === 200L)
-    assert(!fs.exists(P(db.dir + "__swapper")))
-
-    // STALE-STAGE SAFETY (r10 advice, ParquetDatabase.scala swapper token):
-    // an EARLIER crashed writer's complete stage sits beside the table; a
-    // LATER swap crashes mid-abort — its own tmp already deleted, dir
-    // renamed to __old (which therefore holds the CURRENT committed
-    // table), marker naming the now-deleted stage. recover() must roll
-    // __old BACK, never promote the unattributed stale stage.
-    spark.range(999).toDF("id").write.parquet(db.dir + "__normalize_tmp_stale")
-    val sw2 = fs.create(P(db.dir + "__swapper"), true)
-    try sw2.write((db.dir + "__normalize_tmp_gone").getBytes("UTF-8")) finally sw2.close()
-    assert(fs.rename(P(db.dir), P(db.dir + "__old")))
-    val acts2b = db.recover()
-    assert(acts2b.exists(_.contains("rolled back")), acts2b.mkString("; "))
-    assert(db.read().count() === 200L) // the committed table, not the 999-row stale stage
-    assert(!fs.exists(P(db.dir + "__normalize_tmp_stale")))
-    assert(!fs.exists(P(db.dir + "__swapper")))
-
     // patch ROLLBACK mid-move: one original moved aside, one replacement
     // moved in, manifest present -> byte-exact original table restored
-    val db2 = freshDbClean("recover_patch")
+    val db2 = freshDb("recover_patch")
     db2.create(spark.range(50).toDF("id").repartition(1))
     db2.create(spark.range(50, 60).toDF("id").repartition(1))
     val files = ParquetStats.listParquetFiles(db2.dir, spark.sessionState.newHadoopConf()).map(_.toString).sorted
@@ -345,6 +315,114 @@ class ParquetDatabaseSpec extends SparkSpec {
     assert(db.read().filter(col("p").isNull).count() === 0L)
   }
 
+  /** Every data file under `root`: table-relative path -> md5 of its bytes. */
+  private def dataTree(root: String): Map[String, String] = {
+    val r = new org.apache.hadoop.fs.Path(root)
+    val fs = r.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val prefix = fs.makeQualified(r).toUri.getPath + "/"
+    val it = fs.listFiles(r, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).map { f =>
+        val in = fs.open(f)
+        val bytes = try in.readAllBytes() finally in.close()
+        f.toUri.getPath.stripPrefix(prefix) -> java.security.MessageDigest.getInstance("MD5")
+          .digest(bytes).map("%02x".format(_)).mkString
+      }.toMap
+  }
+
+  test("a partitioned full rewrite commits by file moves: no partition dir or sibling left") {
+    val db = freshDb("part_kernel")
+    // one task writes both partitions, so both dirs hold the same basename
+    db.create(spark.range(200).select(col("id"), (col("id") % 2).as("p")).repartition(1),
+      partitionBy = Seq("p"))
+    val before = dataTree(db.dir).keys.toSeq.sorted
+    assert(before.size === 2 && before.map(_.split('/').last).distinct.size === 1,
+      s"fixture premise: same-basename files in two partition dirs, got $before")
+    db.deleteWhere(col("id") % 10 === 0)
+    val rows = db.read().select("id", "p").as[(Long, Int)].collect().sortBy(_._1).toSeq
+    assert(rows === (0L until 200L).filter(_ % 10 != 0).map(i => (i, (i % 2).toInt)))
+    val fs = new org.apache.hadoop.fs.Path(db.dir)
+      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val dirsLeft = fs.listStatus(new org.apache.hadoop.fs.Path(db.dir)).filter(_.isDirectory)
+    assert(dirsLeft.isEmpty, s"partition dirs left: ${dirsLeft.map(_.getPath.getName).toSeq}")
+    assert(dataTree(db.dir).keys.forall(!_.contains('/')), "rows are written flat")
+    assert(stateSiblings(db).isEmpty, stateSiblings(db))
+  }
+
+  test("recover() rolls a partitioned commit back byte-exactly from relative aside paths") {
+    val fs = new org.apache.hadoop.fs.Path("target/tmp")
+      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    def P(s: String) = new org.apache.hadoop.fs.Path(s)
+    val db = freshDb("part_recover")
+    db.create(spark.range(300).select(col("id"), (col("id") % 3).as("p")).repartition(1),
+      partitionBy = Seq("p"))
+    val original = dataTree(db.dir)
+    val rels = original.keys.toSeq.sorted // p=0/<name>, p=1/<name>, p=2/<name>
+    assert(rels.size === 3 && rels.map(_.split('/').last).distinct.size === 1, rels)
+    /** The gate a full rewrite holds: every original touched, a flat stage
+      * as the replacements. Returns the stage's files.
+      */
+    def holdGate(stage: String): Seq[org.apache.hadoop.fs.Path] = {
+      db.read().filter(col("id") >= 10).repartition(2).write.parquet(stage)
+      val newFiles = ParquetStats.listParquetFiles(stage, spark.sessionState.newHadoopConf())
+      fs.mkdirs(P(db.dir + "__patch_old"))
+      HadoopText.write(fs, P(db.dir + "__patch_old/_manifest"),
+        (rels.map(r => s"touched\t${db.dir}/$r") ++
+          newFiles.map(f => s"new\t${db.dir}/${f.getName}")).mkString("\n"))
+      newFiles
+    }
+    def moveAside(rel: String): Unit = {
+      fs.mkdirs(P(db.dir + "__patch_old/" + rel).getParent)
+      assert(fs.rename(P(s"${db.dir}/$rel"), P(db.dir + "__patch_old/" + rel)))
+    }
+
+    // mid-move: two same-basename originals aside, one replacement in
+    val newFiles = holdGate(db.dir + "__patch_tmp_crash001")
+    rels.take(2).foreach(moveAside)
+    assert(fs.rename(newFiles.head, P(db.dir + "/" + newFiles.head.getName)))
+    val acts = db.recover()
+    assert(acts.count(_.startsWith("restored")) === 2, acts.mkString("; "))
+    assert(acts.exists(_.startsWith("removed replacement")), acts.mkString("; "))
+    assert(dataTree(db.dir) === original)
+    assert(stateSiblings(db).isEmpty, stateSiblings(db))
+
+    // after the last move-in and the empty-dir sweep, before the release:
+    // the rollback recreates every partition dir
+    val newFiles2 = holdGate(db.dir + "__patch_tmp_crash002")
+    rels.foreach(moveAside)
+    newFiles2.foreach(f => assert(fs.rename(f, P(db.dir + "/" + f.getName))))
+    rels.map(_.split('/').head).foreach(d => assert(fs.delete(P(s"${db.dir}/$d"), false)))
+    assert(db.recover().count(_.startsWith("restored")) === 3)
+    assert(dataTree(db.dir) === original)
+    assert(db.read().count() === 300L)
+    assert(stateSiblings(db).isEmpty, stateSiblings(db))
+  }
+
+  test("a normalize commits by file renames and never renames the table root") {
+    // the metadata calls of one normalize, flat and partitioned, counted
+    // through the graftcount scheme (reported below as test info)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingLocalFs].getName)
+    for ((name, partitioned) <- Seq("mc_flat" -> false, "mc_part" -> true)) {
+      val local = freshDb(name)
+      val root = new java.io.File(local.dir).getAbsolutePath
+      val db = new ParquetDatabase(spark, s"graftcount://$root")
+      val rows = spark.range(800).select(col("id"), (col("id") % 4).as("p"))
+      if (partitioned) db.create(rows.repartition(1), partitionBy = Seq("p")) // 4 dirs
+      else db.create(rows.repartition(8)) // 8 files
+      CountingLocalFs.calls.clear()
+      CountingLocalFs.renames.clear()
+      db.normalize(maxRowsPerFile = 200)
+      import scala.jdk.CollectionConverters._
+      val renames = CountingLocalFs.renames.asScala.toSeq
+      info(s"$name normalize: ${CountingLocalFs.calls.asScala.toSeq.sorted.mkString(", ")}")
+      assert(!renames.exists { case (src, dst) => src == root || dst == root },
+        s"$name: the table root was renamed: $renames")
+      assert(db.read().count() === 800L)
+      assert(stateSiblings(local).isEmpty, stateSiblings(local))
+    }
+  }
+
   test("per-read options reach the parquet source (P8 LoadConfig parity)") {
     val db = freshDb("readopts")
     db.create(Seq((1L, "a")).toDF("id", "x"))
@@ -365,16 +443,11 @@ class ParquetDatabaseSpec extends SparkSpec {
     assert(replica.nRows === 2L)
   }
 
-  /** freshDb plus its snapshot/archive/swap siblings — snapshot manifests
-    * persist OUTSIDE the table dir and would collide across reruns.
-    */
-  private def freshDbClean(name: String): ParquetDatabase = {
-    val db = freshDb(name)
-    val fs = new org.apache.hadoop.fs.Path(db.dir)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
-    for (suffix <- Seq("__snapshots", "__archive", "__patch_old", "__patch_tmp", "__old", "__normalize_tmp"))
-      fs.delete(new org.apache.hadoop.fs.Path(db.dir + suffix), true)
-    db
+  /** Names of the table's state siblings (`<name>__…`) on disk. */
+  private def stateSiblings(db: ParquetDatabase): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(db.dir)
+    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).listStatus(p.getParent)
+      .map(_.getPath.getName).filter(_.startsWith(p.getName + "__")).toSeq.sorted
   }
 
   /** Reference fingerprint walk that stats every entry its parent listed;
@@ -473,7 +546,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("read handle: a warm read runs one job; every commit makes the next read infer") {
-    val db = freshDbClean("handle")
+    val db = freshDb("handle")
     db.create(spark.range(40).select(col("id"), concat(lit("x"), col("id")).as("x"))
       .repartition(3))
     assert(openThenWarm(db).size === 40)
@@ -509,7 +582,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("read handle on a hive-partitioned table keeps the directory-encoded columns") {
-    val db = freshDbClean("handle_part")
+    val db = freshDb("handle_part")
     db.create(spark.range(60).select(col("id"), (col("id") % 3).as("p"),
       concat(lit("v"), col("id")).as("v")), partitionBy = Seq("p"))
     openThenWarm(db)
@@ -524,7 +597,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("read handle: a read with per-read options is held under its own key") {
-    val db = freshDbClean("handle_opts")
+    val db = freshDb("handle_opts")
     db.create(Seq((1L, "a")).toDF("id", "x"))
     db.create(Seq((2L, 3.5)).toDF("id", "y"))
     openThenWarm(db)
@@ -541,7 +614,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("snapshot + upsert: time travel reads the pre-patch table exactly") {
-    val db = freshDbClean("snap_upsert")
+    val db = freshDb("snap_upsert")
     val base = spark.range(1000).select(col("id"), (col("id") % 10).as("v"))
     db.create(base)
     db.normalize(maxRowsPerFile = 200, sortBy = Seq("id"))
@@ -559,7 +632,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("snapshot survives a full rewrite and a delete; vacuum respects pins") {
-    val db = freshDbClean("snap_rewrite")
+    val db = freshDb("snap_rewrite")
     db.create(spark.range(500).select(col("id"), (col("id") * 2).as("v")))
     db.snapshot("v1")
     db.deleteWhere(col("id") < 100) // scoped or full rewrite — either path archives
@@ -581,7 +654,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("snapshot on a partitioned table keeps directory-encoded columns") {
-    val db = freshDbClean("snap_part")
+    val db = freshDb("snap_part")
     db.create(spark.range(300).select(col("id"), (col("id") % 3).cast("string").as("part")),
       partitionBy = Seq("part"))
     db.snapshot("p1")
@@ -593,7 +666,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("pruneSnapshots keeps the newest tags and reclaims unpinned bytes") {
-    val db = freshDbClean("snap_prune")
+    val db = freshDb("snap_prune")
     db.create(spark.range(200).select(col("id"), col("id").as("v")))
     db.snapshot("t1")
     db.deleteWhere(col("id") < 50)
@@ -616,7 +689,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("exportSnapshot replicates the as-of table into a fresh store") {
-    val db = freshDbClean("snap_export")
+    val db = freshDb("snap_export")
     db.create(spark.range(100).select(col("id"), (col("id") * 3).as("v")))
     db.snapshot("gold")
     db.upsert(Seq((7L, -1L)).toDF("id", "v"), "id")
@@ -626,7 +699,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("recover() restores a crash-archived original exactly (no loss, no dup)") {
-    val db = freshDbClean("snap_recover")
+    val db = freshDb("snap_recover")
     db.create(spark.range(100).select(col("id"), col("id").as("v")))
     // one file, ranged: 128 packs to ceil(100/(128-128/32)) = 1 partition.
     // (100 packed to TWO files under packPartitions' 1/32 headroom, and the
@@ -661,7 +734,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("applyRetention edges: no snapshots, age-only, maxCount=0 wipes and vacuums") {
-    val db = freshDbClean("retention_edges")
+    val db = freshDb("retention_edges")
     db.create(spark.range(100).select(col("id"), (col("id") % 7).as("v")))
     // policy on a table with no snapshots is a no-op, not an error
     assert(db.applyRetention(maxCount = 3) === Nil)
@@ -685,7 +758,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("graft-snapshot read-option source time-travels without the Scala API") {
-    val db = freshDbClean("v2source")
+    val db = freshDb("v2source")
     db.create(spark.range(2000).select(col("id"), (col("id") % 5).as("v")))
     db.snapshot("pre")
     db.upsert(spark.range(500).select(col("id"), (col("id") + 100).as("v")), "id")
@@ -724,7 +797,7 @@ class ParquetDatabaseSpec extends SparkSpec {
   }
 
   test("graft-snapshot source keeps partition columns and errors on the mixed shape") {
-    val db = freshDbClean("v2part")
+    val db = freshDb("v2part")
     db.create(spark.range(300).select(col("id"), (col("id") % 3).as("p")),
       partitionBy = Seq("p"))
     db.snapshot("pre")
@@ -750,7 +823,7 @@ class ParquetDatabaseSpec extends SparkSpec {
     // ONLY the partition with a packable tail, archiving its pinned file
     // while the other partitions' pinned files stay live: loud error
     // pointing at the API that can express it
-    val db2 = freshDbClean("v2part_mixed")
+    val db2 = freshDb("v2part_mixed")
     db2.create(spark.range(300).select(col("id"), (col("id") % 3).as("p"))
       .repartition(1), partitionBy = Seq("p"))
     db2.snapshot("mid")
