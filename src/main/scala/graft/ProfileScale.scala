@@ -181,7 +181,7 @@ object ProfileScale {
         noop(Dedup.minHashPairsAgainstStore(docs.filter(col("doc_id") % 10 === 0),
           "doc_id", "text", mhProbeDir, threshold = 0.8))),
       // a forced same-k rebalance: the whole-index rebuild from the
-      // `assigned` store and the staged swap (the maintenance step of the
+      // `assigned` store and its whole-tree commit (the maintenance step of the
       // llm_corpus benchmark workload), over an index built untimed
       "ivf_rebalance" -> (() =>
         Similarity.rebalanceIvfIndex(spark, rebalanceDir, force = true)),

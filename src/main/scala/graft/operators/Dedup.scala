@@ -554,7 +554,9 @@ object Dedup {
                         numBands: Int = 16, rowsPerBand: Int = 2,
                         shingleN: Int = 3): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(docs.sparkSession.sessionState.newHadoopConf()).delete(p, true)
+    val fs = p.getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
+    graft.sources.FileCommit.requireNoCommit(fs, p)
+    fs.delete(p, true)
     appendToMinHashStore(docs, idCol, textCol, dir, numBands, rowsPerBand, shingleN)
   }
 
@@ -562,18 +564,17 @@ object Dedup {
     * has dedup'd/kept them — the store should hold surviving docs). Params
     * are pinned by the store's `_params` marker.
     *
-    * Crash safety (the shared persisted-store protocol, cf.
-    * `DistinctSketch`'s retire-then-promote and `Similarity`'s pending-
-    * marker append): each append is one SEGMENT — `toks` and `bands` are
-    * staged together under `_staging/<uuid>` and made visible by a single
-    * atomic directory rename to `seg-<uuid>`, so readers never observe
-    * signatures without their band rows (the half-appended state the old
-    * two-append layout could crash into). A crash before the rename leaves
-    * only `_staging` debris, dropped by [[recoverMinHashStore]]; a crash
-    * after it is a completed append. With `batchMarker` set, replaying the
-    * same batch is a NO-OP when a committed segment already carries the
-    * marker (the marker file rides inside the segment, so data and marker
-    * commit in the same rename — re-delivery can't double-append).
+    * Each append is one SEGMENT — `toks` and `bands` staged together and
+    * made visible as `seg-<uuid>` by a [[graft.sources.FileCommit.append]],
+    * i.e. ONE directory rename, so readers never observe signatures without
+    * their band rows. Appends take no gate, so concurrent appends all
+    * commit; one aborts while a compaction holds the gate. A crash before
+    * the rename leaves only a stage sibling, which the quiesced
+    * `FileCommit.recover` drops; a crash after it is a completed append.
+    * With `batchMarker` set, replaying the same batch is a NO-OP when a
+    * committed segment already carries the marker (the marker file rides
+    * inside the segment, so data and marker commit in the same rename —
+    * re-delivery can't double-append).
     */
   def appendToMinHashStore(batch: DataFrame, idCol: String, textCol: String,
                            dir: String, numBands: Int = 16, rowsPerBand: Int = 2,
@@ -582,6 +583,7 @@ object Dedup {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(conf)
+    graft.sources.FileCommit.requireNoCommit(fs, root)
     // a store persisted by the pre-segment layout (root-level toks/ +
     // bands/) must be rebuilt, not appended to: segment readers only see
     // seg-* dirs, so a silent append here would make every later probe
@@ -601,21 +603,15 @@ object Dedup {
       segmentDirs(fs, root).exists(seg =>
         fs.exists(new org.apache.hadoop.fs.Path(seg, s"_batch-$m"))))
     if (alreadyCommitted) return
-    val segId = java.util.UUID.randomUUID.toString
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/_staging/$segId")
-    shingleHashSets(batch, idCol, textCol, shingleN)
-      .write.mode("overwrite").parquet(s"$staging/toks")
-    // band rows derive from the STAGED arrays — one shingle pass total
-    setBandRows(spark.read.parquet(s"$staging/toks"), numBands, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$staging/bands")
-    batchMarker.foreach { m =>
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, s"_batch-$m"), true)
-      out.close()
+    graft.sources.FileCommit.append(fs, root) { stage =>
+      val seg = new org.apache.hadoop.fs.Path(stage, s"seg-${java.util.UUID.randomUUID}")
+      shingleHashSets(batch, idCol, textCol, shingleN)
+        .write.mode("overwrite").parquet(s"$seg/toks")
+      // band rows derive from the STAGED arrays — one shingle pass total
+      setBandRows(spark.read.parquet(s"$seg/toks"), numBands, rowsPerBand)
+        .write.mode("overwrite").parquet(s"$seg/bands")
+      batchMarker.foreach(m => fs.create(new org.apache.hadoop.fs.Path(seg, s"_batch-$m"), true).close())
     }
-    val seg = new org.apache.hadoop.fs.Path(dir, s"seg-$segId")
-    if (!fs.rename(staging, seg))
-      throw new java.io.IOException(
-        s"appendToMinHashStore: failed to commit $staging to $seg — staged data intact")
   }
 
   /** Compact all committed segments of a MinHash store into ONE — the
@@ -628,193 +624,37 @@ object Dedup {
     * copied into the compacted segment, so a foreachBatch re-delivery of
     * ANY already-merged batch still no-ops afterwards (spec-asserted).
     *
-    * Protocol (retire-then-promote, the `DistinctSketch` family):
-    *  1. stage the compacted segment under `_staging/<uuid>`, including a
-    *     `_replaces` manifest naming the segments it subsumes;
-    *  2. RETIRE each replaced segment by renaming it under
-    *     `_retired/<uuid>/` — per-segment atomic, and the live set only
-    *     shrinks (no moment shows a doc's signatures twice);
-    *  3. PROMOTE the staged segment with one atomic rename to `seg-<uuid>`;
-    *  4. drop `_retired/<uuid>`.
-    * Every crash window is repaired by [[recoverMinHashStore]]: a partial
-    * retire rolls BACK (retired segments restored, staging dropped), a
-    * full retire that never promoted rolls FORWARD (promote, then drop
-    * retired), a promote that never cleaned up drops the leftovers.
-    *
-    * CONCURRENCY (round 11): compaction-vs-compaction is serialized by a
-    * create-no-overwrite `_compact_pending` mutex — the second compactor
-    * aborts loudly instead of corrupting the retire sequence. Concurrent
-    * APPENDS are safe by construction (a newly-committed segment is not in
-    * this compaction's `_replaces` manifest, so retire/promote never touch
-    * it — two-writer drill in ConcurrentSketchWriterSpec). PROBES must
-    * still quiesce: mid-retire the store is transiently incomplete for
-    * readers.
+    * The commit is a [[graft.sources.FileCommit.replace]] whose touched
+    * paths are the segment dirs it read, checked against their names: a
+    * peer compaction that replaced any of them aborts this one loudly, and
+    * a segment appended meanwhile is left in place. A crash is rolled back
+    * by the quiesced `FileCommit.recover`. Probes must pause while the
+    * segments move.
     *
     * @return number of segments replaced (0 = already compact, no-op).
     */
   def compactMinHashStore(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Int =
-    compactMinHashStoreImpl(spark, dir, crashAfterRetires = Int.MaxValue)
-
-  /** Test seam: `crashAfterRetires` = simulated crash (exception) once that
-    * many segments have been retired; Int.MaxValue = never.
-    */
-  private[graft] def compactMinHashStoreImpl(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      crashAfterRetires: Int): Int = {
-    val conf = spark.sessionState.newHadoopConf()
+                          dir: String): Int = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.sources.FileCommit.requireNoCommit(fs, root)
     val segs = segmentDirs(fs, root)
     if (segs.size <= 1) return 0
-    // COMPACTION MUTEX (round 11, the appendToIvfIndex create-no-overwrite
-    // pattern): two concurrent compactions list the same segments and the
-    // loser's retire renames fail mid-sequence — resolvable only by a
-    // quiesced recover. Fail the second compactor loudly at entry instead.
-    // Concurrent APPENDS remain safe without the mutex (a new segment is
-    // not in this compaction's _replaces manifest, so retire/promote never
-    // touch it); the marker only serializes compaction against compaction.
-    val mutex = new org.apache.hadoop.fs.Path(root, "_compact_pending")
-    if (!graft.sources.HadoopText.writeIfAbsent(fs, mutex,
-        java.util.UUID.randomUUID.toString))
-      throw new java.util.ConcurrentModificationException(
-        s"compactMinHashStore: another compaction is in flight on $dir " +
-          "(_compact_pending exists) — retry after it completes, or run " +
-          "recoverMinHashStore in a quiesced window if it crashed")
-    try compactUnderMutex(spark, dir, segs, crashAfterRetires)
-    finally fs.delete(mutex, false)
-  }
-
-  private def compactUnderMutex(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      segs: Seq[org.apache.hadoop.fs.Path], crashAfterRetires: Int): Int = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(conf)
-    val segId = java.util.UUID.randomUUID.toString
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/_staging/$segId")
-    spark.read.parquet(segs.map(p => s"$p/toks"): _*)
-      .write.mode("overwrite").parquet(s"$staging/toks")
-    spark.read.parquet(segs.map(p => s"$p/bands"): _*)
-      .write.mode("overwrite").parquet(s"$staging/bands")
-    // carry every replaced segment's batch markers forward
-    segs.foreach { seg =>
-      fs.listStatus(seg).filter(_.getPath.getName.startsWith("_batch-"))
-        .foreach { m =>
-          fs.create(new org.apache.hadoop.fs.Path(staging, m.getPath.getName),
-            true).close()
-        }
-    }
-    val replaces = segs.map(_.getName)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staging, "_replaces"), true)
-    try out.write(replaces.mkString("\n").getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val retired = new org.apache.hadoop.fs.Path(s"$dir/_retired/$segId")
-    fs.mkdirs(retired)
-    var done = 0
-    segs.foreach { seg =>
-      if (done >= crashAfterRetires)
-        throw new java.io.IOException(
-          s"compactMinHashStore: simulated crash after $done retire(s)")
-      if (!fs.rename(seg, new org.apache.hadoop.fs.Path(retired, seg.getName)))
-        throw new java.io.IOException(
-          s"compactMinHashStore: failed to retire $seg — run recoverMinHashStore")
-      done += 1
-    }
-    if (done >= crashAfterRetires)
-      throw new java.io.IOException(
-        s"compactMinHashStore: simulated crash after $done retire(s), before promote")
-    val seg = new org.apache.hadoop.fs.Path(dir, s"seg-$segId")
-    if (!fs.rename(staging, seg))
-      throw new java.io.IOException(
-        s"compactMinHashStore: failed to promote $staging — run recoverMinHashStore")
-    fs.delete(retired, true)
-    segs.size
-  }
-
-  /** Repair an interrupted [[appendToMinHashStore]] or
-    * [[compactMinHashStore]]. Append debris (staged-but-uncommitted
-    * segments with no `_replaces` manifest) is dropped — that batch never
-    * became visible, re-append it. Interrupted compactions resolve by
-    * their crash window: retired set == `_replaces` manifest → roll
-    * FORWARD (promote the staged compacted segment, drop the retired
-    * copies); anything less → roll BACK (restore retired segments, drop
-    * the staging); a promoted compaction's leftover `_retired` dir is
-    * dropped. Committed segments are never touched. Idempotent; returns
-    * the staging ids removed plus `forward-`/`rollback-`/`dropped-retired-`
-    * action tags for compaction repairs.
-    *
-    * QUIESCE CONTRACT (same as `ParquetDatabase.recover`): run only when no
-    * writer is live on this store — staging debris is indistinguishable
-    * from a live writer's in-flight staging, and deleting the latter
-    * corrupts or kills that writer.
-    */
-  def recoverMinHashStore(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val stagingRoot = new org.apache.hadoop.fs.Path(s"$dir/_staging")
-    val retiredRoot = new org.apache.hadoop.fs.Path(s"$dir/_retired")
-    val fs = stagingRoot.getFileSystem(conf)
-    val actions = Seq.newBuilder[String]
-    if (fs.exists(retiredRoot)) {
-      fs.listStatus(retiredRoot).foreach { st =>
-        val id = st.getPath.getName
-        val promoted = new org.apache.hadoop.fs.Path(dir, s"seg-$id")
-        val stg = new org.apache.hadoop.fs.Path(stagingRoot, id)
-        val manifest = new org.apache.hadoop.fs.Path(stg, "_replaces")
-        if (fs.exists(promoted)) {
-          // crash between promote and cleanup — the compacted data is live
-          fs.delete(st.getPath, true)
-          actions += s"dropped-retired-$id"
-        } else if (fs.exists(manifest)) {
-          val replaces = graft.sources.HadoopText.read(fs, manifest)
-            .split('\n').map(_.trim).filter(_.nonEmpty).toSet
-          val retired = fs.listStatus(st.getPath).map(_.getPath.getName).toSet
-          if (retired == replaces) {
-            // all replaced segments retired — finish the promote
-            if (!fs.rename(stg, promoted))
-              throw new java.io.IOException(
-                s"recoverMinHashStore: failed to promote $stg")
-            fs.delete(st.getPath, true)
-            actions += s"forward-$id"
-          } else {
-            // partial retire — restore and drop the staged compaction
-            retired.foreach { n =>
-              if (!fs.rename(new org.apache.hadoop.fs.Path(st.getPath, n),
-                  new org.apache.hadoop.fs.Path(dir, n)))
-                throw new java.io.IOException(
-                  s"recoverMinHashStore: failed to restore $n")
-            }
-            fs.delete(st.getPath, true)
-            fs.delete(stg, true)
-            actions += s"rollback-$id"
-          }
-        } else {
-          // retired dir with neither promote nor manifest: restore contents
-          fs.listStatus(st.getPath).foreach { c =>
-            fs.rename(c.getPath, new org.apache.hadoop.fs.Path(dir, c.getPath.getName))
-          }
-          fs.delete(st.getPath, true)
-          actions += s"rollback-$id"
-        }
+    val names = segs.map(_.getName)
+    graft.sources.FileCommit.replace(fs, root, names, names.mkString("\n"),
+      () => segmentDirs(fs, root).map(_.getName).filter(names.contains).mkString("\n")) { stage =>
+      val seg = new org.apache.hadoop.fs.Path(stage, s"seg-${java.util.UUID.randomUUID}")
+      spark.read.parquet(segs.map(p => s"$p/toks"): _*)
+        .write.mode("overwrite").parquet(s"$seg/toks")
+      spark.read.parquet(segs.map(p => s"$p/bands"): _*)
+        .write.mode("overwrite").parquet(s"$seg/bands")
+      // carry every replaced segment's batch markers forward
+      segs.foreach { s =>
+        fs.listStatus(s).filter(_.getPath.getName.startsWith("_batch-"))
+          .foreach(m => fs.create(new org.apache.hadoop.fs.Path(seg, m.getPath.getName), true).close())
       }
-      if (fs.exists(retiredRoot) && fs.listStatus(retiredRoot).isEmpty)
-        fs.delete(retiredRoot, true)
     }
-    if (fs.exists(stagingRoot)) {
-      val ids = fs.listStatus(stagingRoot).toSeq.map(_.getPath.getName)
-      fs.delete(stagingRoot, true)
-      actions ++= ids
-    }
-    // a compactor that DIED (not aborted) leaves the compaction mutex in
-    // place and blocks all future compactions; this is a quiesced sweep,
-    // so no live compactor can own it — release it
-    val mutex = new org.apache.hadoop.fs.Path(dir, "_compact_pending")
-    if (fs.exists(mutex)) {
-      fs.delete(mutex, false)
-      actions += "released-compact-mutex"
-    }
-    actions.result()
+    segs.size
   }
 
   private def segmentDirs(fs: org.apache.hadoop.fs.FileSystem,

@@ -17,25 +17,19 @@ import org.apache.spark.sql.functions._
   * paths — Datasketches' sparse→dense promotion happens at different
   * points — but both stay inside the bound; spec-asserted).
   *
-  * The persisted store is one parquet row per key — metadata-sized
-  * relative to the corpus — and rewrites via a retire-then-promote rename
-  * sequence that keeps a complete copy on disk at every step (see
-  * [[mergeBatchIntoStore]] for the crash-window analysis).
+  * The persisted store is one parquet row per key, hash-partitioned into
+  * `bucket=<b>` dirs — metadata-sized relative to the corpus. A batch
+  * merge rewrites only the buckets its keys hash into, and commits through
+  * the one store commit protocol ([[graft.sources.FileCommit]]); a store
+  * with `nBuckets = 1` is the flat form.
   *
-  * CONCURRENCY CONTRACT (round 11 — the single-writer restriction is
-  * lifted for the BUCKETED store): [[mergeBatchIntoBucketedStore]] carries
-  * ParquetDatabase's fingerprint-CAS + unique-staging kernel per bucket —
-  * concurrent mergers of DIFFERENT batches either interleave cleanly
-  * (disjoint buckets) or one aborts with a loud
-  * ConcurrentModificationException on the contended bucket, and the retry
-  * converges because HLL union is idempotent on already-folded buckets
-  * (two-writer stress drill in ConcurrentSketchWriterSpec). Recovery stays
-  * batch REPLAY (re-run the merge), plus [[recoverBucketedStore]] for
-  * quiesced debris sweeps. The non-bucketed [[mergeBatchIntoStore]] keeps
-  * the single-writer contract (fixed staging names) — its intended owner
-  * is a single streaming query
-  * ([[graft.streaming.EventStreams.distinctStoreStream]], batchId-guarded
-  * against re-delivery); use the bucketed form for shared stores.
+  * CONCURRENCY CONTRACT: concurrent mergers of different batches either
+  * both commit or one aborts with a loud ConcurrentModificationException —
+  * on a touched bucket a peer rewrote, or on the shared commit gate — and
+  * the retry converges because HLL union is idempotent on already-folded
+  * buckets (two-writer stress drill in ConcurrentSketchWriterSpec). A
+  * crashed merge is rolled back by the quiesced `FileCommit.recover`;
+  * replaying the batch then folds it.
   */
 object DistinctSketch {
 
@@ -57,123 +51,65 @@ object DistinctSketch {
   def estimates(sketches: DataFrame, out: String = "distinct_est"): DataFrame =
     sketches.withColumn(out, hll_sketch_estimate(col("sketch")))
 
-  def buildStore(df: DataFrame, keys: Seq[String], itemCol: String, dir: String,
-      lgK: Int = DefaultLgK): Unit =
-    sketchByKey(df, keys, itemCol, lgK).write.mode("overwrite").parquet(dir)
-
-  /** Fold one new batch into the persisted store: sketch the batch, union
-    * with the stored sketches, swap via retire-then-promote. Cost is the
-    * batch scan + a keys-sized merge — history is never re-read beyond its
-    * sketches.
-    *
-    * Swap protocol (each step is one FS rename, but the SEQUENCE is not
-    * atomic): write `dir__sketch_tmp`, rename live aside to `dir__old`,
-    * promote tmp → live, delete the retired dir. A crash between the
-    * retire and promote steps leaves no live dir but BOTH complete copies
-    * on disk — `dir__old` (pre-merge) and `dir__sketch_tmp` (post-merge) —
-    * so recovery is a rename of either, never a rebuild; a crash anywhere
-    * else leaves the live dir intact. The old delete-then-rename order had
-    * a window with only the tmp copy under a non-live name.
-    */
-  def mergeBatchIntoStore(spark: SparkSession, batch: DataFrame, keys: Seq[String],
-      itemCol: String, dir: String, lgK: Int = DefaultLgK): Unit = {
-    val merged = mergeSketchTables(
-      spark.read.parquet(dir), sketchByKey(batch, keys, itemCol, lgK), keys)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__sketch_tmp")
-    val old = new org.apache.hadoop.fs.Path(dir + "__old")
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(old, true) // debris from an earlier crash
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(s"sketch store retire failed: $live -> $old")
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(
-        s"sketch store promote failed: $tmp -> $live (pre-merge copy intact at $old)")
-    fs.delete(old, true)
-  }
-
   def readEstimates(spark: SparkSession, dir: String, out: String = "distinct_est"): DataFrame =
     estimates(spark.read.parquet(dir), out).drop("sketch")
 
   // ---- bucketed store: the growing-key-set compaction story --------------
   //
-  // The flat store rewrites every key's sketch per merge — O(all keys) per
-  // refresh, which stops scaling once the key set itself is large (per-user
+  // Rewriting every key's sketch per merge is O(all keys) per refresh,
+  // which stops scaling once the key set itself is large (per-user
   // sketches over a 100 TB corpus: 10⁸ keys × 4 KB = a 400 GB rewrite to
   // fold in a 1-key batch). The bucketed layout hash-partitions keys into
   // `bucket=<b>` dirs (b = pmod(xxhash64(keys), nBuckets)); a batch merge
   //   1. sketches the batch (batch-sized scan, keys-sized result),
   //   2. reads ONLY the store buckets the batch's keys hash into
   //      (partition-pruned scan — untouched buckets are never opened),
-  //   3. rewrites only those buckets, each via the same retire-then-promote
-  //      rename sequence as the flat store.
+  //   3. replaces only those buckets' files in one commit.
   // Refresh cost is O(touched-bucket keys · sketch), not O(all keys).
-  //
-  // Crash posture: per-bucket promotion is sequential, so a crash can leave
-  // a MIX of pre- and post-merge buckets. Every bucket stays internally
-  // consistent, and replaying the SAME batch converges the store: HLL union
-  // is idempotent on identical inputs (re-merging a batch into a bucket
-  // that already folded it changes nothing), so recovery is "re-run the
-  // merge", never a rebuild — spec-asserted. Dead keys vacuum per bucket.
 
   private def bucketCol(keys: Seq[String], nBuckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
 
   def buildBucketedStore(df: DataFrame, keys: Seq[String], itemCol: String, dir: String,
-      nBuckets: Int = 64, lgK: Int = DefaultLgK): Unit =
+      nBuckets: Int = 64, lgK: Int = DefaultLgK): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    graft.sources.FileCommit.requireNoCommit(
+      root.getFileSystem(df.sparkSession.sessionState.newHadoopConf()), root)
     sketchByKey(df, keys, itemCol, lgK)
       .withColumn("bucket", bucketCol(keys, nBuckets))
       .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+  }
 
   /** Fold one batch into the bucketed store, rewriting only touched
     * buckets. `nBuckets` must match the build (bucket ids are recomputed
     * from the same hash).
     *
-    * MULTI-WRITER SAFE since round 11 (the ParquetDatabase fingerprint-CAS
-    * + unique-staging kernel, applied per bucket): staging is
-    * invocation-unique, and each touched bucket commits through
-    * retire-then-promote where the retire RENAME is the exclusivity lock
-    * (two writers racing one bucket — exactly one rename succeeds) and a
-    * post-lock fingerprint re-check of the moved-aside tree catches a
-    * competitor that fully committed inside the read-to-rename gap. Either
-    * conflict aborts with [[java.util.ConcurrentModificationException]]
-    * and NOTHING lost: buckets promoted before the conflict carry this
-    * batch's fold, the conflicted bucket was restored or never touched —
-    * and the documented retry ("re-run the merge") converges because HLL
-    * union is idempotent on already-folded buckets. A moved-aside copy
-    * whose live bucket is MISSING makes the merge abort LOUDLY at entry
-    * (it is either a live competitor's ms-wide swap window — retry — or a
-    * crashed writer, which only the quiesced [[recoverBucketedStore]] may
-    * repair): an entry-time auto-restore was tried and REVERTED — it
-    * cannot distinguish the two, and restoring a live competitor's
-    * moved-aside bucket makes its promote rename NEST
-    * (`bucket=N/bucket=N`), corrupting the store (caught by the two-writer
-    * stress drill).
+    * The commit is a [[graft.sources.FileCommit.replace]] whose touched
+    * paths are the files of the touched `bucket=` dirs, checked against
+    * their (name, length, mtime) listing taken before the store is read:
+    * a peer's commit on any touched bucket aborts this merge. A touched
+    * bucket moves in as one directory rename.
     */
-  /** Test seam: runs after the entry orphan check and before the per-bucket
-    * identity capture — the TOCTOU window where a competitor's retire can
-    * make a touched bucket read as empty.
-    */
-  private[operators] var postEntryCheckHook: () => Unit = () => ()
-
   def mergeBatchIntoBucketedStore(spark: SparkSession, batch: DataFrame, keys: Seq[String],
       itemCol: String, dir: String, nBuckets: Int = 64, lgK: Int = DefaultLgK): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    requireNoOrphanedBuckets(fs, dir)
-    postEntryCheckHook()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.sources.FileCommit.requireNoCommit(fs, root)
     val batchSk = sketchByKey(batch, keys, itemCol, lgK)
       .withColumn("bucket", bucketCol(keys, nBuckets))
       .localCheckpoint() // keys-sized; feeds the touched-set and the merge
     // ≤ nBuckets values — metadata-sized by construction
     val touched = batchSk.select("bucket").distinct().collect()
       .map(_.getLong(0)).sorted
-    // entry capture: per-bucket identity BEFORE the read the merge is
-    // based on (rename preserves names/lengths, so the capture survives
-    // the retire and the post-lock re-check can compare)
-    val capture: Map[Long, String] =
-      touched.map(b => b -> bucketFingerprint(fs, new org.apache.hadoop.fs.Path(dir, s"bucket=$b"))).toMap
+    // the touched buckets' files, listed BEFORE the read the merge is
+    // based on: the commit's fingerprint
+    def listing(): Seq[String] = touched.toSeq.flatMap { b =>
+      val d = new org.apache.hadoop.fs.Path(root, s"bucket=$b")
+      try fs.listStatus(d).filter(_.isFile).toSeq.sortBy(_.getPath.getName).map(st =>
+        s"bucket=$b/${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+    val entry = listing()
     val existing = spark.read.parquet(dir)
       .filter(col("bucket").isin(touched: _*))
       .select((keys :+ "sketch" :+ "bucket").map(col): _*)
@@ -181,166 +117,9 @@ object DistinctSketch {
       .unionByName(batchSk.select((keys :+ "sketch" :+ "bucket").map(col): _*))
       .groupBy((keys :+ "bucket").map(col): _*)
       .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
-    // invocation-unique staging: a shared name lets a concurrent merger's
-    // overwrite replace this writer's staged bytes pre-promote (the
-    // ParquetDatabase lost-update rationale)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmpRoot = new org.apache.hadoop.fs.Path(dir + s"__sketch_tmp_$token")
-    fs.delete(tmpRoot, true)
-    merged.write.partitionBy("bucket").parquet(tmpRoot.toString)
-    try {
-      touched.foreach { b =>
-        val live = new org.apache.hadoop.fs.Path(dir, s"bucket=$b")
-        val tmp = new org.apache.hadoop.fs.Path(tmpRoot, s"bucket=$b")
-        // retired copy lives OUTSIDE the store root (a sibling named
-        // bucket=N__old inside it would parse as another partition) and is
-        // WRITER-unique, so two writers' crash debris cannot collide
-        val old = new org.apache.hadoop.fs.Path(dir + s"__old_bucket_${b}_$token")
-        if (!fs.exists(tmp))
-          throw new java.io.IOException(s"merged write produced no dir for touched bucket $b")
-        if (fs.exists(live)) {
-          if (!fs.rename(live, old)) {
-            // the retire rename is the lock: losing it means another merger
-            // owns this bucket right now
-            throw new java.util.ConcurrentModificationException(
-              s"optimistic-concurrency conflict on $dir bucket $b: another merger's " +
-                "swap is in flight. Re-run the merge — HLL union is idempotent on " +
-                "buckets this batch already folded into.")
-          }
-        } else if (capture(b).nonEmpty) {
-          // the bucket existed at our read and is gone now: a competitor
-          // holds it mid-swap. Skipping the retire and promoting anyway
-          // would collide with ITS promote (the nesting hazard) — abort.
-          throw new java.util.ConcurrentModificationException(
-            s"optimistic-concurrency conflict on $dir bucket $b: the bucket " +
-              "vanished between this merge's read and its swap (a competitor is " +
-              "mid-swap). Re-run the merge.")
-        } else if (orphanedBuckets(fs, dir).exists(_._1 == b.toString)) {
-          // capture(b) was empty too — but only because the competitor's
-          // retire landed in the gap between the entry orphan check and our
-          // capture (TOCTOU): its moved-aside copy holds the bucket's prior
-          // sketch mass, our merge is batch-only. Promoting would strand
-          // that mass — if the competitor crashes, recoverBucketedStore
-          // sees OUR live bucket and drops the copy as post-promote debris,
-          // silently losing distinct-count mass. Abort instead.
-          throw new java.util.ConcurrentModificationException(
-            s"optimistic-concurrency conflict on $dir bucket $b: a moved-aside " +
-              "copy appeared between this merge's entry check and its swap (a " +
-              "competitor retired the bucket mid-merge). Re-run the merge.")
-        }
-        // post-lock re-check: a competitor that fully committed between our
-        // read and our retire left content our merge did not fold — put it
-        // back and abort, else their fold is silently lost
-        if (fs.exists(old) && bucketFingerprint(fs, old) != capture(b)) {
-          if (!fs.rename(old, live))
-            throw new java.io.IOException(
-              s"bucket $b conflict detected but restore $old -> $live failed — " +
-                "run recoverBucketedStore")
-          throw new java.util.ConcurrentModificationException(
-            s"optimistic-concurrency conflict on $dir bucket $b: another merger " +
-              "committed between this merge's read and its swap. Bucket restored " +
-              "untouched — re-run the merge.")
-        }
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(
-            s"bucket promote failed: $tmp -> $live (pre-merge copy at $old)")
-        // nest guard (the ParquetDatabase lesson): a promote rename whose
-        // destination reappeared lands INSIDE it instead of failing —
-        // un-nest our stale fold and abort rather than leave a corrupt
-        // partition tree behind
-        val nested = new org.apache.hadoop.fs.Path(live, s"bucket=$b")
-        if (fs.exists(nested)) {
-          // the reappeared live tree is authoritative (whoever recreated it
-          // owns the bucket); our fold is stale — discard it, leave our
-          // moved-aside copy for the quiesced sweep, abort loudly
-          fs.delete(nested, true)
-          throw new java.util.ConcurrentModificationException(
-            s"optimistic-concurrency conflict on $dir bucket $b: the promote " +
-              "rename landed inside a competitor's tree and was un-nested. " +
-              "Re-run the merge.")
-        }
-        fs.delete(old, true)
-      }
-    } finally fs.delete(tmpRoot, true)
-  }
-
-  /** Order-independent identity of one bucket dir: sorted (name, length)
-    * of its data files — rename-stable, metadata-priced. Empty/missing
-    * bucket → "". */
-  private def bucketFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      bucket: org.apache.hadoop.fs.Path): String =
-    if (!fs.exists(bucket)) ""
-    else fs.listStatus(bucket).iterator
-      .filter(_.isFile)
-      .map(st => s"${st.getPath.getName}:${st.getLen}")
-      .toSeq.sorted.mkString("|")
-
-  /** Entry guard: a moved-aside copy whose live bucket is MISSING means a
-    * writer is mid-swap RIGHT NOW (retry) or crashed there (quiesced
-    * repair) — either way this merge must not read the store (the bucket
-    * would read as empty and the fold would silently lose its sketches),
-    * and it must NOT auto-restore: resurrecting a live competitor's
-    * moved-aside bucket makes its promote rename nest and corrupts the
-    * partition tree. Loud and retryable instead.
-    */
-  private def requireNoOrphanedBuckets(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
-    orphanedBuckets(fs, dir).headOption.foreach { case (b, copies) =>
-      throw new java.util.ConcurrentModificationException(
-        s"bucketed store $dir: bucket $b is missing with moved-aside cop" +
-          s"${if (copies.size == 1) "y" else "ies"} ${copies.mkString(", ")} — a merger " +
-          "is mid-swap (retry) or crashed there (run recoverBucketedStore in a " +
-          "quiesced window)")
+    graft.sources.FileCommit.replace(fs, root, entry.map(_.takeWhile(_ != '|')),
+      entry.mkString("\n"), () => listing().mkString("\n")) { stage =>
+      merged.write.partitionBy("bucket").parquet(stage.toString)
     }
-
-  /** Buckets whose live dir is missing but a moved-aside copy exists,
-    * with their copies. Metadata-sized (one parent listing). */
-  private def orphanedBuckets(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[(String, Seq[org.apache.hadoop.fs.Path])] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val parent = base.getParent
-    if (parent == null || !fs.exists(parent)) return Nil
-    val prefix = base.getName + "__old_bucket_"
-    fs.listStatus(parent).iterator.map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).toSeq
-      .groupBy(_.getName.stripPrefix(prefix).split('_').head).toSeq
-      .filter { case (b, _) =>
-        !fs.exists(new org.apache.hadoop.fs.Path(dir, s"bucket=$b")) }
-      .sortBy(_._1)
-  }
-
-  /** QUIESCED restore of crashed-mid-swap buckets (retired but never
-    * promoted): rename the single moved-aside copy back into place.
-    * Ambiguity — several copies for one missing bucket — fails loudly.
-    */
-  private def restoreMissingBuckets(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit =
-    orphanedBuckets(fs, dir).foreach { case (b, copies) =>
-      if (copies.size > 1)
-        throw new java.io.IOException(
-          s"bucketed store $dir: bucket $b is missing with ${copies.size} moved-aside " +
-            s"copies (${copies.mkString(", ")}) — ambiguous; resolve manually")
-      fs.rename(copies.head, new org.apache.hadoop.fs.Path(dir, s"bucket=$b"))
-    }
-
-  /** Quiesced maintenance sweep (the ParquetDatabase.recover contract: run
-    * only with no writer live on this store): restores missing buckets
-    * from moved-aside copies, then drops crash debris — moved-aside copies
-    * whose live bucket exists (post-promote crashes) and leftover
-    * `__sketch_tmp_*` stagings. Idempotent; returns the actions taken.
-    */
-  def recoverBucketedStore(spark: SparkSession, dir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val parent = base.getParent
-    if (parent == null || !fs.exists(parent)) return Nil
-    val actions = Seq.newBuilder[String]
-    restoreMissingBuckets(fs, dir)
-    fs.listStatus(parent).iterator.map(_.getPath)
-      .filter(p => p.getName.startsWith(base.getName + "__old_bucket_") ||
-        p.getName.startsWith(base.getName + "__sketch_tmp_") ||
-        p.getName == base.getName + "__sketch_tmp")
-      .foreach { p =>
-        if (fs.exists(p)) { fs.delete(p, true); actions += s"dropped $p" }
-      }
-    actions.result()
   }
 }

@@ -483,13 +483,11 @@ object Similarity {
                           sizeRule: Long => Int,
                           kmeansIterations: Int = 2): (Long, Int) = {
     graft.functions.GraftFunctions.register(spark)
-    // an interrupted append's pending marker resolves to a consistent
-    // fingerprint first — without this, a crashed-but-landed append reads
-    // as stale and triggers a full rebuild where a marker repair suffices.
-    // ensure IS quiesced maintenance (a stale index is rebuilt in place,
-    // which no protocol can reconcile with live appenders), so resolving
-    // markers here cannot race a live writer.
-    recoverIvfIndex(spark, dir)
+    // an interrupted commit rolls back first, so the fingerprint compared
+    // below is a committed one. ensure IS quiesced maintenance (a stale
+    // index is rebuilt in place, which no protocol can reconcile with live
+    // appenders), so recovering here cannot race a live writer.
+    graft.sources.FileCommit.recover(spark, dir)
     val idRow = vectors.agg(
       count(lit(1)), bit_xor(xxhash64(col(idCol)))).collect()(0)
     val n = idRow.getLong(0)
@@ -509,10 +507,9 @@ object Similarity {
     if (!current.contains(fp)) {
       val mat = kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations)
       persistIvfIndex(indexOf(vectors, idCol, vecCol, mat), dir)
-      graft.sources.HadoopText.write(fs, fpPath, fp)
       // the written tree is the newest version and its matrix is `mat`:
       // hold it open, so the first probe reads no centroids
-      installVersion(spark, fs, dir, fp, mat)
+      installVersion(spark, fs, dir, fp, writeFingerprint(fs, dir, fp), mat)
     }
     (n, numCentroids)
   }
@@ -536,177 +533,101 @@ object Similarity {
     * `ensureIvfIndex` over the grown corpus recognizes the appended index
     * as current instead of rebuilding. Returns the rows appended.
     *
-    * MULTI-WRITER (round 11): concurrent ingest ticks are CAS-gated by the
-    * `_append_pending` marker, acquired create-no-overwrite BEFORE the
-    * store state is read (acquisition-then-read, so a competitor's commit
-    * can never be composed over). The loser aborts with a loud
-    * ConcurrentModificationException and a retry re-reads and converges —
-    * drilled by the two-writer stress in ConcurrentSketchWriterSpec. A
-    * crashed holder's marker is resolved only by the QUIESCED
-    * [[recoverIvfIndex]] (the streaming owner runs it at stream start);
-    * a live append never resolves markers, because a marker it did not
-    * create may belong to a live competitor mid-commit.
+    * The commit is a [[graft.sources.FileCommit.replace]]: the batch's new
+    * `assigned` files plus a new `_fingerprint` replace the old
+    * `_fingerprint`, checked against the `_fingerprint` (text and mtime)
+    * the append composed over — every IVF commit replaces that file, so a
+    * peer's append or rebalance in between aborts this one with a loud
+    * ConcurrentModificationException, and a retry re-reads and converges.
+    * The new fingerprint moves in after the new files, so a probe racing
+    * the append answers at the version before it or after it. A crashed
+    * append is rolled back by the quiesced `FileCommit.recover`, and the
+    * stream re-delivers its batch.
     */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        newVectors: DataFrame, idCol: String, vecCol: String,
                        batchMarker: Option[Long] = None): Long = {
     graft.functions.GraftFunctions.register(spark)
-    val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fpPath = new org.apache.hadoop.fs.Path(root, "_fingerprint")
     val fs = fpPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // A missing fingerprint beside `__rebalance_*` siblings is a RETRYABLE
-    // CONFLICT, not a repair opportunity (round 13, closing the advisor's
-    // window): a live rebalance is between its two renames for milliseconds
-    // with exactly this signature (dir retired, complete stage waiting), and
-    // that window is indistinguishable from a crashed swap. The round-12
-    // posture ran recoverIvfRebalance here, which ROLLED THE LIVE SWAP
-    // FORWARD — the swap committed, but the rebalancer's own promote rename
-    // then failed and it reported a spurious "failed to promote"; concurrent
-    // entry-recovers also raced each other's sibling sweeps. Now the append
-    // aborts loudly and the retry rides through the window (the mutex-drill
-    // pattern); a genuinely crashed swap is the operator's explicit quiesced
-    // recoverIvfIndex, same as crashed append markers and healthy-tree
-    // debris — a live append never resolves ANY state it did not create.
-    if (!fs.exists(fpPath)) requireNoSwapInFlight(fs, dir, "appendToIvfIndex")
-    require(fs.exists(fpPath),
-      s"appendToIvfIndex: no fingerprinted index at $dir — build with ensureIvfIndex first")
-    val pendingPath = new org.apache.hadoop.fs.Path(dir, "_append_pending")
-    // ACQUIRE BEFORE READING STORE STATE: the marker is the store's commit
-    // mutex (create-no-overwrite = the CAS primitive). Reading the
-    // fingerprint first would let a competitor commit between the read and
-    // the acquisition, and this append would compose its new identity over
-    // a stale base — a lost update. Losers abort loudly and retry.
-    if (!graft.sources.HadoopText.writeIfAbsent(fs, pendingPath, "acquiring"))
-      throw new java.util.ConcurrentModificationException(
-        s"appendToIvfIndex: another append (or a rebalance — it claims the " +
-          s"same mutex) is in flight on $dir " +
-          "(_append_pending exists) — retry after it completes, or run " +
-          "recoverIvfIndex in a quiesced window if the holder crashed")
-    // EVERYTHING between mutex acquisition and the identity-pair write runs
-    // under a release-on-failure guard: the marker still holds only
-    // "acquiring" (nothing staged), so deleting it on an abort is safe —
-    // and NOT deleting it (a malformed fingerprint field, a failed batch
-    // aggregate) would wedge every later appender at the gate until a
-    // quiesced recoverIvfIndex, misreporting an IO/parse error as a
-    // concurrency conflict.
-    val staged: Option[(Long, String, IvfVersion)] =
-      try {
-        // the version this append composes over, held open: its centroid
-        // matrix assigns the batch without re-reading the centroids
-        val version = openIvfIndex(spark, dir)
-        val fields = version.fingerprint.split('|').toSeq
-        val kv = fields.collect { case f if f.contains("=") =>
-          val Array(k, v) = f.split("=", 2); k -> v
-        }.toMap
-        // exactly-once under foreachBatch re-delivery: the LAST applied batch
-        // id lives INSIDE the fingerprint, so it commits in the same atomic
-        // write as the append's visibility and the crash protocol preserves
-        // the right semantics in both directions — roll-forward restores the
-        // marker (re-delivery no-ops), roll-back drops it (re-delivery
-        // re-applies). Structured Streaming only ever re-delivers the most
-        // recent uncommitted batch, so one monotone id suffices as the ledger
-        // — and a marker STRICTLY below it can only mean the stream's
-        // checkpoint and this index are no longer a pair (reset/foreign
-        // checkpoint restarting ids at 0): fail loudly, because silently
-        // no-opping would drop genuinely new data batch after batch.
-        val lastBatch = kv.get("lastBatch").map(_.toLong).getOrElse(-1L)
-        if (batchMarker.exists(_ == lastBatch)) None // clean no-op
-        else {
-          batchMarker.foreach { b =>
-            if (b < lastBatch)
-              throw new IllegalStateException(
-                s"appendToIvfIndex: batch $b is older than the index's ledger " +
-                  s"(lastBatch=$lastBatch at $dir) — the streaming checkpoint and this " +
-                  "index are mismatched; re-pair them or rebuild the index")
-          }
-          // batch identity BEFORE any write: the pending marker must name
-          // both the state being left and the state being entered, so a
-          // crash at any point is resolvable by comparing the store's
-          // ACTUAL ids to the two.
-          val idRow = newVectors.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).collect()(0)
-          val nBatch = idRow.getLong(0)
-          val xorBatch = if (idRow.isNullAt(1)) 0L else idRow.getLong(1)
-          val bumped = fields.map {
-            case f if f.startsWith("n=") => s"n=${kv("n").toLong + nBatch}"
-            case f if f.startsWith("xor=") => s"xor=${kv("xor").toLong ^ xorBatch}"
-            case f => f
-          }
-          val newFp = (batchMarker match {
-            case None => bumped
-            case Some(b) =>
-              if (bumped.exists(_.startsWith("lastBatch=")))
-                bumped.map { case f if f.startsWith("lastBatch=") => s"lastBatch=$b"; case f => f }
-              else bumped :+ s"lastBatch=$b"
-          }).mkString("|")
-          // the owned marker now names the (old, new) identity pair — a
-          // crash from here on is resolvable by comparing the store's
-          // ACTUAL ids to the two (recoverIvfIndex)
-          writeSmallText(fs, pendingPath, s"${fields.mkString("|")}\n$newFp")
-          Some((nBatch, newFp, version))
-        }
-      } catch { case t: Throwable => fs.delete(pendingPath, false); throw t }
-    if (staged.isEmpty) {
-      fs.delete(pendingPath, false) // clean no-op: release the mutex
-      return 0L
+    graft.sources.FileCommit.requireNoCommit(fs, root)
+    if (!fs.exists(fpPath)) missingFingerprint(fs, root, "appendToIvfIndex")
+    // the version this append composes over, held open: its centroid
+    // matrix assigns the batch without re-reading the centroids
+    val version = graft.sources.FileCommit.conflictIfVanished(fs, root, "read")(
+      openIvfIndex(spark, dir))
+    if (version.fingerprint.isEmpty) missingFingerprint(fs, root, "appendToIvfIndex")
+    val fields = version.fingerprint.split('|').toSeq
+    val kv = fields.collect { case f if f.contains("=") =>
+      val Array(k, v) = f.split("=", 2); k -> v
+    }.toMap
+    // exactly-once under foreachBatch re-delivery: the LAST applied batch
+    // id lives INSIDE the fingerprint, so it commits in the same commit as
+    // the append's files, and a crashed append rolls back with its ledger
+    // (re-delivery re-applies). Structured Streaming only ever re-delivers
+    // the most recent uncommitted batch, so one monotone id suffices as the
+    // ledger — and a marker STRICTLY below it can only mean the stream's
+    // checkpoint and this index are no longer a pair (reset/foreign
+    // checkpoint restarting ids at 0): fail loudly, because silently
+    // no-opping would drop genuinely new data batch after batch.
+    val lastBatch = kv.get("lastBatch").map(_.toLong).getOrElse(-1L)
+    if (batchMarker.exists(_ == lastBatch)) return 0L // clean no-op
+    batchMarker.foreach { b =>
+      if (b < lastBatch)
+        throw new IllegalStateException(
+          s"appendToIvfIndex: batch $b is older than the index's ledger " +
+            s"(lastBatch=$lastBatch at $dir) — the streaming checkpoint and this " +
+            "index are mismatched; re-pair them or rebuild the index")
     }
-    val (nBatch, newFp, version) = staged.get
-    writeAssigned(s"$dir/assigned", assignCells(spread(newVectors), idCol, vecCol, version.matrix))
-    writeSmallText(fs, fpPath, newFp)
-    // still under the mutex, so the fingerprint just written is the newest
-    // version: it keeps the matrix (appends never touch `centroids`) and
-    // lists `assigned` afresh on its first probe
-    installVersion(spark, fs, dir, newFp, version.matrix)
-    fs.delete(pendingPath, false)
+    val idRow = newVectors.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).collect()(0)
+    val nBatch = idRow.getLong(0)
+    val xorBatch = if (idRow.isNullAt(1)) 0L else idRow.getLong(1)
+    val bumped = fields.map {
+      case f if f.startsWith("n=") => s"n=${kv("n").toLong + nBatch}"
+      case f if f.startsWith("xor=") => s"xor=${kv("xor").toLong ^ xorBatch}"
+      case f => f
+    }
+    val newFp = (batchMarker match {
+      case None => bumped
+      case Some(b) =>
+        if (bumped.exists(_.startsWith("lastBatch=")))
+          bumped.map { case f if f.startsWith("lastBatch=") => s"lastBatch=$b"; case f => f }
+        else bumped :+ s"lastBatch=$b"
+    }).mkString("|")
+    var mtime = 0L
+    graft.sources.FileCommit.replace(fs, root, Seq("_fingerprint"),
+      s"${version.mtime}|${version.fingerprint}", () => fingerprintIdentity(fs, fpPath)) { stage =>
+      writeAssigned(s"$stage/assigned", assignCells(spread(newVectors), idCol, vecCol, version.matrix))
+      mtime = writeFingerprint(fs, stage.toString, newFp)
+    }
+    // the committed version keeps the matrix (appends never touch
+    // `centroids`) and lists `assigned` afresh on its first probe
+    installVersion(spark, fs, dir, newFp, mtime, version.matrix)
     nBatch
   }
 
-  /** Repair an interrupted [[appendToIvfIndex]] — the persisted-index
-    * member of the shared store-recovery protocol (MinHash segments,
-    * DistinctSketch retire-then-promote): the `_append_pending` marker
-    * written before any data names the (n, xor) identity of both the
-    * pre-append and post-append states, so recovery re-derives the
-    * assigned store's ACTUAL identity with one column-pruned id scan and
-    * rolls the fingerprint FORWARD (batch landed — the job committed its
-    * files before the crash) or BACK (nothing landed — Spark's job commit
-    * is the visibility point, an uncommitted write left only `_temporary`
-    * debris that parquet readers ignore). Any other actual identity fails
-    * loudly. Idempotent; no-op without a marker. Returns the action taken.
+  /** An IVF commit found no `_fingerprint`. While a peer's commit has it
+    * moved aside, that is a retryable conflict; otherwise there is no index.
     */
-  def recoverIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Option[String] = {
-    // an interrupted REBALANCE swap leaves the index dir itself missing or
-    // shadowed by staging siblings — resolve that first, so the append
-    // repair below always operates on a present, consistent tree
-    recoverIvfRebalance(spark, dir)
-    val pendingPath = new org.apache.hadoop.fs.Path(dir, "_append_pending")
-    val fs = pendingPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(pendingPath)) None
-    else if (!readSmallText(fs, pendingPath).contains('\n')) {
-      // crash between mutex acquisition and the identity-pair write:
-      // nothing was staged, the marker is just a held lock — release it
-      fs.delete(pendingPath, false)
-      Some("released-unstarted-append")
-    } else {
-      val Array(oldFp, newFp) = readSmallText(fs, pendingPath).split('\n')
-      def identity(fp: String): (Long, Long) = {
-        val kv = fp.split('|').collect { case f if f.contains("=") =>
-          val Array(k, v) = f.split("=", 2); k -> v
-        }.toMap
-        (kv("n").toLong, kv("xor").toLong)
-      }
-      val idRow = spark.read.parquet(s"$dir/assigned")
-        .agg(count(lit(1)), bit_xor(xxhash64(col("nid")))).collect()(0)
-      val actual = (idRow.getLong(0), if (idRow.isNullAt(1)) 0L else idRow.getLong(1))
-      val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
-      val action =
-        if (actual == identity(newFp)) { writeSmallText(fs, fpPath, newFp); "rolled-forward" }
-        else if (actual == identity(oldFp)) { writeSmallText(fs, fpPath, oldFp); "rolled-back" }
-        else throw new IllegalStateException(
-          s"recoverIvfIndex: assigned store at $dir matches neither the pre-append " +
-            s"($oldFp) nor the post-append ($newFp) identity — actual (n, xor) = $actual; " +
-            "rebuild the index (drop the dir, ensureIvfIndex)")
-      fs.delete(pendingPath, false)
-      Some(action)
-    }
+  private def missingFingerprint(fs: org.apache.hadoop.fs.FileSystem,
+                                 root: org.apache.hadoop.fs.Path, op: String): Nothing = {
+    graft.sources.FileCommit.requireNoCommit(fs, root)
+    if (fs.exists(new org.apache.hadoop.fs.Path(root, "_fingerprint")))
+      throw new java.util.ConcurrentModificationException(
+        s"$op: a commit on $root replaced _fingerprint while this one read it — retry")
+    throw new IllegalArgumentException(
+      s"$op: no fingerprinted index at $root — build with ensureIvfIndex first")
   }
+
+  /** The committed index version as the IVF commits check it: the
+    * `_fingerprint` file's mtime and text ("" while it is absent). Every
+    * IVF commit replaces that file, so any commit changes this.
+    */
+  private def fingerprintIdentity(fs: org.apache.hadoop.fs.FileSystem,
+                                  fpPath: org.apache.hadoop.fs.Path): String =
+    try s"${fs.getFileStatus(fpPath).getModificationTime}|${graft.sources.HadoopText.read(fs, fpPath)}"
+    catch { case _: java.io.FileNotFoundException => "" }
 
   /** Health report of a persisted (possibly streaming-maintained) index —
     * the audit [[appendToIvfIndex]]'s frozen-centroid trade requires:
@@ -740,7 +661,7 @@ object Similarity {
     val fs = fpPath.getFileSystem(conf)
     require(fs.exists(fpPath),
       s"auditIvfIndex: no fingerprinted index at $dir")
-    val kv = readSmallText(fs, fpPath).split('|').collect {
+    val kv = graft.sources.HadoopText.read(fs, fpPath).split('|').collect {
       case f if f.contains("=") => val Array(k, v) = f.split("=", 2); k -> v
     }.toMap
     val n = kv("n").toLong
@@ -787,24 +708,14 @@ object Similarity {
     * updated — so a foreachBatch stream paired with this index resumes
     * exactly-once semantics across the rebuild.
     *
-    * Crash safety (the compactMinHashStore shape, whole-tree form): the
-    * full new tree (centroids + assigned + `_fingerprint`, the fingerprint
-    * written LAST as the stage's completeness sentinel) stages at the
-    * invocation-unique sibling `<dir>__rebalance_tmp_<token>`; the swap is
-    * dir → `<dir>__rebalance_old_<token>` then stage → dir; every crash
-    * window resolves in [[recoverIvfRebalance]] (complete stage rolls
-    * FORWARD, anything less rolls the old tree BACK — a crashed rebalance
-    * never reported success, so rollback is always safe).
-    *
-    * QUIESCE CONTRACT (same as compactMinHashStore): a maintenance write —
-    * no concurrent appends or probes while it runs. Since round 12 the
-    * append half of the contract is ENFORCED, not assumed: the rebalance
-    * claims the store's `_append_pending` mutex for its whole duration, so
-    * a concurrent [[appendToIvfIndex]] aborts loudly at its own acquisition
-    * instead of committing into the moved-aside tree during the staged swap
-    * (where the promoted rebuild would silently drop its rows while the
-    * ledger claimed the batch was applied). An append already holding the
-    * mutex makes the REBALANCE abort loudly. Probes must still quiesce.
+    * The commit is a [[graft.sources.FileCommit.replace]] of every file:
+    * the staged `centroids`, `assigned` and `_fingerprint` replace the live
+    * ones (each directory moves with one rename), checked against the
+    * `_fingerprint` the rebuild read. An append that commits while the
+    * rebalance stages makes the rebalance abort at that check, so no
+    * appended batch is ever dropped; an append that enters while the
+    * rebalance holds the gate aborts. Probes must pause while the rebalance
+    * moves the tree.
     *
     * @return Some(newK) when rebuilt; None when k already satisfies the
     *         rule and `force` is false (no-op — the compactSmallFiles
@@ -815,161 +726,46 @@ object Similarity {
                         kmeansIterations: Int = 2,
                         force: Boolean = false): Option[Int] = {
     graft.functions.GraftFunctions.register(spark)
-    val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fpPath = new org.apache.hadoop.fs.Path(root, "_fingerprint")
     val fs = fpPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a missing fingerprint beside __rebalance_* siblings aborts as a
-    // retryable conflict rather than resolving the swap (see the identical
-    // guard in appendToIvfIndex): a competitor rebalance mid-swap has this
-    // exact signature for milliseconds, and entry-resolving it would commit
-    // the competitor's swap under it and make ITS promote fail spuriously.
-    // Crashed swaps, crashed markers and healthy-tree debris are all the
-    // caller's explicit quiesced recoverIvfIndex, as everywhere else.
-    if (!fs.exists(fpPath)) requireNoSwapInFlight(fs, dir, "rebalanceIvfIndex")
-    require(fs.exists(fpPath),
-      s"rebalanceIvfIndex: no fingerprinted index at $dir — build with ensureIvfIndex first")
-    // claim the append mutex for the whole rebalance (see the scaladoc's
-    // quiesce contract): acquisition failure = an append is mid-commit
-    val pendingPath = new org.apache.hadoop.fs.Path(dir, "_append_pending")
-    if (!graft.sources.HadoopText.writeIfAbsent(fs, pendingPath, "rebalancing"))
-      throw new java.util.ConcurrentModificationException(
-        s"rebalanceIvfIndex: an append is in flight on $dir (_append_pending " +
-          "exists) — retry after it completes, or run recoverIvfIndex in a " +
-          "quiesced window if the holder crashed")
-    // Release accounting across the swap: pre-retire, the marker lives at
-    // dir/_append_pending and an abort deletes it there. The retire rename
-    // carries it into the moved-aside OLD tree (still guarding the gap: an
-    // append cannot acquire at dir while dir is absent — its entry guard
-    // aborts it as a retryable conflict — and after the promote the NEW tree has no
-    // marker, deliberately open for appends). Success deletes the old tree,
-    // marker included; a promote failure leaves the marker in the old tree,
-    // where recoverIvfRebalance's rollback restores it and the quiesced
-    // recoverIvfIndex releases it as an unstarted append.
-    var retired = false
-    try {
-      val fpText = readSmallText(fs, fpPath)
-      val kv = fpText.split('|').collect {
-        case f if f.contains("=") => val Array(k, v) = f.split("=", 2); k -> v
-      }.toMap
-      val newK = sizeRule(kv("n").toLong)
-      if (!force && newK == kv("k").toInt) return None
-      val token = java.util.UUID.randomUUID().toString.take(8)
-      val tmp = s"${dir}__rebalance_tmp_$token"
-      // the held version, when it is the one on disk, has `assigned`
-      // listed already: reusing it skips the listing and footer jobs
-      val held = openVersions.get(versionKey(spark, fs, dir))
+    graft.sources.FileCommit.requireNoCommit(fs, root)
+    val expected = fingerprintIdentity(fs, fpPath)
+    if (expected.isEmpty) missingFingerprint(fs, root, "rebalanceIvfIndex")
+    val fpText = expected.dropWhile(_ != '|').drop(1)
+    val kv = fpText.split('|').collect {
+      case f if f.contains("=") => val Array(k, v) = f.split("=", 2); k -> v
+    }.toMap
+    val newK = sizeRule(kv("n").toLong)
+    if (!force && newK == kv("k").toInt) return None
+    // the held version, when it is the one on disk, has `assigned`
+    // listed already: reusing it skips the listing and footer jobs
+    val held = openVersions.get(versionKey(spark, fs, dir))
+    val vectors = graft.sources.FileCommit.conflictIfVanished(fs, root, "read") {
       val assigned =
-        if (held != null && held.fingerprint == fpText &&
-            held.mtime == fs.getFileStatus(fpPath).getModificationTime) held.assigned
+        if (held != null && s"${held.mtime}|${held.fingerprint}" == expected) held.assigned
         else spark.read.parquet(s"$dir/assigned")
-      val vectors = assigned.select(col("nid"), col("nv"))
-      val mat = kmeansMatrix(vectors, "nid", "nv", newK, kmeansIterations)
-      new graft.sources.ParquetDatabase(spark, s"$tmp/centroids").create(centroidFrame(spark, mat))
-      writeAssigned(s"$tmp/assigned", assignCells(spread(vectors), "nid", "nv", mat))
-      val newFp = fpText.split('|').map {
-        case f if f.startsWith("k=") => s"k=$newK"
-        case f if f.startsWith("iters=") => s"iters=$kmeansIterations"
-        case f => f
-      }.mkString("|")
-      // completeness sentinel: written only after both stores landed
-      writeSmallText(fs, new org.apache.hadoop.fs.Path(tmp, "_fingerprint"), newFp)
-      val old = s"${dir}__rebalance_old_$token"
-      if (!fs.rename(new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(old)))
-        throw new java.io.IOException(
-          s"rebalanceIvfIndex: failed to move $dir aside — index untouched, staging at $tmp")
-      retired = true
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dir)))
-        throw new java.io.IOException(
-          s"rebalanceIvfIndex: failed to promote $tmp — run recoverIvfRebalance")
-      // the promoted tree is the newest version and its matrix is the one
-      // just written: hold it open, so the next probe reads no centroids
-      installVersion(spark, fs, dir, newFp, mat)
-      fs.delete(new org.apache.hadoop.fs.Path(old), true)
-      Some(newK)
-    } finally {
-      // pre-retire exits (no-op return, staging failure, retire failure):
-      // the marker is still at dir/_append_pending — release it. Post-
-      // retire, the marker traveled with the old tree (deleted on success,
-      // recover-resolved on a promote failure) — nothing to do here.
-      if (!retired) fs.delete(pendingPath, false)
+      assigned.select(col("nid"), col("nv"))
     }
-  }
-
-  /** Repair an interrupted [[rebalanceIvfIndex]]. Healthy index dir →
-    * staging/old siblings are debris, dropped. Missing index dir → a
-    * COMPLETE stage (its `_fingerprint` sentinel present, written last)
-    * rolls FORWARD; otherwise the moved-aside old tree rolls BACK (always
-    * safe: a crashed rebalance never reported success). Ambiguity (several
-    * complete stages, or several old trees with no complete stage) fails
-    * loudly — under the op's quiesce contract it can only mean un-swept
-    * foreign debris. Idempotent; returns the actions taken.
-    */
-  def recoverIvfRebalance(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val parent = base.getParent
-    if (parent == null || !fs.exists(parent)) return Nil
-    val name = base.getName
-    val sibs = fs.listStatus(parent).iterator.map(_.getPath)
-      .filter(_.getName.startsWith(name + "__rebalance_")).toSeq.sortBy(_.toString)
-    if (sibs.isEmpty) return Nil
-    val tmps = sibs.filter(_.getName.startsWith(name + "__rebalance_tmp_"))
-    val olds = sibs.filter(_.getName.startsWith(name + "__rebalance_old_"))
-    val actions = Seq.newBuilder[String]
-    if (fs.exists(base)) {
-      for (p <- sibs) { fs.delete(p, true); actions += s"dropped leftover $p" }
-    } else {
-      val complete = tmps.filter(t => fs.exists(new org.apache.hadoop.fs.Path(t, "_fingerprint")))
-      if (complete.size == 1) {
-        if (!fs.rename(complete.head, base))
-          throw new java.io.IOException(s"recoverIvfRebalance: failed to promote ${complete.head}")
-        actions += s"completed interrupted rebalance: ${complete.head} -> $dir"
-        for (p <- sibs if p != complete.head && fs.exists(p)) {
-          fs.delete(p, true); actions += s"dropped $p"
-        }
-      } else if (complete.isEmpty && olds.size == 1) {
-        if (!fs.rename(olds.head, base))
-          throw new java.io.IOException(s"recoverIvfRebalance: failed to restore ${olds.head}")
-        actions += s"rolled back interrupted rebalance: ${olds.head} -> $dir"
-        for (p <- tmps if fs.exists(p)) { fs.delete(p, true); actions += s"dropped $p" }
-      } else {
-        throw new java.io.IOException(
-          s"recoverIvfRebalance: $dir is missing with ${complete.size} complete stage(s) " +
-            s"and ${olds.size} old tree(s) — ambiguous; resolve manually")
-      }
+    val mat = graft.sources.FileCommit.conflictIfVanished(fs, root, "read")(
+      kmeansMatrix(vectors, "nid", "nv", newK, kmeansIterations))
+    val newFp = fpText.split('|').map {
+      case f if f.startsWith("k=") => s"k=$newK"
+      case f if f.startsWith("iters=") => s"iters=$kmeansIterations"
+      case f => f
+    }.mkString("|")
+    var mtime = 0L
+    graft.sources.FileCommit.replace(fs, root, Seq("centroids", "assigned", "_fingerprint"),
+      expected, () => fingerprintIdentity(fs, fpPath)) { stage =>
+      new graft.sources.ParquetDatabase(spark, s"$stage/centroids").create(centroidFrame(spark, mat))
+      writeAssigned(s"$stage/assigned", assignCells(spread(vectors), "nid", "nv", mat))
+      mtime = writeFingerprint(fs, stage.toString, newFp)
     }
-    actions.result()
+    // the committed tree's matrix is the one just written: hold it open,
+    // so the next probe reads no centroids
+    installVersion(spark, fs, dir, newFp, mtime, mat)
+    Some(newK)
   }
-
-  /** Entry guard for the mutating store ops when the fingerprint is absent:
-    * `__rebalance_*` siblings mean a swap is (or was, if the holder crashed)
-    * in flight — a live swap's ms-wide retire-to-promote window has exactly
-    * the crashed-swap signature, so the only safe response for a WRITER is
-    * a loud retryable abort. Resolution belongs to the quiesced
-    * [[recoverIvfIndex]] alone.
-    */
-  private def requireNoSwapInFlight(fs: org.apache.hadoop.fs.FileSystem,
-                                    dir: String, op: String): Unit = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val parent = base.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val name = base.getName
-    val sibs = fs.listStatus(parent).iterator.map(_.getPath.getName)
-      .filter(_.startsWith(name + "__rebalance_")).toSeq.sorted
-    if (sibs.nonEmpty)
-      throw new java.util.ConcurrentModificationException(
-        s"$op: $dir has no _fingerprint but rebalance siblings exist " +
-          s"(${sibs.mkString(", ")}) — a rebalance swap may be mid-promote; " +
-          "retry after it completes, or run recoverIvfIndex in a quiesced " +
-          "window if the holder crashed")
-  }
-
-  private def readSmallText(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): String =
-    graft.sources.HadoopText.read(fs, p)
-
-  private def writeSmallText(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path, text: String): Unit =
-    graft.sources.HadoopText.write(fs, p, text)
 
   /** Reopen a persisted index as plain relations (for [[ivfSelfTopK]] or
     * ad-hoc probing). Every call reads `centroids` and lists `assigned`
@@ -1015,17 +811,26 @@ object Similarity {
   private val openVersions = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), IvfVersion]()
 
-  /** Hold open the version a writer just committed: `fingerprint` is the
-    * text it wrote to `_fingerprint` (its mtime is read here) and `matrix`
-    * the centroids it holds.
+  /** Hold open the version a writer just committed: `fingerprint` and
+    * `mtime` are the text and modification time of the `_fingerprint` it
+    * wrote (a move keeps the mtime, so a commit stats its staged file, not
+    * the live one a peer may already have replaced) and `matrix` the
+    * centroids it holds.
     */
   private def installVersion(spark: org.apache.spark.sql.SparkSession,
                              fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                             fingerprint: String,
+                             fingerprint: String, mtime: Long,
                              matrix: graft.functions.CentroidMatrix): Unit =
-    openVersions.put(versionKey(spark, fs, dir), new IvfVersion(fingerprint,
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(dir, "_fingerprint")).getModificationTime,
+    openVersions.put(versionKey(spark, fs, dir), new IvfVersion(fingerprint, mtime,
       matrix, spark, dir))
+
+  /** Write `text` as the `_fingerprint` under `dir`; returns its mtime. */
+  private def writeFingerprint(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                               text: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
+    graft.sources.HadoopText.write(fs, p, text)
+    fs.getFileStatus(p).getModificationTime
+  }
 
   private def versionKey(spark: org.apache.spark.sql.SparkSession,
                          fs: org.apache.hadoop.fs.FileSystem,
@@ -1034,15 +839,17 @@ object Similarity {
 
   /** The open version of the index at `dir`, reused while its
     * `_fingerprint` text and modification time are both unchanged: one
-    * stat and one small read per call. Every writer writes `_fingerprint`
-    * last — ensureIvfIndex's rebuild, appendToIvfIndex, rebalanceIvfIndex
-    * (whose same-k rebuild keeps the text but not the mtime) and
-    * recoverIvfIndex — so a caller never reuses a version a writer has
-    * replaced. ensureIvfIndex's rebuild, appendToIvfIndex and
-    * rebalanceIvfIndex also install the version they commit, with the
-    * matrix they hold, so the first probe after them reads no centroids;
-    * rebalanceIvfIndex reads `assigned` through the held version when it
-    * is the one on disk. A dir without `_fingerprint`
+    * stat and one small read per call. Every writer replaces `_fingerprint`
+    * last — ensureIvfIndex's rebuild, and the commits of appendToIvfIndex
+    * and rebalanceIvfIndex (whose same-k rebuild keeps the text but not the
+    * mtime), which `FileCommit.recover` rolls back to the committed file —
+    * so a caller never reuses a version a writer has replaced. While a
+    * commit has `_fingerprint` moved aside, the held version is still the
+    * committed one and is reused. ensureIvfIndex's rebuild,
+    * appendToIvfIndex and rebalanceIvfIndex also install the version they
+    * commit, with the matrix they hold, so the first probe after them reads
+    * no centroids; rebalanceIvfIndex reads `assigned` through the held
+    * version when it is the one on disk. A dir without `_fingerprint`
     * (persistIvfIndex alone) is opened afresh on every call and never
     * cached.
     */
@@ -1055,13 +862,14 @@ object Similarity {
     val stat =
       try Some(fs.getFileStatus(fpPath))
       catch { case _: java.io.FileNotFoundException => None }
+    val held = openVersions.get(key)
     stat match {
+      case None if held != null && graft.sources.FileCommit.inFlight(fs, fpPath.getParent) => held
       case None =>
         openVersions.remove(key)
         open("", 0L)
       case Some(st) =>
-        val fp = readSmallText(fs, fpPath)
-        val held = openVersions.get(key)
+        val fp = graft.sources.HadoopText.read(fs, fpPath)
         if (held != null && held.fingerprint == fp && held.mtime == st.getModificationTime) held
         else {
           val v = open(fp, st.getModificationTime)
@@ -1090,7 +898,7 @@ object Similarity {
     * `cell` partition filter on exactly the probed cells, so the scan reads
     * only the probed `cell=` directories. Candidates rank by
     * (cos DESC, nid ASC). Probes must pause while [[rebalanceIvfIndex]]
-    * swaps the tree (its quiesce contract); appends may run concurrently,
+    * moves the tree; appends may run concurrently,
     * and a probe then answers at the version before or after the append.
     */
   def ivfTopKPersisted(spark: org.apache.spark.sql.SparkSession, indexDir: String,

@@ -2247,10 +2247,11 @@ object ExtQueries {
     // q_ext_stream15 = MinHash store): the index builds once from 3/4 of
     // the corpus under the autoCentroids deployment rule, the remaining
     // 1/4 arrives as embedding micro-batches appended by
-    // DocStreams.ivfIndexStream (batchId committed INSIDE the fingerprint
-    // — the append's own atomic visibility point — so foreachBatch
-    // re-delivery no-ops and every crash window resolves via
-    // recoverIvfIndex), and the probe runs against the MAINTAINED index.
+    // DocStreams.ivfIndexStream (batchId committed INSIDE the fingerprint,
+    // which the append's file-move commit moves in with the batch's files,
+    // so foreachBatch re-delivery no-ops and a crashed append rolls back
+    // via FileCommit.recover), and the probe runs against the MAINTAINED
+    // index.
     // An assigned-store count proves every appended vector is searchable
     // (a lost or doubled batch fails the require, not just the recall
     // guard), the emitted result is the exact cosine top-k over the FULL
@@ -2259,8 +2260,8 @@ object ExtQueries {
     // Since round 11 the MAINTENANCE LIFECYCLE is on the gate too: appends
     // assign to frozen centroids forever, so after the replay the query
     // audits the drift (auditIvfIndex — metadata-priced sizing + skew
-    // signals) and runs the rebalance op (forced, so the staged whole-tree
-    // swap executes at every scale), then require()s the sizing rule holds
+    // signals) and runs the rebalance op (forced, so the whole-tree
+    // file-move commit executes at every scale), then require()s the sizing rule holds
     // on the rebuilt index, no vector was lost, and the streaming batch
     // ledger survived the rebuild — the properties that let a long-running
     // deployment rebalance without breaking exactly-once ingest.

@@ -4,8 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** The one small-text read/write over a Hadoop `FileSystem` — used for every
-  * sidecar file in the repo (table manifests, store `_params`, index
-  * fingerprints, pending markers). Whole-file semantics: `read` loads the
+  * sidecar file in the repo (commit and snapshot manifests, store `_params`,
+  * index fingerprints). Whole-file semantics: `read` loads the
   * full file (these are metadata-sized by contract — bytes, not blocks),
   * `write` truncates/overwrites atomically per HDFS create(overwrite=true).
   */
@@ -23,21 +23,13 @@ object HadoopText {
   }
 
   /** Create-no-overwrite write: returns false (writing nothing) if the file
-    * already exists. `create(overwrite = false)` is atomic on HDFS (the
-    * namenode serializes the create) — the poor-man's lock a rename-based
-    * commit protocol uses to serialize two writers that both reached their
-    * commit step. On the LOCAL FS Hadoop's create(overwrite=false) is a
-    * non-atomic exists-then-create, which the two-writer sketch-store
-    * drills caught losing the race (both writers "owned" the append mutex
-    * and their parquet jobs shared one `_temporary`): local paths
-    * therefore go through `java.io.File.createNewFile` — POSIX
-    * O_CREAT|O_EXCL, genuinely atomic — so the gate holds on every
-    * filesystem the suite and a deployment run on. CROSS-PROCESS-VERIFIED
-    * (round 13): O_CREAT|O_EXCL's atomicity claim is per-kernel, not
-    * per-JVM, and `graft.tools.ConcurrencyDrill` (gated by
-    * ConcurrencyDrillSpec) races two JVMs' writers through this gate on the
-    * ParquetDatabase swap protocol, the IVF append/rebalance mutex and the
-    * bucketed HLL store — every committed mutation applied, none lost.
+    * already exists — the commit gate of [[FileCommit]] (its manifest).
+    * `create(overwrite = false)` is atomic on HDFS (the namenode serializes
+    * the create). On the LOCAL FS Hadoop's create(overwrite=false) is a
+    * non-atomic exists-then-create, which two-writer drills caught losing
+    * the race, so local paths go through `java.io.File.createNewFile` —
+    * POSIX O_CREAT|O_EXCL, atomic per kernel; `graft.tools.ConcurrencyDrill`
+    * (gated by ConcurrencyDrillSpec) races two JVMs through it.
     */
   def writeIfAbsent(fs: FileSystem, p: Path, text: String): Boolean = {
     // only "already exists" maps to false — any other failure is a genuine
@@ -47,13 +39,11 @@ object HadoopText {
     val isLocal = fs.getScheme == "file"
     val created =
       if (isLocal) {
-        // The parent directory must already exist (every caller claims a
-        // marker INSIDE a store it just validated). Deliberately NO mkdirs:
-        // a missing parent means the store is mid-swap (renamed aside) or
-        // gone, and resurrecting it as an empty dir would make the swapper's
-        // promote rename NEST inside it — the claim fails with the raw
-        // missing-parent IOException instead, which retry loops treat as
-        // the transient it is.
+        // The parent directory must already exist (the commit creates the
+        // gate dir first). Deliberately NO mkdirs: a missing parent means a
+        // peer released the gate in between, and the claim fails with the
+        // raw missing-parent IOException, which retry loops treat as the
+        // transient it is.
         val f = new java.io.File(fs.makeQualified(p).toUri.getPath)
         if (!f.createNewFile()) None // atomic claim lost — holder exists
         else {

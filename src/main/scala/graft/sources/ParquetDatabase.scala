@@ -20,17 +20,16 @@ import org.apache.spark.sql.types.StructType
   * combined DB, README.md:120; this needs an executor's worth).
   *
   * Every mutation (`upsert`, `deleteWhere`, the `normalize` family,
-  * `compactSmallFiles`) commits through one kernel, [[replaceFiles]]: stage
-  * the new files in an invocation-unique `<dir>__patch_tmp_<token>`, win the
-  * `<dir>__patch_old/_manifest` gate, re-check the table's [[fingerprint]],
-  * move the replaced files aside into `__patch_old` (by table-relative
-  * path) and the new files in, then release the gate. A full rewrite is the
-  * case where every data file is replaced. The table directory itself is
-  * never renamed, so a raw reader racing a commit (`spark.read.parquet(dir)`,
-  * DuckDB) can see a partial file set; [[readSnapshot]] is the isolated read.
-  * A mutator that finds a manifest aborts without touching anything: a live
-  * peer and a crashed commit look alike, and only a quiesced [[recover]] may
-  * roll the latter back.
+  * `compactSmallFiles`) commits through [[replaceFiles]], this table's use
+  * of the one store commit protocol, [[FileCommit]]: stage the new files,
+  * win the `<dir>__patch_old/_manifest` gate, re-check the table's
+  * [[fingerprint]], move the replaced files aside and the new files in,
+  * release the gate. A full rewrite is the case where every data file is
+  * replaced. The table directory itself is never renamed, so a raw reader
+  * racing a commit (`spark.read.parquet(dir)`, DuckDB) can see a partial
+  * file set; [[readSnapshot]] is the isolated read. A mutator that finds a
+  * manifest aborts without touching anything; only a quiesced [[recover]]
+  * rolls a crashed commit back.
   */
 class ParquetDatabase(val spark: SparkSession, val dir: String) {
 
@@ -46,12 +45,6 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
 
   /** Drop this table's open read versions: a commit just replaced them. */
   private def forgetReads(): Unit = ParquetDatabase.forgetReads(qualifiedDir)
-
-  /** The commit gate's directory: while a commit holds the gate it holds the
-    * manifest and the files that commit moved aside.
-    */
-  private def patchOld = new Path(s"${dir}__patch_old")
-  private def manifestPath = new Path(patchOld, "_manifest")
 
   // ------------------------------------------------ optimistic concurrency
 
@@ -106,22 +99,11 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     ParquetDatabase.Listing(ParquetDatabase.md5Hex(sb.result()), files.result())
   }
 
-  /** The conflict a writer reports when another commit holds the gate. */
-  private def gateHeld(): java.util.ConcurrentModificationException =
-    new java.util.ConcurrentModificationException(
-      s"optimistic-concurrency conflict on $dir: a commit manifest is present at " +
-        s"$manifestPath. Either another writer is mid-commit (re-read and retry once it " +
-        "finishes) or a commit crashed (run recover() while no writer is live). Nothing " +
-        "was touched.")
-
   /** Mutator entry: the table's [[listTable]], once no commit holds the
-    * gate. A manifest is either a live peer between its first and last
-    * rename or a crashed commit, and this writer cannot tell which, so it
-    * aborts with nothing touched; a crashed commit is rolled back only by a
-    * quiesced [[recover]].
+    * gate (see [[FileCommit.requireNoCommit]]).
     */
   private def entryListing(): ParquetDatabase.Listing = {
-    if (fs.exists(manifestPath)) throw gateHeld()
+    FileCommit.requireNoCommit(fs, new Path(dir))
     listTable()
   }
 
@@ -131,49 +113,9 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     */
   private[sources] var preSwapHook: () => Unit = () => ()
 
-  /** Re-map a failure whose cause chain says "table files vanished
-    * underneath a read" to the documented retryable
-    * `ConcurrentModificationException`. Both vanish signatures are matched:
-    * at OPEN Spark classifies it itself (FAILED_READ_FILE.FILE_NOT_EXIST /
-    * FileNotFoundException); a file retired MID-READ — the open stream's
-    * next positioned read fails — surfaces as FAILED_READ_FILE.NO_HINT
-    * caused by a raw java.nio.file.NoSuchFileException (both seen under
-    * host load in the two-writer stress drill, round 14).
-    */
+  /** [[FileCommit.conflictIfVanished]] on this table. */
   private[sources] def conflictIfVanished[T](phase: String)(f: => T): T =
-    try f catch {
-      case t: Throwable =>
-        val vanishedUnderneath = Iterator.iterate(t)(_.getCause)
-          .takeWhile(_ != null).take(20)
-          .exists(c => c.isInstanceOf[java.io.FileNotFoundException] ||
-            c.isInstanceOf[java.nio.file.NoSuchFileException] ||
-            String.valueOf(c.getMessage).contains("FILE_NOT_EXIST"))
-        // a conflict only when the TABLE DIRECTORY still exists and member
-        // files vanished out of it (a peer's commit). No commit renames the
-        // table directory, so a missing one is a permanent error — remapping
-        // it would make retry-looping callers spin on something no retry can
-        // fix. (A probe that itself fails, e.g. a flaky FS, cannot prove
-        // permanence, so it counts as a conflict.)
-        def dirPresent = try fs.exists(new Path(dir)) catch { case _: Throwable => true }
-        if (vanishedUnderneath && dirPresent)
-          throw new java.util.ConcurrentModificationException(
-            s"optimistic-concurrency conflict on $dir: table files vanished underneath " +
-              s"this mutation's $phase (another writer committed mid-scan). " +
-              "Table untouched — re-read and retry.", t)
-        else throw t
-    }
-
-  /** Run a staging write with conflict-aware failure handling: any failure
-    * drops the half-written temp (otherwise every aborted attempt leaves a
-    * table-sized debris dir for recover()), and a failure caused by table
-    * files vanishing mid-scan is rethrown as the retryable conflict.
-    */
-  private def stageOrAbort(tmp: Path)(write: => Unit): Unit =
-    try conflictIfVanished("staging read")(write) catch {
-      case t: Throwable =>
-        try fs.delete(tmp, true) catch { case _: Throwable => () }
-        throw t
-    }
+    FileCommit.conflictIfVanished(fs, new Path(dir), phase)(f)
 
   /** Append a batch (ParquetDB `create`, base.py:180-182).
     *
@@ -421,184 +363,35 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     plan.foreach { case (touched, kept) => replaceFiles(touched, kept, table.print) }
   }
 
-  /** THE commit kernel: replace exactly `touched` files with the files of
-    * `newData`, leaving every other file physically untouched (same path,
-    * same bytes, same mtime). Ordering never deletes before the new data is
-    * fully in place:
-    *  1. write the new files to an invocation-unique temp sibling — live
-    *     table unaffected;
-    *  2. win the gate: create `__patch_old/_manifest` (create-no-overwrite)
-    *     naming every original and every replacement;
-    *  3. re-check the entry [[fingerprint]] while holding the gate — on a
-    *     mismatch drop the manifest and the stage and abort;
-    *  4. rename each original aside to `__patch_old/<table-relative path>`
-    *     (a `partitionBy` write names the files in every `col=value` dir
-    *     alike, so basenames would collide), then rename each new file into
-    *     `targetDir` (part-file names carry a fresh UUID, so no collision),
-    *     then delete the partition dirs this left empty;
-    *  5. archive the originals a snapshot pins and release the gate.
-    * A crash anywhere from 2 to 5 leaves the manifest, and a quiesced
-    * [[recover]] rolls the table back byte-exactly.
+  /** Replace exactly the `touched` data files with the files of `newData`
+    * through [[FileCommit.replace]], leaving every other file physically
+    * untouched (same path, same bytes, same mtime). The stage is written in
+    * the table's layout, so the new files land in `targetDir` (part-file
+    * names carry a fresh UUID, so they never collide); the originals move
+    * aside by table-relative path (a `partitionBy` write names the files in
+    * every `col=value` dir alike) and those a snapshot pins are archived
+    * before the gate is released.
     */
   private def replaceFiles(touched: Seq[String], newData: DataFrame, expected: String,
                            targetDir: String = dir,
                            options: Map[String, String] = Map.empty): Unit = {
-    // temp siblings always hang off the TABLE root, never inside it: a
-    // `<partition>=x__patch_tmp` child of the root would parse as a bogus
-    // partition value for any concurrent reader of the table. The tmp is
-    // INVOCATION-UNIQUE: with a shared name a concurrent writer's
-    // overwrite-mode stage would replace this one's staged bytes, and this
-    // writer would then commit the other's content as its own (a lost
-    // update the conflict check cannot see — the live table never changed).
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(s"${dir}__patch_tmp_$token")
-    stageOrAbort(tmp) { newData.write.mode("overwrite").options(options).parquet(tmp.toString) }
-    val newFiles = ParquetStats.listParquetFiles(tmp.toString, hconf)
-    preSwapHook()
-    // the manifest is written BEFORE any rename: [[recover]] needs to know
-    // which live-name files are replacements (delete on rollback) and where
-    // each moved-aside original belongs. create-no-overwrite makes it the
-    // COMMIT GATE: of two writers, one wins and the other aborts untouched.
-    val won =
-      try {
-        fs.mkdirs(patchOld)
-        HadoopText.writeIfAbsent(fs, manifestPath, (touched.map(p => s"touched\t$p") ++
-          newFiles.map(f => s"new\t$targetDir/${f.getName}")).mkString("\n"))
-      } catch { case t: Throwable => fs.delete(tmp, true); throw t }
-    if (!won) {
-      fs.delete(tmp, true)
-      throw gateHeld()
+    FileCommit.replace(fs, new Path(dir), touched.map(p => relativize(dir, new Path(p))), expected,
+      () => listTable().print, staged = () => preSwapHook(),
+      retire = aside => archiveReferenced(aside, p => relativize(aside.toString, p))) { stage =>
+      val into = if (targetDir == dir) stage else new Path(stage, relativize(dir, new Path(targetDir)))
+      newData.write.mode("overwrite").options(options).parquet(into.toString)
     }
-    // the CAS runs while this writer holds the gate, so no peer can commit
-    // between it and the first rename
-    if (listTable().print != expected) {
-      release(tmp)
-      throw new java.util.ConcurrentModificationException(
-        s"optimistic-concurrency conflict on $dir: the live table changed between " +
-          "this mutation's read and its commit (another writer committed). Aborted " +
-          "before any rename — staged output dropped, table untouched; re-read and retry.")
-    }
-    val aside = touched.map(f => new Path(f) -> new Path(patchOld, relativize(dir, new Path(f))))
-    aside.map(_._2.getParent).distinct.foreach(fs.mkdirs)
-    aside.foreach { case (p, a) =>
-      if (!fs.rename(p, a))
-        throw new java.io.IOException(s"patch: failed to move $p aside to $a; run recover()")
-    }
-    newFiles.foreach { f =>
-      if (!fs.rename(f, new Path(targetDir, f.getName)))
-        throw new java.io.IOException(s"patch: failed to move $f into $targetDir; originals " +
-          s"preserved in $patchOld, rewrite in $tmp — run recover()")
-    }
-    dropEmptyDirs(aside.map(_._1.getParent))
-    archiveReferenced(patchOld, p => relativize(patchOld.toString, p))
-    release(tmp)
     forgetReads()
   }
 
-  /** Give up the gate: `__patch_old` (the manifest and whatever sits aside)
-    * moves into this commit's own stage dir in ONE rename, and the stage is
-    * dropped. A recursive delete of `__patch_old` would not be atomic, and
-    * a peer winning the gate midway could lose its fresh manifest or aside
-    * files to it; after the rename the next winner always starts from a
-    * fresh `__patch_old`.
-    */
-  private def release(tmp: Path): Unit = {
-    if (!fs.rename(patchOld, new Path(tmp, "_released")))
-      throw new java.io.IOException(s"patch: failed to release the gate $patchOld; run recover()")
-    fs.delete(tmp, true)
-  }
-
-  /** Delete the directories under the table root that `dirs` (and then
-    * their parents) leave empty: the `col=value` dirs a partitioned full
-    * rewrite has moved every file out of. The root itself always stays.
-    */
-  private def dropEmptyDirs(dirs: Seq[Path]): Unit = {
-    val root = fs.makeQualified(new Path(dir)).toUri.getPath
-    def drop(d: Path): Unit =
-      if (fs.makeQualified(d).toUri.getPath.startsWith(root + "/") &&
-          (try fs.listStatus(d).isEmpty catch { case _: java.io.FileNotFoundException => false }) &&
-          (try fs.delete(d, false) catch { case _: java.io.IOException => false }))
-        drop(d.getParent)
-    dirs.distinct.sortBy(-_.depth).foreach(drop)
-  }
-
-  private def writeTextFile(p: Path, text: String): Unit =
-    HadoopText.write(fs, p, text)
-
-  private def readTextFile(p: Path): String =
-    HadoopText.read(fs, p)
-
-  /** Roll back an interrupted commit of [[replaceFiles]] — the repair its
-    * crash-safety contract promises. Idempotent; a no-op on a healthy
-    * table. Returns a summary of the actions taken (empty = nothing to
-    * repair).
-    *
-    * The `__patch_old/_manifest` written before any rename lists every
-    * replacement file path and every moved-aside original, so rollback is
-    * exact — replacements that made it into the table are deleted (their
-    * fresh-UUID names cannot collide with originals), originals are renamed
-    * back where they came from (from `__patch_old/<table-relative path>`,
-    * or from the archive when the crash hit mid-archive), emptied partition
-    * dirs are recreated, and `__patch_old` and every `__patch_tmp_*` stage
-    * are dropped. A crash after the last move-in is rolled back too. Never
-    * loses data: every byte is in the table, `__patch_old`, the archive, or
-    * a `__patch_tmp_*` sibling at all times.
-    *
-    * QUIESCE CONTRACT: run recover() only when no writer is live on this
-    * table. A rename-based staging protocol cannot distinguish a crashed
-    * writer's manifest and stage from a live writer's, so recovery while a
-    * writer runs can roll back its commit mid-rename or reclaim its stage.
-    * Mutators therefore never recover: one that finds a manifest aborts,
-    * and stale stages are invisible to readers and wait for this call (each
-    * is table-sized for a full rewrite, so a fleet deployment schedules
-    * recover() in its maintenance window).
+  /** Roll back an interrupted commit ([[FileCommit.recover]]) and drop this
+    * table's open read versions. Idempotent; a no-op on a healthy table.
+    * Run it only while no writer is live on the table.
     */
   def recover(): Seq[String] = {
-    val actions = scala.collection.mutable.ListBuffer[String]()
-    if (fs.exists(patchOld)) {
-      if (fs.exists(manifestPath)) {
-        val lines = readTextFile(manifestPath).linesIterator.filter(_.nonEmpty).toSeq
-        lines.collect { case l if l.startsWith("new\t") => new Path(l.stripPrefix("new\t")) }
-          .foreach { p => if (fs.exists(p)) { fs.delete(p, false); actions += s"removed replacement $p" } }
-        lines.collect { case l if l.startsWith("touched\t") => new Path(l.stripPrefix("touched\t")) }
-          .filterNot(fs.exists).foreach { orig =>
-            // a crash mid-archive may have parked the original already —
-            // restore from wherever it sits (table / aside / archive is an
-            // exactly-one-of invariant for every byte)
-            val rel = relativize(dir, orig)
-            val from = Seq(new Path(patchOld, rel) -> "", new Path(archiveRoot, rel) -> " from archive")
-              .find(c => fs.exists(c._1))
-            from.foreach { case (src, where) =>
-              fs.mkdirs(orig.getParent)
-              if (!fs.rename(src, orig))
-                throw new java.io.IOException(s"recover: failed to restore $src -> $orig")
-              actions += s"restored $orig$where"
-            }
-          }
-        // anything still aside that a snapshot pins is archived, not dropped
-        val a = archiveReferenced(patchOld, p => relativize(patchOld.toString, p))
-        if (a > 0) actions += s"archived $a snapshot-pinned file(s) from $patchOld"
-      }
-      fs.delete(patchOld, true); actions += s"dropped $patchOld"
-    }
-    for (t <- stagingSiblings("__patch_tmp") if fs.exists(t)) {
-      fs.delete(t, true); actions += s"dropped $t"
-    }
+    val actions = FileCommit.recover(spark, dir)
     forgetReads()
-    actions.toList
-  }
-
-  /** Table-dir siblings whose name starts with `<tableName><prefix>` —
-    * the invocation-unique staging dirs plus their bare legacy-named
-    * forms. Metadata-sized: one listing of the parent directory.
-    */
-  private def stagingSiblings(prefix: String): Seq[Path] = {
-    val base = new Path(dir)
-    val parent = base.getParent
-    val namePrefix = base.getName + prefix
-    if (parent == null || !fs.exists(parent)) Seq.empty
-    else fs.listStatus(parent).iterator.map(_.getPath)
-      .filter(_.getName.startsWith(namePrefix)).toSeq.sortBy(_.toString)
+    actions
   }
 
   /** Compact the small-file tail: bin-pack ONLY the files smaller than
@@ -778,16 +571,10 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   // exactly the bytes a snapshot pins — nothing is copied, ever.
 
   private def snapshotsRoot = new Path(s"${dir}__snapshots")
-  private[sources] def archiveRoot = new Path(s"${dir}__archive")
+  private[sources] def archiveRoot = FileCommit.archive(new Path(dir))
 
-  private def relativize(root: String, p: Path): String = {
-    // qualify both sides: `dir` may be a relative working-dir path while
-    // filesystem listings come back as absolute URIs
-    val r = fs.makeQualified(new Path(root)).toUri.getPath
-    val f = fs.makeQualified(p).toUri.getPath
-    require(f.startsWith(r + "/"), s"$p is not under $root")
-    f.stripPrefix(r + "/")
-  }
+  private def relativize(root: String, p: Path): String =
+    FileCommit.relativize(fs, new Path(root), p)
 
   /** Every parquet file under `root`, recursively (partition subdirs too). */
   private def walkParquet(root: Path): Seq[Path] =
@@ -808,7 +595,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     val rels = walkParquet(new Path(dir)).map(p => relativize(dir, p))
     require(rels.nonEmpty, s"snapshot('$tag'): table $dir is empty")
     fs.mkdirs(snapshotsRoot)
-    writeTextFile(m, rels.mkString("\n"))
+    HadoopText.write(fs, m, rels.mkString("\n"))
   }
 
   def snapshots: Seq[String] =
@@ -818,7 +605,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
   private def snapshotRels(tag: String): Seq[String] = {
     val m = new Path(snapshotsRoot, tag)
     require(fs.exists(m), s"no snapshot '$tag' on $dir (have: ${snapshots.mkString(", ")})")
-    readTextFile(m).linesIterator.filter(_.nonEmpty).toSeq
+    HadoopText.read(fs, m).linesIterator.filter(_.nonEmpty).toSeq
   }
 
   /** Table-relative paths some snapshot still references. */

@@ -152,9 +152,10 @@ object DocStreams {
     * Exactly-once composes from the store's own protocol, not from this
     * wrapper: the batchId rides INSIDE the segment
     * (`appendToMinHashStore(batchMarker=...)`), and segment visibility is
-    * a single atomic rename — so a foreachBatch re-delivery after a crash
-    * finds the committed marker and no-ops, and a crash mid-append leaves
-    * only `_staging` debris for `recoverMinHashStore`. No side marker file
+    * a single directory rename (a `FileCommit.append`) — so a foreachBatch
+    * re-delivery after a crash finds the committed marker and no-ops, and a
+    * crash mid-append leaves only a stage sibling, which the quiesced
+    * `graft.sources.FileCommit.recover` drops. No side marker file
     * to race with the data commit (contrast `BatchMarker`'s documented
     * one-batch exposure in [[EventStreams.mergeStreamToTable]] — additive
     * merges can't carry their marker inside the data, segment appends can).
@@ -200,13 +201,12 @@ object DocStreams {
     * store via [[graft.operators.Similarity.appendToIvfIndex]], so the
     * index never re-runs k-means or rewrites history as the corpus grows.
     *
-    * Exactly-once comes from the index's own fingerprint protocol: the
-    * batchId commits INSIDE the fingerprint in the same atomic write that
-    * makes the append visible, so a foreachBatch re-delivery no-ops, a
-    * crash before the fingerprint write rolls back (re-delivery
-    * re-applies), and a crash after it rolls forward (re-delivery no-ops)
-    * — all three windows resolved by `recoverIvfIndex` against the
-    * store's actual ids.
+    * Exactly-once comes from the index's own commit: the batchId rides
+    * INSIDE the `_fingerprint` that the append's `FileCommit.replace`
+    * moves in with the batch's files, so a foreachBatch re-delivery of a
+    * committed batch no-ops, and a crashed append is rolled back — its
+    * ledger with it — by `graft.sources.FileCommit.recover`, which this
+    * stream runs at start, so the re-delivered batch re-applies.
     *
     * The index must exist before the stream starts (`ensureIvfIndex` on
     * the initial corpus) — the classical IVF maintenance contract: cells
@@ -220,11 +220,10 @@ object DocStreams {
                      vecCol: String = "embedding",
                      maxFilesPerTrigger: Int = 1): Long = {
     // the stream is THE single writer of its index (streaming contract), so
-    // stream start is a quiesced point: resolve a crashed prior run's
-    // pending marker here — appendToIvfIndex no longer auto-resolves (a
-    // marker at append time is indistinguishable from a live competitor's
-    // under the round-11 multi-writer protocol)
-    graft.operators.Similarity.recoverIvfIndex(spark, indexDir)
+    // stream start is a quiesced point: roll back a crashed prior run's
+    // commit here — appends abort on its manifest rather than recovering
+    // (a live peer's commit looks exactly the same)
+    graft.sources.FileCommit.recover(spark, indexDir)
     val src = spark.readStream.schema(embeddingsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)

@@ -607,11 +607,10 @@ object EventStreams {
     val storePath = new org.apache.hadoop.fs.Path(storeDir)
     val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
     // the stream is THE single writer of its store (streaming contract), so
-    // stream start is a quiesced point: repair a crashed prior run's
-    // mid-swap bucket here — merges abort loudly on that state rather than
-    // auto-restoring (a live competitor's swap window is indistinguishable)
-    if (fs.exists(storePath))
-      graft.operators.DistinctSketch.recoverBucketedStore(spark, storeDir)
+    // stream start is a quiesced point: roll back a crashed prior run's
+    // commit here — merges abort loudly on its manifest rather than
+    // recovering (a live peer's commit looks exactly the same)
+    if (fs.exists(storePath)) graft.sources.FileCommit.recover(spark, storeDir)
     val partKey = "spark.sql.shuffle.partitions"
     val oldParts = spark.conf.get(partKey)
     try {

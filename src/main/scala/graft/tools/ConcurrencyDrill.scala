@@ -11,7 +11,8 @@ import graft.sources.ParquetDatabase
   * in-JVM thread drills (ConcurrentWriterSpec, ConcurrentSketchWriterSpec,
   * SimilaritySpec's append-vs-rebalance race), which exercise the same
   * protocols but share one filesystem view, one Hadoop FileSystem cache and
-  * one JIT'd `createNewFile`. The commit gates all reduce to
+  * one JIT'd `createNewFile`. Every store commits through one protocol,
+  * `graft.sources.FileCommit`, whose gate reduces to
   * `HadoopText.writeIfAbsent` — POSIX O_CREAT|O_EXCL on the local FS — whose
   * atomicity claim is PER-KERNEL, not per-JVM, so only a two-process race
   * actually tests it.
@@ -30,7 +31,7 @@ import graft.sources.ParquetDatabase
   *
   * Both processes retry on the protocols' loud aborts (CME from a CAS/gate,
   * IOException from a lost rename, Spark/Analysis exceptions from a peer's
-  * ms-wide swap window) — the protocol's promise is loud-and-convergent,
+  * ms-wide move window) — the protocol's promise is loud-and-convergent,
   * not collision-free.
   *
   * Run directly (`runjava.sh graft.tools.ConcurrencyDrill [root]`) or via
@@ -59,7 +60,7 @@ object ConcurrencyDrill {
   }
 
   /** Patient retry on the protocols' loud aborts: the cross-process peer
-    * legitimately holds a mutex for whole Spark jobs, and its swap windows
+    * legitimately commits between this side's read and gate, and its move windows
     * surface as IO/Analysis/Spark exceptions on this side.
     */
   private def retrying(tag: String, maxAttempts: Int = 600)(op: => Unit): Unit = {
@@ -254,8 +255,8 @@ object ConcurrencyDrill {
     val fp = graft.sources.HadoopText.read(fs,
       new org.apache.hadoop.fs.Path(s"$root/ivf", "_fingerprint"))
     require(fp.contains(s"n=$nExpected"), s"ivf: fingerprint diverged: $fp")
-    require(Similarity.recoverIvfRebalance(spark, s"$root/ivf").isEmpty,
-      "ivf: rebalance debris survived a clean finish")
+    require(graft.sources.FileCommit.recover(spark, s"$root/ivf").isEmpty,
+      "ivf: commit debris survived a clean finish")
     results += s"ivf: $nExpected vectors, fingerprint composed, no debris"
 
     // HLL invariant: racing mergers == the same batches folded sequentially

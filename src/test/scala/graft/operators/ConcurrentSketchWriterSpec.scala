@@ -74,14 +74,16 @@ class ConcurrentSketchWriterSpec extends SparkSpec {
     val ids = spark.read.parquet(segs.map(s => s"$dir/$s/toks"): _*)
       .select("id").distinct().count()
     assert(ids === 12L)
-    // compaction vs compaction: the mutex makes the second loser LOUD
-    val mutex = new org.apache.hadoop.fs.Path(dir, "_compact_pending")
-    assert(graft.sources.HadoopText.writeIfAbsent(fs, mutex, "held-by-peer"))
+    // compaction vs compaction: a peer holding the gate makes the second LOUD
+    val gate = new org.apache.hadoop.fs.Path(dir + "__patch_old")
+    fs.mkdirs(gate)
+    assert(graft.sources.HadoopText.writeIfAbsent(fs,
+      new org.apache.hadoop.fs.Path(gate, "_manifest"), ""))
     intercept[java.util.ConcurrentModificationException](
       Dedup.compactMinHashStore(spark, dir))
-    // a DIED compactor's mutex is released by the quiesced sweep
-    val acts = Dedup.recoverMinHashStore(spark, dir)
-    assert(acts.contains("released-compact-mutex"), acts.mkString("; "))
+    // a DIED compactor's gate is released by the quiesced recover
+    val acts = graft.sources.FileCommit.recover(spark, dir)
+    assert(acts.exists(_.contains("__patch_old")), acts.mkString("; "))
     assert(Dedup.compactMinHashStore(spark, dir) === 3)
     // exactly-once survives compaction: both batch markers carried forward
     Dedup.appendToMinHashStore((99 until 100).map(doc).toDF("doc_id", "text"),
@@ -202,34 +204,27 @@ class ConcurrentSketchWriterSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(est(dir) === est(ref))
 
-    // deterministic conflict: a competitor owning a bucket mid-swap (live
-    // dir renamed away after our entry repair would have run) -> the merge
-    // aborts loudly... simulated at the narrowest observable point: a
-    // moved-aside copy with live present is a live competitor's window,
-    // and the quiesced sweep drops it once the competitor is gone
+    // a crashed merge, mid-move (a bucket's file aside, its replacement
+    // in): merges abort LOUDLY instead of recovering — a live peer's move
+    // window looks exactly the same — and the QUIESCED recover rolls it
+    // back, after which the replayed merge folds with nothing lost
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val liveBucket = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("bucket=")).head
-    val b = liveBucket.stripPrefix("bucket=")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(dir + s"__old_bucket_${b}_deadcafe"))
-    val swept = DistinctSketch.recoverBucketedStore(spark, dir)
-    assert(swept.exists(_.contains("__old_bucket_")), swept.mkString("; "))
-
-    // crashed-mid-swap state: live bucket MISSING with a moved-aside copy.
-    // Merges must abort LOUDLY — an entry-time auto-restore raced a live
-    // competitor's swap window and nested its promote (the bug this drill
-    // caught under full-suite load) — and the QUIESCED sweep restores,
-    // after which the retried merge folds with nothing lost.
     val before = est(dir)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir, liveBucket),
-      new org.apache.hadoop.fs.Path(dir + s"__old_bucket_${b}_feedbeef")))
+    val bucket = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).filter(_.startsWith("bucket=")).min
+    val rels = fs.listStatus(new org.apache.hadoop.fs.Path(dir, bucket))
+      .map(st => s"$bucket/${st.getPath.getName}").toSeq.sorted
+    graft.sources.CommitFixtures.midMove(fs, dir, rels, "crash001") { stage =>
+      spark.read.parquet(dir).filter(col("bucket") === bucket.stripPrefix("bucket=").toLong)
+        .write.partitionBy("bucket").parquet(stage.toString)
+    }
     val ex = intercept[java.util.ConcurrentModificationException](
       DistinctSketch.mergeBatchIntoBucketedStore(spark, events(900, 910), Seq("g"), "u",
         dir, nBuckets = 8))
-    assert(ex.getMessage.contains("recoverBucketedStore"), ex.getMessage)
-    DistinctSketch.recoverBucketedStore(spark, dir)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, liveBucket)))
+    assert(ex.getMessage.contains("recover()"), ex.getMessage)
+    assert(graft.sources.FileCommit.recover(spark, dir).exists(_.startsWith("restored")))
+    assert(est(dir) === before)
     DistinctSketch.mergeBatchIntoBucketedStore(spark, events(900, 910), Seq("g"), "u",
       dir, nBuckets = 8)
     val after = est(dir)
@@ -239,44 +234,42 @@ class ConcurrentSketchWriterSpec extends SparkSpec {
     before.foreach { case (g, v) => assert(after(g) >= v, s"group $g lost mass: $v -> ${after(g)}") }
   }
 
-  test("bucketed HLL store: a retire landing in the entry-check-to-capture gap aborts; no sketch mass stranded") {
-    // the round-11 advice TOCTOU: a competitor retires a touched bucket
-    // AFTER the entry orphan check but BEFORE the per-bucket capture, so
-    // the capture reads "" (missing) and the fold is batch-only. Without
-    // the pre-promote orphan re-check the merge would promote that
-    // batch-only fold into the empty slot — and if the competitor then
-    // crashed, recoverBucketedStore would see OUR live bucket and drop the
-    // competitor's moved-aside copy (holding ALL the bucket's prior mass)
-    // as post-promote debris: a silent distinct-count loss.
-    val dir = fresh("hlltoctou")
+  test("bucketed HLL store: a peer's commit landing before the gate aborts the merge; no sketch mass stranded") {
+    // a peer merge of the same bucket commits AFTER this merge listed and
+    // read the bucket and BEFORE it takes the gate (driven through the
+    // counting filesystem's mkdirs seam, which runs as this merge creates
+    // the gate dir). The post-gate check must see the peer's files and
+    // abort; promoting this merge's fold would drop the peer's sketch mass.
+    import graft.sources.CountingLocalFs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingLocalFs].getName)
+    val dir = s"graftcount://${new java.io.File(fresh("hllgap")).getAbsolutePath}"
     val data = (0 until 200).map(i => (s"k${i % 8}", i.toLong)).toDF("k", "v")
+    def merge(rows: Seq[(String, Long)], d: String = dir): Unit =
+      DistinctSketch.mergeBatchIntoBucketedStore(spark, rows.toDF("k", "v"), Seq("k"), "v",
+        d, nBuckets = 4)
     DistinctSketch.buildBucketedStore(data, Seq("k"), "v", dir, nBuckets = 4)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // the bucket the batch's key hashes into, computed like the store does
-    val b = Seq("k0").toDF("k")
-      .select(pmod(xxhash64(col("k")), lit(4L))).first.getLong(0)
-    val live = new org.apache.hadoop.fs.Path(dir, s"bucket=$b")
-    val aside = new org.apache.hadoop.fs.Path(dir + s"__old_bucket_${b}_c0ffee01")
-    val batch = Seq(("k0", 9999L)).toDF("k", "v")
-    DistinctSketch.postEntryCheckHook = () =>
-      assert(fs.rename(live, aside), "drill setup: competitor retire failed")
+    CountingLocalFs.beforeMkdirs = p => if (p.getName.endsWith("__patch_old")) {
+      CountingLocalFs.beforeMkdirs = _ => ()
+      merge(Seq(("k0", 8888L)))
+    }
     try {
-      val ex = intercept[java.util.ConcurrentModificationException](
-        DistinctSketch.mergeBatchIntoBucketedStore(spark, batch, Seq("k"), "v",
-          dir, nBuckets = 4))
-      assert(ex.getMessage.contains("moved-aside copy appeared"), ex.getMessage)
-    } finally DistinctSketch.postEntryCheckHook = () => ()
-    // the competitor "crashed": quiesced sweep restores its retired bucket,
-    // the replayed merge folds the batch, and the prior mass is intact
-    DistinctSketch.recoverBucketedStore(spark, dir)
-    assert(fs.exists(live))
-    DistinctSketch.mergeBatchIntoBucketedStore(spark, batch, Seq("k"), "v",
-      dir, nBuckets = 4)
-    val estK0 = DistinctSketch.readEstimates(spark, dir)
-      .filter(col("k") === "k0").select("distinct_est").first.getLong(0)
-    // 25 original distinct values (+1 batch value) within HLL error — a
-    // stranded bucket would read 1
-    assert(estK0 >= 24L && estK0 <= 28L, s"k0 estimate $estK0 lost prior mass")
+      val ex = intercept[java.util.ConcurrentModificationException](merge(Seq(("k0", 9999L))))
+      assert(ex.getMessage.contains("changed between"), ex.getMessage)
+    } finally CountingLocalFs.beforeMkdirs = _ => ()
+    // the retry folds over the peer's commit: the store equals the
+    // sequential fold of the same batches
+    merge(Seq(("k0", 9999L)))
+    val ref = fresh("hllgap_ref")
+    DistinctSketch.buildBucketedStore(data, Seq("k"), "v", ref, nBuckets = 4)
+    merge(Seq(("k0", 8888L)), ref)
+    merge(Seq(("k0", 9999L)), ref)
+    def est(d: String) = DistinctSketch.readEstimates(spark, d)
+      .select("k", "distinct_est").collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(est(dir) === est(ref))
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val root = new org.apache.hadoop.fs.Path(dir)
+    assert(fs.listStatus(root.getParent).map(_.getPath.getName)
+      .filter(_.startsWith("hllgap__")).isEmpty, "a commit left a sibling")
   }
 }

@@ -275,11 +275,12 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = pairs()
     assert(before === Set((9L, 1L)))
-    // simulate a crash mid-append: staged segment exists, never renamed in
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_staging/deadbeef/toks"))
+    // simulate a crash mid-append: a staged segment exists, never moved in
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"${dir}__patch_tmp_deadbeef/seg-x/toks"))
     assert(pairs() === before, "staging debris leaked into the read path")
-    assert(Dedup.recoverMinHashStore(spark, dir) === Seq("deadbeef"))
-    assert(Dedup.recoverMinHashStore(spark, dir).isEmpty) // idempotent
+    val acts = graft.sources.FileCommit.recover(spark, dir)
+    assert(acts.size === 1 && acts.head.contains("__patch_tmp_deadbeef"), acts)
+    assert(graft.sources.FileCommit.recover(spark, dir).isEmpty) // idempotent
     assert(pairs() === before)
     // marker-keyed replay: the same batch delivered twice appends ONCE —
     // a double-append would duplicate stored sets and emit duplicate pairs
@@ -343,34 +344,35 @@ class DedupSpec extends SparkSpec {
     def pairs(dir: String) =
       Dedup.minHashPairsAgainstStore(probe, "doc_id", "text", dir, 0.6)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // window 1: crash after a PARTIAL retire -> roll back
-    val d1 = s"$dirBase/w1"
-    build(d1)
-    val want = pairs(d1)
-    intercept[java.io.IOException] {
-      Dedup.compactMinHashStoreImpl(spark, d1, crashAfterRetires = 1)
+    // the compaction's commit: one staged segment replaces the three,
+    // crashed mid-move and after its last move-in; both roll back to the
+    // three committed segments, byte-exactly
+    def segs(dir: String) = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+      .listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+      .filter(_.startsWith("seg-")).toSeq.sorted
+    for (window <- Seq("w1", "w2")) {
+      val d = s"$dirBase/$window"
+      build(d)
+      val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(conf)
+      val want = pairs(d)
+      val committed = graft.sources.CommitFixtures.tree(fs, d)
+      val replaced = segs(d)
+      graft.sources.CommitFixtures.midMove(fs, d, replaced, s"crash_$window") { stage =>
+        spark.read.parquet(replaced.map(s => s"$d/$s/toks"): _*).write.parquet(s"$stage/seg-c/toks")
+        spark.read.parquet(replaced.map(s => s"$d/$s/bands"): _*).write.parquet(s"$stage/seg-c/bands")
+      }
+      if (window == "w2") graft.sources.CommitFixtures.moveRest(fs, d, replaced, s"crash_$window")
+      intercept[java.util.ConcurrentModificationException](Dedup.compactMinHashStore(spark, d))
+      val acts = graft.sources.FileCommit.recover(spark, d)
+      assert(acts.count(_.startsWith("restored")) === (if (window == "w1") 1 else 3), acts)
+      assert(graft.sources.CommitFixtures.tree(fs, d) === committed)
+      assert(segs(d) === replaced)
+      assert(pairs(d) === want)
+      // recovery is idempotent, and the compaction then commits
+      assert(graft.sources.FileCommit.recover(spark, d).isEmpty)
+      assert(Dedup.compactMinHashStore(spark, d) === 3)
+      assert(segs(d).size === 1 && pairs(d) === want)
     }
-    val acts1 = Dedup.recoverMinHashStore(spark, d1)
-    assert(acts1.exists(_.startsWith("rollback-")), s"got $acts1")
-    assert(pairs(d1) === want)
-    val fs1 = new org.apache.hadoop.fs.Path(d1).getFileSystem(conf)
-    assert(fs1.listStatus(new org.apache.hadoop.fs.Path(d1))
-      .map(_.getPath.getName).count(_.startsWith("seg-")) === 3)
-    // window 2: crash after ALL retires, before promote -> roll forward
-    val d2 = s"$dirBase/w2"
-    build(d2)
-    intercept[java.io.IOException] {
-      Dedup.compactMinHashStoreImpl(spark, d2, crashAfterRetires = 3)
-    }
-    val acts2 = Dedup.recoverMinHashStore(spark, d2)
-    assert(acts2.exists(_.startsWith("forward-")), s"got $acts2")
-    assert(pairs(d2) === want)
-    val fs2 = new org.apache.hadoop.fs.Path(d2).getFileSystem(conf)
-    assert(fs2.listStatus(new org.apache.hadoop.fs.Path(d2))
-      .map(_.getPath.getName).count(_.startsWith("seg-")) === 1)
-    // recovery is idempotent in both windows
-    assert(Dedup.recoverMinHashStore(spark, d1).isEmpty)
-    assert(Dedup.recoverMinHashStore(spark, d2).isEmpty)
   }
 
   test("connectedComponents labels every vertex with the min id of its component") {

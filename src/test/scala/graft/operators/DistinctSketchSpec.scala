@@ -38,8 +38,9 @@ class DistinctSketchSpec extends SparkSpec {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     val df = fixture
     val (b0, b1) = (df.filter(col("item") < 1500), df.filter(col("item") >= 1500))
-    DistinctSketch.buildStore(b0, Seq("g"), "item", dir)
-    DistinctSketch.mergeBatchIntoStore(spark, b1, Seq("g"), "item", dir)
+    // one bucket: the flat form of the bucketed store
+    DistinctSketch.buildBucketedStore(b0, Seq("g"), "item", dir, nBuckets = 1)
+    DistinctSketch.mergeBatchIntoBucketedStore(spark, b1, Seq("g"), "item", dir, nBuckets = 1)
     val est = DistinctSketch.readEstimates(spark, dir, "est")
       .join(df.groupBy("g").agg(countDistinct(col("item")).as("exact")), "g")
     assert(est.count() === 4)

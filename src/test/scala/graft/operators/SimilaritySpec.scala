@@ -69,50 +69,44 @@ class SimilaritySpec extends SparkSpec {
     assert(top.head.getAs[Double]("cos") > 0.99)
   }
 
-  test("IVF append crash drill: the pending marker rolls forward or back against the store's actual ids") {
+  test("IVF append crash drill: a crashed append rolls back byte-exactly and its re-append converges") {
+    import graft.sources.{CommitFixtures, FileCommit, HadoopText}
     val dir = s"target/tmp/ivf_spec_crash/${java.util.UUID.randomUUID}"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    def readText(name: String): String =
-      graft.sources.HadoopText.read(fs, new org.apache.hadoop.fs.Path(dir, name))
-    def writeText(name: String, text: String): Unit =
-      graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(dir, name), text)
+    def readText(name: String): String = HadoopText.read(fs, new org.apache.hadoop.fs.Path(dir, name))
     val base = clustered(60, 16, 4, jitter = 0.05).toDF("vec_id", "embedding")
     Similarity.ensureIvfIndex(spark, dir, base, "vec_id", "embedding", numCentroids = 4)
+    val committed = CommitFixtures.tree(fs, dir)
     val oldFp = readText("_fingerprint")
     val batch = clustered(10, 16, 4, jitter = 0.05)
       .map { case (i, v) => (i + 1000L, v) }.toDF("vec_id", "embedding")
-    Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding")
-    val newFp = readText("_fingerprint")
-    assert(newFp != oldFp)
-
-    // drill 1 — crash AFTER the batch's files committed, BEFORE the
-    // fingerprint update: marker present, fingerprint still old
-    writeText("_fingerprint", oldFp)
-    writeText("_append_pending", s"$oldFp\n$newFp")
-    assert(Similarity.recoverIvfIndex(spark, dir) === Some("rolled-forward"))
-    assert(readText("_fingerprint") === newFp)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_append_pending")))
-    assert(Similarity.recoverIvfIndex(spark, dir) === None) // idempotent
-
-    // drill 2 — crash BEFORE anything landed: marker names a batch whose
-    // files never committed; the store matches the pre-append identity
-    writeText("_append_pending", s"$newFp\n${newFp.replace("n=70", "n=75")}")
-    assert(Similarity.recoverIvfIndex(spark, dir) === Some("rolled-back"))
-    assert(readText("_fingerprint") === newFp)
-
-    // drill 3 — store matches NEITHER state (corruption): fail loudly
-    writeText("_append_pending",
-      s"${newFp.replace("n=70", "n=7")}\n${newFp.replace("n=70", "n=75")}")
-    intercept[IllegalStateException](Similarity.recoverIvfIndex(spark, dir))
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_append_pending"), false)
-
-    // after repair, ensureIvfIndex over the grown corpus recognizes the
-    // index as current (no rebuild) and probes still answer
-    val grown = base.unionByName(batch)
+    // the append's commit, crashed in two windows: mid-move, and after its
+    // last move-in (the new fingerprint live) before the release
+    for (token <- Seq("crash001", "crash002")) {
+      CommitFixtures.midMove(fs, dir, Seq("_fingerprint"), token) { stage =>
+        Similarity.assignCells(batch, "vec_id", "embedding", spark.read.parquet(s"$dir/centroids"))
+          .write.partitionBy("cell").parquet(s"$stage/assigned")
+        HadoopText.write(fs, new org.apache.hadoop.fs.Path(stage, "_fingerprint"),
+          oldFp.replace("n=60", "n=70"))
+      }
+      if (token == "crash002") CommitFixtures.moveRest(fs, dir, Seq("_fingerprint"), token)
+      intercept[java.util.ConcurrentModificationException](
+        Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding"))
+      assert(FileCommit.recover(spark, dir).exists(_.startsWith("restored")))
+      assert(CommitFixtures.tree(fs, dir) === committed, s"$token did not roll back exactly")
+      assert(FileCommit.recover(spark, dir).isEmpty) // idempotent
+    }
+    // the rolled-back index is current for the base corpus, and the
+    // re-append composes the same identity a clean append would
     val centMtime = fs.getFileStatus(
       new org.apache.hadoop.fs.Path(s"$dir/centroids")).getModificationTime
-    Similarity.ensureIvfIndex(spark, dir, grown, "vec_id", "embedding", numCentroids = 4)
+    Similarity.ensureIvfIndex(spark, dir, base, "vec_id", "embedding", numCentroids = 4)
+    assert(CommitFixtures.tree(fs, dir) === committed, "ensureIvfIndex rebuilt a rolled-back index")
+    assert(Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding") === 10L)
+    assert(readText("_fingerprint").contains("n=70"))
+    Similarity.ensureIvfIndex(spark, dir, base.unionByName(batch), "vec_id", "embedding",
+      numCentroids = 4)
     assert(fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/centroids"))
       .getModificationTime === centMtime, "ensureIvfIndex rebuilt a healthy appended index")
     val out = Similarity.ivfTopKPersisted(spark, dir, base.filter($"vec_id" === 0),
@@ -171,54 +165,47 @@ class SimilaritySpec extends SparkSpec {
     assert(ex2.getMessage.contains("skewed"), ex2.getMessage)
   }
 
-  test("rebalance claims the append mutex: append-vs-rebalance aborts loudly in both directions") {
+  test("append and rebalance share the commit gate: a held gate aborts both; racing them loses no batch") {
     import org.apache.spark.sql.functions.col
     val dir = s"target/tmp/ivf_spec_mutex/${java.util.UUID.randomUUID}"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val pending = new org.apache.hadoop.fs.Path(dir, "_append_pending")
+    val gate = new org.apache.hadoop.fs.Path(dir + "__patch_old")
     val base = clustered(200, 16, 8, jitter = 0.05).toDF("vec_id", "embedding")
     Similarity.ensureIvfIndex(spark, dir, base, "vec_id", "embedding", numCentroids = 4)
 
-    // direction 1: an append holds the mutex (mid-commit) -> the rebalance
-    // must abort loudly at acquisition instead of swapping the tree out
-    // from under it (the append would otherwise commit into the moved-aside
-    // tree and be silently dropped by the promoted rebuild, with the ledger
-    // claiming its batch was applied — the round-11 verdict seam)
-    assert(graft.sources.HadoopText.writeIfAbsent(fs, pending, "acquiring"))
+    // a commit holds the gate (a peer mid-move): the rebalance and the
+    // append both abort loudly instead of reading a tree it is moving
+    fs.mkdirs(gate)
+    graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(gate, "_manifest"), "")
     val ex1 = intercept[java.util.ConcurrentModificationException] {
       Similarity.rebalanceIvfIndex(spark, dir,
         Similarity.autoCentroids(_, targetCellSize = 8))
     }
-    assert(ex1.getMessage.contains("append is in flight"), ex1.getMessage)
-    fs.delete(pending, false)
-
-    // direction 2: a rebalance holds the mutex -> a concurrent append must
-    // abort loudly at ITS acquisition
-    assert(graft.sources.HadoopText.writeIfAbsent(fs, pending, "rebalancing"))
+    assert(ex1.getMessage.contains("commit manifest"), ex1.getMessage)
     val ex2 = intercept[java.util.ConcurrentModificationException] {
       Similarity.appendToIvfIndex(spark, dir,
         clustered(10, 16, 8, jitter = 0.05).map { case (i, v) => (i + 7000L, v) }
           .toDF("vec_id", "embedding"), "vec_id", "embedding")
     }
-    assert(ex2.getMessage.contains("_append_pending"), ex2.getMessage)
-    fs.delete(pending, false)
+    assert(ex2.getMessage.contains("commit manifest"), ex2.getMessage)
+    fs.delete(gate, true)
 
     // release accounting: both the no-op path and a completed rebalance
-    // leave the mutex free — appends are deliberately open again after
+    // leave the gate free — appends are open again after
     assert(Similarity.rebalanceIvfIndex(spark, dir,
       Similarity.autoCentroids(_, targetCellSize = 8)) === Some(25))
-    assert(!fs.exists(pending), "completed rebalance must release the append mutex")
+    assert(!fs.exists(gate), "completed rebalance must release the gate")
     assert(Similarity.rebalanceIvfIndex(spark, dir,
       Similarity.autoCentroids(_, targetCellSize = 8)) === None) // satisfied rule: no-op
-    assert(!fs.exists(pending), "no-op rebalance must release the append mutex")
+    assert(!fs.exists(gate), "no-op rebalance must not hold the gate")
     assert(Similarity.appendToIvfIndex(spark, dir,
       clustered(10, 16, 8, jitter = 0.05).map { case (i, v) => (i + 8000L, v) }
         .toDF("vec_id", "embedding"), "vec_id", "embedding") === 10L)
 
     // two-thread drill: a looping appender and a forced rebalance race the
     // same store with retries on the loud aborts — no appended batch may be
-    // dropped by the staged swap, and the final identity must account for
+    // dropped by a rebalance's commit, and the final identity must account for
     // every batch that reported success
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val appended = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -228,16 +215,16 @@ class SimilaritySpec extends SparkSpec {
       while (!done) {
         try { body; done = true }
         catch {
-          // retryable aborts: the mutex CME, a lost rename race
-          // (IOException), and the ms-wide swap window where the index dir
-          // itself is absent (the entry require -> IllegalArgumentException,
+          // retryable aborts: the gate or fingerprint CME, a lost rename
+          // race (IOException), and the ms-wide move window where a peer's
+          // files are aside (the entry require -> IllegalArgumentException,
           // a parquet read -> AnalysisException PATH_NOT_FOUND)
           case e @ (_: java.util.ConcurrentModificationException | _: java.io.IOException
                     | _: IllegalArgumentException
                     | _: org.apache.spark.sql.AnalysisException) =>
             attempt += 1
-            // generous: the peer may hold the mutex for a full k-means +
-            // staged-write rebalance, not just a marker-file CAS window
+            // generous: the appender may commit through a whole k-means +
+            // staged-write rebalance several times over
             if (attempt > 100) throw new IllegalStateException(s"$tag: no convergence", e)
             Thread.sleep(25L * math.min(attempt, 20))
         }
@@ -272,10 +259,11 @@ class SimilaritySpec extends SparkSpec {
     val fp = graft.sources.HadoopText.read(fs,
       new org.apache.hadoop.fs.Path(dir, "_fingerprint"))
     assert(fp.contains(s"n=${210L + appended.get}"), fp)
-    assert(!fs.exists(pending))
+    assert(!fs.exists(gate))
   }
 
-  test("IVF rebalance crash drill: every swap window rolls forward or back, debris is swept") {
+  test("IVF rebalance crash drill: a crashed rebalance rolls back byte-exactly; writers abort until recover") {
+    import graft.sources.{CommitFixtures, FileCommit}
     val root = s"target/tmp/ivf_spec_rebal/${java.util.UUID.randomUUID}"
     val dir = s"$root/ivf"
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -283,71 +271,37 @@ class SimilaritySpec extends SparkSpec {
     def P(s: String) = new org.apache.hadoop.fs.Path(s)
     val base = clustered(100, 16, 4, jitter = 0.05).toDF("vec_id", "embedding")
     Similarity.ensureIvfIndex(spark, dir, base, "vec_id", "embedding", numCentroids = 4)
-
-    // window A — crash DURING staging (no _fingerprint sentinel yet),
-    // live dir intact: staging is debris, dropped
-    fs.mkdirs(P(s"${dir}__rebalance_tmp_aaaa/centroids"))
-    val a = Similarity.recoverIvfRebalance(spark, dir)
-    assert(a.exists(_.contains("dropped")), a.mkString("; "))
-    assert(!fs.exists(P(s"${dir}__rebalance_tmp_aaaa")) && fs.exists(P(dir)))
-
-    // window B — crash BETWEEN the two renames: old tree aside, stage
-    // COMPLETE (sentinel present) -> roll forward
-    assert(fs.rename(P(dir), P(s"${dir}__rebalance_old_bbbb")))
-    val stage = s"${dir}__rebalance_tmp_bbbb"
-    Similarity.ensureIvfIndex(spark, stage, base, "vec_id", "embedding", numCentroids = 5)
-    val b = Similarity.recoverIvfRebalance(spark, dir)
-    assert(b.exists(_.contains("completed")), b.mkString("; "))
-    assert(Similarity.loadIvfIndex(spark, dir).centroids.count() === 5L)
-    assert(!fs.exists(P(s"${dir}__rebalance_old_bbbb")))
-
-    // window C — crash between the renames with an INCOMPLETE stage ->
-    // roll the old tree back (a crashed rebalance never reported success)
-    assert(fs.rename(P(dir), P(s"${dir}__rebalance_old_cccc")))
-    fs.mkdirs(P(s"${dir}__rebalance_tmp_cccc/assigned"))
-    val c = Similarity.recoverIvfRebalance(spark, dir)
-    assert(c.exists(_.contains("rolled back")), c.mkString("; "))
-    assert(Similarity.loadIvfIndex(spark, dir).centroids.count() === 5L)
-    assert(!fs.exists(P(s"${dir}__rebalance_tmp_cccc")))
-
-    // window D — crash after promote, before old-tree cleanup: healthy dir
-    // beside a leftover old tree -> old is dropped, index untouched
-    fs.mkdirs(P(s"${dir}__rebalance_old_dddd"))
-    val d = Similarity.recoverIvfRebalance(spark, dir)
-    assert(d.exists(_.contains("dropped")), d.mkString("; "))
-    assert(Similarity.loadIvfIndex(spark, dir).centroids.count() === 5L)
-
-    // window E — the LIVE-swap signature (dir retired, complete stage
-    // waiting): a WRITER entering here must abort retryably, NOT resolve
-    // the swap — entry-resolving a live rebalance's swap commits it under
-    // the rebalancer and makes its own promote fail spuriously (round 13).
-    // Only the quiesced recoverIvfIndex may resolve.
-    assert(fs.rename(P(dir), P(s"${dir}__rebalance_old_ffff")))
-    val stage2 = s"${dir}__rebalance_tmp_ffff"
-    Similarity.ensureIvfIndex(spark, stage2, base, "vec_id", "embedding", numCentroids = 3)
-    val exApp = intercept[java.util.ConcurrentModificationException] {
-      Similarity.appendToIvfIndex(spark, dir,
-        clustered(5, 16, 4, jitter = 0.05).toDF("vec_id", "embedding"), "vec_id", "embedding")
+    val committed = CommitFixtures.tree(fs, dir)
+    // the rebalance's commit replaces every file: the staged tree is a
+    // complete 5-cell index, crashed mid-move and after its last move-in
+    val touched = Seq("centroids", "assigned", "_fingerprint")
+    for (token <- Seq("crash001", "crash002")) {
+      CommitFixtures.midMove(fs, dir, touched, token) { stage =>
+        Similarity.ensureIvfIndex(spark, stage.toString, base, "vec_id", "embedding",
+          numCentroids = 5)
+      }
+      if (token == "crash002") CommitFixtures.moveRest(fs, dir, touched, token)
+      val midMove = CommitFixtures.tree(fs, dir)
+      val exApp = intercept[java.util.ConcurrentModificationException] {
+        Similarity.appendToIvfIndex(spark, dir,
+          clustered(5, 16, 4, jitter = 0.05).toDF("vec_id", "embedding"), "vec_id", "embedding")
+      }
+      assert(exApp.getMessage.contains("commit manifest"), exApp.getMessage)
+      intercept[java.util.ConcurrentModificationException] {
+        Similarity.rebalanceIvfIndex(spark, dir, Similarity.autoCentroids(_), force = true)
+      }
+      assert(CommitFixtures.tree(fs, dir) === midMove, s"$token: a writer touched the commit")
+      val acts = FileCommit.recover(spark, dir)
+      assert(acts.exists(_.startsWith("restored")), acts.mkString("; "))
+      assert(CommitFixtures.tree(fs, dir) === committed, s"$token did not roll back exactly")
+      assert(Similarity.loadIvfIndex(spark, dir).centroids.count() === 4L)
     }
-    assert(exApp.getMessage.contains("swap may be mid-promote"), exApp.getMessage)
-    val exReb = intercept[java.util.ConcurrentModificationException] {
-      Similarity.rebalanceIvfIndex(spark, dir, Similarity.autoCentroids(_))
-    }
-    assert(exReb.getMessage.contains("swap may be mid-promote"), exReb.getMessage)
-    // neither writer touched the in-flight swap's state
-    assert(!fs.exists(P(dir)) && fs.exists(P(stage2))
-      && fs.exists(P(s"${dir}__rebalance_old_ffff")))
-    // the quiesced recover resolves it (complete stage rolls forward)
-    assert(Similarity.recoverIvfRebalance(spark, dir).exists(_.contains("completed")))
-    assert(Similarity.loadIvfIndex(spark, dir).centroids.count() === 3L)
-
-    // idempotent no-op on a clean tree, and ensure/append entries self-heal
-    // through the same repair (recoverIvfIndex chains it)
-    assert(Similarity.recoverIvfRebalance(spark, dir).isEmpty)
-    assert(fs.rename(P(dir), P(s"${dir}__rebalance_old_eeee")))
-    Similarity.recoverIvfIndex(spark, dir) // entry-point self-heal
-    assert(fs.exists(P(s"$dir/_fingerprint")))
-    assert(graft.sources.HadoopText.read(fs, P(s"$dir/_fingerprint")) !== "")
+    // idempotent no-op on a clean tree; a real rebalance then commits and
+    // leaves no sibling behind
+    assert(FileCommit.recover(spark, dir).isEmpty)
+    assert(Similarity.rebalanceIvfIndex(spark, dir, _ => 5, force = true) === Some(5))
+    assert(Similarity.loadIvfIndex(spark, dir).centroids.count() === 5L)
+    assert(fs.listStatus(P(root)).map(_.getPath.getName).toSeq === Seq("ivf"))
   }
 
   test("auto-sized persisted index carries exactly autoCentroids(n) centroids above the floor") {
@@ -665,17 +619,36 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ensureIvfIndex(spark, dir, shrunk, "vec_id", "embedding", numCentroids = 4)
       assert(nids(probeTwice(carriesMatrix = true)) === (0L until 120L).toSet - 7L)
 
-      // the recover drills' hand-written fingerprints: an append's crash
-      // after its files landed (marker names both identities) rolls forward
+      // a hand-written fingerprint renews the handle
       val fp0 = graft.sources.HadoopText.read(fs, P("_fingerprint"))
       Similarity.appendToIvfIndex(spark, dir, batch, "vec_id", "embedding")
-      val fp1 = graft.sources.HadoopText.read(fs, P("_fingerprint"))
       val grown = (0L until 120L).toSet - 7L ++ (500L until 510L)
       assert(nids(probeTwice(carriesMatrix = true)) === grown)
       graft.sources.HadoopText.write(fs, P("_fingerprint"), fp0)
       assert(nids(probeTwice()) === grown)
-      graft.sources.HadoopText.write(fs, P("_append_pending"), s"$fp0\n$fp1")
-      assert(Similarity.recoverIvfIndex(spark, dir) === Some("rolled-forward"))
+      // an append mid-move (`_fingerprint` aside, one new file in): a probe
+      // reuses the held version, the one committed before the append
+      val fp1 = graft.sources.HadoopText.read(fs, P("_fingerprint"))
+      val crashed = clustered(5, 16, 4, jitter = 0.05)
+        .map { case (i, v) => (i + 700L, v) }.toDF("vec_id", "embedding")
+      def crashedAppend(token: String): Unit =
+        graft.sources.CommitFixtures.midMove(fs, dir, Seq("_fingerprint"), token) { stage =>
+          Similarity.assignCells(crashed, "vec_id", "embedding", spark.read.parquet(s"$dir/centroids"))
+            .write.partitionBy("cell").parquet(s"$stage/assigned")
+          graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(stage, "_fingerprint"),
+            fp1.replace("ivf-v1", "ivf-v1|crashed"))
+        }
+      crashedAppend("crash004")
+      val (mid, jm) = jobsOf(probeDir(dir))
+      assert(!opens(jm) && nids(mid) === grown, s"a probe mid-move left the held version: $jm")
+      assert(graft.sources.FileCommit.recover(spark, dir).exists(_.startsWith("restored")))
+      // crashed after its last move-in: probes open the version it moved
+      // in, and the rollback of FileCommit.recover renews the handle to the
+      // committed version
+      crashedAppend("crash003")
+      graft.sources.CommitFixtures.moveRest(fs, dir, Seq("_fingerprint"), "crash003")
+      assert(nids(probeTwice()) === grown ++ (700L until 705L))
+      assert(graft.sources.FileCommit.recover(spark, dir).exists(_.startsWith("restored")))
       assert(nids(probeTwice()) === grown)
 
       // no `_fingerprint` (persistIvfIndex alone): every probe opens afresh

@@ -24,9 +24,14 @@ class CountingLocalFs extends RawLocalFileSystem {
   }
   override def delete(f: Path, recursive: Boolean): Boolean =
     CountingLocalFs.outer("delete")(super.delete(f, recursive))
-  override def mkdirs(f: Path): Boolean = CountingLocalFs.outer("mkdirs")(super.mkdirs(f))
-  override def mkdirs(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission): Boolean =
+  override def mkdirs(f: Path): Boolean = {
+    CountingLocalFs.beforeMkdirs(f)
+    CountingLocalFs.outer("mkdirs")(super.mkdirs(f))
+  }
+  override def mkdirs(f: Path, permission: org.apache.hadoop.fs.permission.FsPermission): Boolean = {
+    CountingLocalFs.beforeMkdirs(f)
     CountingLocalFs.outer("mkdirs")(super.mkdirs(f, permission))
+  }
 }
 
 object CountingLocalFs {
@@ -40,6 +45,8 @@ object CountingLocalFs {
     try f finally depth.set(depth.get - 1)
   }
   def total: Int = { import scala.jdk.CollectionConverters._; calls.values.asScala.sum }
+  /** Runs before every mkdirs: the point a test interleaves a peer at. */
+  @volatile var beforeMkdirs: Path => Unit = _ => ()
 }
 
 class ParquetDatabaseSpec extends SparkSpec {

@@ -183,33 +183,38 @@ class DocStreamsSpec extends SparkSpec {
     assert(committed.contains(s"lastBatch=${last + 1}"),
       "ensureIvfIndex rebuilt a healthy stream-maintained index")
 
-    // crash between the batch's data commit and the fingerprint write:
-    // roll-forward restores the ledger, so the re-delivered batch STILL
-    // no-ops afterwards (exactly-once across the crash)
-    graft.sources.HadoopText.write(fs, fpPath, fp)
-    graft.sources.HadoopText.write(fs,
-      new org.apache.hadoop.fs.Path(s"$root/ivf", "_append_pending"),
-      s"$fp\n$committed")
-    assert(Similarity.recoverIvfIndex(spark, s"$root/ivf") === Some("rolled-forward"))
-    assert(Similarity.appendToIvfIndex(spark, s"$root/ivf", extra, "vec_id", "embedding",
-      batchMarker = Some(last + 1)) === 0L)
-    assert(assignedCount === 42L)
-
-    // crash BEFORE the batch's data landed: roll-back drops that batch's
-    // ledger entry, so its re-delivery re-applies instead of being lost
-    val fakeNew = committed.split('|').map {
+    // a crashed append (batch last+2, after its last move-in: its files and
+    // its ledger are live, the gate is still held): the re-delivered batch
+    // aborts instead of double-applying, FileCommit.recover — run by the
+    // stream at start — rolls the batch and its ledger back byte-exactly,
+    // and the re-delivery then applies it once
+    val committedTree = graft.sources.CommitFixtures.tree(fs, s"$root/ivf")
+    val retry = Seq((200L, vec(200)), (201L, vec(201))).toDF("vec_id", "embedding")
+    val crashedFp = committed.split('|').map {
       case f if f.startsWith("n=") => s"n=${f.drop(2).toLong + 2}"
       case f if f.startsWith("lastBatch=") => s"lastBatch=${last + 2}"
       case f => f
     }.mkString("|")
-    graft.sources.HadoopText.write(fs,
-      new org.apache.hadoop.fs.Path(s"$root/ivf", "_append_pending"),
-      s"$committed\n$fakeNew")
-    assert(Similarity.recoverIvfIndex(spark, s"$root/ivf") === Some("rolled-back"))
+    graft.sources.CommitFixtures.midMove(fs, s"$root/ivf", Seq("_fingerprint"), "crash001") { stage =>
+      Similarity.assignCells(retry, "vec_id", "embedding", spark.read.parquet(s"$root/ivf/centroids"))
+        .write.partitionBy("cell").parquet(s"$stage/assigned")
+      graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(stage, "_fingerprint"), crashedFp)
+    }
+    graft.sources.CommitFixtures.moveRest(fs, s"$root/ivf", Seq("_fingerprint"), "crash001")
+    assert(assignedCount === 44L)
+    intercept[java.util.ConcurrentModificationException](
+      Similarity.appendToIvfIndex(spark, s"$root/ivf", retry, "vec_id", "embedding",
+        batchMarker = Some(last + 2)))
+    assert(graft.sources.FileCommit.recover(spark, s"$root/ivf").exists(_.startsWith("restored")))
+    assert(graft.sources.CommitFixtures.tree(fs, s"$root/ivf") === committedTree)
     assert(graft.sources.HadoopText.read(fs, fpPath) === committed)
-    val retry = Seq((200L, vec(200)), (201L, vec(201))).toDF("vec_id", "embedding")
+    assert(assignedCount === 42L)
     assert(Similarity.appendToIvfIndex(spark, s"$root/ivf", retry, "vec_id", "embedding",
       batchMarker = Some(last + 2)) === 2L)
+    assert(assignedCount === 44L)
+    // a committed batch's re-delivery still no-ops
+    assert(Similarity.appendToIvfIndex(spark, s"$root/ivf", retry, "vec_id", "embedding",
+      batchMarker = Some(last + 2)) === 0L)
     assert(assignedCount === 44L)
   }
 
