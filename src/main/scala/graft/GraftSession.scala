@@ -22,16 +22,10 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // scale knobs, env-overridable so the sf10/sf30 rehearsals can measure
-      // alternatives (guide §2.3 zstd, §6 split sizing) without forking the
-      // session; the defaults are the session's historical values, so a
-      // driver bench (which sets neither) is unaffected. Production-scale
-      // guidance from the r16 measurements lives in OPTIMIZATION_r16.md.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
-          (128L * 1024 * 1024).toString))
+      // the session's historical codec and split size; an A/B edits these
+      // constants (r16 measurements: OPTIMIZATION_r16.md)
+      .config("spark.io.compression.codec", "lz4")
+      .config("spark.sql.files.maxPartitionBytes", 128L * 1024 * 1024)
       // write TIMESTAMP(MICROS), not the INT96 legacy default: INT96 has no
       // usable min/max stats (no row-group pruning on time predicates) and
       // isn't annotated, so footer-driven readers can't negotiate it

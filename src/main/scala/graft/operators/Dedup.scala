@@ -549,20 +549,60 @@ object Dedup {
     * `toks` ([[graft.functions.MinHashBands]]), so each writes one file per
     * input split, the input's own splits are the parallelism, and the same
     * input writes the same bytes.
+    *
+    * The build is a [[graft.sources.FileCommit.replace]] of every
+    * top-level entry of `dir` (of none, when it is absent): it stages
+    * `_params` plus one segment, checked against the sorted entry names it
+    * listed, as compaction is. A concurrent build or append that commits
+    * first aborts it with a retryable ConcurrentModificationException; a
+    * crash is rolled back by the quiesced `FileCommit.recover`.
     */
   def buildMinHashStore(docs: DataFrame, idCol: String, textCol: String, dir: String,
                         numBands: Int = 16, rowsPerBand: Int = 2,
-                        shingleN: Int = 3): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
-    graft.sources.FileCommit.requireNoCommit(fs, p)
-    fs.delete(p, true)
-    appendToMinHashStore(docs, idCol, textCol, dir, numBands, rowsPerBand, shingleN)
+                        shingleN: Int = 3): Unit =
+    commitBuild(docs, idCol, textCol, dir, (numBands, rowsPerBand, shingleN), None)
+
+  /** The build commit: `_params` and one segment replace every top-level
+    * entry of `dir`, checked against their sorted names.
+    */
+  private def commitBuild(docs: DataFrame, idCol: String, textCol: String, dir: String,
+                          params: (Int, Int, Int), batchMarker: Option[String]): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
+    graft.sources.FileCommit.requireNoCommit(fs, root)
+    def entries(): Seq[String] =
+      try fs.listStatus(root).toSeq.map(_.getPath.getName).sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val names = entries()
+    graft.sources.FileCommit.replace(fs, root, names, names.mkString("\n"),
+      () => entries().mkString("\n")) { stage =>
+      graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(stage, "_params"),
+        s"${params._1}|${params._2}|${params._3}")
+      writeSegment(fs, docs, idCol, textCol, stage, params, batchMarker)
+    }
+  }
+
+  /** Write `batch`'s signatures as one `seg-<uuid>` directory under
+    * `stage`: `toks`, then `bands` derived from the staged `toks` (one
+    * shingle pass total), then the batch marker, if any.
+    */
+  private def writeSegment(fs: org.apache.hadoop.fs.FileSystem, batch: DataFrame,
+                           idCol: String, textCol: String, stage: org.apache.hadoop.fs.Path,
+                           params: (Int, Int, Int), batchMarker: Option[String]): Unit = {
+    val (numBands, rowsPerBand, shingleN) = params
+    val seg = new org.apache.hadoop.fs.Path(stage, s"seg-${java.util.UUID.randomUUID}")
+    shingleHashSets(batch, idCol, textCol, shingleN).write.parquet(s"$seg/toks")
+    setBandRows(batch.sparkSession.read.parquet(s"$seg/toks"), numBands, rowsPerBand)
+      .write.parquet(s"$seg/bands")
+    batchMarker.foreach(m => fs.create(new org.apache.hadoop.fs.Path(seg, s"_batch-$m"), true).close())
   }
 
   /** Append a new batch's signatures to an existing store (after the caller
     * has dedup'd/kept them — the store should hold surviving docs). Params
-    * are pinned by the store's `_params` marker.
+    * are pinned by the store's `_params` marker; an append to a store with
+    * no `_params` is its build ([[buildMinHashStore]]), so two first
+    * appends to an empty store race like two builds: one commits, the
+    * other gets a retryable ConcurrentModificationException.
     *
     * Each append is one SEGMENT — `toks` and `bands` staged together and
     * made visible as `seg-<uuid>` by a [[graft.sources.FileCommit.append]],
@@ -579,10 +619,10 @@ object Dedup {
   def appendToMinHashStore(batch: DataFrame, idCol: String, textCol: String,
                            dir: String, numBands: Int = 16, rowsPerBand: Int = 2,
                            shingleN: Int = 3, batchMarker: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = batch.sparkSession.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(conf)
+    val params = (numBands, rowsPerBand, shingleN)
     graft.sources.FileCommit.requireNoCommit(fs, root)
     // a store persisted by the pre-segment layout (root-level toks/ +
     // bands/) must be rebuilt, not appended to: segment readers only see
@@ -592,25 +632,17 @@ object Dedup {
       s"MinHash store at $dir uses the legacy root-level toks/bands layout — " +
         "rebuild it with buildMinHashStore before appending")
     readParams(dir, conf) match {
+      case None => commitBuild(batch, idCol, textCol, dir, params, batchMarker)
       case Some(stored) =>
-        require(stored == (numBands, rowsPerBand, shingleN),
+        require(stored == params,
           s"store $dir was built with (bands,rows,shingleN)=$stored, " +
             s"got (${numBands},${rowsPerBand},${shingleN})")
-      case None =>
-        writeParams(dir, (numBands, rowsPerBand, shingleN), conf)
-    }
-    val alreadyCommitted = batchMarker.exists(m =>
-      segmentDirs(fs, root).exists(seg =>
-        fs.exists(new org.apache.hadoop.fs.Path(seg, s"_batch-$m"))))
-    if (alreadyCommitted) return
-    graft.sources.FileCommit.append(fs, root) { stage =>
-      val seg = new org.apache.hadoop.fs.Path(stage, s"seg-${java.util.UUID.randomUUID}")
-      shingleHashSets(batch, idCol, textCol, shingleN)
-        .write.mode("overwrite").parquet(s"$seg/toks")
-      // band rows derive from the STAGED arrays — one shingle pass total
-      setBandRows(spark.read.parquet(s"$seg/toks"), numBands, rowsPerBand)
-        .write.mode("overwrite").parquet(s"$seg/bands")
-      batchMarker.foreach(m => fs.create(new org.apache.hadoop.fs.Path(seg, s"_batch-$m"), true).close())
+        val alreadyCommitted = batchMarker.exists(m =>
+          segmentDirs(fs, root).exists(seg =>
+            fs.exists(new org.apache.hadoop.fs.Path(seg, s"_batch-$m"))))
+        if (!alreadyCommitted)
+          graft.sources.FileCommit.append(fs, root)(
+            writeSegment(fs, batch, idCol, textCol, _, params, batchMarker))
     }
   }
 
@@ -644,10 +676,8 @@ object Dedup {
     graft.sources.FileCommit.replace(fs, root, names, names.mkString("\n"),
       () => segmentDirs(fs, root).map(_.getName).filter(names.contains).mkString("\n")) { stage =>
       val seg = new org.apache.hadoop.fs.Path(stage, s"seg-${java.util.UUID.randomUUID}")
-      spark.read.parquet(segs.map(p => s"$p/toks"): _*)
-        .write.mode("overwrite").parquet(s"$seg/toks")
-      spark.read.parquet(segs.map(p => s"$p/bands"): _*)
-        .write.mode("overwrite").parquet(s"$seg/bands")
+      spark.read.parquet(segs.map(p => s"$p/toks"): _*).write.parquet(s"$seg/toks")
+      spark.read.parquet(segs.map(p => s"$p/bands"): _*).write.parquet(s"$seg/bands")
       // carry every replaced segment's batch markers forward
       segs.foreach { s =>
         fs.listStatus(s).filter(_.getPath.getName.startsWith("_batch-"))
@@ -680,13 +710,6 @@ object Dedup {
             "(expected bands|rowsPerBand|shingleN)")
       }
     }
-  }
-
-  private def writeParams(dir: String, params: (Int, Int, Int),
-      conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val p = paramsPath(dir)
-    graft.sources.HadoopText.write(p.getFileSystem(conf), p,
-      s"${params._1}|${params._2}|${params._3}")
   }
 
   /** Broadcast bound on the probe's batch band rows: at or under it the

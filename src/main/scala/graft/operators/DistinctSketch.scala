@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   * points — but both stay inside the bound; spec-asserted).
   *
   * The persisted store is one parquet row per key, hash-partitioned into
-  * `bucket=<b>` dirs — metadata-sized relative to the corpus. A batch
-  * merge rewrites only the buckets its keys hash into, and commits through
+  * `bucket=<b>` dirs — metadata-sized relative to the corpus. A build
+  * replaces every bucket; a batch merge rewrites only the buckets its keys
+  * hash into, and builds the store when it is absent. Both commit through
   * the one store commit protocol ([[graft.sources.FileCommit]]); a store
   * with `nBuckets = 1` is the flat form.
   *
@@ -64,61 +65,89 @@ object DistinctSketch {
   //   1. sketches the batch (batch-sized scan, keys-sized result),
   //   2. reads ONLY the store buckets the batch's keys hash into
   //      (partition-pruned scan — untouched buckets are never opened),
-  //   3. replaces only those buckets' files in one commit.
+  //   3. replaces only those bucket dirs in one commit.
   // Refresh cost is O(touched-bucket keys · sketch), not O(all keys).
 
   private def bucketCol(keys: Seq[String], nBuckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
 
+  /** The store's sketches of `df`, one row per key with its `bucket`. */
+  private def bucketedSketches(df: DataFrame, keys: Seq[String], itemCol: String,
+      nBuckets: Int, lgK: Int): DataFrame =
+    sketchByKey(df, keys, itemCol, lgK).withColumn("bucket", bucketCol(keys, nBuckets))
+
+  /** The files of the `bucket=` dirs `buckets` as sorted (path, length,
+    * mtime) lines: the fingerprint every commit of the store checks.
+    */
+  private def listing(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+      buckets: Seq[String]): Seq[String] =
+    buckets.sorted.flatMap { b =>
+      try fs.listStatus(new org.apache.hadoop.fs.Path(root, b)).filter(_.isFile).toSeq
+        .sortBy(_.getPath.getName)
+        .map(st => s"$b/${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+
+  /** The store's `bucket=` dirs (none while `root` is absent). */
+  private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[String] =
+    try fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("bucket="))
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** Build the store at `dir` from `df`: a [[graft.sources.FileCommit.replace]]
+    * of every `bucket=` dir (of none, into an absent root), checked against
+    * the (name, length, mtime) listing of those dirs' files that
+    * [[mergeBatchIntoBucketedStore]] checks, so a peer's build or merge
+    * that commits first aborts this one with a retryable
+    * ConcurrentModificationException.
+    */
   def buildBucketedStore(df: DataFrame, keys: Seq[String], itemCol: String, dir: String,
       nBuckets: Int = 64, lgK: Int = DefaultLgK): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    graft.sources.FileCommit.requireNoCommit(
-      root.getFileSystem(df.sparkSession.sessionState.newHadoopConf()), root)
-    sketchByKey(df, keys, itemCol, lgK)
-      .withColumn("bucket", bucketCol(keys, nBuckets))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
+    val fs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    graft.sources.FileCommit.requireNoCommit(fs, root)
+    val buckets = bucketDirs(fs, root)
+    graft.sources.FileCommit.replace(fs, root, buckets, listing(fs, root, buckets).mkString("\n"),
+      () => listing(fs, root, bucketDirs(fs, root)).mkString("\n")) { stage =>
+      bucketedSketches(df, keys, itemCol, nBuckets, lgK).write.partitionBy("bucket").parquet(stage.toString)
+    }
   }
 
   /** Fold one batch into the bucketed store, rewriting only touched
     * buckets. `nBuckets` must match the build (bucket ids are recomputed
-    * from the same hash).
+    * from the same hash). A merge into an absent store builds it.
     *
-    * The commit is a [[graft.sources.FileCommit.replace]] whose touched
-    * paths are the files of the touched `bucket=` dirs, checked against
-    * their (name, length, mtime) listing taken before the store is read:
-    * a peer's commit on any touched bucket aborts this merge. A touched
-    * bucket moves in as one directory rename.
+    * The commit is a [[graft.sources.FileCommit.replace]] of the touched
+    * `bucket=` dirs, checked against their files' (name, length, mtime)
+    * listing taken before the store is read: a peer's commit on any
+    * touched bucket aborts this merge. Each touched bucket moves aside and
+    * in as one directory rename.
     */
   def mergeBatchIntoBucketedStore(spark: SparkSession, batch: DataFrame, keys: Seq[String],
       itemCol: String, dir: String, nBuckets: Int = 64, lgK: Int = DefaultLgK): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     graft.sources.FileCommit.requireNoCommit(fs, root)
-    val batchSk = sketchByKey(batch, keys, itemCol, lgK)
-      .withColumn("bucket", bucketCol(keys, nBuckets))
+    val batchSk = bucketedSketches(batch, keys, itemCol, nBuckets, lgK)
       .localCheckpoint() // keys-sized; feeds the touched-set and the merge
     // ≤ nBuckets values — metadata-sized by construction
     val touched = batchSk.select("bucket").distinct().collect()
       .map(_.getLong(0)).sorted
+    val dirs = touched.toSeq.map(b => s"bucket=$b")
     // the touched buckets' files, listed BEFORE the read the merge is
     // based on: the commit's fingerprint
-    def listing(): Seq[String] = touched.toSeq.flatMap { b =>
-      val d = new org.apache.hadoop.fs.Path(root, s"bucket=$b")
-      try fs.listStatus(d).filter(_.isFile).toSeq.sortBy(_.getPath.getName).map(st =>
-        s"bucket=$b/${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-      catch { case _: java.io.FileNotFoundException => Nil }
-    }
-    val entry = listing()
-    val existing = spark.read.parquet(dir)
-      .filter(col("bucket").isin(touched: _*))
-      .select((keys :+ "sketch" :+ "bucket").map(col): _*)
-    val merged = existing
-      .unionByName(batchSk.select((keys :+ "sketch" :+ "bucket").map(col): _*))
-      .groupBy((keys :+ "bucket").map(col): _*)
-      .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
-    graft.sources.FileCommit.replace(fs, root, entry.map(_.takeWhile(_ != '|')),
-      entry.mkString("\n"), () => listing().mkString("\n")) { stage =>
+    val entry = listing(fs, root, dirs)
+    val merged =
+      if (entry.isEmpty) batchSk
+      else spark.read.parquet(dir)
+        .filter(col("bucket").isin(touched: _*))
+        .select((keys :+ "sketch" :+ "bucket").map(col): _*)
+        .unionByName(batchSk.select((keys :+ "sketch" :+ "bucket").map(col): _*))
+        .groupBy((keys :+ "bucket").map(col): _*)
+        .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
+    graft.sources.FileCommit.replace(fs, root, entry.map(_.takeWhile(_ != '/')).distinct,
+      entry.mkString("\n"), () => listing(fs, root, dirs).mkString("\n")) { stage =>
       merged.write.partitionBy("bucket").parquet(stage.toString)
     }
   }

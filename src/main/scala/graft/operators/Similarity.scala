@@ -414,24 +414,11 @@ object Similarity {
 
   /** IVF index artifacts: broadcastable centroids `(cid, cv)` and the
     * corpus with its assigned cell `(nid, nv, cell)`. Built once at write
-    * time; [[persistIvfIndex]] stores `assigned` hive-partitioned by `cell`
-    * so probes prune whole cell directories at scan time
-    * ([[ivfTopKPersisted]]).
+    * time; [[ensureIvfIndex]] persists them with `assigned`
+    * hive-partitioned by `cell`, so probes prune whole cell directories at
+    * scan time ([[ivfTopKPersisted]]).
     */
   final case class IvfIndex(centroids: DataFrame, assigned: DataFrame)
-
-  /** Persist the index for repeated probing: centroids as plain parquet
-    * (tiny, broadcast at probe time), `assigned` hive-partitioned by `cell`
-    * — the storage layout that turns "which cells to probe" into directory
-    * pruning before a single footer is read. Overwrites `dir`.
-    */
-  def persistIvfIndex(index: IvfIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    new graft.sources.ParquetDatabase(spark, s"$dir/centroids").create(index.centroids)
-    writeAssigned(s"$dir/assigned", index.assigned)
-  }
 
   /** Append `(nid, nv, cell)` rows to the cell-partitioned store at `path`,
     * each cell's rows written by exactly one task.
@@ -465,6 +452,18 @@ object Similarity {
     * payload checksum: a corpus that mutates vectors IN PLACE under
     * unchanged ids must drop the index dir (or use content-derived ids,
     * as `ParquetDatabase.create(assignId)` does).
+    *
+    * The persisted layout is `centroids` as plain parquet (tiny, collected
+    * at probe time), `assigned` hive-partitioned by `cell` — the layout
+    * that turns "which cells to probe" into directory pruning before a
+    * single footer is read — and the `_fingerprint`. A build is the index
+    * commit [[rebalanceIvfIndex]] runs: a [[graft.sources.FileCommit.replace]]
+    * of whichever of the three exist, checked against the `_fingerprint`
+    * the staleness test read, so a peer commit in between aborts it with a
+    * ConcurrentModificationException, a crash is rolled back by the
+    * quiesced `FileCommit.recover`, and a probe racing the rebuild answers
+    * at the version before or after it. Like every mutator, ensure aborts
+    * on a commit manifest instead of recovering it.
     */
   def ensureIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                      vectors: DataFrame, idCol: String, vecCol: String,
@@ -483,35 +482,52 @@ object Similarity {
                           sizeRule: Long => Int,
                           kmeansIterations: Int = 2): (Long, Int) = {
     graft.functions.GraftFunctions.register(spark)
-    // an interrupted commit rolls back first, so the fingerprint compared
-    // below is a committed one. ensure IS quiesced maintenance (a stale
-    // index is rebuilt in place, which no protocol can reconcile with live
-    // appenders), so recovering here cannot race a live writer.
-    graft.sources.FileCommit.recover(spark, dir)
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    graft.sources.FileCommit.requireNoCommit(fs, root)
+    val expected = fingerprintIdentity(fs, new org.apache.hadoop.fs.Path(root, "_fingerprint"))
     val idRow = vectors.agg(
       count(lit(1)), bit_xor(xxhash64(col(idCol)))).collect()(0)
     val n = idRow.getLong(0)
     val numCentroids = sizeRule(n)
     val fp = s"ivf-v1|n=$n|xor=${idRow.get(1)}" +
       s"|k=$numCentroids|iters=$kmeansIterations"
-    val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
-    val fs = fpPath.getFileSystem(vectors.sparkSession.sessionState.newHadoopConf())
     // the comparison strips a streaming-maintenance lastBatch field: a
     // batch-markered append updates (n, xor) compositionally, so an ensure
     // over the grown corpus must recognize the appended index as current
     // rather than rebuild it just because the ledger field is present
-    val current =
-      if (!fs.exists(fpPath)) None
-      else Some(graft.sources.HadoopText.read(fs, fpPath)
-        .split('|').filterNot(_.startsWith("lastBatch=")).mkString("|"))
-    if (!current.contains(fp)) {
-      val mat = kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations)
-      persistIvfIndex(indexOf(vectors, idCol, vecCol, mat), dir)
-      // the written tree is the newest version and its matrix is `mat`:
-      // hold it open, so the first probe reads no centroids
-      installVersion(spark, fs, dir, fp, writeFingerprint(fs, dir, fp), mat)
-    }
+    val current = expected.dropWhile(_ != '|').drop(1)
+      .split('|').filterNot(_.startsWith("lastBatch=")).mkString("|")
+    if (current != fp)
+      commitIndex(spark, fs, dir, expected, fp, vectors, idCol, vecCol,
+        kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations))
     (n, numCentroids)
+  }
+
+  /** The one IVF index commit, a build's and a rebalance's: stage
+    * `centroids` (the matrix `mat`), `assigned` (`vectors` assigned against
+    * it) and the `_fingerprint` `fp`; replace whichever of the three exist,
+    * checked against the `_fingerprint` identity `expected` ("" for none);
+    * and hold the committed version open with `mat`, so the first probe
+    * after it reads no centroids. Each directory moves with one rename, and
+    * `_fingerprint` lands last.
+    */
+  private def commitIndex(spark: org.apache.spark.sql.SparkSession,
+                          fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                          expected: String, fp: String, vectors: DataFrame,
+                          idCol: String, vecCol: String,
+                          mat: graft.functions.CentroidMatrix): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val replaced = Seq("centroids", "assigned", "_fingerprint")
+      .filter(e => fs.exists(new org.apache.hadoop.fs.Path(root, e)))
+    var mtime = 0L
+    graft.sources.FileCommit.replace(fs, root, replaced, expected,
+      () => fingerprintIdentity(fs, new org.apache.hadoop.fs.Path(root, "_fingerprint"))) { stage =>
+      new graft.sources.ParquetDatabase(spark, s"$stage/centroids").create(centroidFrame(spark, mat))
+      writeAssigned(s"$stage/assigned", assignCells(spread(vectors), idCol, vecCol, mat))
+      mtime = writeFingerprint(fs, stage.toString, fp)
+    }
+    installVersion(spark, fs, dir, fp, mtime, mat)
   }
 
   /** Incrementally add vectors to a PERSISTED index — the per-ingest-tick
@@ -525,7 +541,7 @@ object Similarity {
     * batches never re-runs k-means or rewrites the index. The classical
     * IVF trade rides along: cells stay anchored to the original centroid
     * geometry, so recall degrades only as the ingest distribution drifts —
-    * at which point a rebuild (drop the dir, `ensureIvfIndex`) re-anchors.
+    * at which point [[rebalanceIvfIndex]] re-anchors.
     *
     * The corpus identity fingerprint is updated COMPOSITIONALLY — the id
     * XOR is combinable, so the new fingerprint is (n + n_batch,
@@ -552,12 +568,10 @@ object Similarity {
     val fpPath = new org.apache.hadoop.fs.Path(root, "_fingerprint")
     val fs = fpPath.getFileSystem(spark.sessionState.newHadoopConf())
     graft.sources.FileCommit.requireNoCommit(fs, root)
-    if (!fs.exists(fpPath)) missingFingerprint(fs, root, "appendToIvfIndex")
     // the version this append composes over, held open: its centroid
     // matrix assigns the batch without re-reading the centroids
     val version = graft.sources.FileCommit.conflictIfVanished(fs, root, "read")(
-      openIvfIndex(spark, dir))
-    if (version.fingerprint.isEmpty) missingFingerprint(fs, root, "appendToIvfIndex")
+      openIvfIndex(spark, dir, "appendToIvfIndex"))
     val fields = version.fingerprint.split('|').toSeq
     val kv = fields.collect { case f if f.contains("=") =>
       val Array(k, v) = f.split("=", 2); k -> v
@@ -708,10 +722,11 @@ object Similarity {
     * updated — so a foreachBatch stream paired with this index resumes
     * exactly-once semantics across the rebuild.
     *
-    * The commit is a [[graft.sources.FileCommit.replace]] of every file:
-    * the staged `centroids`, `assigned` and `_fingerprint` replace the live
-    * ones (each directory moves with one rename), checked against the
-    * `_fingerprint` the rebuild read. An append that commits while the
+    * The commit is the index commit an [[ensureIvfIndex]] build runs, a
+    * [[graft.sources.FileCommit.replace]] of every file: the staged
+    * `centroids`, `assigned` and `_fingerprint` replace the live ones (each
+    * directory moves with one rename), checked against the `_fingerprint`
+    * the rebuild read. An append that commits while the
     * rebalance stages makes the rebalance abort at that check, so no
     * appended batch is ever dropped; an append that enters while the
     * rebalance holds the gate aborts. Probes must pause while the rebalance
@@ -754,16 +769,7 @@ object Similarity {
       case f if f.startsWith("iters=") => s"iters=$kmeansIterations"
       case f => f
     }.mkString("|")
-    var mtime = 0L
-    graft.sources.FileCommit.replace(fs, root, Seq("centroids", "assigned", "_fingerprint"),
-      expected, () => fingerprintIdentity(fs, fpPath)) { stage =>
-      new graft.sources.ParquetDatabase(spark, s"$stage/centroids").create(centroidFrame(spark, mat))
-      writeAssigned(s"$stage/assigned", assignCells(spread(vectors), "nid", "nv", mat))
-      mtime = writeFingerprint(fs, stage.toString, newFp)
-    }
-    // the committed tree's matrix is the one just written: hold it open,
-    // so the next probe reads no centroids
-    installVersion(spark, fs, dir, newFp, mtime, mat)
+    commitIndex(spark, fs, dir, expected, newFp, vectors, "nid", "nv", mat)
     Some(newK)
   }
 
@@ -849,11 +855,12 @@ object Similarity {
     * appendToIvfIndex and rebalanceIvfIndex also install the version they
     * commit, with the matrix they hold, so the first probe after them reads
     * no centroids; rebalanceIvfIndex reads `assigned` through the held
-    * version when it is the one on disk. A dir without `_fingerprint`
-    * (persistIvfIndex alone) is opened afresh on every call and never
-    * cached.
+    * version when it is the one on disk. Every persisted index has a
+    * `_fingerprint`: a dir without one (and no commit in flight) is not an
+    * index, and `op` fails naming [[ensureIvfIndex]].
     */
-  private def openIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfVersion = {
+  private def openIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+                           op: String): IvfVersion = {
     val fpPath = new org.apache.hadoop.fs.Path(dir, "_fingerprint")
     val fs = fpPath.getFileSystem(spark.sessionState.newHadoopConf())
     val key = versionKey(spark, fs, dir)
@@ -867,7 +874,7 @@ object Similarity {
       case None if held != null && graft.sources.FileCommit.inFlight(fs, fpPath.getParent) => held
       case None =>
         openVersions.remove(key)
-        open("", 0L)
+        missingFingerprint(fs, fpPath.getParent, op)
       case Some(st) =>
         val fp = graft.sources.HadoopText.read(fs, fpPath)
         if (held != null && held.fingerprint == fp && held.mtime == st.getModificationTime) held
@@ -887,7 +894,8 @@ object Similarity {
     * text and modification time, so a probe at an unchanged version reads
     * neither the centroids nor the `assigned` listing again, and the first
     * probe after any writer's commit opens the new version. A dir without
-    * `_fingerprint` is opened afresh on every call.
+    * `_fingerprint` is not an index: the probe fails naming
+    * [[ensureIvfIndex]].
     *
     * The query rows `(qid, qv, qn)` are collected — `queries` must be small
     * enough to broadcast — and each query's `nprobe` nearest cells are
@@ -917,7 +925,7 @@ object Similarity {
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int, nprobe: Int): (DataFrame, Array[Long]) = {
     graft.functions.GraftFunctions.register(spark)
-    val index = openIvfIndex(spark, indexDir)
+    val index = openIvfIndex(spark, indexDir, "ivfTopKPersisted")
     val (probes, cells) = probeCells(queries, idCol, vecCol, index.matrix, nprobe)
     (rankProbed(index.assigned.filter(col("cell").isin(cells: _*)), probes, k), cells)
   }
@@ -969,13 +977,9 @@ object Similarity {
 
   def buildIvfIndex(vectors: DataFrame, idCol: String, vecCol: String,
                     numCentroids: Int, kmeansIterations: Int = 2): IvfIndex = {
-    indexOf(vectors, idCol, vecCol,
-      kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations))
-  }
-
-  private def indexOf(vectors: DataFrame, idCol: String, vecCol: String,
-                      mat: graft.functions.CentroidMatrix): IvfIndex =
+    val mat = kmeansMatrix(vectors, idCol, vecCol, numCentroids, kmeansIterations)
     IvfIndex(centroidFrame(vectors.sparkSession, mat), assignCells(spread(vectors), idCol, vecCol, mat))
+  }
 
   /** IVF-style ANN over a prebuilt index: probe the `nprobe` cells nearest
     * each query, score only those cells. Candidates per query ≈

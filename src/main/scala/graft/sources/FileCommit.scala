@@ -1,12 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one commit protocol of every persisted store: `ParquetDatabase`,
   * the IVF index, the MinHash signature store and the bucketed HLL store.
-  * A commit moves files; no store directory is ever renamed or rewritten
-  * in place.
+  * Every store write goes through it, builds included: a build is a
+  * [[replace]] of the root's top-level entries (of none, into an absent
+  * root). A commit moves files; no store directory is ever renamed,
+  * deleted or rewritten in place.
   *
   * A commit runs over a store root, a stage written by the caller under
   * the invocation-unique sibling `<root>__patch_tmp_<token>` in the root's
@@ -108,7 +110,7 @@ object FileCommit {
     */
   private[graft] def append(fs: FileSystem, root: Path)(stage: Path => Unit): Unit = {
     val tmp = writeStage(fs, root)(stage)
-    moveIn(fs, tmp, root)
+    moveIn(fs, walk(fs, tmp), root)
     fs.delete(tmp, true)
   }
 
@@ -126,7 +128,8 @@ object FileCommit {
                              retire: Path => Unit = _ => ())(stage: Path => Unit): Unit = {
     val tmp = writeStage(fs, root)(stage)
     staged()
-    val newFiles = stagedFiles(fs, tmp)
+    val entries = walk(fs, tmp)
+    val newFiles = files(entries)
     // the manifest is written BEFORE any move: recover() needs to know which
     // live paths are replacements (delete on rollback) and where each
     // moved-aside original belongs. create-no-overwrite makes it the gate.
@@ -156,34 +159,48 @@ object FileCommit {
         throw new java.io.IOException(s"commit: failed to move $p aside to $a; run recover()")
     }
     dropEmptyDirs(fs, root, aside.map(_._1.getParent))
-    moveIn(fs, tmp, root)
+    moveIn(fs, entries, root)
     retire(gate(root))
     release(fs, root, tmp)
   }
 
-  /** The files of a written stage, with Spark's `_SUCCESS` job markers
-    * deleted: a stage holds exactly what the commit moves in, so the
-    * manifest lists every file a rollback must remove.
+  /** One entry of a written stage; a directory lists its children on
+    * first use, so a stage is walked once: fully for a gated commit's
+    * manifest, and only as deep as [[moveIn]] descends for an append.
     */
-  private def stagedFiles(fs: FileSystem, dir: Path): Seq[Path] =
-    fs.listStatus(dir).toSeq.flatMap { st =>
-      if (st.isDirectory) stagedFiles(fs, st.getPath)
-      else if (st.getPath.getName == "_SUCCESS") { fs.delete(st.getPath, false); Nil }
-      else Seq(st.getPath)
+  private final class Staged(fs: FileSystem, val status: FileStatus) {
+    lazy val children: Seq[Staged] = walk(fs, status.getPath)
+  }
+
+  /** The entries of the stage dir `dir`, sorted by name, with Spark's
+    * `_SUCCESS` job markers deleted: a stage holds exactly what the commit
+    * moves in, so the manifest lists every file a rollback must remove.
+    */
+  private def walk(fs: FileSystem, dir: Path): Seq[Staged] =
+    fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).flatMap { st =>
+      if (st.isFile && st.getPath.getName == "_SUCCESS") { fs.delete(st.getPath, false); None }
+      else Some(new Staged(fs, st))
     }
 
-  /** Move every entry of `from` into `to` (step 4 of the protocol). */
-  private def moveIn(fs: FileSystem, from: Path, to: Path): Unit = {
+  private def files(entries: Seq[Staged]): Seq[Path] =
+    entries.flatMap(e => if (e.status.isDirectory) files(e.children) else Seq(e.status.getPath))
+
+  /** Move the staged `entries` into `to` (step 4 of the protocol), listing
+    * only the destination directories it descends into; an absent root is
+    * created (a build into a fresh store).
+    */
+  private def moveIn(fs: FileSystem, entries: Seq[Staged], to: Path): Unit = {
     val present =
       try fs.listStatus(to).map(_.getPath.getName).toSet
-      catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-    val (dirs, files) = fs.listStatus(from).toSeq.sortBy(_.getPath.getName).partition(_.isDirectory)
-    (dirs ++ files).foreach { st =>
-      val dest = new Path(to, st.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => fs.mkdirs(to); Set.empty[String] }
+    val (dirs, files) = entries.partition(_.status.isDirectory)
+    (dirs ++ files).foreach { e =>
+      val src = e.status.getPath
+      val dest = new Path(to, src.getName)
       if (!present(dest.getName)) {
-        if (!fs.rename(st.getPath, dest))
-          throw new java.io.IOException(s"commit: failed to move ${st.getPath} to $dest; run recover()")
-      } else if (st.isDirectory) moveIn(fs, st.getPath, dest)
+        if (!fs.rename(src, dest))
+          throw new java.io.IOException(s"commit: failed to move $src to $dest; run recover()")
+      } else if (e.status.isDirectory) moveIn(fs, e.children, dest)
       else throw new java.io.IOException(
         s"commit: $dest already exists and is not replaced by this commit; run recover()")
     }

@@ -541,7 +541,7 @@ class ParquetDatabase(val spark: SparkSession, val dir: String) {
     val files = walkParquet(new Path(dir))
     val entries = ParquetDatabase.inThreadPool(parallelism, files) { p =>
       val rel = relativize(dir, p)
-      val (len, md5) = ParquetDatabase.copyAndHash(fs, p, dfs, new Path(destRoot, rel))
+      val (len, md5) = ParquetDatabase.copyAndHash(fs, p, Some(dfs -> new Path(destRoot, rel)))
       val srcLen = fs.getFileStatus(p).getLen
       if (len != srcLen)
         throw new ParquetDatabase.ReplicaIntegrityException(
@@ -838,43 +838,56 @@ object ParquetDatabase {
     finally pool.shutdown()
   }
 
-  /** Stream-copy one file, MD5-hashing the bytes in flight; returns
-    * (length, hex digest). 1 MiB buffer — large enough to amortize FS
-    * round-trips, small enough for `parallelism` concurrent streams.
+  /** MD5-hash one file as its bytes stream through, copying them to `dst`
+    * when given; returns (length, hex digest). 1 MiB buffer — large enough
+    * to amortize FS round-trips, small enough for `parallelism` concurrent
+    * streams.
     */
   private[sources] def copyAndHash(
       srcFs: org.apache.hadoop.fs.FileSystem, src: Path,
-      dstFs: org.apache.hadoop.fs.FileSystem, dst: Path): (Long, String) = {
+      dst: Option[(org.apache.hadoop.fs.FileSystem, Path)]): (Long, String) = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    dstFs.mkdirs(dst.getParent)
+    dst.foreach { case (dstFs, d) => dstFs.mkdirs(d.getParent) }
     val in = srcFs.open(src)
-    val out = dstFs.create(dst, true)
+    val out = dst.map { case (dstFs, d) => dstFs.create(d, true) }
     var total = 0L
     try {
       val buf = new Array[Byte](1 << 20)
       var n = in.read(buf)
       while (n > 0) {
         md.update(buf, 0, n)
-        out.write(buf, 0, n)
+        out.foreach(_.write(buf, 0, n))
         total += n
         n = in.read(buf)
       }
-    } finally { in.close(); out.close() }
+    } finally { in.close(); out.foreach(_.close()) }
     (total, md.digest().map("%02x".format(_)).mkString)
   }
 
-  /** Hash a file without copying it; returns (length, hex digest). */
-  private def hashOnly(fs: org.apache.hadoop.fs.FileSystem, p: Path): (Long, String) = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val in = fs.open(p)
-    var total = 0L
-    try {
-      val buf = new Array[Byte](1 << 20)
-      var n = in.read(buf)
-      while (n > 0) { md.update(buf, 0, n); total += n; n = in.read(buf) }
-    } finally in.close()
-    (total, md.digest().map("%02x".format(_)).mkString)
+  /** A replica's `_graft_manifest` under `root`: its bytes and its
+    * (relative path, length, md5) entries; None when it has none.
+    */
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path): Option[(Array[Byte], Seq[(String, Long, String)])] = {
+    val manifestPath = new Path(root, ManifestName)
+    if (!fs.exists(manifestPath)) None
+    else {
+      val buf = new Array[Byte](fs.getFileStatus(manifestPath).getLen.toInt)
+      val in = fs.open(manifestPath)
+      try in.readFully(buf) finally in.close()
+      Some(buf -> new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+        .split("\n").toIndexedSeq.filter(_.nonEmpty).map { line =>
+          val Array(rel, lenS, md5) = line.split("\t")
+          (rel, lenS.toLong, md5)
+        })
+    }
   }
+
+  /** How a hashed file diverges from its manifest entry, if it does. */
+  private def divergence(rel: String, want: (Long, String), got: (Long, String)): Option[String] =
+    if (got._1 != want._1) Some(s"$rel: length ${got._1} != manifest ${want._1}")
+    else if (got._2 != want._2) Some(s"$rel: md5 ${got._2} != manifest ${want._2}")
+    else None
 
   /** Pull a pushed replica into `destDir`, verifying EVERY file against the
     * source's `_graft_manifest` while the bytes stream through. All
@@ -900,23 +913,9 @@ object ParquetDatabase {
     val conf = spark.sessionState.newHadoopConf()
     val srcRoot = new Path(srcDir)
     val srcFs = srcRoot.getFileSystem(conf)
-    val manifestPath = new Path(srcRoot, ManifestName)
-    if (!srcFs.exists(manifestPath))
+    val (manifestBytes, manifest) = readManifest(srcFs, srcRoot).getOrElse(
       throw new ReplicaIntegrityException(
-        s"$srcDir has no $ManifestName — not a pushed replica (use pushTo to create one)")
-    val manifestBytes = {
-      val len = srcFs.getFileStatus(manifestPath).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = srcFs.open(manifestPath)
-      try in.readFully(buf) finally in.close()
-      buf
-    }
-    val manifest =
-      new String(manifestBytes, java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").toIndexedSeq.filter(_.nonEmpty).map { line =>
-          val Array(rel, lenS, md5) = line.split("\t")
-          (rel, lenS.toLong, md5)
-        }
+        s"$srcDir has no $ManifestName — not a pushed replica (use pushTo to create one)"))
     val destRoot = new Path(destDir)
     val destFs = destRoot.getFileSystem(conf)
     val tmpRoot = new Path(destDir + "__pull_tmp")
@@ -925,12 +924,8 @@ object ParquetDatabase {
     val problems = inThreadPool(parallelism, manifest) { case (rel, wantLen, wantMd5) =>
       val src = new Path(srcRoot, rel)
       if (!srcFs.exists(src)) Some(s"$rel: missing from replica")
-      else {
-        val (gotLen, gotMd5) = copyAndHash(srcFs, src, destFs, new Path(tmpRoot, rel))
-        if (gotLen != wantLen) Some(s"$rel: length $gotLen != manifest $wantLen")
-        else if (gotMd5 != wantMd5) Some(s"$rel: md5 $gotMd5 != manifest $wantMd5")
-        else None
-      }
+      else divergence(rel, (wantLen, wantMd5),
+        copyAndHash(srcFs, src, Some(destFs -> new Path(tmpRoot, rel))))
     }.flatten
     if (problems.nonEmpty) {
       destFs.delete(tmpRoot, true)
@@ -961,26 +956,14 @@ object ParquetDatabase {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
-    val manifestPath = new Path(root, ManifestName)
-    if (!fs.exists(manifestPath)) return Seq(s"$dir has no $ManifestName")
-    val len = fs.getFileStatus(manifestPath).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(manifestPath)
-    try in.readFully(buf) finally in.close()
-    val manifest = new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toIndexedSeq.filter(_.nonEmpty).map { line =>
-        val Array(rel, lenS, md5) = line.split("\t")
-        (rel, lenS.toLong, md5)
-      }
-    inThreadPool(parallelism, manifest) { case (rel, wantLen, wantMd5) =>
-      val p = new Path(root, rel)
-      if (!fs.exists(p)) Some(s"$rel: missing")
-      else {
-        val (gotLen, gotMd5) = hashOnly(fs, p)
-        if (gotLen != wantLen) Some(s"$rel: length $gotLen != manifest $wantLen")
-        else if (gotMd5 != wantMd5) Some(s"$rel: md5 $gotMd5 != manifest $wantMd5")
-        else None
-      }
-    }.flatten
+    readManifest(fs, root) match {
+      case None => Seq(s"$dir has no $ManifestName")
+      case Some((_, manifest)) =>
+        inThreadPool(parallelism, manifest) { case (rel, wantLen, wantMd5) =>
+          val p = new Path(root, rel)
+          if (!fs.exists(p)) Some(s"$rel: missing")
+          else divergence(rel, (wantLen, wantMd5), copyAndHash(fs, p, None))
+        }.flatten
+    }
   }
 }

@@ -154,9 +154,12 @@ object DocStreams {
     * (`appendToMinHashStore(batchMarker=...)`), and segment visibility is
     * a single directory rename (a `FileCommit.append`) — so a foreachBatch
     * re-delivery after a crash finds the committed marker and no-ops, and a
-    * crash mid-append leaves only a stage sibling, which the quiesced
-    * `graft.sources.FileCommit.recover` drops. No side marker file
-    * to race with the data commit (contrast `BatchMarker`'s documented
+    * crash mid-append leaves only a stage sibling. The first batch, into an
+    * absent store, is the store's build (a gated commit); a crash there
+    * leaves a manifest. This stream runs the quiesced
+    * `graft.sources.FileCommit.recover` at start, which drops the stage or
+    * rolls the build back, so the re-delivered batch re-applies. No side
+    * marker file to race with the data commit (contrast `BatchMarker`'s documented
     * one-batch exposure in [[EventStreams.mergeStreamToTable]] — additive
     * merges can't carry their marker inside the data, segment appends can).
     *
@@ -166,6 +169,10 @@ object DocStreams {
                          checkpointDir: String, numBands: Int = 16,
                          rowsPerBand: Int = 2, shingleN: Int = 3,
                          maxFilesPerTrigger: Int = 1): Long = {
+    // stream start is a quiesced point (the stream is its store's ingest
+    // writer): roll back a crashed prior run's commit here — appends abort
+    // on its manifest rather than recovering
+    graft.sources.FileCommit.recover(spark, storeDir)
     val src = spark.readStream.schema(docsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)

@@ -594,9 +594,10 @@ object EventStreams {
     * per batch the store pays O(touched buckets · keys), history is never
     * re-read, and the batchId marker skips re-delivered batches (HLL union
     * would also absorb an exact re-merge idempotently, but the marker keeps
-    * the touched-bucket rewrites off the redelivery path entirely). The
-    * first delivered batch builds the store. Returns the last merged
-    * batchId so callers can assert the replay genuinely spanned batches.
+    * the touched-bucket rewrites off the redelivery path entirely). Every
+    * batch is a plain merge: the first one, into an absent store, builds
+    * it. Returns the last merged batchId so callers can assert the replay
+    * genuinely spanned batches.
     */
   def distinctStoreStream(spark: SparkSession, sourceDir: String,
                           keys: Seq[String], itemCol: String,
@@ -604,13 +605,11 @@ object EventStreams {
                           nBuckets: Int = 16, maxFilesPerTrigger: Int = 1): Long = {
     val marker = new BatchMarker(spark, checkpointDir)
     val src = stagedEventsStream(spark, sourceDir, maxFilesPerTrigger)
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
     // the stream is THE single writer of its store (streaming contract), so
     // stream start is a quiesced point: roll back a crashed prior run's
     // commit here — merges abort loudly on its manifest rather than
     // recovering (a live peer's commit looks exactly the same)
-    if (fs.exists(storePath)) graft.sources.FileCommit.recover(spark, storeDir)
+    graft.sources.FileCommit.recover(spark, storeDir)
     val partKey = "spark.sql.shuffle.partitions"
     val oldParts = spark.conf.get(partKey)
     try {
@@ -619,12 +618,8 @@ object EventStreams {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (batchId > marker.lastMerged) {
-            if (!fs.exists(storePath))
-              graft.operators.DistinctSketch.buildBucketedStore(
-                batch, keys, itemCol, storeDir, nBuckets)
-            else
-              graft.operators.DistinctSketch.mergeBatchIntoBucketedStore(
-                spark, batch, keys, itemCol, storeDir, nBuckets)
+            graft.operators.DistinctSketch.mergeBatchIntoBucketedStore(
+              spark, batch, keys, itemCol, storeDir, nBuckets)
             marker.record(batchId)
           }
         }

@@ -408,9 +408,10 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val df = blockClustered(clusters = 4, per = 25, dim = 16, jitter = 0.05)
       .toDF("vec_id", "embedding")
+    // ensure's deterministic k-means centroids are the in-memory build's
     val index = Similarity.buildIvfIndex(df, "vec_id", "embedding", numCentroids = 4)
     val dir = "target/tmp/ivf/spec"
-    Similarity.persistIvfIndex(index, dir)
+    Similarity.ensureIvfIndex(spark, dir, df, "vec_id", "embedding", numCentroids = 4)
     val q = df.filter($"vec_id".isin(0L, 30L))
     val mem = Similarity.ivfTopK(index, q, "vec_id", "embedding", k = 5, nprobe = 1)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nid"), r.getAs[Int]("rn"))).toSet
@@ -429,6 +430,19 @@ class SimilaritySpec extends SparkSpec {
     // reopened index drives the self-join form too
     val reopened = Similarity.loadIvfIndex(spark, dir)
     assert(reopened.assigned.count() === 100L && reopened.centroids.count() === 4L)
+  }
+
+  /** An index tree written by hand in the persisted layout: `centroids`,
+    * `assigned` partitioned by `cell`, and `fingerprint`, when given, as
+    * its `_fingerprint`.
+    */
+  private def writeIndexTree(index: Similarity.IvfIndex, dir: String,
+                             fingerprint: Option[String]): Unit = {
+    index.centroids.write.parquet(s"$dir/centroids")
+    index.assigned.write.partitionBy("cell").parquet(s"$dir/assigned")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    fingerprint.foreach(graft.sources.HadoopText.write(fs,
+      new org.apache.hadoop.fs.Path(dir, "_fingerprint"), _))
   }
 
   /** The retired probe-selection form, kept as the reference both probe
@@ -505,11 +519,9 @@ class SimilaritySpec extends SparkSpec {
       (1002L, Seq(0.0f, Float.NaN, 0.0f, 0.0f)))).toDF("vec_id", "embedding")
     withAnsiOff {
       val index = Similarity.IvfIndex(cent, Similarity.assignCells(df, "vec_id", "embedding", cent))
+      // a hand-written index tree pins the hand-made centroid set
       val dir = s"target/tmp/ivf_spec_retired/${java.util.UUID.randomUUID}"
-      Similarity.persistIvfIndex(index, dir)
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-      graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(dir, "_fingerprint"),
-        "ivf-v1|n=62|xor=0|k=6|iters=0")
+      writeIndexTree(index, dir, Some("ivf-v1|n=62|xor=0|k=6|iters=0"))
       val stored = spark.read.parquet(s"$dir/assigned")
       for ((k, nprobe) <- Seq((3, 1), (5, 2), (4, 3), (70, 6), (2, 9))) {
         val want = retiredIvfTopK(cent, index.assigned, q, k, nprobe)
@@ -651,14 +663,12 @@ class SimilaritySpec extends SparkSpec {
       assert(graft.sources.FileCommit.recover(spark, dir).exists(_.startsWith("restored")))
       assert(nids(probeTwice()) === grown)
 
-      // no `_fingerprint` (persistIvfIndex alone): every probe opens afresh
+      // no `_fingerprint`: not an index; the probe names the build
       val bare = s"target/tmp/ivf_spec_handle/${java.util.UUID.randomUUID}"
-      Similarity.persistIvfIndex(
-        Similarity.buildIvfIndex(base, "vec_id", "embedding", numCentroids = 4), bare)
-      val (b1, jb1) = jobsOf(probeDir(bare))
-      val (b2, jb2) = jobsOf(probeDir(bare))
-      assert(opens(jb1) && opens(jb2) && collectsMatrix(jb2), s"$jb1 / $jb2")
-      assert(b2 === b1 && nids(b1) === (0L until 120L).toSet)
+      writeIndexTree(Similarity.buildIvfIndex(base, "vec_id", "embedding", numCentroids = 4),
+        bare, None)
+      val e = intercept[IllegalArgumentException](probeDir(bare))
+      assert(e.getMessage.contains("ensureIvfIndex"), e.getMessage)
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.listenerManager.unregister(qeListener)
