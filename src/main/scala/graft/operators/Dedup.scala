@@ -559,23 +559,30 @@ object Dedup {
     */
   def buildMinHashStore(docs: DataFrame, idCol: String, textCol: String, dir: String,
                         numBands: Int = 16, rowsPerBand: Int = 2,
-                        shingleN: Int = 3): Unit =
-    commitBuild(docs, idCol, textCol, dir, (numBands, rowsPerBand, shingleN), None)
-
-  /** The build commit: `_params` and one segment replace every top-level
-    * entry of `dir`, checked against their sorted names.
-    */
-  private def commitBuild(docs: DataFrame, idCol: String, textCol: String, dir: String,
-                          params: (Int, Int, Int), batchMarker: Option[String]): Unit = {
+                        shingleN: Int = 3): Unit = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(docs.sparkSession.sessionState.newHadoopConf())
     graft.sources.FileCommit.requireNoCommit(fs, root)
-    def entries(): Seq[String] =
-      try fs.listStatus(root).toSeq.map(_.getPath.getName).sorted
-      catch { case _: java.io.FileNotFoundException => Nil }
-    val names = entries()
+    commitBuild(fs, root, entries(fs, root), docs, idCol, textCol,
+      (numBands, rowsPerBand, shingleN), None)
+  }
+
+  /** The sorted names of `root`'s top-level entries (none while absent). */
+  private def entries(fs: org.apache.hadoop.fs.FileSystem,
+                      root: org.apache.hadoop.fs.Path): Seq[String] =
+    try fs.listStatus(root).toSeq.map(_.getPath.getName).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** The build commit: `_params` and one segment replace the top-level
+    * entries `names` of `root`, checked against the sorted names listed
+    * once this commit holds the gate. `names` is listed before the caller
+    * decided to build, so any commit after that decision aborts this one.
+    */
+  private def commitBuild(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+                          names: Seq[String], docs: DataFrame, idCol: String, textCol: String,
+                          params: (Int, Int, Int), batchMarker: Option[String]): Unit = {
     graft.sources.FileCommit.replace(fs, root, names, names.mkString("\n"),
-      () => entries().mkString("\n")) { stage =>
+      () => entries(fs, root).mkString("\n")) { stage =>
       graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(stage, "_params"),
         s"${params._1}|${params._2}|${params._3}")
       writeSegment(fs, docs, idCol, textCol, stage, params, batchMarker)
@@ -600,9 +607,12 @@ object Dedup {
   /** Append a new batch's signatures to an existing store (after the caller
     * has dedup'd/kept them — the store should hold surviving docs). Params
     * are pinned by the store's `_params` marker; an append to a store with
-    * no `_params` is its build ([[buildMinHashStore]]), so two first
-    * appends to an empty store race like two builds: one commits, the
-    * other gets a retryable ConcurrentModificationException.
+    * no `_params` is its build ([[buildMinHashStore]]), replacing the
+    * entries it listed before deciding so. Of two first appends to an
+    * empty store, one builds it; the other appends to that build when it
+    * lists the store after the build committed, and otherwise gets a
+    * retryable ConcurrentModificationException. Neither loses the other's
+    * segment.
     *
     * Each append is one SEGMENT — `toks` and `bands` staged together and
     * made visible as `seg-<uuid>` by a [[graft.sources.FileCommit.append]],
@@ -611,6 +621,8 @@ object Dedup {
     * commit; one aborts while a compaction holds the gate. A crash before
     * the rename leaves only a stage sibling, which the quiesced
     * `FileCommit.recover` drops; a crash after it is a completed append.
+    * That recover must run while no writer of the store is live: it drops
+    * every stage and rolls back any manifest, a live peer's too.
     * With `batchMarker` set, replaying the same batch is a NO-OP when a
     * committed segment already carries the marker (the marker file rides
     * inside the segment, so data and marker commit in the same rename —
@@ -624,15 +636,22 @@ object Dedup {
     val fs = root.getFileSystem(conf)
     val params = (numBands, rowsPerBand, shingleN)
     graft.sources.FileCommit.requireNoCommit(fs, root)
+    // listed BEFORE the build-or-append decision: a build replaces exactly
+    // these entries, so a peer's first append that commits after this
+    // listing aborts the build instead of being replaced by it
+    val names = entries(fs, root)
     // a store persisted by the pre-segment layout (root-level toks/ +
     // bands/) must be rebuilt, not appended to: segment readers only see
     // seg-* dirs, so a silent append here would make every later probe
     // dedup against the new batch alone and LOSE the legacy corpus
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root, "toks")),
+    require(!names.contains("toks"),
       s"MinHash store at $dir uses the legacy root-level toks/bands layout — " +
         "rebuild it with buildMinHashStore before appending")
     readParams(dir, conf) match {
-      case None => commitBuild(batch, idCol, textCol, dir, params, batchMarker)
+      // a `_params` listed but read as absent is mid-move under a peer's
+      // build: leaving it out of the expected names aborts this build too
+      case None =>
+        commitBuild(fs, root, names.filterNot(_ == "_params"), batch, idCol, textCol, params, batchMarker)
       case Some(stored) =>
         require(stored == params,
           s"store $dir was built with (bands,rows,shingleN)=$stored, " +

@@ -138,12 +138,14 @@ object DistinctSketch {
     // the touched buckets' files, listed BEFORE the read the merge is
     // based on: the commit's fingerprint
     val entry = listing(fs, root, dirs)
+    // touched buckets holding no files are not read: an absent store is
+    // never opened, and the batch's sketches fold alone
+    val cols = (keys :+ "sketch" :+ "bucket").map(col)
+    val folded = batchSk.select(cols: _*)
     val merged =
-      if (entry.isEmpty) batchSk
-      else spark.read.parquet(dir)
-        .filter(col("bucket").isin(touched: _*))
-        .select((keys :+ "sketch" :+ "bucket").map(col): _*)
-        .unionByName(batchSk.select((keys :+ "sketch" :+ "bucket").map(col): _*))
+      (if (entry.isEmpty) folded
+       else spark.read.parquet(dir).filter(col("bucket").isin(touched: _*))
+         .select(cols: _*).unionByName(folded))
         .groupBy((keys :+ "bucket").map(col): _*)
         .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
     graft.sources.FileCommit.replace(fs, root, entry.map(_.takeWhile(_ != '/')).distinct,

@@ -156,9 +156,13 @@ object DocStreams {
     * re-delivery after a crash finds the committed marker and no-ops, and a
     * crash mid-append leaves only a stage sibling. The first batch, into an
     * absent store, is the store's build (a gated commit); a crash there
-    * leaves a manifest. This stream runs the quiesced
-    * `graft.sources.FileCommit.recover` at start, which drops the stage or
-    * rolls the build back, so the re-delivered batch re-applies. No side
+    * leaves a manifest, on which every later append aborts. So this
+    * stream runs `graft.sources.FileCommit.recover` at start when a
+    * manifest is present, rolling the build back so the re-delivered batch
+    * re-applies. It must then start while no other writer of the store is
+    * mid-commit: the recover rolls back a live compaction's manifest and
+    * drops every stage, a live appender's too. Without a manifest it
+    * recovers nothing, so it may start beside live appenders. No side
     * marker file to race with the data commit (contrast `BatchMarker`'s documented
     * one-batch exposure in [[EventStreams.mergeStreamToTable]] — additive
     * merges can't carry their marker inside the data, segment appends can).
@@ -169,10 +173,12 @@ object DocStreams {
                          checkpointDir: String, numBands: Int = 16,
                          rowsPerBand: Int = 2, shingleN: Int = 3,
                          maxFilesPerTrigger: Int = 1): Long = {
-    // stream start is a quiesced point (the stream is its store's ingest
-    // writer): roll back a crashed prior run's commit here — appends abort
-    // on its manifest rather than recovering
-    graft.sources.FileCommit.recover(spark, storeDir)
+    // roll back a crashed prior run's build here — appends abort on its
+    // manifest rather than recovering; with no manifest nothing needs
+    // recovering, and a peer appender's live stage is left alone
+    val root = new org.apache.hadoop.fs.Path(storeDir)
+    if (graft.sources.FileCommit.inFlight(root.getFileSystem(spark.sessionState.newHadoopConf()), root))
+      graft.sources.FileCommit.recover(spark, storeDir)
     val src = spark.readStream.schema(docsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)

@@ -95,6 +95,48 @@ class ConcurrentSketchWriterSpec extends SparkSpec {
     assert(idsAfter === 12L, "re-delivered batch a1 was double-applied after compaction")
   }
 
+  test("MinHash store: of two first appends to an empty store, both land or one aborts; neither loses the other's segment") {
+    // the peer's first append (the store's build) is driven through the
+    // counting filesystem's seams: it commits while this append lists the
+    // empty store, or after this append decided to build, as it takes the
+    // gate. A build whose replaced entries were listed after its decision
+    // would silently replace the peer's `_params` and segment.
+    import graft.sources.CountingLocalFs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CountingLocalFs].getName)
+    def doc(i: Int) = (i.toLong, s"unique document number $i with shared tail words $i")
+    def append(d: String, lo: Int, marker: String): Unit =
+      Dedup.appendToMinHashStore((lo until lo + 4).map(doc).toDF("doc_id", "text"),
+        "doc_id", "text", d, batchMarker = Some(marker))
+    def ids(d: String): Set[Long] = {
+      val root = new org.apache.hadoop.fs.Path(d)
+      val segs = root.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(root)
+        .map(_.getPath.getName).filter(_.startsWith("seg-"))
+      spark.read.parquet(segs.map(s => s"$d/$s/toks"): _*).select("id").as[Long].collect().toSet
+    }
+    def store(name: String) = s"graftcount://${new java.io.File(fresh(name)).getAbsolutePath}"
+    val listed = store("mhfirst_listed")
+    CountingLocalFs.beforeListStatus = p => if (p.getName == "mhfirst_listed") {
+      CountingLocalFs.beforeListStatus = _ => ()
+      append(listed, 0, "a")
+    }
+    try append(listed, 4, "b") finally CountingLocalFs.beforeListStatus = _ => ()
+    assert(ids(listed) === (0L until 8L).toSet)
+    val gated = store("mhfirst_gated")
+    CountingLocalFs.beforeMkdirs = p => if (p.getName.endsWith("__patch_old")) {
+      CountingLocalFs.beforeMkdirs = _ => ()
+      append(gated, 0, "a")
+    }
+    try {
+      val ex = intercept[java.util.ConcurrentModificationException](append(gated, 4, "b"))
+      assert(ex.getMessage.contains("changed between"), ex.getMessage)
+    } finally CountingLocalFs.beforeMkdirs = _ => ()
+    assert(ids(gated) === (0L until 4L).toSet)
+    // the retry appends to the peer's build
+    append(gated, 4, "b")
+    assert(ids(gated) === (0L until 8L).toSet)
+  }
+
   test("IVF index: concurrent appends are CAS-gated — loud conflict, retry converges, identity composes") {
     val dir = fresh("ivf2w")
     def vecs(lo: Int, hi: Int) = (lo until hi)

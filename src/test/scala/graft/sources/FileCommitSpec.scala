@@ -100,10 +100,12 @@ class FileCommitSpec extends SparkSpec {
     .map(i => (s"g${i % 5}", s"user$i")).toDF("g", "u")
 
   /** One store: build it, hand-build a peer's mid-move mutation (a
-    * "commit") and a peer's mid-move build, name its mutators.
+    * "commit") and a peer's mid-move build, each staged under the token it
+    * is given, name its mutators.
     */
-  private final case class Store(build: String => Unit, commit: (FileSystem, String) => Unit,
-                                 rebuild: (FileSystem, String) => Unit,
+  private final case class Store(build: String => Unit,
+                                 commit: (FileSystem, String, String) => Unit,
+                                 rebuild: (FileSystem, String, String) => Unit,
                                  mutators: Seq[(String, String => Unit)])
 
   /** A build of the store at `dir` mid-move: the root's top-level entries,
@@ -123,18 +125,18 @@ class FileCommitSpec extends SparkSpec {
         db.create(spark.range(50).toDF("id").repartition(1))
         db.create(spark.range(50, 60).toDF("id").repartition(1))
       },
-      (fs, dir) => {
+      (fs, dir, token) => {
         // a normalize: every data file replaced by a flat stage
         val rels = ParquetStats.listParquetFiles(dir, spark.sessionState.newHadoopConf())
           .map(_.getName).sorted
-        CommitFixtures.midMove(fs, dir, rels, "peer0001") { stage =>
+        CommitFixtures.midMove(fs, dir, rels, token) { stage =>
           spark.range(1000, 1010).toDF("id").repartition(2).write.parquet(stage.toString)
         }
       },
-      (fs, dir) => {
+      (fs, dir, token) => {
         val first = fs.listStatus(new Path(dir)).map(_.getPath.getName)
           .filter(_.endsWith(".parquet")).min
-        midBuild(fs, dir, first, "build001") { stage =>
+        midBuild(fs, dir, first, token) { stage =>
           spark.range(2000, 2010).toDF("id").repartition(2).write.parquet(stage.toString)
         }
       },
@@ -147,20 +149,20 @@ class FileCommitSpec extends SparkSpec {
     "IVF index" -> Store(
       dir => Similarity.ensureIvfIndex(spark, dir, vecs(0, 64), "vec_id", "embedding",
         numCentroids = 4),
-      (fs, dir) => {
+      (fs, dir, token) => {
         // an append: a new `assigned` file and `_fingerprint` replace `_fingerprint`
         val fp = HadoopText.read(fs, new Path(dir, "_fingerprint"))
-        CommitFixtures.midMove(fs, dir, Seq("_fingerprint"), "peer0002") { stage =>
+        CommitFixtures.midMove(fs, dir, Seq("_fingerprint"), token) { stage =>
           spark.read.parquet(s"$dir/assigned").limit(1)
             .withColumn("nid", lit(9999L)).repartition(1)
             .write.partitionBy("cell").parquet(s"$stage/assigned")
           HadoopText.write(fs, new Path(stage, "_fingerprint"), fp.replace("n=64", "n=65"))
         }
       },
-      (fs, dir) => {
+      (fs, dir, token) => {
         // a rebuild over a grown corpus: `assigned` aside, one new cell file in
         val fp = HadoopText.read(fs, new Path(dir, "_fingerprint"))
-        midBuild(fs, dir, "assigned", "build002") { stage =>
+        midBuild(fs, dir, "assigned", token) { stage =>
           val index = Similarity.buildIvfIndex(vecs(0, 80), "vec_id", "embedding", 4)
           index.centroids.write.parquet(s"$stage/centroids")
           index.assigned.write.partitionBy("cell").parquet(s"$stage/assigned")
@@ -179,22 +181,22 @@ class FileCommitSpec extends SparkSpec {
         Dedup.buildMinHashStore(docs(0, 4), "doc_id", "text", dir)
         Dedup.appendToMinHashStore(docs(4, 8), "doc_id", "text", dir, batchMarker = Some("1"))
       },
-      (fs, dir) => {
+      (fs, dir, token) => {
         // a compaction: one staged segment replaces both segment dirs
         val segs = fs.listStatus(new Path(dir)).map(_.getPath.getName)
           .filter(_.startsWith("seg-")).toSeq.sorted
-        CommitFixtures.midMove(fs, dir, segs, "peer0003") { stage =>
+        CommitFixtures.midMove(fs, dir, segs, token) { stage =>
           spark.read.parquet(segs.map(s => s"$dir/$s/toks"): _*)
             .write.parquet(s"$stage/seg-peer/toks")
           spark.read.parquet(segs.map(s => s"$dir/$s/bands"): _*)
             .write.parquet(s"$stage/seg-peer/bands")
         }
       },
-      (fs, dir) => {
+      (fs, dir, token) => {
         // a build: `_params` plus one segment replace every entry
         val first = fs.listStatus(new Path(dir)).map(_.getPath.getName)
           .filter(_.startsWith("seg-")).min
-        midBuild(fs, dir, first, "build003") { stage =>
+        midBuild(fs, dir, first, token) { stage =>
           HadoopText.write(fs, new Path(stage, "_params"), "16|2|3")
           docs(20, 30).select(col("doc_id").as("id"), lit(Array(1L, 2L)).as("ths"))
             .write.parquet(s"$stage/seg-build/toks")
@@ -208,21 +210,21 @@ class FileCommitSpec extends SparkSpec {
         "buildMinHashStore" -> (d => Dedup.buildMinHashStore(docs(0, 2), "doc_id", "text", d)))),
     "HLL store" -> Store(
       dir => DistinctSketch.buildBucketedStore(events(0, 100), Seq("g"), "u", dir, nBuckets = 4),
-      (fs, dir) => {
+      (fs, dir, token) => {
         // a merge: the files of one touched bucket replaced
         val bucket = fs.listStatus(new Path(dir)).map(_.getPath.getName)
           .filter(_.startsWith("bucket=")).min
         val rels = fs.listStatus(new Path(dir, bucket)).map(s => s"$bucket/${s.getPath.getName}")
-        CommitFixtures.midMove(fs, dir, rels.toSeq.sorted, "peer0004") { stage =>
+        CommitFixtures.midMove(fs, dir, rels.toSeq.sorted, token) { stage =>
           spark.read.parquet(dir).filter(col("bucket") === bucket.stripPrefix("bucket=").toLong)
             .write.partitionBy("bucket").parquet(stage.toString)
         }
       },
-      (fs, dir) => {
+      (fs, dir, token) => {
         // a build: every bucket dir replaced
         val first = fs.listStatus(new Path(dir)).map(_.getPath.getName)
           .filter(_.startsWith("bucket=")).min
-        midBuild(fs, dir, first, "build004") { stage =>
+        midBuild(fs, dir, first, token) { stage =>
           spark.read.parquet(dir).withColumn("g", concat(col("g"), lit("x")))
             .write.partitionBy("bucket").parquet(stage.toString)
         }
@@ -241,9 +243,10 @@ class FileCommitSpec extends SparkSpec {
       val fs = fsOf(dir)
       store.build(dir)
       val committed = CommitFixtures.tree(fs, dir)
-      peer(fs, dir)
+      val token = s"${kind}peer"
+      peer(fs, dir, token)
       val midMove = CommitFixtures.tree(fs, dir)
-      assert(midMove.keys.exists(_.contains("__patch_tmp_")) &&
+      assert(midMove.keys.exists(_.contains(s"__patch_tmp_$token/")) &&
         midMove.keys.exists(_.endsWith("__patch_old/_manifest")), midMove.keys)
       store.mutators.foreach { case (m, run) =>
         val e = intercept[java.util.ConcurrentModificationException](run(dir))

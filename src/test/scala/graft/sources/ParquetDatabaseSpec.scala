@@ -14,8 +14,10 @@ class CountingLocalFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("graftcount:///")
   override def getFileStatus(f: Path): FileStatus =
     CountingLocalFs.outer("getFileStatus")(super.getFileStatus(f))
-  override def listStatus(f: Path): Array[FileStatus] =
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingLocalFs.beforeListStatus(f)
     CountingLocalFs.outer("listStatus")(super.listStatus(f))
+  }
   override def exists(f: Path): Boolean =
     CountingLocalFs.outer("exists")(super.exists(f))
   override def rename(src: Path, dst: Path): Boolean = CountingLocalFs.outer("rename") {
@@ -47,6 +49,8 @@ object CountingLocalFs {
   def total: Int = { import scala.jdk.CollectionConverters._; calls.values.asScala.sum }
   /** Runs before every mkdirs: the point a test interleaves a peer at. */
   @volatile var beforeMkdirs: Path => Unit = _ => ()
+  /** Runs before every listStatus, the same kind of seam. */
+  @volatile var beforeListStatus: Path => Unit = _ => ()
 }
 
 class ParquetDatabaseSpec extends SparkSpec {
