@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
   * (hash-groupBy), exact n-gram Jaccard (self- and cross-corpus),
   * MinHash+LSH banding, SimHash, connected components.
   *
+  * One shingle path: every shingle-set operator hashes each doc's distinct
+  * word n-grams with the native `shingle_hashes` kernel
+  * ([[shingleHashSets]]) and bands them with `minhash_bands`
+  * ([[setBandRows]]), the kernels the MinHash store persists. Every jac
+  * any operator emits is exact over those 64-bit shingle-hash sets.
+  *
   * Scale design: every variant is a constant number of shuffles, each keyed
   * on something with bounded fan-in, never a full cross-join. The
   * exact-Jaccard pair join is bounded by the shingle document-frequency cap
@@ -27,60 +33,63 @@ object Dedup {
     df.groupBy(keys.map(col): _*)
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** doc_id -> distinct shingle set as an array column. */
-  private def tokenArrays(docs: DataFrame, idCol: String, textCol: String, shingleN: Int) = {
-    val sh = if (shingleN <= 1) TextFunctions.distinctTokens(col(textCol))
-    else array_distinct(TextFunctions.shingles(col(textCol), shingleN))
-    spread(docs).select(col(idCol).as("id"), sh.as("toks"))
-  }
+  /** (id, ths) shingle-hash sets of `docs`, spread first: the one shingle
+    * pass of every pair operator below.
+    */
+  private def spreadSets(docs: DataFrame, idCol: String, textCol: String, shingleN: Int) =
+    shingleHashSets(spread(docs), idCol, textCol, shingleN)
 
-  /** doc_id -> distinct shingle set, exploded (one row per (id, shingle)). */
-  private def tokenSets(docs: DataFrame, idCol: String, textCol: String, shingleN: Int) =
-    tokenArrays(docs, idCol, textCol, shingleN)
-      .select(col("id"), explode(col("toks")).as("tok"))
+  /** (id, sz, th): one row per shingle hash of each (id, ths) set. The set's
+    * size rides each row, so the pair arithmetic never joins a size
+    * relation against the pair frame, the operators' largest intermediate
+    * (at ScaleGen sf30 two such joins spilled ~3 GiB).
+    */
+  private def hashRows(sets: DataFrame): DataFrame =
+    sets.select(col("id"), size(col("ths")).cast("long").as("sz"), explode(col("ths")).as("th"))
 
-  /** Public form of the candidate confirm pass: exact word-`shingleN`-gram
-    * Jaccard over the given (d1, d2) candidate pairs, keeping pairs at or
-    * above `threshold`. Candidate-bounded — the cost driver is the pair
-    * list, not the corpus — which is what makes externally-generated
-    * candidates (e.g. [[graft.streaming.DocStreams.nearDupCandidateStream]]'s
-    * online LSH discovery) exact after the fact.
+  /** The self-join pair condition over a join's `id` and `id2` sides. */
+  private def ordered: Column = col("id") < col("id2")
+
+  /** Exact word-`shingleN`-gram Jaccard over the given (d1, d2) candidate
+    * pairs, keeping pairs at or above `threshold`. jac is exact over the
+    * 64-bit shingle-hash sets, the contract of [[jaccardPairs]]; a doc with
+    * no shingle has no set, so a pair naming one has no row.
+    * Candidate-bounded: only the documents that appear in a candidate pair
+    * are shingled (semi-join first), so the cost driver is the pair list,
+    * not the corpus — which is what makes externally-generated candidates
+    * (e.g. [[graft.streaming.DocStreams.nearDupCandidateStream]]'s online
+    * LSH discovery, or [[minHashPairs]]' banding) exact after the fact.
     */
   def exactJaccardForPairs(candidates: DataFrame, docs: DataFrame,
                            idCol: String, textCol: String, shingleN: Int,
-                           threshold: Double): DataFrame =
-    verifyPairsExact(candidates, docs, idCol, textCol, shingleN, threshold)
-
-  /** Exact Jaccard verification of candidate (d1, d2) pairs: re-shingle
-    * ONLY the documents that appear in a candidate pair (semi-join first,
-    * so the shingle pipeline never runs over the rest of the corpus), then
-    * intersect per pair. Candidates are few by construction (LSH banding
-    * bounds them ∝ true near-dups), so this touches a vanishing fraction of
-    * the corpus. Used by `minHashPairs`; `jaccardPairs` reaches the same
-    * exact values through its hot-shingle correction term instead.
-    */
-  private def verifyPairsExact(candidates: DataFrame, docs: DataFrame,
-                               idCol: String, textCol: String, shingleN: Int,
-                               threshold: Double): DataFrame = {
+                           threshold: Double): DataFrame = {
     // candidates are small by construction (banding/cap bounds them) and
     // referenced twice below — materialize once so the generator pipeline
-    // (e.g. the full MinHash signature computation) doesn't run per
-    // reference
+    // doesn't run per reference
     val cand = candidates.localCheckpoint()
     val needed = cand.select(col("d1").as("needed_id"))
       .union(cand.select(col("d2")))
       .distinct()
-    val arrays = tokenArrays(
-      docs.join(needed, col(idCol) === col("needed_id"), "left_semi"),
+    val sets = spreadSets(docs.join(needed, col(idCol) === col("needed_id"), "left_semi"),
       idCol, textCol, shingleN)
-    cand
-      .join(arrays.select(col("id").as("d1"), col("toks").as("t1")), "d1")
-      .join(arrays.select(col("id").as("d2"), col("toks").as("t2")), "d2")
-      .withColumn("c", size(array_intersect(col("t1"), col("t2"))).cast("long"))
-      .withColumn("jac", col("c").cast("double") / (size(col("t1")) + size(col("t2")) - col("c")))
+    finish(cand
+      .join(sets.select(col("id").as("d1"), col("ths").as("t1")), "d1")
+      .join(sets.select(col("id").as("d2"), col("ths").as("t2")), "d2")
+      .select(col("d1"), col("d2"), size(col("t1")).as("sz1"), size(col("t2")).as("sz2"),
+        size(array_intersect(col("t1"), col("t2"))).cast("long").as("c")),
+      col("c"), threshold)
+  }
+
+  /** (d1, d2, jac) of the pairs whose jac, `cExact` shared shingles over
+    * the union of the `sz1` and `sz2` sets, is at or above `threshold`:
+    * row-local arithmetic on the pair frame.
+    */
+  private def finish(paired: DataFrame, cExact: Column, threshold: Double): DataFrame =
+    paired
+      .withColumn("cx", cExact)
+      .withColumn("jac", col("cx").cast("double") / (col("sz1") + col("sz2") - col("cx")))
       .filter(col("jac") >= threshold)
       .select(col("d1"), col("d2"), col("jac"))
-  }
 
   /** All pairs with exact Jaccard similarity >= threshold over word
     * (shingleN=1) or n-gram shingle sets.
@@ -109,12 +118,13 @@ object Dedup {
     * values stay EXACT for every pair from either route (rare-shared count
     * from the capped join + hot-shared from the per-doc hot sets).
     *
-    * Construction is EAGER: the shingle pass is `localCheckpoint()`ed (see
-    * the body), so building the returned DataFrame already runs the full
-    * tokenize+hash job and the checkpointed blocks are not recomputable on
-    * executor loss — the same materialize-once/rerun-the-operator tradeoff
-    * the persisted-store operators document. Callers that only want the
-    * lazy plan shape (none in this repo) should not build it speculatively.
+    * Construction is EAGER: the shingle-hash sets are `localCheckpoint()`ed
+    * (see the body), so building the returned DataFrame already runs the
+    * full tokenize+hash job and the checkpointed blocks are not
+    * recomputable on executor loss — the same materialize-once/rerun-the-
+    * operator tradeoff the persisted-store operators document. Callers that
+    * only want the lazy plan shape (none in this repo) should not build it
+    * speculatively.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, shingleN: Int = 1,
@@ -123,123 +133,144 @@ object Dedup {
     // keys and the join compares longs. A cross-doc collision (P ≈ n²/2⁶⁴)
     // could only perturb a count by 1 — negligible at the 4-decimal compare.
     // Hashed ONCE and materialized: every downstream consumer (the df
-    // census, both sides of the pair join, the per-doc rare counts) would
+    // census, both sides of the pair join, the per-doc rare counts, the
+    // hot-heavy band rows) derives from the checkpointed sets and would
     // otherwise re-scan and re-shingle the raw corpus — measured at sf10 as
     // SIX full-text scans per run, each serialized on the input file's
-    // split count rather than the cluster. The per-doc distinct-shingle
-    // count rides each token row (`sz` = size of the distinct array BEFORE
-    // explode — free, no shuffle): the r14 plan joined a doc→size relation
-    // against the candidate-PAIR frame twice, and the pair frame is the
-    // operator's largest intermediate (Σ C(df,2) rows ≈ 5–15× the token
-    // rows on this corpus) — at ScaleGen sf30 those two joins alone
-    // spilled ~3 GiB to disk. The checkpoint is 24 bytes per (doc, shingle)
-    // — still the operator's working set either way.
-    val toks = tokenArrays(docs, idCol, textCol, shingleN)
-      .withColumn("sz", size(col("toks")).cast("long"))
-      .select(col("id"), col("sz"), explode(col("toks")).as("tok"))
-      .select(col("id"), col("sz"), xxhash64(col("tok")).as("th"))
-      .localCheckpoint()
-    // Zero-shingle docs drop out at the explode — safe: they can never
-    // appear in a candidate pair.
-    //
-    // Pair-stage width: the candidate join's OUTPUT is Σ_{df≤cap} C(df,2)
-    // rows — a multiple of the token input that a static session shuffle
-    // width (sized for input-scan parallelism) cannot anticipate. Measured
-    // at ScaleGen sf30: 3.8e8 candidate rows over the session's 32
-    // partitions spilled 16 GiB to disk (the agg stage alone 114 s);
-    // the same plan at sf10 (1.27e8 rows, exactly 3× less — ScaleGen holds
-    // pair density constant, so candidate volume is LINEAR in corpus size)
-    // ran spill-free. width<=0 means "session default + AQE" (the explicit
-    // exchanges below pin their width, which would disable AQE coalescing
-    // where it is the right tool — small corpora); a positive width targets
-    // ~4M pair rows (~100 MB sort footprint) per partition so the pair
-    // stages never outgrow executor memory, capped at 8192 (≈3e10 candidate
-    // rows — beyond that, raise the session width with the cluster).
-    def pairCounts(tokSrc: DataFrame, width: Int): DataFrame = {
-      val src = if (width > 0) tokSrc.repartition(width, col("th")) else tokSrc
-      val joined = src.as("a")
-        .join(src.withColumnRenamed("id", "id2").withColumnRenamed("sz", "szb").as("b"),
-          col("a.th") === col("b.th") && col("a.id") < col("id2"))
-        .select(col("a.id").as("d1"), col("id2").as("d2"),
-          col("a.sz").as("s1"), col("szb").as("s2"))
-      val distributed =
-        if (width > 0) joined.repartition(width, col("d1"), col("d2")) else joined
-      distributed.groupBy("d1", "d2")
-        .agg(count(lit(1)).as("c"), first(col("s1")).as("sz1"), first(col("s2")).as("sz2"))
-    }
-    // paired already carries sz1/sz2 from the token rows — no join against
-    // the pair-sized frame, just row-local arithmetic at scan speed
-    def finish(paired: DataFrame, cExact: org.apache.spark.sql.Column): DataFrame =
-      paired
-        .withColumn("cx", cExact)
-        .withColumn("jac", col("cx").cast("double") / (col("sz1") + col("sz2") - col("cx")))
-        .filter(col("jac") >= threshold)
-        .select(col("d1"), col("d2"), col("jac"))
+    // split count rather than the cluster.
+    val sets = spreadSets(docs, idCol, textCol, shingleN).localCheckpoint()
+    val rows = hashRows(sets)
     // a shingle's df is bounded by the document count, so the cap is
     // provably a no-op when n_docs <= cap. Probe with limit(cap+1).count()
     // rather than count(): the limit short-circuits the scan after cap+1
     // rows, so the probe stays cheap at ANY corpus size (a plain count of a
     // filtered 100 TB input would be a full pass)
     if (docs.limit(maxShingleDf + 1).count() <= maxShingleDf) {
-      finish(pairCounts(toks, 0), col("c"))
+      finish(pairCounts(rows, rows, 0, broadcastA = false, ordered), col("c"), threshold)
     } else {
       // full shingle df census, materialized eagerly and ONCE: the hot list
       // (df > cap) is referenced twice below, and the rare mass gives the
       // capped join's EXACT output volume for the width rule — both read
       // the same checkpoint (distinct-shingle-count rows of 16 bytes)
-      val census = toks.groupBy("th").agg(count(lit(1)).as("df")).localCheckpoint()
+      val census = rows.groupBy("th").agg(count(lit(1)).as("df")).localCheckpoint()
       val candPairs = census.filter(col("df") <= maxShingleDf)
         // df*(df-1) is even, so the double division is exact (df ≤ cap =
         // 1e4 keeps each term ≤ 5e7, far under the 2^53 mantissa); cast
         // back to long per-term so the sum (and getLong) stays integral
         .agg(coalesce(sum((col("df") * (col("df") - lit(1)) / lit(2)).cast("long")), lit(0L)).as("cp"))
         .head().getLong(0)
-      val sessionWidth = docs.sparkSession.sessionState.conf.numShufflePartitions
-      val idealWidth = math.min(8192L, candPairs / 4000000L + 1).toInt
-      val width = if (idealWidth > sessionWidth) idealWidth else 0
-      val hotTokens = census.filter(col("df") > maxShingleDf).select("th")
-      val capped = toks.join(hotTokens, Seq("th"), "left_anti")
-      // per-doc hot-shingle sets — the exact correction term for pairs
-      // whose shared shingles include hot ones
-      val hotDocToks = toks.join(hotTokens, Seq("th"), "left_semi")
-        .groupBy("id").agg(collect_set(col("th")).as("hot_ths"))
-      // hot-heavy docs (rare fraction <= 1-threshold): the ONLY possible
-      // endpoints of a pair the capped join structurally misses (see the
-      // operator doc). Small by construction in a normal corpus; ∝ true
-      // duplicates in a mass-dup one. localCheckpoint'd: the id list seeds
-      // the banding route and an inline subplan would re-run tokenization.
-      val sizes = toks.groupBy("id").agg(first(col("sz")).as("sz"))
-      val rareCounts = capped.groupBy("id").agg(count(lit(1)).as("rc"))
-      val hotHeavyIds = sizes.join(rareCounts, Seq("id"), "left")
-        .filter(coalesce(col("rc"), lit(0L)) <= (lit(1.0) - threshold) * col("sz"))
-        .select("id").localCheckpoint()
-      // banding-route pairs are ∝ hot-heavy docs (small), so joining THEIR
-      // sizes back is cheap — the main route carries sizes inline
-      val extra = bandedCandidatePairs(
-        toks.select("id", "th").join(hotHeavyIds, Seq("id"), "left_semi"))
-        .join(sizes.select(col("id").as("d1"), col("sz").as("sz1")), "d1")
-        .join(sizes.select(col("id").as("d2"), col("sz").as("sz2")), "d2")
-        .withColumn("c", lit(0L))
-      // merge the two candidate routes; the rare-shared count c comes from
-      // the capped join (0 for banding-only pairs — all their shared
-      // shingles are hot and re-enter via the correction term). The merge
-      // agg is pair-frame-sized, so it takes the width rule too.
-      val unioned = pairCounts(capped, width)
-        .unionByName(extra.select("d1", "d2", "c", "sz1", "sz2"))
-      val paired =
-        (if (width > 0) unioned.repartition(width, col("d1"), col("d2")) else unioned)
-          .groupBy("d1", "d2").agg(max(col("c")).as("c"),
-            first(col("sz1")).as("sz1"), first(col("sz2")).as("sz2"))
-      // exact intersection = shared rare shingles (counted by the join) +
-      // shared hot shingles (intersect of the two per-doc hot sets)
-      val cHot = when(col("h1").isNotNull && col("h2").isNotNull,
-        size(array_intersect(col("h1"), col("h2"))).cast("long")).otherwise(0L)
-      finish(
-        paired
-          .join(hotDocToks.select(col("id").as("d1"), col("hot_ths").as("h1")), Seq("d1"), "left")
-          .join(hotDocToks.select(col("id").as("d2"), col("hot_ths").as("h2")), Seq("d2"), "left"),
-        col("c") + cHot)
+      val side = cappedSide(sets, census.filter(col("df") > maxShingleDf).select("th"), threshold)
+      cappedPairs(side, side, pairWidth(docs, candPairs), broadcastA = false, ordered, threshold)
     }
+  }
+
+  /** Pair-stage width for `candPairs` candidate rows. The candidate join's
+    * OUTPUT is a multiple of the token input that a static session shuffle
+    * width (sized for input-scan parallelism) cannot anticipate. Measured
+    * at ScaleGen sf30: 3.8e8 candidate rows over the session's 32
+    * partitions spilled 16 GiB to disk (the agg stage alone 114 s); the
+    * same plan at sf10 (1.27e8 rows, exactly 3× less — ScaleGen holds pair
+    * density constant, so candidate volume is LINEAR in corpus size) ran
+    * spill-free. 0 means "session default + AQE" (the explicit exchanges
+    * pin their width, which would disable AQE coalescing where it is the
+    * right tool — small corpora); a positive width targets ~4M pair rows
+    * (~100 MB sort footprint) per partition so the pair stages never
+    * outgrow executor memory, capped at 8192 (≈3e10 candidate rows —
+    * beyond that, raise the session width with the cluster).
+    */
+  private def pairWidth(docs: DataFrame, candPairs: Long): Int = {
+    val idealWidth = math.min(8192L, candPairs / 4000000L + 1).toInt
+    if (idealWidth > docs.sparkSession.sessionState.conf.numShufflePartitions) idealWidth else 0
+  }
+
+  /** (d1, d2, c, sz1, sz2): every pair of an `a` and a `b` doc meeting
+    * `pair` (over their ids `id` and `id2`) with its c ≥ 1 shared shingle
+    * hashes, from two (id, sz, th) row sets. A positive `width` pins the
+    * token and pair exchanges ([[pairWidth]]); `broadcastA` broadcasts `a`
+    * into the token join instead, so `b` is never shuffled on token hash.
+    */
+  private def pairCounts(a: DataFrame, b: DataFrame, width: Int, broadcastA: Boolean,
+                         pair: Column): DataFrame = {
+    val aSide =
+      if (broadcastA) broadcast(a)
+      else if (width > 0) a.repartition(width, col("th"))
+      else a
+    val bSide = if (width > 0 && !broadcastA) b.repartition(width, col("th")) else b
+    val joined = aSide.as("a")
+      .join(bSide.withColumnRenamed("id", "id2").withColumnRenamed("sz", "szb").as("b"),
+        col("a.th") === col("b.th") && pair)
+      .select(col("id").as("d1"), col("id2").as("d2"), col("sz").as("s1"), col("szb").as("s2"))
+    val distributed =
+      if (width > 0) joined.repartition(width, col("d1"), col("d2")) else joined
+    distributed.groupBy("d1", "d2")
+      .agg(count(lit(1)).as("c"), first(col("s1")).as("sz1"), first(col("s2")).as("sz2"))
+  }
+
+  /** Distinct (d1, d2) pairs of an `x` and a `y` band row with equal band
+    * hashes, meeting `pair` over their ids `id` and `id2`.
+    */
+  private def bandedPairs(x: DataFrame, y: DataFrame, pair: Column): DataFrame =
+    x.as("x")
+      .join(y.withColumnRenamed("id", "id2").as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") && pair)
+      .select(col("id").as("d1"), col("id2").as("d2"))
+      .distinct()
+
+  /** One corpus side of the capped route, derived from its checkpointed
+    * (id, ths) sets: its (id, sz, th) rows without hot shingles (the capped
+    * join's input), each doc's size and hot-shingle set (the exact
+    * correction term), and the band rows of its hot-heavy docs.
+    */
+  private final case class CappedSide(rows: DataFrame, sizes: DataFrame, hot: DataFrame,
+                                      bands: DataFrame)
+
+  private def cappedSide(sets: DataFrame, hotTokens: DataFrame, threshold: Double): CappedSide = {
+    val all = hashRows(sets)
+    val rows = all.join(hotTokens, Seq("th"), "left_anti")
+    val sizes = sets.select(col("id"), size(col("ths")).cast("long").as("sz"))
+    // hot-heavy docs (rare fraction <= 1-threshold): the ONLY possible
+    // endpoints of a pair the capped join structurally misses (see
+    // jaccardPairs). Small by construction in a normal corpus; ∝ true
+    // duplicates in a mass-dup one. The ids and their band rows are
+    // localCheckpoint'd: the band rows feed a join on both sides.
+    val rare = rows.groupBy("id").agg(count(lit(1)).as("rc"))
+    val hotHeavyIds = sizes.join(rare, Seq("id"), "left")
+      .filter(coalesce(col("rc"), lit(0L)) <= (lit(1.0) - threshold) * col("sz"))
+      .select("id").localCheckpoint()
+    // 8 bands × 2 rows: miss probability (1-s²)⁸ ≈ 3e-4 at s=0.8, ≈ 0 at
+    // s=1 (the mass-duplication case the route exists for)
+    CappedSide(rows, sizes,
+      all.join(hotTokens, Seq("th"), "left_semi").groupBy("id").agg(collect_set(col("th")).as("hot_ths")),
+      setBandRows(sets.join(hotHeavyIds, Seq("id"), "left_semi"), 8, 2).localCheckpoint())
+  }
+
+  /** The exact pairs of an `l` and an `r` doc meeting `pair` at or above
+    * `threshold`, from both candidate routes: the capped join, whose c
+    * counts the shared rare shingles, and the banded hot-heavy pairs (c =
+    * 0: all their shared shingles are hot). Each pair's exact intersection
+    * adds its shared hot shingles, the intersection of its docs' hot sets.
+    */
+  private def cappedPairs(l: CappedSide, r: CappedSide, width: Int, broadcastA: Boolean,
+                          pair: Column, threshold: Double): DataFrame = {
+    // banding-route pairs are ∝ hot-heavy docs (small), so joining THEIR
+    // sizes back is cheap — the main route carries sizes inline
+    val extra = bandedPairs(l.bands, r.bands, pair)
+      .join(l.sizes.select(col("id").as("d1"), col("sz").as("sz1")), "d1")
+      .join(r.sizes.select(col("id").as("d2"), col("sz").as("sz2")), "d2")
+      .select(col("d1"), col("d2"), lit(0L).as("c"), col("sz1"), col("sz2"))
+    // the merge agg is pair-frame-sized, so it takes the width rule too
+    val unioned = pairCounts(l.rows, r.rows, width, broadcastA, pair).unionByName(extra)
+    val paired =
+      (if (width > 0) unioned.repartition(width, col("d1"), col("d2")) else unioned)
+        .groupBy("d1", "d2").agg(max(col("c")).as("c"),
+          first(col("sz1")).as("sz1"), first(col("sz2")).as("sz2"))
+    val cHot = when(col("h1").isNotNull && col("h2").isNotNull,
+      size(array_intersect(col("h1"), col("h2"))).cast("long")).otherwise(0L)
+    finish(
+      paired
+        .join(l.hot.select(col("id").as("d1"), col("hot_ths").as("h1")), Seq("d1"), "left")
+        .join(r.hot.select(col("id").as("d2"), col("hot_ths").as("h2")), Seq("d2"), "left"),
+      col("c") + cHot, threshold)
   }
 
   /** (id, ths): each doc's distinct 64-bit shingle hashes in ascending
@@ -262,115 +293,42 @@ object Dedup {
     sets.select(col("id"),
       posexplode(TextFunctions.minHashBands(col("ths"), numBands, rowsPerBand)).as(Seq("band", "bh")))
 
-  /** MinHash-banded candidate (d1, d2) pairs from exploded (id, th) token
-    * hashes — the fallback candidate route for hot-heavy docs. 8 bands × 2
-    * rows: miss probability (1-s²)⁸ ≈ 3e-4 at s=0.8, ≈ 0 at s=1 (the mass
-    * -duplication case it exists for). Permutations are a projection, not
-    * aggregate-inlined (JIT method-size rule, cf. [[minHashSignature]]).
-    */
-  private def bandedCandidatePairs(tokHashes: DataFrame, numBands: Int = 8,
-                                   rowsPerBand: Int = 2): DataFrame = {
-    val banded = bandRows(tokHashes, numBands, rowsPerBand)
-      .localCheckpoint() // self-joined below — don't run the signature twice
-    banded.as("x")
-      .join(banded.withColumnRenamed("id", "id2").as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") && col("x.id") < col("id2"))
-      .select(col("x.id").as("d1"), col("id2").as("d2"))
-      .distinct()
-  }
-
-  /** (id, band, bh) MinHash band-hash rows from exploded (id, th) token
-    * hashes.
-    */
-  private def bandRows(tokHashes: DataFrame, numBands: Int, rowsPerBand: Int): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    val permuted = tokHashes.select(
-      col("id") +: (0 until numHashes).map(i => xxhash64(lit(i), col("th")).as(s"p$i")): _*)
-    val mins = (0 until numHashes).map(i => min(col(s"p$i")).as(s"h$i"))
-    val sig = permuted.groupBy("id").agg(mins.head, mins.tail: _*)
-    val bandCols = (0 until numBands).map { b =>
-      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), xxhash64(lit(b) +: hs: _*).as("bh"))
-    }
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
-
   /** Cross-corpus exact Jaccard pairs: every (left doc, right doc) pair
     * with similarity >= threshold — the incremental-ingest form of
     * [[jaccardPairs]] (dedup an incoming batch against an existing corpus;
     * decontaminate a training set against an eval set). Same df-cap fan-in
     * bound, exact hot-shingle correction, and hot-heavy banding fallback
     * as [[jaccardPairs]], with document frequency measured over BOTH
-    * corpora combined. Construction is EAGER for both corpora (the shared
-    * shingle pass is `localCheckpoint()`ed — see [[jaccardPairs]]'s
+    * corpora combined. Construction is EAGER for both corpora (each side's
+    * shingle-hash sets are `localCheckpoint()`ed — see [[jaccardPairs]]'s
     * contract note).
-    */
-  /** @param broadcastLeft hint that `left` is query-sized (an anchor/batch
+    *
+    * @param broadcastLeft hint that `left` is query-sized (an anchor/batch
     *        set, NOT a corpus): its hashed token postings are broadcast into
     *        the intersection join, so the corpus side is never shuffled on
     *        token hash — the join output (intersection-sized) is all that
     *        moves. Caller-asserted; a corpus-sized left would OOM the
-    *        broadcast, which is why this is opt-in and default-off. */
+    *        broadcast, which is why this is opt-in and default-off.
+    */
   def jaccardPairsBetween(left: DataFrame, right: DataFrame, idCol: String,
                           textCol: String, threshold: Double, shingleN: Int = 1,
                           maxShingleDf: Int = 10000,
                           broadcastLeft: Boolean = false): DataFrame = {
-    // hash-early + materialize-once, same rationale as jaccardPairs: each
-    // side is consumed by the df census and the pair join — checkpointing
-    // the hashed tokens keeps every consumer off the raw corpora. The
-    // per-doc distinct-shingle count rides each token row (size of the
-    // distinct array BEFORE explode — free, no shuffle), so the similarity
-    // arithmetic never joins a size relation against the candidate-PAIR
-    // frame, the operator's largest intermediate (see jaccardPairs).
-    def hashed(src: DataFrame) = tokenArrays(src, idCol, textCol, shingleN)
-      .withColumn("sz", size(col("toks")).cast("long"))
-      .select(col("id"), col("sz"), explode(col("toks")).as("tok"))
-      .select(col("id"), col("sz"), xxhash64(col("tok")).as("th"))
-      .localCheckpoint()
-    val (lt, rt) = (hashed(left), hashed(right))
-    def sizesOf(toks: DataFrame) = toks.groupBy("id").agg(first(col("sz")).as("sz"))
-    lazy val lsz = sizesOf(lt)
-    lazy val rsz = sizesOf(rt)
-    // pair-stage width, same rule as jaccardPairs (the cross-corpus
-    // candidate volume is Σ_{df≤cap} df_left·df_right — exact, from the
-    // same census pass that finds the hot shingles). width 0 = session
-    // default + AQE; the broadcast path never shuffles on token hash, so
-    // only the intersection-sized agg takes the width.
-    def pairCounts(a: DataFrame, b: DataFrame, width: Int): DataFrame = {
-      val aSide =
-        if (broadcastLeft) broadcast(a)
-        else if (width > 0) a.repartition(width, col("th"))
-        else a
-      val bSide = if (width > 0 && !broadcastLeft) b.repartition(width, col("th")) else b
-      val joined = aSide.as("a")
-        .join(bSide.withColumnRenamed("id", "id2").withColumnRenamed("sz", "szb").as("b"),
-          col("a.th") === col("b.th"))
-        .select(col("a.id").as("d1"), col("id2").as("d2"),
-          col("a.sz").as("s1"), col("szb").as("s2"))
-      val distributed =
-        if (width > 0) joined.repartition(width, col("d1"), col("d2")) else joined
-      distributed.groupBy("d1", "d2")
-        .agg(count(lit(1)).as("c"), first(col("s1")).as("sz1"), first(col("s2")).as("sz2"))
-    }
-    // paired carries sz1/sz2 inline — row-local arithmetic, no pair-frame join
-    def finish(paired: DataFrame, cExact: org.apache.spark.sql.Column): DataFrame =
-      paired
-        .withColumn("cx", cExact)
-        .withColumn("jac", col("cx").cast("double") / (col("sz1") + col("sz2") - col("cx")))
-        .filter(col("jac") >= threshold)
-        .select(col("d1"), col("d2"), col("jac"))
+    // hash-early + materialize-once, same rationale as jaccardPairs
+    val ls = spreadSets(left, idCol, textCol, shingleN).localCheckpoint()
+    val rs = spreadSets(right, idCol, textCol, shingleN).localCheckpoint()
+    val (lt, rt) = (hashRows(ls), hashRows(rs))
     // limit-probed like jaccardPairs, but as ONE action: union the two
     // limited sides before counting instead of paying a job per side
     val probed = left.limit(maxShingleDf + 1).select(lit(1).as("one"))
       .unionAll(right.limit(maxShingleDf + 1).select(lit(1).as("one")))
       .count()
     if (probed <= maxShingleDf) {
-      finish(pairCounts(lt, rt, 0), col("c"))
+      finish(pairCounts(lt, rt, 0, broadcastLeft, lit(true)), col("c"), threshold)
     } else {
       // one census pass over the union carries BOTH the combined df (the
       // hot cut) and the left-side df, so the exact cross candidate volume
-      // Σ_{df≤cap} df_l·(df−df_l) costs no extra shuffle over the r14 plan
+      // Σ_{df≤cap} df_l·(df−df_l) costs no extra shuffle
       val census = lt.select(col("th"), lit(1L).as("l"))
         .unionByName(rt.select(col("th"), lit(0L).as("l")))
         .groupBy("th").agg(count(lit(1)).as("df"), sum(col("l")).as("dfl"))
@@ -378,53 +336,11 @@ object Dedup {
       val candPairs = census.filter(col("df") <= maxShingleDf)
         .agg(coalesce(sum(col("dfl") * (col("df") - col("dfl"))), lit(0L)).as("cp"))
         .head().getLong(0)
-      val sessionWidth = left.sparkSession.sessionState.conf.numShufflePartitions
-      val idealWidth = math.min(8192L, candPairs / 4000000L + 1).toInt
-      val width = if (idealWidth > sessionWidth) idealWidth else 0
+      // df is measured over the combined corpora, so a structurally-missed
+      // pair forces BOTH endpoints under the same 1-threshold rare fraction
       val hotTokens = census.filter(col("df") > maxShingleDf).select("th")
-      def capped(t: DataFrame) = t.join(hotTokens, Seq("th"), "left_anti")
-      def hotSets(t: DataFrame) = t.join(hotTokens, Seq("th"), "left_semi")
-        .groupBy("id").agg(collect_set(col("th")).as("hot_ths"))
-      // hot-heavy fallback, cross-corpus form (same math as jaccardPairs:
-      // a structurally-missed pair at jac >= threshold forces BOTH
-      // endpoints under the 1-threshold rare fraction, df measured over
-      // the combined corpora) — band each side's hot-heavy docs, join
-      // left × right on band hash
-      def hotHeavyIds(toks: DataFrame, sizes: DataFrame) = {
-        val rare = capped(toks).groupBy("id").agg(count(lit(1)).as("rc"))
-        sizes.join(rare, Seq("id"), "left")
-          .filter(coalesce(col("rc"), lit(0L)) <= (lit(1.0) - threshold) * col("sz"))
-          .select("id").localCheckpoint()
-      }
-      val lBand = bandRows(
-        lt.select("id", "th").join(hotHeavyIds(lt, lsz), Seq("id"), "left_semi"), 8, 2)
-        .localCheckpoint()
-      val rBand = bandRows(
-        rt.select("id", "th").join(hotHeavyIds(rt, rsz), Seq("id"), "left_semi"), 8, 2)
-        .localCheckpoint()
-      // banding-route pairs are ∝ hot-heavy docs (small): joining THEIR
-      // sizes back is cheap — the main route carries sizes inline
-      val extra = lBand.as("x")
-        .join(rBand.withColumnRenamed("id", "id2").as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-        .select(col("x.id").as("d1"), col("id2").as("d2"))
-        .distinct()
-        .join(lsz.select(col("id").as("d1"), col("sz").as("sz1")), "d1")
-        .join(rsz.select(col("id").as("d2"), col("sz").as("sz2")), "d2")
-        .withColumn("c", lit(0L))
-      val unioned = pairCounts(capped(lt), capped(rt), width)
-        .unionByName(extra.select("d1", "d2", "c", "sz1", "sz2"))
-      val paired =
-        (if (width > 0) unioned.repartition(width, col("d1"), col("d2")) else unioned)
-          .groupBy("d1", "d2").agg(max(col("c")).as("c"),
-            first(col("sz1")).as("sz1"), first(col("sz2")).as("sz2"))
-      val cHot = when(col("h1").isNotNull && col("h2").isNotNull,
-        size(array_intersect(col("h1"), col("h2"))).cast("long")).otherwise(0L)
-      finish(
-        paired
-          .join(hotSets(lt).select(col("id").as("d1"), col("hot_ths").as("h1")), Seq("d1"), "left")
-          .join(hotSets(rt).select(col("id").as("d2"), col("hot_ths").as("h2")), Seq("d2"), "left"),
-        col("c") + cHot)
+      cappedPairs(cappedSide(ls, hotTokens, threshold), cappedSide(rs, hotTokens, threshold),
+        pairWidth(left, candPairs), broadcastLeft, lit(true), threshold)
     }
   }
 
@@ -461,67 +377,31 @@ object Dedup {
     */
   def jaccardCandidates(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, maxShingleDf: Int): DataFrame = {
-    val toks = tokenSets(docs, idCol, textCol, shingleN)
-      .select(col("id"), xxhash64(col("tok")).as("th"))
+    val toks = hashRows(spreadSets(docs, idCol, textCol, shingleN))
     val hotTokens = toks.groupBy("th").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxShingleDf).select("th")
     val capped = toks.join(hotTokens, Seq("th"), "left_anti")
     capped.as("a")
-      .join(capped.withColumnRenamed("id", "id2").as("b"),
-        col("a.th") === col("b.th") && col("a.id") < col("id2"))
-      .select(col("a.id").as("d1"), col("id2").as("d2"))
+      .join(capped.withColumnRenamed("id", "id2").as("b"), col("a.th") === col("b.th") && ordered)
+      .select(col("id").as("d1"), col("id2").as("d2"))
       .distinct()
-  }
-
-  /** Deterministic MinHash signature: sig[i] = min over shingles of
-    * xxhash64(i, xxhash64(shingle)).
-    *
-    * Each shingle is string-hashed ONCE; the i-th permutation re-mixes the
-    * resulting 8-byte value (fixed-width, far cheaper than re-hashing the
-    * string per permutation, and overflow-free under ANSI mode — a
-    * multiply-shift family would throw on long overflow). Seeded by the
-    * literal index — reproducible across runs/clusters, no RNG.
-    */
-  def minHashSignature(docs: DataFrame, idCol: String, textCol: String,
-                       numHashes: Int, shingleN: Int): DataFrame = {
-    val toks = tokenSets(docs, idCol, textCol, shingleN)
-      .select(col("id"), xxhash64(col("tok")).as("th"))
-    // permuted hashes as a PROJECTION, not inside the aggregate: codegen
-    // splits wide projections into JIT-sized sub-methods, while a
-    // HashAggregate update with N inlined hashes is one huge method that
-    // HotSpot refuses to JIT (~10× slower). The aggregate then does N
-    // trivial min() updates.
-    val permuted = toks.select(
-      col("id") +: (0 until numHashes).map(i => xxhash64(lit(i), col("th")).as(s"p$i")): _*)
-    val mins = (0 until numHashes).map(i => min(col(s"p$i")).as(s"h$i"))
-    permuted.groupBy("id").agg(mins.head, mins.tail: _*)
   }
 
   /** MinHash + LSH banding near-dup pairs, verified with exact Jaccard.
     *
-    * bands × rowsPerBand hashes; candidate pairs share at least one band
-    * hash; candidates are then exactly verified (against the full shingle
-    * sets) so the output has no false positives — only the (tiny, tunable)
+    * bands × rowsPerBand hashes per doc, banded in-row by the kernels the
+    * MinHash store persists ([[setBandRows]] of [[shingleHashSets]]);
+    * candidate pairs share at least one band hash, and
+    * [[exactJaccardForPairs]] verifies them against the full shingle-hash
+    * sets, so the output has no false positives — only the (tiny, tunable)
     * LSH miss probability (1-s^r)^b at similarity s.
     */
   def minHashPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, numBands: Int = 16, rowsPerBand: Int = 2,
                    shingleN: Int = 1): DataFrame = {
-    val numHashes = numBands * rowsPerBand
-    val sig = minHashSignature(docs, idCol, textCol, numHashes, shingleN)
-    // band hash = xxhash64(bandIdx, h_k..h_k+r) — one row per (id, band)
-    val bandCols = (0 until numBands).map { b =>
-      val hs = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), xxhash64(lit(b) +: hs: _*).as("bh"))
-    }
-    val banded = sig.select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val candidates = banded.as("x")
-      .join(banded.withColumnRenamed("id", "id2").as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") && col("x.id") < col("id2"))
-      .select(col("x.id").as("d1"), col("id2").as("d2"))
-      .distinct()
-    verifyPairsExact(candidates, docs, idCol, textCol, shingleN, threshold)
+    val banded = setBandRows(spreadSets(docs, idCol, textCol, shingleN), numBands, rowsPerBand)
+    exactJaccardForPairs(bandedPairs(banded, banded, ordered), docs, idCol, textCol, shingleN,
+      threshold)
   }
 
   /** Persisted MinHash signature store — the INCREMENTAL dedup shape: a

@@ -164,22 +164,19 @@ object FileCommit {
     release(fs, root, tmp)
   }
 
-  /** One entry of a written stage; a directory lists its children on
-    * first use, so a stage is walked once: fully for a gated commit's
-    * manifest, and only as deep as [[moveIn]] descends for an append.
-    */
-  private final class Staged(fs: FileSystem, val status: FileStatus) {
-    lazy val children: Seq[Staged] = walk(fs, status.getPath)
-  }
+  /** One entry of a written stage, with its children when a directory. */
+  private final case class Staged(status: FileStatus, children: Seq[Staged])
 
-  /** The entries of the stage dir `dir`, sorted by name, with Spark's
-    * `_SUCCESS` job markers deleted: a stage holds exactly what the commit
-    * moves in, so the manifest lists every file a rollback must remove.
+  /** The entries of the stage dir `dir`, walked fully and sorted by name,
+    * with Spark's `_SUCCESS` job markers deleted at every level: a stage
+    * holds exactly what the commit moves in, so a gated commit's manifest
+    * lists every file a rollback must remove, and an appended tree has the
+    * shape a replaced one has.
     */
   private def walk(fs: FileSystem, dir: Path): Seq[Staged] =
     fs.listStatus(dir).toSeq.sortBy(_.getPath.getName).flatMap { st =>
       if (st.isFile && st.getPath.getName == "_SUCCESS") { fs.delete(st.getPath, false); None }
-      else Some(new Staged(fs, st))
+      else Some(Staged(st, if (st.isDirectory) walk(fs, st.getPath) else Nil))
     }
 
   private def files(entries: Seq[Staged]): Seq[Path] =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.TextFunctions
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
@@ -41,8 +41,10 @@ object DocStreams {
     *
     * Pipeline shape (and why it scales to an unbounded 100 TB ingest):
     *  - The MinHash signature is computed PER ROW by the native
-    *    `shingle_hashes` / `minhash_bands` kernels (the hash family of the
-    *    batch store: th = xxhash64(shingle), p_i = xxhash64(i, th)) — no
+    *    `shingle_hashes` / `minhash_bands` kernels, through the band rows
+    *    every Dedup operator and the MinHash store use
+    *    (`Dedup.setBandRows` of `Dedup.shingleHashSets`; th =
+    *    xxhash64(shingle), p_i = xxhash64(i, th)) — no
     *    aggregation, no shuffle, no state, and no interpreted
     *    higher-order-function fallback; the signature work rides inside
     *    whole-stage codegen on the map side.
@@ -50,8 +52,8 @@ object DocStreams {
     *    stateful operator is `flatMapGroupsWithState` keyed by band-bucket.
     *    State per bucket is the member id list — two docs land in the same
     *    bucket only when a full band of their signatures collides, so
-    *    bucket sizes track true near-dup cluster sizes (the
-    *    `bandedCandidatePairs` argument, Dedup.scala), and `maxBucket`
+    *    bucket sizes track true near-dup cluster sizes (the LSH
+    *    argument of `Dedup.minHashPairs`), and `maxBucket`
     *    fails loudly if a degenerate corpus breaks that assumption.
     *  - A new member emits a candidate pair against each existing member
     *    of its bucket — candidate volume is LSH-bounded (∝ true near-dups
@@ -91,12 +93,10 @@ object DocStreams {
     val src = spark.readStream.schema(docsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
-    // a doc without shingles has no band hashes and so no rows
-    val bandRows = src
-      .select(col("doc_id"), posexplode(TextFunctions.minHashBands(
-        TextFunctions.shingleHashes(col("text"), shingleN), numBands, rowsPerBand))
-        .as(Seq("band", "bh")))
-      .select(col("band"), col("bh"), col("doc_id"))
+    // a doc without shingles has no shingle-hash set and so no rows
+    val bandRows = Dedup.setBandRows(Dedup.shingleHashSets(src, "doc_id", "text", shingleN),
+        numBands, rowsPerBand)
+      .select(col("band"), col("bh"), col("id").as("doc_id"))
       .as[DocBandRow]
     val pairs = bandRows
       .groupByKey(r => (r.band, r.bh))

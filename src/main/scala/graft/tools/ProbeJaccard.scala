@@ -55,15 +55,12 @@ object ProbeJaccard {
 
     modes.foreach {
       case "counts" =>
-        // replicate the operator's shingle pass inline (Dedup.tokenArrays is
-        // private): spread + distinct 3-shingles + xxhash64, the exact
-        // kernel jaccardPairs materializes
+        // the operator's shingle pass: spread + the shingle-hash sets
+        // jaccardPairs materializes, one row per (doc, shingle hash)
         val toks = time("shingle+hash pass")(
-          docs.repartition(spark.sparkContext.defaultParallelism)
-            .select(col("doc_id").as("id"),
-              explode(array_distinct(
-                graft.functions.TextFunctions.shingles(col("text"), 3))).as("tok"))
-            .select(col("id"), xxhash64(col("tok")).as("th"))
+          Dedup.shingleHashSets(docs.repartition(spark.sparkContext.defaultParallelism),
+              "doc_id", "text", 3)
+            .select(col("id"), explode(col("ths")).as("th"))
             .localCheckpoint())
         val census = toks.groupBy("th").agg(count(lit(1)).as("df")).localCheckpoint()
         val ledger = census.agg(

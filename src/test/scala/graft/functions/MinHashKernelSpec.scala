@@ -119,7 +119,7 @@ class MinHashKernelSpec extends SparkSpec {
   }
 
   test("minhash_bands equals the retired min / chained-hash band rows, eval and codegen") {
-    for (n <- Seq(1, 3); (b, r) <- Seq((16, 2), (8, 3), (1, 1))) {
+    for (n <- Seq(1, 3); (b, r) <- Seq((16, 2), (8, 3), (8, 2), (1, 1))) {
       val sets = retiredSets(corpus, n).localCheckpoint()
       val retired = retiredBands(sets, b, r)
       val want = bandRowsOf(retired)

@@ -115,11 +115,12 @@ class TextPropertySpec extends SparkSpec {
     val rows = samples(sentence, 30).zipWithIndex
       .collect { case (ws, i) if ws.size >= 3 => (i.toLong, ws.mkString(" ")) }
     val df = rows.toDF("doc_id", "text")
-    val a = graft.operators.Dedup.minHashSignature(df, "doc_id", "text", 8, 3)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    val b = graft.operators.Dedup.minHashSignature(df, "doc_id", "text", 8, 3)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    assert(a === b)
+    // 8 hashes as 4 bands of 2 rows, from the kernels every MinHash path runs
+    def bands() = graft.operators.Dedup.setBandRows(
+        graft.operators.Dedup.shingleHashSets(df, "doc_id", "text", 3), 4, 2)
+      .orderBy("id", "band").collect().map(_.toSeq).toSeq
+    val a = bands()
+    assert(a.nonEmpty && a === bands())
   }
 
   test("approx_count_distinct tracks exact within the default 5% rsd") {

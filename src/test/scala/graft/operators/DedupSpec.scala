@@ -112,6 +112,99 @@ class DedupSpec extends SparkSpec {
     assert(lsh === exact)
   }
 
+  test("property: exact-Jaccard tiers agree, the cross form is the self form restricted, MinHash pairs are exact pairs") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val vocab = (0 until 200).map(i => s"w$i")
+    val words = (lo: Int, hi: Int) => Gen.choose(lo, hi).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
+    // ≤ 45 docs: random base docs, a near-dup of every other one (one word
+    // replaced or appended), and a template copied `copies` times plus one
+    // copy with a word appended — its shingles are the hot ones below, and
+    // its pairs (jac 1 or ~0.93) are the only ones the banding route needs
+    val corpusGen = for {
+      base <- Gen.choose(8, 20).flatMap(Gen.listOfN(_, words(8, 18)))
+      edits <- Gen.listOfN(base.size / 2, Gen.zip(Gen.choose(0, 17), Gen.oneOf(vocab), Gen.oneOf(true, false)))
+      template <- words(14, 14)
+      extra <- Gen.oneOf(vocab)
+      copies <- Gen.choose(6, 14)
+      order <- Gen.long
+      shingleN <- Gen.oneOf(1, 3)
+      threshold <- Gen.oneOf(0.6, 0.8)
+    } yield {
+      val nearDups = edits.zipWithIndex.map { case ((at, w, replace), i) =>
+        val ws = base(2 * i)
+        if (replace) ws.updated(at % ws.size, w) else ws :+ w
+      }
+      val texts = base ++ nearDups ++ Seq.fill(copies)(template) :+ (template :+ extra)
+      (new scala.util.Random(order).shuffle(texts.map(_.mkString(" "))), copies, shingleN, threshold)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    for (i <- 0 until 10) {
+      val (texts, copies, n, t) = corpusGen(Gen.Parameters.default, Seed(i.toLong)).get
+      val corpus = texts.zipWithIndex.map { case (text, id) => (id.toLong, text) }.toDF("doc_id", "text")
+      val split = texts.size / 2
+      val (left, right) = (corpus.filter(col("doc_id") < split), corpus.filter(col("doc_id") >= split))
+      val ctx = s"case $i: ${texts.size} docs, $copies copies, shingleN=$n, threshold=$t"
+      // a cap ≥ n_docs takes the uncapped join; one below the template count
+      // takes the capped join, the hot correction and the banding route
+      val uncapped = rows(Dedup.jaccardPairs(corpus, "doc_id", "text", t, n, maxShingleDf = texts.size))
+      assert(uncapped.size >= copies * (copies + 1) / 2, ctx)
+      for (cap <- Seq(texts.size, copies - 1)) {
+        assert(rows(Dedup.jaccardPairs(corpus, "doc_id", "text", t, n, cap)) === uncapped, s"$ctx, cap=$cap")
+        assert(rows(Dedup.jaccardPairsBetween(left, right, "doc_id", "text", t, n, cap)) ===
+          uncapped.filter { case ((d1, d2), _) => d1 < split && d2 >= split }, s"$ctx, cap=$cap, between")
+      }
+      val lsh = rows(Dedup.minHashPairs(corpus, "doc_id", "text", t, shingleN = n))
+      assert(lsh.nonEmpty && lsh.forall { case (p, j) => uncapped.get(p).contains(j) }, ctx)
+    }
+  }
+
+  test("every shingle-set operator hashes with shingle_hashes and builds no shingle string") {
+    import org.apache.spark.sql.catalyst.expressions.{ConcatWs, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import graft.functions.ShingleHashes
+    val template = "identical template body repeated verbatim across the whole batch"
+    val corpus = ((0L until 4L).map(i => (i, template)) ++ docs.as[(Long, String)].collect()
+      .map { case (id, text) => (id + 10L, text) }).toDF("doc_id", "text")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    def holds(p: LogicalPlan)(f: Expression => Boolean): Boolean =
+      p.find(_.expressions.exists(_.find(f).isDefined)).isDefined
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, 3)),
+      "jaccardPairs capped" -> (() => Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, 3, 2)),
+      "jaccardPairsBetween capped" -> (() => Dedup.jaccardPairsBetween(
+        corpus.filter(col("doc_id") < 2), corpus.filter(col("doc_id") >= 2), "doc_id", "text", 0.5, 3, 2)),
+      "minHashPairs" -> (() => Dedup.minHashPairs(corpus, "doc_id", "text", 0.5, shingleN = 3)),
+      "exactJaccardForPairs" -> (() => Dedup.exactJaccardForPairs(
+        Seq((0L, 1L), (11L, 12L)).toDF("d1", "d2"), corpus, "doc_id", "text", 3, 0.5)),
+      "jaccardCandidates" -> (() => Dedup.jaccardCandidates(corpus, "doc_id", "text", 3, 100)))
+    import scala.jdk.CollectionConverters._
+    val faults = ops.flatMap { case (name, op) =>
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      plans.clear()
+      spark.listenerManager.register(listener)
+      val out = try {
+        val n = op().collect().length
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        n
+      } finally spark.listenerManager.unregister(listener)
+      val seen = plans.asScala.toSeq
+      Seq(s"$name: fixture drifted, no rows" -> (out == 0),
+        s"$name: no shingle_hashes in its ${seen.size} plans" ->
+          !seen.exists(holds(_)(_.isInstanceOf[ShingleHashes])),
+        s"$name: concat_ws builds shingle strings" -> seen.exists(holds(_)(_.isInstanceOf[ConcatWs])))
+        .collect { case (msg, true) => msg }
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
+  }
+
   test("MinHash store: batch-vs-store pairs match jaccardPairsBetween; appends extend it") {
     val dir = "target/tmp/minhash_store/spec"
     // corpus with a planted near-dup target; batch contains a near-dup of it

@@ -281,5 +281,9 @@ class FileCommitSpec extends SparkSpec {
     assert(segs.length === 2)
     assert(spark.read.parquet(segs.map(s => s"$local/$s/toks"): _*)
       .select("id").distinct().count() === 8L)
+    // the appended segment has the built one's shape: no job marker anywhere
+    val markers = java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator.asScala
+      .map(_.toString).filter(_.endsWith("/_SUCCESS")).toSeq
+    assert(markers.isEmpty, markers)
   }
 }
