@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -184,5 +184,70 @@ object MinHashBands {
       b += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** The number of elements two strictly ascending `array<bigint>` sets have
+  * in common — `size(array_intersect(a, b))` for the `ths` sets
+  * [[ShingleHashes]] emits, counted by one merge of the two arrays with no
+  * hash set and no boxing. Null when either side is null. An input that is
+  * not strictly ascending, or holds a null element, fails naming
+  * `intersect_count`: a merge over it would miscount silently.
+  *
+  * Eval and codegen make the same single call into [[IntersectCount.kernel]].
+  */
+case class IntersectCount(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"intersect_count requires two array<bigint>, got ${l.simpleString} and ${r.simpleString}")
+  }
+
+  override def dataType: DataType = IntegerType
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntersectCount.kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.IntersectCount.kernel($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "intersect_count"
+}
+
+object IntersectCount {
+
+  /** Shared eval/codegen kernel. */
+  def kernel(a: ArrayData, b: ArrayData): Int = {
+    requireAscending(a)
+    requireAscending(b)
+    val n = a.numElements()
+    val m = b.numElements()
+    var i = 0
+    var j = 0
+    var c = 0
+    while (i < n && j < m) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x < y) i += 1
+      else if (x > y) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+
+  private def requireAscending(s: ArrayData): Unit = {
+    var k = 0
+    while (k < s.numElements()) {
+      if (s.isNullAt(k) || (k > 0 && s.getLong(k) <= s.getLong(k - 1)))
+        throw new IllegalArgumentException(
+          s"intersect_count requires strictly ascending, null-free array<bigint> sets " +
+            s"(as shingle_hashes writes them); element $k of ${s.numElements()} breaks the order")
+      k += 1
+    }
   }
 }

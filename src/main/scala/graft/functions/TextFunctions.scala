@@ -125,6 +125,15 @@ object TextFunctions {
     org.apache.spark.sql.graft.ColumnBridge.column(
       MinHashBands(org.apache.spark.sql.graft.ColumnBridge.expression(ths), numBands, rowsPerBand))
 
+  /** The number of common elements of two strictly ascending shingle-hash
+    * sets (`size(array_intersect(a, b))`), by the native [[IntersectCount]]
+    * merge. Needs no session registration.
+    */
+  def intersectCount(a: Column, b: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.column(IntersectCount(
+      org.apache.spark.sql.graft.ColumnBridge.expression(a),
+      org.apache.spark.sql.graft.ColumnBridge.expression(b)))
+
   /** Overlapping fixed-size token chunks — the pretraining/RAG chunker:
     * windows of `chunkSize` tokens advancing by `chunkSize - overlap`, so
     * consecutive chunks share `overlap` tokens; every token is covered and

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact
@@ -16,11 +17,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: every variant is a constant number of shuffles, each keyed
   * on something with bounded fan-in, never a full cross-join. The
-  * exact-Jaccard pair join is bounded by the shingle document-frequency cap
-  * (worst case cap² candidates per shingle, with an exact hot-shingle
-  * correction term — see [[jaccardPairs]]); the LSH banding path
-  * additionally bounds candidates ∝ true near-dups and is the preferred
-  * shape at 100 TB.
+  * exact-Jaccard operators find their candidates by prefix filtering (see
+  * [[jaccardPairs]]): a pair meets only on the rarest hashes of each set,
+  * so a hot shingle joins only the docs made almost wholly of hot
+  * shingles, whose pairs are output-sized. Every candidate route ends in
+  * one verify, the `intersect_count` merge of the pair's two sets. The LSH
+  * banding path additionally bounds candidates ∝ true near-dups and is the
+  * preferred shape at 100 TB.
   */
 object Dedup {
 
@@ -59,11 +62,13 @@ object Dedup {
     * not the corpus — which is what makes externally-generated candidates
     * (e.g. [[graft.streaming.DocStreams.nearDupCandidateStream]]'s online
     * LSH discovery, or [[minHashPairs]]' banding) exact after the fact.
+    * Verified by the same `intersect_count` merge as every other Jaccard
+    * operator ([[verify]]).
     */
   def exactJaccardForPairs(candidates: DataFrame, docs: DataFrame,
                            idCol: String, textCol: String, shingleN: Int,
                            threshold: Double): DataFrame = {
-    // candidates are small by construction (banding/cap bounds them) and
+    // candidates are small by construction (banding bounds them) and
     // referenced twice below — materialize once so the generator pipeline
     // doesn't run per reference
     val cand = candidates.localCheckpoint()
@@ -72,96 +77,111 @@ object Dedup {
       .distinct()
     val sets = spreadSets(docs.join(needed, col(idCol) === col("needed_id"), "left_semi"),
       idCol, textCol, shingleN)
-    finish(cand
-      .join(sets.select(col("id").as("d1"), col("ths").as("t1")), "d1")
-      .join(sets.select(col("id").as("d2"), col("ths").as("t2")), "d2")
-      .select(col("d1"), col("d2"), size(col("t1")).as("sz1"), size(col("t2")).as("sz2"),
-        size(array_intersect(col("t1"), col("t2"))).cast("long").as("c")),
-      col("c"), threshold)
+    verify(cand, sets, sets, threshold)
   }
 
-  /** (d1, d2, jac) of the pairs whose jac, `cExact` shared shingles over
-    * the union of the `sz1` and `sz2` sets, is at or above `threshold`:
-    * row-local arithmetic on the pair frame.
+  /** (d1, d2, jac) of the `candidates` pairs whose jac — the shared hashes
+    * of d1's set in `l` and d2's set in `r` (both (id, ths) sets) over
+    * their union — is at or above `threshold`. The one verify of every
+    * exact-Jaccard operator: `intersect_count` merges the pair's two
+    * ascending sets in-row. A pair naming a doc with no set has no row.
     */
-  private def finish(paired: DataFrame, cExact: Column, threshold: Double): DataFrame =
-    paired
-      .withColumn("cx", cExact)
-      .withColumn("jac", col("cx").cast("double") / (col("sz1") + col("sz2") - col("cx")))
+  private def verify(candidates: DataFrame, l: DataFrame, r: DataFrame,
+                     threshold: Double): DataFrame =
+    candidates
+      .join(l.select(col("id").as("d1"), col("ths").as("t1")), "d1")
+      .join(r.select(col("id").as("d2"), col("ths").as("t2")), "d2")
+      .withColumn("c", TextFunctions.intersectCount(col("t1"), col("t2")))
+      .withColumn("jac", col("c").cast("double") / (size(col("t1")) + size(col("t2")) - col("c")))
       .filter(col("jac") >= threshold)
       .select(col("d1"), col("d2"), col("jac"))
 
   /** All pairs with exact Jaccard similarity >= threshold over word
     * (shingleN=1) or n-gram shingle sets.
     *
-    * Pair generation joins only on shingles with document frequency
-    * <= maxShingleDf, which bounds the self-join fan-in — worst-case
-    * candidates per shingle is maxShingleDf², never n² — so one hot shingle
-    * shared by 10⁶ documents generates nothing instead of 10¹² pairs. The
-    * emitted jac values are still EXACT: the shared-hot-shingle count a
-    * capped join misses is added back from per-doc hot-shingle sets (each
-    * at most |hot shingles| long — tiny by construction, since the number
-    * of distinct hot shingles is bounded by corpus_shingle_instances/cap).
-    * A pair whose shared shingles are ALL hotter than the cap never forms
-    * a candidate in the capped join — and mass duplication (a document
-    * templated more than cap times, exactly what near-dedup targets at
-    * 100 TB) makes EVERY shingle of the duplicates hot, so such jac=1.0
-    * pairs are real. They are recovered by a second candidate route:
-    * MinHash banding over the "hot-heavy" documents. If jac(A,B) >=
-    * threshold and every shared shingle is hot, then (since
-    * |A∩B| >= threshold·|A| and A's rare shingles all lie outside A∩B)
-    * BOTH endpoints have rare-shingle fraction <= 1-threshold — so banding
-    * the docs satisfying that test covers every structurally-missed pair.
-    * The only remaining misses are the banding family's probabilistic ones
-    * ((1-s^r)^b ≈ 3e-4 at s=0.8 with 8 bands × 2 rows), and banding cost
-    * is ∝ hot-heavy docs, whose true pairs are output anyway. Emitted jac
-    * values stay EXACT for every pair from either route (rare-shared count
-    * from the capped join + hot-shared from the per-doc hot sets).
+    * Candidates come from the exact set-similarity join by prefix filtering
+    * (Bayardo et al., WWW 2007; in the token-order / candidates / verify
+    * stages of Vernica, Carey & Li, SIGMOD 2010 — see [[prefixCandidates]]):
+    * under one global order of the hashes, rarest first, each set keeps
+    * its first |s| − ⌈t·|s|⌉ + 1 hashes, and two sets with jac >= t share
+    * at least one hash of their prefixes. So the candidate join is exact by
+    * construction at every corpus size, with no df cap: a hot shingle
+    * sorts last and enters only the prefixes of docs made almost wholly of
+    * hot shingles, whose pairs are output-sized. Each distinct candidate is
+    * verified by [[verify]]; every emitted jac is exact. At threshold <= 0
+    * a prefix is the whole set, and the output is every pair sharing a
+    * hash.
     *
-    * Construction is EAGER: the shingle-hash sets are `localCheckpoint()`ed
-    * (see the body), so building the returned DataFrame already runs the
-    * full tokenize+hash job and the checkpointed blocks are not
-    * recomputable on executor loss — the same materialize-once/rerun-the-
-    * operator tradeoff the persisted-store operators document. Callers that
-    * only want the lazy plan shape (none in this repo) should not build it
-    * speculatively.
+    * Construction is EAGER: the shingle-hash sets and the prefix rows are
+    * `localCheckpoint()`ed (see the body), so building the returned
+    * DataFrame already runs the tokenize+hash and the token-order jobs, and
+    * the checkpointed blocks are not recomputable on executor loss — the
+    * same materialize-once/rerun-the-operator tradeoff the persisted-store
+    * operators document. Callers that only want the lazy plan shape (none
+    * in this repo) should not build it speculatively.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   threshold: Double, shingleN: Int = 1,
-                   maxShingleDf: Int = 10000): DataFrame = {
+                   threshold: Double, shingleN: Int = 1): DataFrame = {
     // 64-bit shingle hash, not the shingle string: the shuffle moves 8-byte
     // keys and the join compares longs. A cross-doc collision (P ≈ n²/2⁶⁴)
     // could only perturb a count by 1 — negligible at the 4-decimal compare.
-    // Hashed ONCE and materialized: every downstream consumer (the df
-    // census, both sides of the pair join, the per-doc rare counts, the
-    // hot-heavy band rows) derives from the checkpointed sets and would
-    // otherwise re-scan and re-shingle the raw corpus — measured at sf10 as
-    // SIX full-text scans per run, each serialized on the input file's
-    // split count rather than the cluster.
+    // Hashed ONCE and materialized: the token order, the prefix rows and
+    // the verify all derive from the checkpointed sets and would otherwise
+    // re-scan and re-shingle the raw corpus — measured at sf10 as SIX
+    // full-text scans per run, each serialized on the input file's split
+    // count rather than the cluster.
     val sets = spreadSets(docs, idCol, textCol, shingleN).localCheckpoint()
-    val rows = hashRows(sets)
-    // a shingle's df is bounded by the document count, so the cap is
-    // provably a no-op when n_docs <= cap. Probe with limit(cap+1).count()
-    // rather than count(): the limit short-circuits the scan after cap+1
-    // rows, so the probe stays cheap at ANY corpus size (a plain count of a
-    // filtered 100 TB input would be a full pass)
-    if (docs.limit(maxShingleDf + 1).count() <= maxShingleDf) {
-      finish(pairCounts(rows, rows, 0, broadcastA = false, ordered), col("c"), threshold)
-    } else {
-      // full shingle df census, materialized eagerly and ONCE: the hot list
-      // (df > cap) is referenced twice below, and the rare mass gives the
-      // capped join's EXACT output volume for the width rule — both read
-      // the same checkpoint (distinct-shingle-count rows of 16 bytes)
-      val census = rows.groupBy("th").agg(count(lit(1)).as("df")).localCheckpoint()
-      val candPairs = census.filter(col("df") <= maxShingleDf)
-        // df*(df-1) is even, so the double division is exact (df ≤ cap =
-        // 1e4 keeps each term ≤ 5e7, far under the 2^53 mantissa); cast
-        // back to long per-term so the sum (and getLong) stays integral
-        .agg(coalesce(sum((col("df") * (col("df") - lit(1)) / lit(2)).cast("long")), lit(0L)).as("cp"))
-        .head().getLong(0)
-      val side = cappedSide(sets, census.filter(col("df") > maxShingleDf).select("th"), threshold)
-      cappedPairs(side, side, pairWidth(docs, candPairs), broadcastA = false, ordered, threshold)
-    }
+    verify(prefixCandidates(Seq(sets), threshold), sets, sets, threshold)
+  }
+
+  /** Float slack on ⌈t·|s|⌉ and on the length filter: `0.6 * 5` is
+    * `3.0000000000000004` in double, and an unguarded ceil would shorten
+    * that prefix by one hash and drop true pairs. The slack can only
+    * lengthen a prefix or widen the length filter, never lose a pair.
+    */
+  private val Slack = 1e-6
+
+  /** Distinct prefix-filter candidate pairs (d1, d2) of `sides`, one or two
+    * (id, ths) set frames, at `threshold`: the pairs of one side with
+    * `d1 < d2`, or every (left, right) pair.
+    *
+    * Token order: each hash's df over all sides combined (one window over
+    * the (id, sz, th) rows), ascending, ties broken by the hash. Each doc
+    * keeps its first p = |s| − ⌈t·|s|⌉ + 1 hashes in that order (all of
+    * them at t <= 0, none above 1). Two docs are candidates when their
+    * prefixes share a hash and their sizes pass the length filter
+    * t·|s1| <= |s2| <= |s1|/t, which every pair at jac >= t passes. The
+    * prefix rows are checkpointed: they feed both join sides and the
+    * width bound, Σ (df − 1) over the left side's prefix rows (halved for
+    * one side), an upper bound on the join's candidate rows.
+    *
+    * @param broadcastLeft the left side's prefix rows are broadcast into
+    *        the candidate join, so the right side is not shuffled for it
+    */
+  private[graft] def prefixCandidates(sides: Seq[DataFrame], threshold: Double,
+                                      broadcastLeft: Boolean = false): DataFrame = {
+    val rows = sides.zipWithIndex
+      .map { case (sets, i) => hashRows(sets).withColumn("side", lit(i)) }
+      .reduce(_ unionByName _)
+    val prefix = rows
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("th")))
+      .withColumn("rk", row_number().over(Window.partitionBy("side", "id").orderBy("df", "th")))
+      .filter(col("rk") <= col("sz") - ceil(lit(threshold) * col("sz") - lit(Slack)) + 1)
+      .select("side", "id", "sz", "th", "df")
+      .localCheckpoint()
+    val left = prefix.filter(col("side") === 0)
+    val bound = left.agg(coalesce(sum(col("df") - 1), lit(0L))).head().getLong(0)
+    val width = pairWidth(rows, if (sides.size == 1) bound / 2 else bound)
+    def keyed(df: DataFrame) = if (width > 0) df.repartition(width, col("th")) else df
+    val right = prefix.filter(col("side") === sides.size - 1)
+      .withColumnRenamed("id", "id2").withColumnRenamed("sz", "sz2")
+    val lengths = col("sz2") >= lit(threshold) * col("sz") - lit(Slack) &&
+      col("sz") >= lit(threshold) * col("sz2") - lit(Slack)
+    val joined = (if (broadcastLeft) broadcast(left) else keyed(left)).as("a")
+      .join(keyed(right).as("b"), col("a.th") === col("b.th") && lengths &&
+        (if (sides.size == 1) ordered else lit(true)))
+      .select(col("id").as("d1"), col("id2").as("d2"))
+    (if (width > 0) joined.repartition(width, col("d1"), col("d2")) else joined).distinct()
   }
 
   /** Pair-stage width for `candPairs` candidate rows. The candidate join's
@@ -178,99 +198,9 @@ object Dedup {
     * outgrow executor memory, capped at 8192 (≈3e10 candidate rows —
     * beyond that, raise the session width with the cluster).
     */
-  private def pairWidth(docs: DataFrame, candPairs: Long): Int = {
+  private def pairWidth(df: DataFrame, candPairs: Long): Int = {
     val idealWidth = math.min(8192L, candPairs / 4000000L + 1).toInt
-    if (idealWidth > docs.sparkSession.sessionState.conf.numShufflePartitions) idealWidth else 0
-  }
-
-  /** (d1, d2, c, sz1, sz2): every pair of an `a` and a `b` doc meeting
-    * `pair` (over their ids `id` and `id2`) with its c ≥ 1 shared shingle
-    * hashes, from two (id, sz, th) row sets. A positive `width` pins the
-    * token and pair exchanges ([[pairWidth]]); `broadcastA` broadcasts `a`
-    * into the token join instead, so `b` is never shuffled on token hash.
-    */
-  private def pairCounts(a: DataFrame, b: DataFrame, width: Int, broadcastA: Boolean,
-                         pair: Column): DataFrame = {
-    val aSide =
-      if (broadcastA) broadcast(a)
-      else if (width > 0) a.repartition(width, col("th"))
-      else a
-    val bSide = if (width > 0 && !broadcastA) b.repartition(width, col("th")) else b
-    val joined = aSide.as("a")
-      .join(bSide.withColumnRenamed("id", "id2").withColumnRenamed("sz", "szb").as("b"),
-        col("a.th") === col("b.th") && pair)
-      .select(col("id").as("d1"), col("id2").as("d2"), col("sz").as("s1"), col("szb").as("s2"))
-    val distributed =
-      if (width > 0) joined.repartition(width, col("d1"), col("d2")) else joined
-    distributed.groupBy("d1", "d2")
-      .agg(count(lit(1)).as("c"), first(col("s1")).as("sz1"), first(col("s2")).as("sz2"))
-  }
-
-  /** Distinct (d1, d2) pairs of an `x` and a `y` band row with equal band
-    * hashes, meeting `pair` over their ids `id` and `id2`.
-    */
-  private def bandedPairs(x: DataFrame, y: DataFrame, pair: Column): DataFrame =
-    x.as("x")
-      .join(y.withColumnRenamed("id", "id2").as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") && pair)
-      .select(col("id").as("d1"), col("id2").as("d2"))
-      .distinct()
-
-  /** One corpus side of the capped route, derived from its checkpointed
-    * (id, ths) sets: its (id, sz, th) rows without hot shingles (the capped
-    * join's input), each doc's size and hot-shingle set (the exact
-    * correction term), and the band rows of its hot-heavy docs.
-    */
-  private final case class CappedSide(rows: DataFrame, sizes: DataFrame, hot: DataFrame,
-                                      bands: DataFrame)
-
-  private def cappedSide(sets: DataFrame, hotTokens: DataFrame, threshold: Double): CappedSide = {
-    val all = hashRows(sets)
-    val rows = all.join(hotTokens, Seq("th"), "left_anti")
-    val sizes = sets.select(col("id"), size(col("ths")).cast("long").as("sz"))
-    // hot-heavy docs (rare fraction <= 1-threshold): the ONLY possible
-    // endpoints of a pair the capped join structurally misses (see
-    // jaccardPairs). Small by construction in a normal corpus; ∝ true
-    // duplicates in a mass-dup one. The ids and their band rows are
-    // localCheckpoint'd: the band rows feed a join on both sides.
-    val rare = rows.groupBy("id").agg(count(lit(1)).as("rc"))
-    val hotHeavyIds = sizes.join(rare, Seq("id"), "left")
-      .filter(coalesce(col("rc"), lit(0L)) <= (lit(1.0) - threshold) * col("sz"))
-      .select("id").localCheckpoint()
-    // 8 bands × 2 rows: miss probability (1-s²)⁸ ≈ 3e-4 at s=0.8, ≈ 0 at
-    // s=1 (the mass-duplication case the route exists for)
-    CappedSide(rows, sizes,
-      all.join(hotTokens, Seq("th"), "left_semi").groupBy("id").agg(collect_set(col("th")).as("hot_ths")),
-      setBandRows(sets.join(hotHeavyIds, Seq("id"), "left_semi"), 8, 2).localCheckpoint())
-  }
-
-  /** The exact pairs of an `l` and an `r` doc meeting `pair` at or above
-    * `threshold`, from both candidate routes: the capped join, whose c
-    * counts the shared rare shingles, and the banded hot-heavy pairs (c =
-    * 0: all their shared shingles are hot). Each pair's exact intersection
-    * adds its shared hot shingles, the intersection of its docs' hot sets.
-    */
-  private def cappedPairs(l: CappedSide, r: CappedSide, width: Int, broadcastA: Boolean,
-                          pair: Column, threshold: Double): DataFrame = {
-    // banding-route pairs are ∝ hot-heavy docs (small), so joining THEIR
-    // sizes back is cheap — the main route carries sizes inline
-    val extra = bandedPairs(l.bands, r.bands, pair)
-      .join(l.sizes.select(col("id").as("d1"), col("sz").as("sz1")), "d1")
-      .join(r.sizes.select(col("id").as("d2"), col("sz").as("sz2")), "d2")
-      .select(col("d1"), col("d2"), lit(0L).as("c"), col("sz1"), col("sz2"))
-    // the merge agg is pair-frame-sized, so it takes the width rule too
-    val unioned = pairCounts(l.rows, r.rows, width, broadcastA, pair).unionByName(extra)
-    val paired =
-      (if (width > 0) unioned.repartition(width, col("d1"), col("d2")) else unioned)
-        .groupBy("d1", "d2").agg(max(col("c")).as("c"),
-          first(col("sz1")).as("sz1"), first(col("sz2")).as("sz2"))
-    val cHot = when(col("h1").isNotNull && col("h2").isNotNull,
-      size(array_intersect(col("h1"), col("h2"))).cast("long")).otherwise(0L)
-    finish(
-      paired
-        .join(l.hot.select(col("id").as("d1"), col("hot_ths").as("h1")), Seq("d1"), "left")
-        .join(r.hot.select(col("id").as("d2"), col("hot_ths").as("h2")), Seq("d2"), "left"),
-      col("c") + cHot, threshold)
+    if (idealWidth > df.sparkSession.sessionState.conf.numShufflePartitions) idealWidth else 0
   }
 
   /** (id, ths): each doc's distinct 64-bit shingle hashes in ascending
@@ -296,52 +226,26 @@ object Dedup {
   /** Cross-corpus exact Jaccard pairs: every (left doc, right doc) pair
     * with similarity >= threshold — the incremental-ingest form of
     * [[jaccardPairs]] (dedup an incoming batch against an existing corpus;
-    * decontaminate a training set against an eval set). Same df-cap fan-in
-    * bound, exact hot-shingle correction, and hot-heavy banding fallback
-    * as [[jaccardPairs]], with document frequency measured over BOTH
-    * corpora combined. Construction is EAGER for both corpora (each side's
-    * shingle-hash sets are `localCheckpoint()`ed — see [[jaccardPairs]]'s
-    * contract note).
+    * decontaminate a training set against an eval set). The same exact
+    * prefix-filter route and verify as [[jaccardPairs]], with the token
+    * order's document frequency measured over BOTH corpora combined, so
+    * both sides are shuffled once on token hash for it. Construction is
+    * EAGER for both corpora (each side's shingle-hash sets and the prefix
+    * rows are `localCheckpoint()`ed — see [[jaccardPairs]]'s contract note).
     *
     * @param broadcastLeft hint that `left` is query-sized (an anchor/batch
-    *        set, NOT a corpus): its hashed token postings are broadcast into
-    *        the intersection join, so the corpus side is never shuffled on
-    *        token hash — the join output (intersection-sized) is all that
-    *        moves. Caller-asserted; a corpus-sized left would OOM the
-    *        broadcast, which is why this is opt-in and default-off.
+    *        set, NOT a corpus): its prefix rows are broadcast into the
+    *        candidate join, so the corpus side's prefix rows are not
+    *        shuffled for it. Caller-asserted; a corpus-sized left would OOM
+    *        the broadcast, which is why this is opt-in and default-off.
     */
   def jaccardPairsBetween(left: DataFrame, right: DataFrame, idCol: String,
                           textCol: String, threshold: Double, shingleN: Int = 1,
-                          maxShingleDf: Int = 10000,
                           broadcastLeft: Boolean = false): DataFrame = {
     // hash-early + materialize-once, same rationale as jaccardPairs
     val ls = spreadSets(left, idCol, textCol, shingleN).localCheckpoint()
     val rs = spreadSets(right, idCol, textCol, shingleN).localCheckpoint()
-    val (lt, rt) = (hashRows(ls), hashRows(rs))
-    // limit-probed like jaccardPairs, but as ONE action: union the two
-    // limited sides before counting instead of paying a job per side
-    val probed = left.limit(maxShingleDf + 1).select(lit(1).as("one"))
-      .unionAll(right.limit(maxShingleDf + 1).select(lit(1).as("one")))
-      .count()
-    if (probed <= maxShingleDf) {
-      finish(pairCounts(lt, rt, 0, broadcastLeft, lit(true)), col("c"), threshold)
-    } else {
-      // one census pass over the union carries BOTH the combined df (the
-      // hot cut) and the left-side df, so the exact cross candidate volume
-      // Σ_{df≤cap} df_l·(df−df_l) costs no extra shuffle
-      val census = lt.select(col("th"), lit(1L).as("l"))
-        .unionByName(rt.select(col("th"), lit(0L).as("l")))
-        .groupBy("th").agg(count(lit(1)).as("df"), sum(col("l")).as("dfl"))
-        .localCheckpoint()
-      val candPairs = census.filter(col("df") <= maxShingleDf)
-        .agg(coalesce(sum(col("dfl") * (col("df") - col("dfl"))), lit(0L)).as("cp"))
-        .head().getLong(0)
-      // df is measured over the combined corpora, so a structurally-missed
-      // pair forces BOTH endpoints under the same 1-threshold rare fraction
-      val hotTokens = census.filter(col("df") > maxShingleDf).select("th")
-      cappedPairs(cappedSide(ls, hotTokens, threshold), cappedSide(rs, hotTokens, threshold),
-        pairWidth(left, candPairs), broadcastLeft, lit(true), threshold)
-    }
+    verify(prefixCandidates(Seq(ls, rs), threshold, broadcastLeft), ls, rs, threshold)
   }
 
   /** ~`targetAnchors` deterministic anchor docs (`id % ceil(n/target) = 0`)
@@ -350,9 +254,10 @@ object Dedup {
     * orientations with identical symmetric jac) — the O(target·n) exact arm
     * used by q_ext_dedup4's oracle AND by [[graft.tools.DedupRecallProbe]].
     * One definition so the probe measures the query's actual physical plan
-    * (anchors broadcast into the token join, corpus never shuffled on token
-    * hash). Pair-count-sized and localCheckpoint'd: callers reference it
-    * from both an output and a recall guard, so the shingle join runs once.
+    * (the anchors' prefix rows broadcast into the candidate join; the
+    * corpus is shuffled once on token hash for the token order).
+    * Pair-count-sized and localCheckpoint'd: callers reference it from both
+    * an output and a recall guard, so the shingle join runs once.
     */
   def anchoredJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                            targetAnchors: Long = 500L, threshold: Double = 0.9,
@@ -371,22 +276,6 @@ object Dedup {
       .localCheckpoint()
   }
 
-  /** Candidate (d1, d2) pairs sharing at least one shingle with document
-    * frequency <= maxShingleDf. Public so tests and profiling can measure
-    * the fan-in bound directly.
-    */
-  def jaccardCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int, maxShingleDf: Int): DataFrame = {
-    val toks = hashRows(spreadSets(docs, idCol, textCol, shingleN))
-    val hotTokens = toks.groupBy("th").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxShingleDf).select("th")
-    val capped = toks.join(hotTokens, Seq("th"), "left_anti")
-    capped.as("a")
-      .join(capped.withColumnRenamed("id", "id2").as("b"), col("a.th") === col("b.th") && ordered)
-      .select(col("id").as("d1"), col("id2").as("d2"))
-      .distinct()
-  }
-
   /** MinHash + LSH banding near-dup pairs, verified with exact Jaccard.
     *
     * bands × rowsPerBand hashes per doc, banded in-row by the kernels the
@@ -400,8 +289,12 @@ object Dedup {
                    threshold: Double, numBands: Int = 16, rowsPerBand: Int = 2,
                    shingleN: Int = 1): DataFrame = {
     val banded = setBandRows(spreadSets(docs, idCol, textCol, shingleN), numBands, rowsPerBand)
-    exactJaccardForPairs(bandedPairs(banded, banded, ordered), docs, idCol, textCol, shingleN,
-      threshold)
+    val candidates = banded.as("x")
+      .join(banded.withColumnRenamed("id", "id2").as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") && ordered)
+      .select(col("id").as("d1"), col("id2").as("d2"))
+      .distinct()
+    exactJaccardForPairs(candidates, docs, idCol, textCol, shingleN, threshold)
   }
 
   /** Persisted MinHash signature store — the INCREMENTAL dedup shape: a
@@ -686,13 +579,7 @@ object Dedup {
     val candIds = candidates.select(col("d2").as("id")).distinct()
     val storedSets = readStore("toks").join(
       hinted(candIds, candidates.count() <= broadcastMaxCandidates), Seq("id"), "left_semi")
-    candidates
-      .join(batchSets.select(col("id").as("d1"), col("ths").as("t1")), "d1")
-      .join(storedSets.select(col("id").as("d2"), col("ths").as("t2")), "d2")
-      .withColumn("c", size(array_intersect(col("t1"), col("t2"))).cast("long"))
-      .withColumn("jac", col("c").cast("double") / (size(col("t1")) + size(col("t2")) - col("c")))
-      .filter(col("jac") >= threshold)
-      .select(col("d1"), col("d2"), col("jac"))
+    verify(candidates, batchSets, storedSets, threshold)
   }
 
   /** 64-bit SimHash over the token set: bit b is the sign of the vote
@@ -753,9 +640,8 @@ object Dedup {
       // fixpoint rounds are idempotent, so a skipped check just trades one
       // cheap extra propagation for halving the per-round probe jobs
       if (iter % 2 == 1 || iter == maxIter - 1) {
-        val changed = next.join(labels.withColumnRenamed("rep", "old"), "id")
-          .filter(col("rep") =!= col("old")).limit(1).count()
-        converged = changed == 0
+        converged = next.join(labels.withColumnRenamed("rep", "old"), "id")
+          .filter(col("rep") =!= col("old")).isEmpty
       }
       if (iter > 0) superseded += labels // iter 0's labels is un-checkpointed
       labels = next

@@ -146,6 +146,56 @@ class MinHashKernelSpec extends SparkSpec {
     intercept[IllegalArgumentException](MinHashBands(Literal(null, ArrayType(LongType)), 2, 0))
   }
 
+  /** Pairs of strictly ascending sets — empty, disjoint, identical, nested,
+    * interleaved, at the long range's ends, and random subsets of a small
+    * range — with null sides, read back from parquet so no plan folds over
+    * a local relation.
+    */
+  private lazy val setPairs: DataFrame = {
+    val rng = new scala.util.Random(5)
+    val edge = Seq(Long.MinValue, -7L, 0L, 3L, Long.MaxValue)
+    val fixed: Seq[(Seq[Long], Seq[Long])] = Seq(
+      Nil -> Nil, Nil -> edge, edge -> Nil, Seq(1L, 3L, 5L) -> Seq(2L, 4L, 6L), edge -> edge,
+      Seq(-7L, 3L) -> edge, edge -> Seq(Long.MinValue, Long.MaxValue),
+      Seq(1L, 2L, 3L, 4L, 5L, 6L) -> Seq(2L, 3L, 5L, 8L, 13L), Seq(9L) -> Seq(1L, 9L))
+    val random = Seq.fill(200) {
+      def subset = (-40L to 40L).filter(_ => rng.nextInt(3) == 0)
+      subset -> subset
+    }
+    val path = fresh("spec_intersect_count_pairs")
+    ((fixed ++ random).map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((None, Some(edge)), (Some(edge), None), (None, None)))
+      .toDF("a", "b").repartition(2).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  test("intersect_count equals size(array_intersect) on ascending sets and is null-safe, eval and codegen") {
+    val want = setPairs.select(col("a"), col("b"),
+      when(col("a").isNull || col("b").isNull, lit(null).cast("int"))
+        .otherwise(size(array_intersect(col("a"), col("b")))).as("c"))
+      .collect().map(r => (Option(r.getSeq[Long](0)), Option(r.getSeq[Long](1)), Option(r.get(2)))).toSet
+    assert(want.count(_._3.isEmpty) === 3 && want.exists(_._3.contains(0)) && want.exists(_._3.contains(5)))
+    for (mode <- modes) withSQLConf(mode: _*) {
+      val got = setPairs.select(col("a"), col("b"), TextFunctions.intersectCount(col("a"), col("b")))
+        .collect().map(r => (Option(r.getSeq[Long](0)), Option(r.getSeq[Long](1)), Option(r.get(2)))).toSet
+      assert(got === want, s"mode=$mode")
+    }
+  }
+
+  test("intersect_count fails loudly, naming itself, on a set that is not strictly ascending") {
+    val path = fresh("spec_intersect_count_unsorted")
+    // a descending run on the right; a repeated element on the left
+    Seq((0, Seq(1L, 2L), Seq(3L, 1L, 2L)), (1, Seq(1L, 1L), Seq(1L, 2L))).toDF("row", "a", "b")
+      .write.parquet(path)
+    for (mode <- modes; row <- 0 until 2) withSQLConf(mode: _*) {
+      val e = intercept[Exception](spark.read.parquet(path).filter(col("row") === row)
+        .select(TextFunctions.intersectCount(col("a"), col("b"))).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("intersect_count requires strictly ascending")),
+        s"mode=$mode row=$row: $e")
+    }
+  }
+
   /** Stored docs and a batch of their edited copies plus fresh docs. */
   private def storeFixture: (DataFrame, DataFrame) = {
     val stored = corpus.filter(col("doc_id") % 10 =!= 0)
@@ -161,8 +211,11 @@ class MinHashKernelSpec extends SparkSpec {
     val old = fresh("spec_minhash_kernel_retired_store")
     val fs = new org.apache.hadoop.fs.Path(old).getFileSystem(conf)
     graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(old, "_params"), "16|2|3")
+    // the retired sets in ascending order, as a store's toks must hold them:
+    // their collect_set order fails the probe's verify (below)
     val seg = s"$old/seg-retired"
-    retiredSets(stored, 3).write.parquet(s"$seg/toks")
+    retiredSets(stored, 3).select(col("id"), array_sort(col("ths")).as("ths"))
+      .write.parquet(s"$seg/toks")
     retiredBands(spark.read.parquet(s"$seg/toks"), 16, 2).write.parquet(s"$seg/bands")
     val built = fresh("spec_minhash_kernel_new_store")
     Dedup.buildMinHashStore(stored, "doc_id", "text", built)
@@ -176,6 +229,19 @@ class MinHashKernelSpec extends SparkSpec {
     val got = probe(old)
     assert(got.exists(_._1 >= 1000L) && got.exists(_._1 < 1000L), s"fixture drifted: $got")
     assert(got === probe(built))
+
+    // toks in collect_set order: the probe fails naming the verify kernel
+    // rather than counting over unsorted sets
+    val unsorted = fresh("spec_minhash_kernel_unsorted_store")
+    graft.sources.HadoopText.write(fs, new org.apache.hadoop.fs.Path(unsorted, "_params"), "16|2|3")
+    retiredSets(stored, 3).write.parquet(s"$unsorted/seg-retired/toks")
+    val raw = setRows(spark.read.parquet(s"$unsorted/seg-retired/toks"))
+    assert(raw.exists { case (_, ths) => ths != ths.sorted }, "fixture drifted: collect_set sorted")
+    retiredBands(spark.read.parquet(s"$unsorted/seg-retired/toks"), 16, 2)
+      .write.parquet(s"$unsorted/seg-retired/bands")
+    val e = intercept[Exception](probe(unsorted))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("intersect_count")), e.toString)
   }
 
   test("store build and append plans hold no shuffle exchange") {

@@ -31,56 +31,28 @@ class DedupSpec extends SparkSpec {
     assert(exact.getAs[Double]("jac") === 1.0)
   }
 
-  test("hot-shingle df cap bounds candidate fan-in; rare-shingle near-dups survive the cap") {
+  test("df token order keeps hot shingles out of every prefix") {
     // 20 docs sharing one hot sentence prefix; each tail is unique, so every
-    // cross-doc shared shingle is hot (df = 20)
+    // cross-doc shared shingle is hot (df = 20) and sorts after each doc's
+    // 3 rare ones. At t = 0.6 a 6-shingle doc's prefix is 6 - 4 + 1 = 3
+    // hashes: its rare tail alone, so no pair forms
     val hot = (10L to 29L).map(i =>
       (i, s"common shared shingle text here unique$i tail$i end$i")).toDF("doc_id", "text")
-    val uncapped = Dedup.jaccardCandidates(hot, "doc_id", "text", shingleN = 3,
-      maxShingleDf = 10000).count()
-    val capped = Dedup.jaccardCandidates(hot, "doc_id", "text", shingleN = 3,
-      maxShingleDf = 5).count()
-    assert(uncapped === 20L * 19 / 2) // hot shingles pair every doc with every other
-    assert(capped === 0L)             // the cap drops all of it
-    // true near-dups share plenty of rare shingles — unaffected by a tight cap
-    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.6, shingleN = 3, maxShingleDf = 5)
-      .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 4L)) && pairs.contains((1L, 2L)))
-  }
-
-  test("capped jaccardPairs emits exact jac values (hot-shingle correction term)") {
-    // 10 docs share a hot prefix (df=10 > cap=5); docs 100/101 additionally
-    // share a rare tail, so their pair forms via rare shingles but its exact
-    // intersection includes the hot prefix shingles — the correction term
-    val filler = (0L until 8L).map(i =>
-      (i, s"alpha beta gamma delta epsilon zeta filler$i only$i here$i"))
-    val nearDup = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta shared rare tail content one"),
-      (101L, "alpha beta gamma delta epsilon zeta shared rare tail content two"))
-    val corpus = (filler ++ nearDup).toDF("doc_id", "text")
-    val uncapped = Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, shingleN = 3,
-        maxShingleDf = 1000)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val capped = Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, shingleN = 3,
-        maxShingleDf = 5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(capped.contains((100L, 101L)))
-    // every pair the capped path emits carries the EXACT jac value
-    capped.foreach { case (k, v) => assert(math.abs(uncapped(k) - v) < 1e-12,
-      s"pair $k capped=$v uncapped=${uncapped(k)}") }
+    val sets = Seq(Dedup.shingleHashSets(hot, "doc_id", "text", 3))
+    assert(Dedup.prefixCandidates(sets, 0.6).count() === 0L)
+    // at t = 0.3 the 5-hash prefixes reach the hot shingles: every doc pairs
+    assert(Dedup.prefixCandidates(sets, 0.3).count() === 20L * 19 / 2)
   }
 
   test("mass-duplicated docs (every shingle hot) are still found by the capped path") {
-    // 12 identical copies of one template: with cap=5 every one of their
-    // shingles is hot (df=12), so the capped join alone would silently
-    // miss all 66 jac=1.0 pairs — the exact failure mode mass-dedup exists
-    // for. The hot-heavy banding fallback must recover them, with exact jac.
+    // 12 identical copies of one template: every one of their shingles is
+    // hot (df=12), so each copy's one-hash prefix at 0.9 is a hot shingle —
+    // the same one for every copy, and all 66 jac=1.0 pairs meet on it
     val template = (100L until 112L).map(i =>
       (i, "identical template body repeated verbatim across the whole batch"))
     val filler = (0L until 8L).map(i => (i, s"unrelated filler document number$i text$i body$i"))
     val corpus = (template ++ filler).toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairs(corpus, "doc_id", "text", threshold = 0.9,
-        shingleN = 3, maxShingleDf = 5)
+    val pairs = Dedup.jaccardPairs(corpus, "doc_id", "text", threshold = 0.9, shingleN = 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     val templatePairs = pairs.keySet.filter(p => p._1 >= 100L && p._2 >= 100L)
     assert(templatePairs.size === 12 * 11 / 2,
@@ -98,7 +70,7 @@ class DedupSpec extends SparkSpec {
       (200L, "a clean unrelated training document with its own words entirely"))
       .toDF("doc_id", "text")
     val pairs = Dedup.jaccardPairsBetween(leftDocs, rightDocs, "doc_id", "text",
-        threshold = 0.9, shingleN = 3, maxShingleDf = 5)
+        threshold = 0.9, shingleN = 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs.size === 8 * 6, s"expected 48 cross pairs, got ${pairs.size}")
     pairs.foreach { case (p, j) => assert(j === 1.0, s"pair $p jac $j != 1.0") }
@@ -112,58 +84,68 @@ class DedupSpec extends SparkSpec {
     assert(lsh === exact)
   }
 
-  test("property: exact-Jaccard tiers agree, the cross form is the self form restricted, MinHash pairs are exact pairs") {
+  test("property: jaccardPairs and jaccardPairsBetween equal brute force") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
+    import graft.functions.ShingleHashes
     val vocab = (0 until 200).map(i => s"w$i")
     val words = (lo: Int, hi: Int) => Gen.choose(lo, hi).flatMap(Gen.listOfN(_, Gen.oneOf(vocab)))
-    // ≤ 45 docs: random base docs, a near-dup of every other one (one word
-    // replaced or appended), and a template copied `copies` times plus one
-    // copy with a word appended — its shingles are the hot ones below, and
-    // its pairs (jac 1 or ~0.93) are the only ones the banding route needs
+    // ≤ 41 docs: random base docs and a near-dup of every other one (one
+    // word replaced or appended); an all-hot family, > 12 copies of a
+    // template each with one word replaced (s ≈ 0.8, every shared shingle
+    // hot); and nested pairs of unique words whose sets have 5 ⊃ 3 and
+    // 10 ⊃ 9 hashes, jac exactly 0.6 and 0.9, where t·|s| is an integer and
+    // the rarest hashes are the bigger set's own
     val corpusGen = for {
-      base <- Gen.choose(8, 20).flatMap(Gen.listOfN(_, words(8, 18)))
+      base <- Gen.choose(8, 14).flatMap(Gen.listOfN(_, words(8, 18)))
       edits <- Gen.listOfN(base.size / 2, Gen.zip(Gen.choose(0, 17), Gen.oneOf(vocab), Gen.oneOf(true, false)))
-      template <- words(14, 14)
-      extra <- Gen.oneOf(vocab)
-      copies <- Gen.choose(6, 14)
+      template <- Gen.pick(16, vocab)
+      family <- Gen.choose(13, 16).flatMap(Gen.listOfN(_, Gen.zip(Gen.choose(0, 15), Gen.oneOf(vocab))))
       order <- Gen.long
-      shingleN <- Gen.oneOf(1, 3)
-      threshold <- Gen.oneOf(0.6, 0.8)
-    } yield {
+    } yield (n: Int) => {
       val nearDups = edits.zipWithIndex.map { case ((at, w, replace), i) =>
         val ws = base(2 * i)
         if (replace) ws.updated(at % ws.size, w) else ws :+ w
       }
-      val texts = base ++ nearDups ++ Seq.fill(copies)(template) :+ (template :+ extra)
-      (new scala.util.Random(order).shuffle(texts.map(_.mkString(" "))), copies, shingleN, threshold)
+      val copies = family.map { case (at, w) => template.toList.updated(at, w) }
+      val nested = Seq(5 -> 3, 10 -> 9).flatMap { case (big, small) =>
+        val ws = (0 until big + n - 1).map(k => s"u${big}_$k").toList
+        Seq(ws, ws.take(small + n - 1))
+      }
+      new scala.util.Random(order).shuffle((base ++ nearDups ++ copies ++ nested).map(_.mkString(" ")))
     }
     def rows(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     for (i <- 0 until 10) {
-      val (texts, copies, n, t) = corpusGen(Gen.Parameters.default, Seed(i.toLong)).get
+      val (n, t) = (Seq(1, 3)(i / 4 % 2), Seq(0.0, 0.6, 0.8, 0.9)(i % 4))
+      val texts = corpusGen(Gen.Parameters.default, Seed(i.toLong)).get(n)
       val corpus = texts.zipWithIndex.map { case (text, id) => (id.toLong, text) }.toDF("doc_id", "text")
+      // every pair of non-empty sets sharing a hash, at jac >= t
+      val sets = texts.map(x => ShingleHashes.kernel(
+        org.apache.spark.unsafe.types.UTF8String.fromString(x), n).toLongArray().toSet)
+      val want = (for {
+        d1 <- texts.indices; d2 <- d1 + 1 until texts.size
+        c = (sets(d1) & sets(d2)).size if c > 0
+        jac = c.toDouble / (sets(d1).size + sets(d2).size - c) if jac >= t
+      } yield (d1.toLong, d2.toLong) -> jac).toMap
       val split = texts.size / 2
       val (left, right) = (corpus.filter(col("doc_id") < split), corpus.filter(col("doc_id") >= split))
-      val ctx = s"case $i: ${texts.size} docs, $copies copies, shingleN=$n, threshold=$t"
-      // a cap ≥ n_docs takes the uncapped join; one below the template count
-      // takes the capped join, the hot correction and the banding route
-      val uncapped = rows(Dedup.jaccardPairs(corpus, "doc_id", "text", t, n, maxShingleDf = texts.size))
-      assert(uncapped.size >= copies * (copies + 1) / 2, ctx)
-      for (cap <- Seq(texts.size, copies - 1)) {
-        assert(rows(Dedup.jaccardPairs(corpus, "doc_id", "text", t, n, cap)) === uncapped, s"$ctx, cap=$cap")
-        assert(rows(Dedup.jaccardPairsBetween(left, right, "doc_id", "text", t, n, cap)) ===
-          uncapped.filter { case ((d1, d2), _) => d1 < split && d2 >= split }, s"$ctx, cap=$cap, between")
-      }
+      val ctx = s"case $i: ${texts.size} docs, shingleN=$n, threshold=$t, ${want.size} pairs"
+      if (t == 0.6 || t == 0.9) assert(want.values.exists(_ == t), s"$ctx: no nested pair at jac = t")
+      assert(rows(Dedup.jaccardPairs(corpus, "doc_id", "text", t, n)) === want, ctx)
+      // every threshold runs the cross form both shuffled and broadcast
+      val bcast = (i + i / 4) % 2 == 1
+      assert(rows(Dedup.jaccardPairsBetween(left, right, "doc_id", "text", t, n, broadcastLeft = bcast)) ===
+        want.filter { case ((d1, d2), _) => d1 < split && d2 >= split }, s"$ctx, between, broadcastLeft=$bcast")
       val lsh = rows(Dedup.minHashPairs(corpus, "doc_id", "text", t, shingleN = n))
-      assert(lsh.nonEmpty && lsh.forall { case (p, j) => uncapped.get(p).contains(j) }, ctx)
+      assert(lsh.nonEmpty && lsh.forall { case (p, j) => want.get(p).contains(j) }, ctx)
     }
   }
 
   test("every shingle-set operator hashes with shingle_hashes and builds no shingle string") {
-    import org.apache.spark.sql.catalyst.expressions.{ConcatWs, Expression}
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ConcatWs, Expression}
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import graft.functions.ShingleHashes
+    import graft.functions.{IntersectCount, ShingleHashes}
     val template = "identical template body repeated verbatim across the whole batch"
     val corpus = ((0L until 4L).map(i => (i, template)) ++ docs.as[(Long, String)].collect()
       .map { case (id, text) => (id + 10L, text) }).toDF("doc_id", "text")
@@ -178,13 +160,18 @@ class DedupSpec extends SparkSpec {
       p.find(_.expressions.exists(_.find(f).isDefined)).isDefined
     val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "jaccardPairs" -> (() => Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, 3)),
-      "jaccardPairs capped" -> (() => Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, 3, 2)),
-      "jaccardPairsBetween capped" -> (() => Dedup.jaccardPairsBetween(
-        corpus.filter(col("doc_id") < 2), corpus.filter(col("doc_id") >= 2), "doc_id", "text", 0.5, 3, 2)),
+      "jaccardPairsBetween" -> (() => Dedup.jaccardPairsBetween(
+        corpus.filter(col("doc_id") < 2), corpus.filter(col("doc_id") >= 2), "doc_id", "text", 0.5, 3)),
       "minHashPairs" -> (() => Dedup.minHashPairs(corpus, "doc_id", "text", 0.5, shingleN = 3)),
       "exactJaccardForPairs" -> (() => Dedup.exactJaccardForPairs(
         Seq((0L, 1L), (11L, 12L)).toDF("d1", "d2"), corpus, "doc_id", "text", 3, 0.5)),
-      "jaccardCandidates" -> (() => Dedup.jaccardCandidates(corpus, "doc_id", "text", 3, 100)))
+      "minHashPairsAgainstStore" -> { () =>
+        val dir = "target/tmp/minhash_store/spec_verify_plan"
+        Dedup.buildMinHashStore(corpus.filter(col("doc_id") >= 2), "doc_id", "text", dir)
+        // repartitioned, so the batch's sets are not folded into a local relation
+        Dedup.minHashPairsAgainstStore(corpus.filter(col("doc_id") < 2).repartition(2),
+          "doc_id", "text", dir, 0.5)
+      })
     import scala.jdk.CollectionConverters._
     val faults = ops.flatMap { case (name, op) =>
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
@@ -199,7 +186,10 @@ class DedupSpec extends SparkSpec {
       Seq(s"$name: fixture drifted, no rows" -> (out == 0),
         s"$name: no shingle_hashes in its ${seen.size} plans" ->
           !seen.exists(holds(_)(_.isInstanceOf[ShingleHashes])),
-        s"$name: concat_ws builds shingle strings" -> seen.exists(holds(_)(_.isInstanceOf[ConcatWs])))
+        s"$name: concat_ws builds shingle strings" -> seen.exists(holds(_)(_.isInstanceOf[ConcatWs])),
+        s"$name: verifies with array_intersect" -> seen.exists(holds(_)(_.isInstanceOf[ArrayIntersect])),
+        s"$name: no intersect_count verify in its plans" ->
+          !seen.exists(holds(_)(_.isInstanceOf[IntersectCount])))
         .collect { case (msg, true) => msg }
     }
     assert(faults.isEmpty, faults.mkString("\n"))
