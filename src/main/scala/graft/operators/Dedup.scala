@@ -84,7 +84,8 @@ object Dedup {
     * of d1's set in `l` and d2's set in `r` (both (id, ths) sets) over
     * their union — is at or above `threshold`. The one verify of every
     * exact-Jaccard operator: `intersect_count` merges the pair's two
-    * ascending sets in-row. A pair naming a doc with no set has no row.
+    * ascending sets in-row, once per pair. A pair naming a doc with no set
+    * has no row.
     */
   private def verify(candidates: DataFrame, l: DataFrame, r: DataFrame,
                      threshold: Double): DataFrame =
@@ -92,8 +93,13 @@ object Dedup {
       .join(l.select(col("id").as("d1"), col("ths").as("t1")), "d1")
       .join(r.select(col("id").as("d2"), col("ths").as("t2")), "d2")
       .withColumn("c", TextFunctions.intersectCount(col("t1"), col("t2")))
-      .withColumn("jac", col("c").cast("double") / (size(col("t1")) + size(col("t2")) - col("c")))
-      .filter(col("jac") >= threshold)
+      // the nondeterministic `__fence` keeps the jac filter above this
+      // projection (see simHashPairs): pushed into the join condition, the
+      // filter inlined `c` twice and the merge ran three times per pair
+      .withColumns(Map(
+        "jac" -> col("c").cast("double") / (size(col("t1")) + size(col("t2")) - col("c")),
+        "__fence" -> spark_partition_id()))
+      .filter(col("jac") >= threshold && col("__fence") >= 0)
       .select(col("d1"), col("d2"), col("jac"))
 
   /** All pairs with exact Jaccard similarity >= threshold over word
@@ -695,8 +701,8 @@ object Dedup {
     * [[autoSimHashBlocks]]. A FIXED cap is as scale-wrong as a fixed block
     * count, in the opposite direction: the round-15 sf30 probe measured a
     * cap of 800 at 1.5 M docs putting 19% of all banded rows into over-cap
-    * buckets, which drives the whole join down the map-carrying sub-split
-    * path (per-survivor hot-band map probes — > 40 min) AND costs recall
+    * buckets, which drives the whole join down the hot-census sub-split
+    * path (> 40 min, timed on its since-deleted min-band form) AND costs recall
     * (the sub-split's bounded-sample backstop drops split-apart pairs),
     * while a cap the census never reaches leaves the join on the complete
     * fast path — 11.8e9 raw candidates hamming-tested in ~35 s at the same
@@ -731,10 +737,11 @@ object Dedup {
     *
     * `numBlocks = 0` (the default) sizes the geometry by
     * [[autoSimHashBlocks]] from the corpus count — the deployment rule;
-    * pass an explicit value to pin a fixture geometry. `maxBucket = 0`
-    * likewise sizes the hot-bucket cap by [[autoSimHashBucketCap]] from the
-    * same count. The count runs on the already-checkpointed signature
-    * frame, so it costs one metadata scan, not a corpus re-tokenize.
+    * pass an explicit value to pin a fixture geometry. `maxBucket = 0` (the
+    * default) likewise sizes the hot-bucket cap by [[autoSimHashBucketCap]]
+    * from the same count. The count runs on the already-checkpointed
+    * signature frame, so it costs one metadata scan, not a corpus
+    * re-tokenize.
     *
     * Hot-bucket guard: a template-heavy corpus concentrates signatures, so
     * one (band, key) bucket can hold a large corpus fraction and its
@@ -747,24 +754,14 @@ object Dedup {
     * C(numBlocks, numBlocks−maxDist) · n / maxBucket, output-sized by
     * construction, never a driver collect.
     *
-    * Emission-plan size switch (round 15): the census-active (hot) path has
-    * two proven-output-identical plans. Emit-all + distinct() re-emits each
-    * surviving pair once per met band and pays a duplicate-eliminating
-    * shuffle — cheap while survivor volume is small, quadratic-prone on big
-    * clustered corpora (measured 4.0× per-decade at sf10). Single-emission
-    * min-band pays a fixed +2–6 s of per-candidate band selection at small
-    * scale but holds the per-decade ratio at 1.5×. Corpora under
-    * `emitAllBelowRows` take emit-all; at or above it, min-band. The default
-    * crossover sits between the measured brackets — 50 k docs (sf1), where
-    * emit-all wins by 2–6 s, and 500 k (sf10), where min-band wins 4.0×→1.5×
-    * — at their geometric mean. Pass 0 to force min-band (specs),
-    * Long.MaxValue to force emit-all.
+    * Emission follows the census: with no hot bucket each pair is emitted
+    * once, from its first agreeing band; with one, each pair is emitted
+    * from every band where it met and one `distinct()` collapses the
+    * copies — so a mega-clique corpus shuffles up to
+    * C(numBlocks, numBlocks−maxDist) copies of each survivor.
     */
-  val EmitAllCrossoverRows: Long = 150000L
-
   def simHashPairs(docs: DataFrame, idCol: String, textCol: String, maxDist: Int = 3,
-                   numBlocks: Int = 0, maxBucket: Long = 100000L,
-                   emitAllBelowRows: Long = EmitAllCrossoverRows): DataFrame = {
+                   numBlocks: Int = 0, maxBucket: Long = 0L): DataFrame = {
     // materialize the signature pass once: the geometry count, the
     // hot-bucket census and BOTH sides of the banding self-join would
     // otherwise each re-tokenize and re-hash the whole corpus (measured: 3
@@ -772,8 +769,8 @@ object Dedup {
     // sf0.1). The checkpoint is 16 bytes × n — negligible next to the
     // corpus it summarizes.
     val sig = simHash(docs, idCol, textCol).localCheckpoint()
-    // one metadata-cheap count over the checkpoint serves both the geometry
-    // rule and the hot-path emission-plan switch
+    // one metadata-cheap count over the checkpoint serves both the block
+    // and the bucket-cap rule
     val sigRows = sig.count()
     val blocks =
       if (numBlocks > 0) numBlocks
@@ -813,85 +810,67 @@ object Dedup {
       .withColumn("nsub", ceil(col("m").cast("double") / bucketCap).cast("long"))
       .select("ci", "cv", "nsub")
       .localCheckpoint()
-    // ---- single-emission banding ----
-    // A clustered corpus re-emits every surviving pair once per band where
-    // the pair actually MET — up to C(blocks, blocks−maxDist) copies
-    // (measured: the sf10 rehearsal corpus holds 13% of ALL doc pairs
-    // within distance 7, so the banding join fed ~9e8 duplicated survivors
-    // to the distinct and the dedup shuffle dominated the operator).
-    // Instead, emit each pair from exactly ONE band — the lexicographically-
-    // first band where the pair met ("met" = the band's blocks all agree,
-    // and under sub-splitting neither endpoint was hashed away from the
-    // other) — and skip the duplicate-eliminating shuffle entirely. Exact,
-    // not a heuristic: met-ness is decidable in-join from the two
-    // signatures + ids + the census, every copy of the pair computes the
-    // same first-met band, and the copy produced BY that band exists by
-    // definition — so exactly one copy survives and the output set is
-    // identical to the emit-all + distinct() plan's.
-    //
-    // Codegen shape: the per-band agreement test is a 2-op mask test of a
-    // single 64-bit block-agreement bitmask column (computed once per join
-    // row from <= 64 shift/mask terms, one per block — numBlocks is capped
-    // at 64 above), NOT a (blocks−maxDist)-conjunct
-    // shift chain per band — so the band-selection CaseWhen stays far under
-    // codegen method-size limits even at the 256-table geometry ceiling.
-    val xorSig = col("simhash").bitwiseXOR(col("simhash2"))
-    def blockAgreeMask: Column = (0 until blocks).map { i =>
-      when(shiftright(xorSig, offsets(i))
-        .bitwiseAND(lit((1L << widths(i)) - 1)) === 0L, lit(1L << i))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
-    val subsetMasks = subsets.map(_.map(1L << _).sum)
-    def bandAgrees(si: Int): Column =
-      col("am").bitwiseAND(lit(subsetMasks(si))) === lit(subsetMasks(si))
-    // Evaluation-position fence (measured, round 14): without it Catalyst
-    // pushes the band-selection CaseWhen INTO the SortMergeJoin condition —
-    // inlining the agreement-mask sum once per band — and the condition
-    // grows past the codegen method limit, so the WHOLE join predicate
-    // (hamming test included) falls back to interpreted evaluation on
-    // every raw bucket candidate: 19.7s vs 1.4s for the identical
-    // join+hamming at sf0.1. The fence is the always-true nondeterministic
-    // conjunct `spark_partition_id() >= 0` INSIDE the selection filter: a
-    // nondeterministic predicate is never pushed through the projection or
-    // into the join (and the column it references can't be pruned away),
-    // so the join-time conjuncts stay the equi-keys, id<id2 and the
-    // one-instruction hamming test — small enough to stay codegen'd — and
-    // band selection runs once per SURVIVOR, referencing `am` as a
-    // computed-once column.
-    def fencedBandSelect(joined: DataFrame, extra: Map[String, Column],
-                         minMet: Column): DataFrame = joined
-      .withColumn("dist", bit_count(xorSig))
-      .filter(col("dist") <= maxDist)
-      .withColumns(Map("__fence" -> spark_partition_id(),
-        "am" -> blockAgreeMask) ++ extra)
-      .filter(col("ci") === minMet && col("__fence") >= 0)
-      .select(col("x.id").as("d1"), col("id2").as("d2"), col("dist"))
 
     if (hot.isEmpty) {
-      // FAST PATH — no hot buckets (the deployment norm: autoSimHashBlocks
-      // holds bucket populations near targetBucket ≪ maxBucket): a pair
-      // met a band iff the band's blocks agree, so first-met = first
-      // agreeing, with no census consulted.
-      val minBand = subsets.indices.foldRight(lit(-1)) { (si, rest) =>
-        when(bandAgrees(si), lit(si)).otherwise(rest)
+      // COLD CENSUS — single emission (the deployment norm:
+      // autoSimHashBlocks holds bucket populations near targetBucket ≪
+      // maxBucket). A clustered corpus meets every surviving pair in up to
+      // C(blocks, blocks−maxDist) bands (measured: the sf10 rehearsal
+      // corpus holds 13% of ALL doc pairs within distance 7, so emitting
+      // every copy fed ~9e8 duplicated survivors to a distinct). With no
+      // bucket sub-split a pair meets a band iff the band's blocks agree,
+      // so each copy can compute the pair's FIRST agreeing band in-join and
+      // only the copy produced by that band is kept: exactly one copy per
+      // pair, and no duplicate-eliminating shuffle.
+      //
+      // Codegen shape: the per-band agreement test is a 2-op mask test of a
+      // single 64-bit block-agreement bitmask column (computed once per
+      // join row from <= 64 shift/mask terms, one per block — numBlocks is
+      // capped at 64 above), NOT a (blocks−maxDist)-conjunct shift chain
+      // per band — so the band-selection CaseWhen stays far under codegen
+      // method-size limits even at the 256-table geometry ceiling.
+      val xorSig = col("simhash").bitwiseXOR(col("simhash2"))
+      val blockAgreeMask = (0 until blocks).map { i =>
+        when(shiftright(xorSig, offsets(i))
+          .bitwiseAND(lit((1L << widths(i)) - 1)) === 0L, lit(1L << i))
+          .otherwise(lit(0L))
+      }.reduce(_ + _)
+      val minBand = subsets.zipWithIndex.foldRight(lit(-1)) { case ((subset, si), rest) =>
+        val mask = lit(subset.map(1L << _).sum)
+        when(col("am").bitwiseAND(mask) === mask, lit(si)).otherwise(rest)
       }
-      fencedBandSelect(
-        blocked.as("x")
-          .join(blocked.select(col("id").as("id2"), col("simhash").as("simhash2"),
-            col("ci").as("ci2"), col("cv").as("cv2")).as("y"),
-            col("ci") === col("ci2") && col("cv") === col("cv2") &&
-              col("x.id") < col("id2")),
-        Map.empty, minBand)
-    } else if (sigRows < emitAllBelowRows) {
-      // SMALL-CORPUS HOT PATH — emit-all + distinct(). Below the crossover
-      // the survivor set is small enough that the duplicate-eliminating
-      // shuffle is cheaper than min-band's per-candidate band selection
-      // (measured: 4.4 s vs 6.9 s at sf0.1 on the q_ext_dedup4 config).
-      // Output-identical to the min-band plan: a pair is emitted from band
-      // si iff si's blocks agree AND the sub-split keeps both endpoints
-      // together there — the same met-at-si predicate — and distinct()
-      // collapses the per-band copies (DedupSpec proves set equality on a
-      // census-active fixture both sides of the switch).
+      // Evaluation-position fence (measured, round 14): without it Catalyst
+      // pushes the band-selection CaseWhen INTO the SortMergeJoin condition
+      // — inlining the agreement-mask sum once per band — and the condition
+      // grows past the codegen method limit, so the WHOLE join predicate
+      // (hamming test included) falls back to interpreted evaluation on
+      // every raw bucket candidate: 19.7s vs 1.4s for the identical
+      // join+hamming at sf0.1. The fence is the always-true
+      // nondeterministic conjunct `spark_partition_id() >= 0` INSIDE the
+      // selection filter: a nondeterministic predicate is never pushed
+      // through the projection or into the join (and the column it
+      // references can't be pruned away), so the join-time conjuncts stay
+      // the equi-keys, id<id2 and the one-instruction hamming test — small
+      // enough to stay codegen'd — and band selection runs once per
+      // SURVIVOR, referencing `am` as a computed-once column.
+      blocked.as("x")
+        .join(blocked.select(col("id").as("id2"), col("simhash").as("simhash2"),
+          col("ci").as("ci2"), col("cv").as("cv2")).as("y"),
+          col("ci") === col("ci2") && col("cv") === col("cv2") &&
+            col("x.id") < col("id2"))
+        .withColumn("dist", bit_count(xorSig))
+        .filter(col("dist") <= maxDist)
+        .withColumns(Map("__fence" -> spark_partition_id(), "am" -> blockAgreeMask))
+        .filter(col("ci") === minBand && col("__fence") >= 0)
+        .select(col("x.id").as("d1"), col("id2").as("d2"), col("dist"))
+    } else {
+      // HOT CENSUS — emit-all + distinct(). Members of an over-cap bucket
+      // are sub-split by xxhash64(id), so a pair is emitted from band si iff
+      // si's blocks agree AND the sub-split keeps both endpoints together
+      // there; a pair split apart in one agreeing band still meets in any
+      // other, and distinct() collapses the per-band copies. Pairs split
+      // apart in EVERY agreeing band never meet — the bounded-sample
+      // backstop.
       val sub = blocked.join(broadcast(hot), Seq("ci", "cv"), "left")
         .withColumn("sub", pmod(xxhash64(col("id")), coalesce(col("nsub"), lit(1L))))
         .select(col("id"), col("simhash"), col("ci"), col("cv"), col("sub"))
@@ -906,53 +885,6 @@ object Dedup {
         // survivors (output-sized) need the distinct
         .filter(col("dist") <= maxDist)
         .distinct()
-    } else {
-      // HOT PATH — at least one bucket exceeded maxBucket, so its members
-      // are deterministically sub-split and a pair can be split apart in
-      // one agreeing band yet still meet in another. Met-at-si is still
-      // in-join decidable: blocks agree AND (the band's bucket is not hot,
-      // or xxhash64(id) lands both endpoints in the same sub-bucket —
-      // nsub read from a per-id map of that id's HOT bands only). When the
-      // pair agrees at si both endpoints share the bucket, so the LEFT
-      // endpoint's map alone answers hotness. The map rows are bounded by
-      // the hot buckets' total membership (a subset of the blocked frame —
-      // linear), and each map holds only the id's hot bands (<= #tables
-      // entries, near-empty off the template clusters). Pairs split apart
-      // in EVERY agreeing band never meet anywhere and are dropped —
-      // exactly the emit-all plan's bounded-sample backstop semantics.
-      val hotPerId = blocked.join(broadcast(hot), Seq("ci", "cv"))
-        .groupBy("id")
-        .agg(map_from_entries(collect_list(struct(col("ci"), col("nsub")))).as("hm"))
-      val sigH = sig.join(hotPerId, Seq("id"), "left")
-      val xSide = sigH
-        .select(col("id"), col("simhash"), col("hm"),
-          explode(array(bands: _*)).as("ch"))
-        .select(col("id"), col("simhash"), col("hm"),
-          col("ch.ci").as("ci"), col("ch.cv").as("cv"))
-        .join(broadcast(hot), Seq("ci", "cv"), "left")
-        .withColumn("sub", pmod(xxhash64(col("id")), coalesce(col("nsub"), lit(1L))))
-        .select("id", "simhash", "hm", "ci", "cv", "sub")
-      val ySide = blocked.join(broadcast(hot), Seq("ci", "cv"), "left")
-        .withColumn("sub", pmod(xxhash64(col("id")), coalesce(col("nsub"), lit(1L))))
-        .select(col("id").as("id2"), col("simhash").as("simhash2"),
-          col("ci").as("ci2"), col("cv").as("cv2"), col("sub").as("sub2"))
-      // not-split-at-si: the band's bucket is hot for the pair iff the left
-      // endpoint's hot map holds si (they share the bucket when agreeing);
-      // a missing key makes element_at null and coalesce says "not hot".
-      def notSplit(si: Int): Column = coalesce(
-        pmod(col("hx"), element_at(col("hm"), si)) ===
-          pmod(col("hy"), element_at(col("hm"), si)),
-        lit(true))
-      val minMetBand = subsets.indices.foldRight(lit(-1)) { (si, rest) =>
-        when(bandAgrees(si) && notSplit(si), lit(si)).otherwise(rest)
-      }
-      fencedBandSelect(
-        xSide.as("x")
-          .join(ySide.as("y"),
-            col("ci") === col("ci2") && col("cv") === col("cv2") &&
-              col("sub") === col("sub2") && col("x.id") < col("id2")),
-        Map("hx" -> xxhash64(col("x.id")), "hy" -> xxhash64(col("id2"))),
-        minMetBand)
     }
   }
 }

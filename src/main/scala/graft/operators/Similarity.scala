@@ -1028,12 +1028,14 @@ object Similarity {
     require(k >= 1, s"ivfSelfTopK: k must be >= 1, got $k")
     require(nprobe >= 1, s"ivfSelfTopK: nprobe must be >= 1, got $nprobe")
     graft.functions.GraftFunctions.register(index.assigned.sparkSession)
-    // cell sizes: ≤ numCentroids rows — broadcast-sized by construction
-    val n = index.assigned.count()
-    val maxCell = math.max(1L, (maxCellFraction * n).toLong)
-    val subCounts = index.assigned.groupBy("cell")
-      .agg(ceil(count(lit(1)).cast("double") / maxCell).cast("long").as("nsub"))
+    // cell sizes: ≤ numCentroids rows — broadcast-sized by construction;
+    // the corpus count is their sum, so one scan of `assigned` serves both
+    val cellCounts = index.assigned.groupBy("cell").agg(count(lit(1)).as("m"))
       .localCheckpoint()
+    val n = cellCounts.collect().map(_.getLong(1)).sum
+    val maxCell = math.max(1L, (maxCellFraction * n).toLong)
+    val subCounts = cellCounts.select(col("cell"),
+      ceil(col("m").cast("double") / maxCell).cast("long").as("nsub"))
     // Probe selection (round 16, fourth form — measured at sf10 each time):
     //  - r14 window form: crossJoin × centroids + row_number — exchanged and
     //    sorted ALL n × numCentroids scored rows (41.7 s at sf10);

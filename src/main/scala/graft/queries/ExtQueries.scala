@@ -736,14 +736,15 @@ object ExtQueries {
     // oracle gate (the q_agg3_approx promotion pattern). The documents are
     // template-generated, so even jac≈0.9 pairs sit at hamming 4–14, which
     // is why the 4-block/dist<=3 form this query originally used found only
-    // 16–20% of them. Both knobs size by the corpus count (numBlocks=0 →
-    // autoSimHashBlocks, maxBucket=0 → autoSimHashBucketCap), NOT pinned
-    // values: the round-15 sf30 value sweep proved the pinned 8-block form
+    // 16–20% of them. Both knobs keep their defaults, which size by the
+    // corpus count (numBlocks=0 → autoSimHashBlocks, maxBucket=0 →
+    // autoSimHashBucketCap), NOT pinned values: the round-15 sf30 value
+    // sweep proved the pinned 8-block form
     // collapses at 1.5 M docs (recall 0.27 — every 8-bit bucket goes
     // over-cap and the sub-split's bounded-sample backstop drops most true
     // pairs), and the census probe then showed a pinned 800 cap is
     // scale-wrong in the OPPOSITE direction even under auto geometry (19%
-    // of banded rows over-cap at 9 blocks → the map-carrying sub-split
+    // of banded rows over-cap at 9 blocks → the hot-census sub-split
     // path, >40 min, vs hot=0 → the complete fast path in ~35 s at the
     // same scale). Under both rules every driver scale (<= 65 536 docs for
     // blocks, <= 80 000 for the cap) resolves to the historical
@@ -778,8 +779,7 @@ object ExtQueries {
         // previous pinned 1500 — well clear of the 0.5 guard at every
         // driver scale, for ~40% less banding-join fan-out (the operator's
         // dominant cost)
-        val cand = Dedup.simHashPairs(docs, "doc_id", "text", maxDist = 7,
-            numBlocks = 0, maxBucket = 0L)
+        val cand = Dedup.simHashPairs(docs, "doc_id", "text", maxDist = 7)
           .select(col("d1"), col("d2"))
         exact.crossJoin(broadcast(pairRecall(exact, cand, Seq("d1", "d2"))))
           .select(col("d1"), col("d2"),

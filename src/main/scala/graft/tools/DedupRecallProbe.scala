@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 object DedupRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = GraftSession.build("local[32]", 32)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.load(spark, sfDir, "documents")
     // the query's OWN exact arm (same helper as q_ext_dedup4), so recall AND

@@ -8,21 +8,19 @@ import org.apache.spark.sql.functions._
   * given geometry WITHOUT running the pair join — everything here is
   * census arithmetic over the banded frame, so it runs in signature-pass
   * time even where the join itself would take an hour. Prints, per
-  * (numBlocks, maxBucket) grid point:
+  * (numBlocks, maxBucket) grid point (0 = the simHashPairs auto rule):
   *   - bucket-count / membership mass of the over-cap (hot) census
   *   - the EXACT raw candidate volume the banding join must hamming-test:
   *     sub-split buckets contribute ~m*cap/2, cold buckets m(m-1)/2
-  *   - the per-id hot-band map mass (rows x avg entries) the min-band hot
-  *     path carries through its 36-way explode
   * plus, once per corpus, the duplicate-signature mass (dist-0 cliques).
   * Usage: runMain graft.tools.ProbeSimHashCensus <sfDir> [b:cap,b:cap,...]
   */
 object ProbeSimHashCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val grid = args.drop(1).headOption.getOrElse("0:800,8:800,0:20000")
+    val grid = args.drop(1).headOption.getOrElse("0:0,0:20000")
       .split(",").toSeq.map { s => val Array(b, c) = s.split(":"); (b.toInt, c.toLong) }
-    val spark = GraftSession.build("local[32]", 32)
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.load(spark, sfDir, "documents")
     val sig = Dedup.simHash(docs, "doc_id", "text").localCheckpoint()
@@ -34,8 +32,9 @@ object ProbeSimHashCensus {
       .collect()(0)
     println(s"[census] n=$n uniqSigs=${dup.getLong(0)} dupMass=${dup.getLong(1)} " +
       s"maxClique=${dup.getLong(2)} dist0Pairs=${dup.getLong(3)}")
-    for ((nb, cap) <- grid) {
+    for ((nb, c) <- grid) {
       val blocks = if (nb > 0) nb else Dedup.autoSimHashBlocks(n, 7)
+      val cap = if (c > 0) c else Dedup.autoSimHashBucketCap(n)
       val widths = Array.tabulate(blocks)(i => 64 / blocks + (if (i < 64 % blocks) 1 else 0))
       val offsets = widths.scanLeft(0)(_ + _)
       def blockVal(i: Int) =

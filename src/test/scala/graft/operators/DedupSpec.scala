@@ -158,6 +158,10 @@ class DedupSpec extends SparkSpec {
     }
     def holds(p: LogicalPlan)(f: Expression => Boolean): Boolean =
       p.find(_.expressions.exists(_.find(f).isDefined)).isDefined
+    // every occurrence is one evaluation: a filter pushed into a join
+    // condition inlines its aliases and repeats the expression there
+    def occurrences(p: LogicalPlan)(f: Expression => Boolean): Int =
+      p.collect { case n => n.expressions.map(_.collect { case e if f(e) => e }.size).sum }.sum
     val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "jaccardPairs" -> (() => Dedup.jaccardPairs(corpus, "doc_id", "text", 0.5, 3)),
       "jaccardPairsBetween" -> (() => Dedup.jaccardPairsBetween(
@@ -183,13 +187,15 @@ class DedupSpec extends SparkSpec {
         n
       } finally spark.listenerManager.unregister(listener)
       val seen = plans.asScala.toSeq
+      val evals = seen.map(occurrences(_)(_.isInstanceOf[IntersectCount]))
       Seq(s"$name: fixture drifted, no rows" -> (out == 0),
         s"$name: no shingle_hashes in its ${seen.size} plans" ->
           !seen.exists(holds(_)(_.isInstanceOf[ShingleHashes])),
         s"$name: concat_ws builds shingle strings" -> seen.exists(holds(_)(_.isInstanceOf[ConcatWs])),
         s"$name: verifies with array_intersect" -> seen.exists(holds(_)(_.isInstanceOf[ArrayIntersect])),
-        s"$name: no intersect_count verify in its plans" ->
-          !seen.exists(holds(_)(_.isInstanceOf[IntersectCount])))
+        s"$name: no intersect_count verify in its plans" -> !evals.exists(_ > 0),
+        s"$name: a plan evaluates intersect_count more than once per pair " +
+          s"(per plan: ${evals.mkString(",")})" -> evals.exists(_ > 1))
         .collect { case (msg, true) => msg }
     }
     assert(faults.isEmpty, faults.mkString("\n"))
@@ -511,8 +517,9 @@ class DedupSpec extends SparkSpec {
     // Template-heavy corpus: two near-identical 12-member clusters (their
     // signatures agree on most blocks, so cross-cluster buckets mix) plus
     // unrelated filler. maxBucket = 3 makes every cluster bucket hot
-    // (census ACTIVE — the round-14 path under test), with band-varying
-    // nsub where clusters share a bucket.
+    // (census ACTIVE — the emit-all + distinct arm), with band-varying
+    // nsub where clusters share a bucket; maxBucket >= n leaves the census
+    // empty (the single-emission arm).
     val template = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val corpus = (
@@ -521,21 +528,11 @@ class DedupSpec extends SparkSpec {
       (100L until 105L).map(i => (i, s"totally unrelated words $i about engines " +
         s"and shuffles and partitions number$i item$i"))
     ).toDF("doc_id", "text")
-    val maxBucket = 3L
-    // emitAllBelowRows = 0 forces the single-emission min-band hot path —
-    // the plan a >= crossover corpus takes (the default would route this
-    // 29-doc fixture to the emit-all branch)
-    val out = Dedup.simHashPairs(corpus, "doc_id", "text", maxDist = 7,
-      numBlocks = 8, maxBucket = maxBucket, emitAllBelowRows = 0L).collect()
-    // no duplicate-eliminating shuffle -> the operator itself must emit
-    // each surviving pair exactly once
-    val outKeys = out.map(r => (r.getLong(0), r.getLong(1)))
-    assert(outKeys.length === outKeys.distinct.length)
 
-    // executable model of the emit-all + distinct() semantics, computed
-    // from the ACTUAL signatures/hashes (8 single-block bands at this
-    // geometry): pair survives iff dist <= 7 and SOME band has equal block
-    // values AND (bucket not hot OR both ids land in the same sub-bucket)
+    // executable model of both arms, computed from the ACTUAL
+    // signatures/hashes (8 single-block bands at this geometry): a pair
+    // survives iff dist <= 7 and SOME band has equal block values AND
+    // (bucket not hot OR both ids land in the same sub-bucket)
     val sig = Dedup.simHash(corpus, "doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val h = corpus.select(col("doc_id"), xxhash64(col("doc_id")).as("h")).collect()
@@ -543,8 +540,7 @@ class DedupSpec extends SparkSpec {
     def block(s: Long, b: Int): Long = (s >>> (8 * b)) & 0xffL
     val census = (for { id <- sig.keys.toSeq; b <- 0 until 8 }
       yield (b, block(sig(id), b))).groupBy(identity).view.mapValues(_.size.toLong).toMap
-    assert(census.values.exists(_ > maxBucket), "fixture must activate the census")
-    def metBands(a: Long, b: Long): Seq[Int] = (0 until 8).filter { bi =>
+    def metBands(maxBucket: Long)(a: Long, b: Long): Seq[Int] = (0 until 8).filter { bi =>
       block(sig(a), bi) == block(sig(b), bi) && {
         val m = census((bi, block(sig(a), bi)))
         m <= maxBucket ||
@@ -553,34 +549,48 @@ class DedupSpec extends SparkSpec {
       }
     }
     val ids = sig.keys.toSeq.sorted
-    val model = for {
+    def model(maxBucket: Long): Set[(Long, Long)] = (for {
       i <- ids; j <- ids if i < j
       if java.lang.Long.bitCount(sig(i) ^ sig(j)) <= 7
-      if metBands(i, j).nonEmpty
-    } yield (i, j)
-    assert(outKeys.toSet === model.toSet)
-    // the fixture must exercise the cross-band rescue the min-met rule has
+      if metBands(maxBucket)(i, j).nonEmpty
+    } yield (i, j)).toSet
+    def run(maxBucket: Long): Set[(Long, Long)] = {
+      val out = Dedup.simHashPairs(corpus, "doc_id", "text", maxDist = 7,
+        numBlocks = 8, maxBucket = maxBucket).collect()
+      // each surviving pair exactly once, whichever arm emitted it
+      val keys = out.map(r => (r.getLong(0), r.getLong(1)))
+      assert(keys.length === keys.distinct.length, s"maxBucket=$maxBucket emitted a pair twice")
+      // precision: the dist column is the true hamming distance
+      out.foreach { r =>
+        assert(r.getAs[Int]("dist") ===
+          java.lang.Long.bitCount(sig(r.getLong(0)) ^ sig(r.getLong(1))))
+      }
+      keys.toSet
+    }
+
+    // hot census: emit-all + distinct
+    val hotCap = 3L
+    assert(census.values.exists(_ > hotCap), "fixture must activate the census")
+    val hotModel = model(hotCap)
+    assert(run(hotCap) === hotModel)
+    // the fixture must exercise the cross-band rescue the emit-all arm has
     // to preserve: some surviving pair is sub-split apart in an AGREEING
     // band yet meets in a later one
-    val rescued = model.exists { case (i, j) =>
+    val rescued = hotModel.exists { case (i, j) =>
       val agreeing = (0 until 8).filter(bi => block(sig(i), bi) == block(sig(j), bi))
-      val met = metBands(i, j)
+      val met = metBands(hotCap)(i, j)
       agreeing.exists(bi => !met.contains(bi)) && met.nonEmpty
     }
     assert(rescued, "fixture must contain a pair split in one hot band but met in another")
-    // precision: the dist column is the true hamming distance
-    out.foreach { r =>
-      assert(r.getAs[Int]("dist") ===
-        java.lang.Long.bitCount(sig(r.getLong(0)) ^ sig(r.getLong(1))))
-    }
-    // size-switch equality (round 15): the emit-all + distinct branch —
-    // what this sub-crossover corpus takes by default — must produce the
-    // SAME pair set as the min-band plan proved against the model above
-    val outEmitAll = Dedup.simHashPairs(corpus, "doc_id", "text", maxDist = 7,
-        numBlocks = 8, maxBucket = maxBucket)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(outEmitAll.length === outEmitAll.distinct.length)
-    assert(outEmitAll.toSet === outKeys.toSet)
+
+    // cold census: single emission from the first agreeing band, the
+    // model's hot test off (met = agreeing)
+    val coldCap = ids.size.toLong
+    assert(census.values.forall(_ <= coldCap), "fixture must leave the census empty")
+    val coldModel = model(coldCap)
+    assert(run(coldCap) === coldModel)
+    // the sub-split drops pairs: the two arms are checked on different sets
+    assert(hotModel.subsetOf(coldModel) && hotModel.size < coldModel.size)
   }
 
   test("autoSimHashBlocks holds the completeness floor and widens keys with the corpus") {
